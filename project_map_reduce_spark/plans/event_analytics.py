@@ -334,14 +334,13 @@ def q_events_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("attributed"),
         (gap_us / 3.6e9).alias("hours"),
     )
-    dec = F.col("value").cast("decimal(18,6)")
     return purchases.groupBy("day").agg(
         F.count(F.lit(1)).alias("n_purchases"),
         F.count(F.when(F.col("attributed"), 1)).alias("n_attributed"),
-        F.sum(F.when(F.col("attributed"), dec).otherwise(F.lit(0).cast("decimal(18,6)")))
-        .cast("double")
-        .alias("attributed_revenue"),
-        F.sum(dec).cast("double").alias("total_revenue"),
+        sum6(F.when(F.col("attributed"), F.col("value")).otherwise(0.0)).alias(
+            "attributed_revenue"
+        ),
+        sum6("value").alias("total_revenue"),
         r6(F.avg(F.when(F.col("attributed"), F.col("hours")))).alias(
             "avg_hours_to_convert"
         ),

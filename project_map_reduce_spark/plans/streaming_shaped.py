@@ -332,7 +332,21 @@ def q_stream_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 # OPTIMIZATION_r14.md). Env-overridable so the A/B is reproducible
 # without editing query bodies; on a cluster this is a deploy-time conf
 # sized to executors.
-_STREAM_STATE_PARTS = _os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTS", "8")
+def _stream_state_parts() -> str:
+    """``SPARK_GRAFT_STREAM_STATE_PARTS`` (default 8), read at each use
+    and validated here, so a bad override fails before the stream
+    starts instead of deep inside Spark."""
+    raw = _os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTS", "8")
+    try:
+        n = int(raw)
+    except ValueError:
+        n = 0
+    if n <= 0:
+        raise ValueError(
+            f"SPARK_GRAFT_STREAM_STATE_PARTS must be a positive integer, got {raw!r}"
+        )
+    return str(n)
+
 
 _WM_DELAY_MIN = 45
 _LATE_MOD, _LATE_RES = 10, 7
@@ -667,7 +681,7 @@ def q_join_interval_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 10 M events) while staying sublinear (sf0.1 5.6 s, sf1 7.0 s).
         # On a real cluster this is a deploy-time conf sized to
         # executors; the code pins the measured-best harness value.
-        spark.conf.set("spark.sql.shuffle.partitions", _STREAM_STATE_PARTS)
+        spark.conf.set("spark.sql.shuffle.partitions", _stream_state_parts())
 
         def src_stream():
             return (
@@ -935,7 +949,7 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("flush", flush),
             ("spacer2", ev.where(F.lit(False))),
         ))
-        spark.conf.set("spark.sql.shuffle.partitions", _STREAM_STATE_PARTS)
+        spark.conf.set("spark.sql.shuffle.partitions", _stream_state_parts())
         stream = (
             spark.readStream.schema("user_id bigint, ts timestamp, value double")
             .option("maxFilesPerTrigger", 1)
@@ -1101,7 +1115,7 @@ def q_stream_state_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("flush", flush),
             ("spacer2", ev.where(F.lit(False))),
         ))
-        spark.conf.set("spark.sql.shuffle.partitions", _STREAM_STATE_PARTS)
+        spark.conf.set("spark.sql.shuffle.partitions", _stream_state_parts())
         spark.conf.set(
             prov_key,
             "org.apache.spark.sql.execution.streaming.state."
@@ -1228,7 +1242,7 @@ def q_state_reader_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("spacer", ev.where(F.lit(False))),
             ("late", ev.where(F.col("ts") > F.lit(cut))),
         ))
-        spark.conf.set("spark.sql.shuffle.partitions", _STREAM_STATE_PARTS)
+        spark.conf.set("spark.sql.shuffle.partitions", _stream_state_parts())
         stream = (
             spark.readStream.schema("user_id bigint, ts timestamp, value double")
             .option("maxFilesPerTrigger", 1)
@@ -1523,7 +1537,7 @@ def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         # Two join state stores per partition (Q101's measured
         # rationale): 8 state partitions beat cores at every probed SF.
-        spark.conf.set("spark.sql.shuffle.partitions", _STREAM_STATE_PARTS)
+        spark.conf.set("spark.sql.shuffle.partitions", _stream_state_parts())
 
         def src_stream():
             return (

@@ -52,11 +52,12 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # sum6 (functions/det.py) documents fail-loud DECIMAL overflow;
-        # that contract holds only under ANSI semantics. Spark 4 defaults
-        # to ANSI on, but a deployment that flips it would turn overflow
-        # into silent nulls — pin it so the guarantee is ours, not
-        # inherited.
+        # sum6 (functions/det.py) raises on out-of-range inputs (the
+        # DECIMAL(18,6) cast) and on overflow of its long limb sums; that
+        # contract holds only under ANSI semantics. Spark 4 defaults to
+        # ANSI on, but a deployment that flips it would turn these into
+        # silent nulls or wrapped sums — pin it so the guarantee is ours,
+        # not inherited.
         .config("spark.sql.ansi.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))

@@ -50,17 +50,30 @@ def footer_rows(path: str) -> int:
     import pyarrow.parquet as pq
 
     if os.path.isdir(path):
-        parts = sorted(
+        parts = [
             f
             for f in glob.glob(os.path.join(path, "*.parquet"))
-            + glob.glob(os.path.join(path, "part-*"))
-            if not os.path.basename(f).startswith(("_", "."))
-            and not f.endswith(".crc")
-        )
+            if os.path.isfile(f) and not os.path.basename(f).startswith("_")
+        ]
+        # ``part-*`` also matches extensionless part files, so a match
+        # counts only if it is a regular file that opens with the parquet
+        # magic: a subdirectory or a sidecar named part-* is skipped.
+        parts += [
+            f
+            for f in glob.glob(os.path.join(path, "part-*"))
+            if not f.endswith(".parquet") and _has_parquet_magic(f)
+        ]
         if not parts:
             raise FileNotFoundError(f"no parquet part files under {path}")
-        return sum(pq.ParquetFile(p).metadata.num_rows for p in set(parts))
+        return sum(pq.ParquetFile(p).metadata.num_rows for p in parts)
     return pq.ParquetFile(path).metadata.num_rows
+
+
+def _has_parquet_magic(path: str) -> bool:
+    if not os.path.isfile(path):
+        return False
+    with open(path, "rb") as f:
+        return f.read(4) == b"PAR1"
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

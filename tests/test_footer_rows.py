@@ -33,6 +33,20 @@ def test_multi_file_directory_table(tmp_path):
     assert footer_rows(str(d)) == 14
 
 
+def test_part_glob_skips_subdirectory_and_sidecar(tmp_path):
+    d = tmp_path / "t.parquet"
+    d.mkdir()
+    pq.write_table(pa.table({"x": list(range(4))}), str(d / "part-00000.parquet"))
+    # An extensionless part file is still a part file ...
+    pq.write_table(pa.table({"x": list(range(6))}), str(d / "part-00001"))
+    # ... but a part-* subdirectory and an extensionless non-parquet
+    # sidecar are neither counted nor opened.
+    (d / "part-x").mkdir()
+    pq.write_table(pa.table({"x": list(range(3))}), str(d / "part-x" / "part-0.parquet"))
+    (d / "part-00000-manifest").write_text('{"rows": 4}')
+    assert footer_rows(str(d)) == 10
+
+
 def test_empty_directory_raises(tmp_path):
     d = tmp_path / "empty"
     d.mkdir()

@@ -549,6 +549,37 @@ def test_not_in_plans_null_aware_anti_join(spark, sf_dir):
     assert re.search(r"LeftAnti, BuildRight, true", plan), plan
 
 
+def _agg_buffer_types(df) -> list[str]:
+    """Data type of every aggregation-buffer slot in ``df``'s physical
+    plan (partial and final aggregates alike)."""
+    types, stack = [], [df._jdf.queryExecution().sparkPlan()]
+    while stack:
+        node = stack.pop()
+        if "Aggregate" in node.nodeName():
+            exprs = node.aggregateExpressions()
+            for i in range(exprs.size()):
+                attrs = exprs.apply(i).aggregateFunction().aggBufferAttributes()
+                types += [attrs.apply(j).dataType().simpleString() for j in range(attrs.size())]
+        kids = node.children()
+        stack += [kids.apply(i) for i in range(kids.size())]
+    return types
+
+
+@pytest.mark.parametrize("name", ["q_groupingsets_df", "q_join_broadcast"])
+def test_money_sum_buffers_stay_compact(spark, sf_dir, name):
+    """sum6's aggregation buffers hold no decimal wider than 18 digits:
+    past 18 Spark leaves its compact-long form, and every row reads, adds
+    and writes back a heap BigDecimal (the DECIMAL(28,6) accumulator
+    a decimal(18,6) sum widens to)."""
+    types = _agg_buffer_types(entries()[name].fn(spark, sf_dir))
+    assert types, name
+    wide = [
+        t for t in types
+        if (m := re.fullmatch(r"decimal\((\d+),\d+\)", t)) and int(m.group(1)) > 18
+    ]
+    assert not wide, types
+
+
 def test_driver_window_rotation_debt_bounded():
     """plans/driver_log.py is the machine-checkable rotation ledger
     (VERDICT r6 item 8): after this round's window rotation, no query

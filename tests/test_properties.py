@@ -8,7 +8,8 @@ wrong in the same way on the one fixture distribution.
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+import pytest
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -733,3 +734,112 @@ def test_lsh_buckets_match_integer_spec(spark, vecs):
                     bucket |= 1 << h
             expect.append(bucket)
         assert got[i] == expect, (i, got[i], expect)
+
+
+def _sum6_reference(c: str):
+    """The DECIMAL(18,6) accumulator sum6 replaces, as the bit-exact spec."""
+    return F.sum(F.col(c).cast("decimal(18,6)")).cast("double")
+
+
+_UNITS_BOUND = (10**12 - 1) * 10**6  # |x| < 1e12, in 1e-6 units
+_sum6_doubles = st.one_of(
+    st.none(),
+    # any 6-dp value up to the input bound, so also ≥ 2^23
+    st.integers(-_UNITS_BOUND, _UNITS_BOUND).map(lambda k: k / 1e6),
+    # exact 7th-digit half-ties: HALF_UP, not rint's half-even
+    st.integers(-(10**9), 10**9).map(lambda k: float(f"{10 * k + 5}e-7")),
+    # 2-dp money
+    st.integers(-(10**8), 10**8).map(lambda c: c / 100),
+    # arbitrary doubles inside the bound
+    st.floats(min_value=-1e12 + 1, max_value=1e12 - 1, allow_nan=False),
+)
+_sum6_rows = st.lists(
+    st.tuples(
+        st.integers(min_value=0, max_value=3),  # group key g
+        st.integers(min_value=0, max_value=1),  # sub-key h
+        _sum6_doubles,
+        st.one_of(st.none(), st.integers(-(10**12) + 1, 10**12 - 1)),
+        st.one_of(st.none(), st.integers(-(2**31), 2**31 - 1)),
+    ),
+    min_size=1,
+    max_size=30,
+)
+
+
+@given(rows=_sum6_rows)
+@example(  # every input class at once, with totals far above 2^53 units
+    rows=[
+        (0, 0, 5e-7, 2**23, 2**31 - 1),
+        (0, 1, -5e-7, -(10**12) + 1, -(2**31)),
+        (0, 1, 1.2345675, 9 * 10**11, 7),
+        (1, 0, 999_999_999_999.999, 10**12 - 1, None),
+        (1, 1, 999_999_999_999.999, 10**12 - 1, 1),
+        (1, 0, float(2**23), None, 0),
+        (2, 0, -3.3e11, 5, -5),
+        (2, 1, 0.1, -1, None),
+        (3, 0, None, None, None),  # an all-null group
+        (3, 1, None, None, None),
+    ]
+)
+@settings(**{**_SETTINGS, "max_examples": 8})
+def test_sum6_equals_decimal_accumulator(spark, rows):
+    """sum6's long-limb sum == the DECIMAL(18,6) accumulator it replaced,
+    bit for bit, for double, long and int inputs under groupBy,
+    groupingSets and rollup: negatives, nulls, all-null groups (null),
+    7th-digit half-ties (the fallback path), values ≥ 2^23 and totals
+    past 2^53 units."""
+    from project_map_reduce_spark.functions.det import sum6
+
+    df = spark.createDataFrame(rows, "g int, h int, x double, l long, i int")
+    cols = ("x", "l", "i")
+    aggs = [sum6(c).alias(c) for c in cols] + [
+        _sum6_reference(c).alias(f"{c}_ref") for c in cols
+    ]
+    by_key, by_sets, by_rollup = (
+        grouped.agg(*aggs)
+        for grouped in (
+            df.groupBy("g"),
+            df.groupingSets([["g", "h"], ["g"], []], "g", "h"),
+            df.rollup("g", "h"),
+        )
+    )
+    out = by_key.unionByName(by_sets, allowMissingColumns=True).unionByName(by_rollup)
+    for r in out.collect():  # one action for all three groupings
+        for c in cols:
+            assert r[c] == r[f"{c}_ref"], (c, r)
+
+
+def test_sum6_half_ties_and_null_groups(spark):
+    """A 7th-digit tie rounds HALF_UP (away from zero) as the decimal
+    cast does — rint alone would round 5e-7 to 0 — and a group with
+    only nulls sums to null."""
+    from project_map_reduce_spark.functions.det import sum6
+
+    df = spark.createDataFrame(
+        [(0, 5e-7), (1, -5e-7), (2, 1.2345675), (3, None)], "g int, x double"
+    )
+    got = {r["g"]: r["s"] for r in df.groupBy("g").agg(sum6("x").alias("s")).collect()}
+    assert got == {0: 1e-6, 1: -1e-6, 2: 1.234568, 3: None}
+
+
+@pytest.mark.parametrize("value", [1e12, -1e12])
+def test_sum6_raises_past_input_bound(spark, value):
+    """|x| ≥ 1e12 raises under ANSI instead of wrapping or summing to
+    null."""
+    from project_map_reduce_spark.functions.det import sum6
+
+    df = spark.createDataFrame([(1.0,), (value,)], "x double")
+    with pytest.raises(Exception, match="NUMERIC_VALUE_OUT_OF_RANGE"):
+        df.agg(sum6("x")).collect()
+
+
+def test_sum6_skips_nan_and_infinity(spark):
+    """NaN and ±infinity cast to a null decimal and drop out of the sum,
+    exactly as in the DECIMAL(18,6) reference."""
+    from project_map_reduce_spark.functions.det import sum6
+
+    df = spark.createDataFrame(
+        [(1.5,), (float("nan"),), (float("inf"),), (float("-inf"),)], "x double"
+    )
+    (r,) = df.agg(sum6("x").alias("s"), _sum6_reference("x").alias("ref")).collect()
+    assert r["s"] == r["ref"] == 1.5

@@ -739,3 +739,19 @@ def test_rocksdb_state_store_provider_runs_green(spark, sf_dir, tmp_path):
         assert got == want
     finally:
         spark.conf.set(key, prev)
+
+
+def test_stream_state_parts_read_and_validated_at_use(monkeypatch):
+    """SPARK_GRAFT_STREAM_STATE_PARTS is read when a query sets its
+    state-partition count (not at import), and a bad value fails fast
+    with a message naming the variable."""
+    from project_map_reduce_spark.plans.streaming_shaped import _stream_state_parts
+
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTS", raising=False)
+    assert _stream_state_parts() == "8"
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTS", "12")
+    assert _stream_state_parts() == "12"
+    for bad in ("0", "-3", "eight", "2.5", ""):
+        monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTS", bad)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_STATE_PARTS"):
+            _stream_state_parts()
