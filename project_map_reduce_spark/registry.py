@@ -47,25 +47,6 @@ def fmt_doc(fn, **kw) -> None:
         fn.__doc__ = fn.__doc__.format(**kw)
 
 
-def reorder(priority: list[str]) -> None:
-    """Re-insert registry entries so ``priority`` names come first, in
-    the given order; everything else keeps its relative import order
-    after them. The external correctness driver checks the FIRST 50
-    registrations each round, so plans/__init__ uses this to put the
-    queries that most need a fresh driver signal inside that window —
-    decoupling 'which queries get checked' from Python import order."""
-    unknown = [n for n in priority if n not in _REGISTRY]
-    if unknown:
-        raise KeyError(f"reorder: unregistered queries {unknown}")
-    if len(set(priority)) != len(priority):
-        raise ValueError("reorder: duplicate names in priority list")
-    rest = [n for n in _REGISTRY if n not in set(priority)]
-    snapshot = dict(_REGISTRY)
-    _REGISTRY.clear()
-    for n in list(priority) + rest:
-        _REGISTRY[n] = snapshot[n]
-
-
 def _ensure_loaded() -> None:
     # Import side effect populates the registry.
     from project_map_reduce_spark import plans  # noqa: F401

@@ -40,12 +40,25 @@ def get_spark(
     """Build (or reuse) the engine SparkSession.
 
     On a cluster you would drop ``.master(...)`` and submit with
-    spark-submit; everything else carries over unchanged.
+    spark-submit, and drop the ``checkpointFileManagerClass`` line with
+    it; everything else carries over unchanged.
     """
     cores = cores or default_parallelism()
     shuffle_partitions = shuffle_partitions or cores
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
+        # Streaming checkpoint and state-store files are written to a temp
+        # file and moved with FileSystem.rename: one rename(2) on the local
+        # file system. The default FileContext manager asks for the link
+        # status of both paths on every rename, and without Hadoop's native
+        # library each lookup forks a `readlink` child. A cluster deploy
+        # drops this line together with .master(...): an HDFS checkpoint
+        # relies on FileContext's atomic overwrite-rename.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")

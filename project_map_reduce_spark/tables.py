@@ -79,17 +79,12 @@ def _has_parquet_magic(path: str) -> bool:
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown fixture table {name!r}; expected one of {TABLES}")
-    if name == "events":
-        # events.ts is TIMESTAMP(NANOS) parquet (FIXTURES.md). Spark ≥4.1
-        # reads it natively as TIMESTAMP_NTZ (µs-truncated); older Sparks
-        # reject the physical type unless the legacy long-nanos conf is on.
-        # Set it for back-compat — a no-op where the native read exists.
-        try:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        except Exception:  # removed conf on some future version — fine
-            pass
     df = spark.read.parquet(table_path(sf_dir, name))
     if name == "events":
+        # events.ts is TIMESTAMP(NANOS) parquet (FIXTURES.md). Spark ≥4.1
+        # reads it natively as TIMESTAMP_NTZ (µs-truncated) whatever the
+        # legacy long-nanos conf says; older Sparks need that conf (set by
+        # get_spark, never here) and return a bigint.
         ts_field = df.schema["ts"]
         if ts_field.dataType.simpleString() == "bigint":
             # Legacy long-nanos path: truncate to µs and build TIMESTAMP_NTZ

@@ -12,6 +12,20 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+def drain(q, timeout: float = 120) -> None:
+    """Await a finite (availableNow) stream and fail loudly: re-raise the
+    query's own exception, or fail if it did not finish within
+    ``timeout`` seconds. The query is stopped either way, so a stream
+    never outlives the test that started it."""
+    try:
+        finished = q.awaitTermination(timeout)
+        if q.exception() is not None:
+            raise q.exception()
+        assert finished, f"stream {q.name or q.id} did not finish in {timeout}s"
+    finally:
+        q.stop()
+
+
 @pytest.fixture(scope="session")
 def spark():
     from project_map_reduce_spark.session import get_spark

@@ -2,7 +2,8 @@
 the data for BOTH table shapes — a single parquet file (the fixture
 layout) and a directory of part files (what any real writer produces;
 VERDICT r13 item 7: the single-file form broke the moment a table was
-a multi-file directory)."""
+a multi-file directory). Also: tables.load reads session conf and
+never sets it."""
 
 from __future__ import annotations
 
@@ -12,7 +13,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from project_map_reduce_spark.tables import footer_rows, table_path
+from project_map_reduce_spark.tables import footer_rows, load, table_path
 
 
 def test_single_file_table(tmp_path):
@@ -60,3 +61,21 @@ def test_matches_fixture_events_table():
     if not os.path.exists(path):
         pytest.skip("fixture not present")
     assert footer_rows(path) == pq.ParquetFile(path).metadata.num_rows
+
+
+def test_load_events_leaves_session_conf_alone(spark, sf_dir):
+    """On a session with the legacy long-nanos read switched off, loading
+    events leaves the conf off, and events.ts has the same type
+    (TIMESTAMP_NTZ) and values as on get_spark's session, which has the
+    conf on."""
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    native = spark.newSession()
+    native.conf.set(key, "false")
+    got = load(native, sf_dir, "events")
+    want = load(spark, sf_dir, "events")
+    assert got.schema["ts"].dataType.simpleString() == "timestamp_ntz"
+    assert got.schema["ts"].dataType == want.schema["ts"].dataType
+    assert sorted(got.select("event_id", "ts").collect()) == sorted(
+        want.select("event_id", "ts").collect()
+    )
+    assert native.conf.get(key) == "false"

@@ -11,7 +11,6 @@ refactored, and `.explain()` is the only place they're visible.
 from __future__ import annotations
 
 import re
-from pathlib import Path
 
 import pytest
 
@@ -578,134 +577,3 @@ def test_money_sum_buffers_stay_compact(spark, sf_dir, name):
         if (m := re.fullmatch(r"decimal\((\d+),\d+\)", t)) and int(m.group(1)) > 18
     ]
     assert not wide, types
-
-
-def test_driver_window_rotation_debt_bounded():
-    """plans/driver_log.py is the machine-checkable rotation ledger
-    (VERDICT r6 item 8): after this round's window rotation, no query
-    outside the window may carry a driver hash older than the
-    staleness ceiling, every in-window query must actually exist, the
-    ledger must cover the registry exactly, and new-this-round queries
-    must sit in the window from birth. The ceiling was renegotiated in
-    round 11 (VERDICT r10 item 2): the original fixed "two rounds"
-    bound requires inventory <= 3x50 and broke at 166 queries, so it
-    is now computed from the live registry size —
-    staleness_ceiling(N) = max(2, ceil(N/50) - 1) — which is the
-    tightest bound a 50-slot window can satisfy. Since round 8
-    (VERDICT r7 item 8) the ledger is also verified against the
-    evidence itself: every DRIVER_ROUNDS value must equal the round
-    derived from the on-disk CORRECTNESS_r*.json artifacts, so the
-    dict can never drift.
-
-    ERA-AWARE since round 13 (VERDICT r12 item 1, structural fix for
-    three consecutive judge-time reds): the driver drops
-    CORRECTNESS_r{CURRENT_ROUND}.json AFTER the builder's final
-    commit, so at judge time in-window queries freshly re-verified
-    this round derive to CURRENT_ROUND while the committed ledger
-    still carries the pre-rotation cohort. That is the EXPECTED
-    post-driver artifact lag — classified here as "pending rotation"
-    and excluded from the drift set — so this guard is green both at
-    the builder's final commit (no r{CURRENT_ROUND} artifact yet) and
-    immediately after the driver's artifact drop (every moved entry
-    is in-window and derives exactly to CURRENT_ROUND). Real drift —
-    an out-of-window query deriving differently, or an in-window
-    query deriving to anything other than its ledger round or
-    CURRENT_ROUND — still fails."""
-    from project_map_reduce_spark.plans import _DRIVER_WINDOW
-    from project_map_reduce_spark.plans.driver_log import (
-        CURRENT_ROUND,
-        DRIVER_ROUNDS,
-        _R12_NEW_DEFERRED,
-        _R13_NEW,
-        _R13_NEW_DEFERRED,
-        derive_driver_rounds,
-        ledger_drift,
-        staleness_ceiling,
-    )
-
-    reg = set(entries())
-    assert set(DRIVER_ROUNDS) == reg, (
-        sorted(reg - set(DRIVER_ROUNDS)),
-        sorted(set(DRIVER_ROUNDS) - reg),
-    )
-    window = set(_DRIVER_WINDOW)
-    assert window <= reg, sorted(window - reg)
-    assert len(_DRIVER_WINDOW) == 50 == len(window)
-    ceiling = staleness_ceiling(len(reg))
-    stale = {
-        q: r
-        for q, r in DRIVER_ROUNDS.items()
-        if q not in window and r < CURRENT_ROUND - ceiling
-    }
-    assert not stale, f"rotate these into the window (ceiling={ceiling}): {stale}"
-    missing_new = [q for q in _R13_NEW if q not in window]
-    assert not missing_new, f"new queries must be in-window from birth: {missing_new}"
-    # Overflow queries deferred from the PREVIOUS round must seat in
-    # this round's window (round 12 deferred none, so the list is
-    # empty this round — the assert keeps the mechanism armed).
-    unseated_deferred = [q for q in _R12_NEW_DEFERRED if q not in window]
-    assert not unseated_deferred, (
-        f"r12-deferred queries must open the r13 window: {unseated_deferred}"
-    )
-
-    # Ledger == evidence: derive every query's last full-match round
-    # straight from the driver artifacts at the repo root.
-    repo_root = Path(__file__).resolve().parents[1]
-    derived = derive_driver_rounds(repo_root)
-    never_ok = set(_R13_NEW) | set(_R12_NEW_DEFERRED) | set(_R13_NEW_DEFERRED)
-    drift = ledger_drift(DRIVER_ROUNDS, derived, window, never_ok, CURRENT_ROUND)
-    assert not drift, f"ledger drifted from CORRECTNESS artifacts (ledger, derived): {drift}"
-    # and every never-verified query is a declared new/deferred entry
-    # (new in-window entries may already be verified if the driver's
-    # r{CURRENT_ROUND} artifact has landed — that's pending rotation).
-    never_verified = reg - set(derived)
-    assert never_verified <= never_ok, sorted(never_verified - never_ok)
-    assert all(derived.get(q) == CURRENT_ROUND for q in never_ok - never_verified), {
-        q: derived.get(q) for q in never_ok - never_verified
-    }
-
-
-def test_ledger_guard_survives_post_commit_driver_artifact_drop():
-    """The structural acceptance criterion from VERDICT r12 item 1:
-    the rotation guard must be green at a HEAD that includes the
-    round's driver artifacts AND green again immediately after a
-    hypothetical NEW artifact drop. Simulate the drop: every in-window
-    query full-matches in a synthetic CORRECTNESS_r{CURRENT_ROUND}
-    artifact, advancing its derivation to CURRENT_ROUND while the
-    committed ledger still carries the pre-rotation cohort. That state
-    must classify as pending rotation (empty drift), while a genuinely
-    wrong entry — an OUT-of-window query whose derivation moved, or an
-    in-window query deriving to a round other than CURRENT_ROUND —
-    must still be reported."""
-    from project_map_reduce_spark.plans import _DRIVER_WINDOW
-    from project_map_reduce_spark.plans.driver_log import (
-        CURRENT_ROUND,
-        DRIVER_ROUNDS,
-        _R12_NEW_DEFERRED,
-        _R13_NEW,
-        _R13_NEW_DEFERRED,
-        derive_driver_rounds,
-        ledger_drift,
-    )
-
-    repo_root = Path(__file__).resolve().parents[1]
-    window = set(_DRIVER_WINDOW)
-    never_ok = set(_R13_NEW) | set(_R12_NEW_DEFERRED) | set(_R13_NEW_DEFERRED)
-    # State A: artifacts as committed (pre-drop) — already asserted
-    # empty by test_driver_window_rotation_debt_bounded; re-assert so
-    # this test is self-contained.
-    derived = derive_driver_rounds(repo_root)
-    assert not ledger_drift(DRIVER_ROUNDS, derived, window, never_ok, CURRENT_ROUND)
-    # State B: the driver dropped CORRECTNESS_r{CURRENT_ROUND}.json
-    # after our final commit — all 50 window queries re-verified.
-    post_drop = {**derived, **{q: CURRENT_ROUND for q in window}}
-    assert not ledger_drift(DRIVER_ROUNDS, post_drop, window, never_ok, CURRENT_ROUND)
-    # Real drift is still caught in both directions.
-    out_q = next(iter(set(DRIVER_ROUNDS) - window - never_ok))
-    bad = {**post_drop, out_q: CURRENT_ROUND}
-    assert ledger_drift(DRIVER_ROUNDS, bad, window, never_ok, CURRENT_ROUND) == {
-        out_q: (DRIVER_ROUNDS[out_q], CURRENT_ROUND)
-    }
-    in_q = next(iter(window - never_ok))
-    bad2 = {**post_drop, in_q: CURRENT_ROUND + 1}
-    assert in_q in ledger_drift(DRIVER_ROUNDS, bad2, window, never_ok, CURRENT_ROUND)

@@ -8,6 +8,7 @@ import os
 import shutil
 
 import pytest
+from conftest import drain
 from pyspark.sql import functions as F
 
 from project_map_reduce_spark.sources import sinks
@@ -128,7 +129,7 @@ def test_streaming_sink_is_idempotent_exactly_once(spark, sf_dir, tmp_path):
         .parquet(src)
     )
     q = write_stream_idempotent(stream, out, ckpt)
-    q.awaitTermination(120)
+    drain(q)
 
     got = spark.read.parquet(out)
     assert got.count() == ev.count()

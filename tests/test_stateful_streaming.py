@@ -7,6 +7,7 @@ import os
 import shutil
 
 import pytest
+from conftest import drain
 from pyspark.sql import functions as F
 
 from project_map_reduce_spark.streaming.stateful import (
@@ -40,15 +41,17 @@ def test_running_totals_converge_to_batch(spark, sf_dir, chunks):
         .option("maxFilesPerTrigger", 1)
         .parquet(path + "/c*.parquet/*.parquet")
     )
+    # A finite availableNow run must not arm the idle-eviction timeout:
+    # with it, the trigger schedules empty timeout batches forever.
     q = (
-        running_user_totals(stream)
+        running_user_totals(stream, evict_idle=False)
         .writeStream.format("memory")
         .queryName("running_totals")
         .outputMode("update")
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q)
     # Last emit per user = converged running total.
     final = (
         spark.sql("SELECT * FROM running_totals")

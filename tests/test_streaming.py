@@ -12,6 +12,7 @@ import os
 import shutil
 
 import pytest
+from conftest import drain
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -59,7 +60,7 @@ def _run_stream(spark, chunked, transform, *, mode="update"):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q)
     return spark.sql(f"SELECT * FROM {name}")
 
 
@@ -107,7 +108,7 @@ def test_stream_dedup_drops_duplicates(spark, sf_dir, chunked_events):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q)
     got = spark.sql("SELECT count(*), count(DISTINCT event_id) FROM smoke_dedup")
     n, n_distinct = got.collect()[0]
     expected = load(spark, sf_dir, "events").count()
@@ -148,7 +149,7 @@ def test_stream_dedup_within_watermark_bounded_state(spark):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q)
     n, n_distinct = spark.sql(
         "SELECT count(*), count(DISTINCT event_id) FROM smoke_dedup_wm"
     ).collect()[0]
@@ -189,7 +190,7 @@ def test_watermark_drops_late_rows(spark):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q)
     rows = spark.sql(
         "SELECT window.start, n FROM smoke_late ORDER BY window.start"
     ).collect()
@@ -250,7 +251,7 @@ def test_stream_stream_interval_join_equals_batch(spark, sf_dir, chunked_events)
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q)
     got = _canon(spark.sql("SELECT * FROM smoke_interval_join"))
 
     from project_map_reduce_spark.operators.rangejoin import interval_join
@@ -342,6 +343,23 @@ def test_watermark_drop_semantics_pinned(spark):
         last[r["ws"]] = (r["ws"].hour, r["n"], r["s"])
     assert dropped == 2, f"expected 2 late rows dropped, got {dropped}"
     assert set(last.values()) == {(10, 1, 1.0), (12, 2, 42.0)}, last
+
+
+def test_checkpoint_files_move_with_filesystem_rename(spark, tmp_path):
+    """get_spark writes streaming checkpoint and state-store files through
+    FileSystemBasedCheckpointFileManager (a temp file moved with one
+    FileSystem.rename), on the session and on every newSession() of it.
+    The default FileContext manager asks for the link status of both
+    paths on each rename; without Hadoop's native library every lookup
+    forks a ``readlink`` child."""
+    jvm = spark._jvm
+    managers = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    path = jvm.org.apache.hadoop.fs.Path(str(tmp_path))
+    for s in (spark, spark.newSession()):
+        mgr = managers.CheckpointFileManager.create(
+            path, s._jsparkSession.sessionState().newHadoopConf()
+        )
+        assert mgr.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
 
 
 def test_checkpoint_recovery_replays_batch_idempotently(spark, sf_dir, tmp_path):
