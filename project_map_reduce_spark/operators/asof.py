@@ -12,12 +12,6 @@ by (ts, side) with right rows sorting *before* left rows at equal ts
 (inclusive ``<=``). Cost: one shuffle on the key + a per-key sort —
 exactly what a keyed as-of costs at 100 TB; no cross join, no
 per-row Python.
-
-For the *unkeyed* (global) variant, a single global window would
-serialize on one partition; ``asof_join_global`` instead range-buckets
-the timeline, windows within buckets, and carries each bucket's last
-right row forward via a tiny broadcast of per-bucket maxima — shuffle
-stays proportional to data, parallelism proportional to buckets.
 """
 
 from __future__ import annotations
@@ -37,15 +31,9 @@ def asof_join_keyed(
     right_ts: str,
     value_cols: list[str],
     tiebreak: str,
-    match_col: str | None = None,
 ) -> DataFrame:
     """Keyed as-of left join. Output = all left columns + ``value_cols``
-    from the matched right row (null when no right row precedes).
-
-    When ``match_col`` is given, an extra boolean column of that name is
-    emitted: true iff a right row matched. Callers must use this — not
-    ``value_cols[0] IS NULL`` — to detect non-matches, because a matched
-    right row may legitimately carry NULL in any value column."""
+    from the matched right row (null when no right row precedes)."""
     carried = F.struct(
         F.col(right_ts).alias("__ts"),
         F.col(tiebreak).alias("__tb"),
@@ -73,95 +61,7 @@ def asof_join_keyed(
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     matched = r.unionByName(l).withColumn("__best", F.max("__carry").over(w))
-    extra = (
-        # The whole carry struct is null iff no right row precedes, so
-        # this flag is exact even when every value column is NULL.
-        [F.col("__best").isNotNull().alias(match_col)]
-        if match_col is not None
-        else []
-    )
-    out = matched.filter(F.col(_SIDE) == 1).select(
+    return matched.filter(F.col(_SIDE) == 1).select(
         *[F.col(f"__l_{t.name}").alias(t.name) for t in left.schema],
         *[F.col(f"__best.{c}").alias(c) for c in value_cols],
-        *extra,
     )
-    return out
-
-
-def asof_join_global(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    left_ts: str,
-    right_ts: str,
-    value_cols: list[str],
-    tiebreak: str,
-    bucket: str = "month",
-) -> DataFrame:
-    """Unkeyed as-of join, scalable via time-bucketing.
-
-    Phase 1: window within ``date_trunc(bucket)`` partitions.
-    Phase 2: per-bucket maxima (tiny: one row per bucket) are
-    cross-bucket cumulated on the driver-free path — a second window
-    over the bucket keys only — then broadcast-joined back so rows
-    whose bucket has no earlier right row inherit the previous
-    bucket's last value.
-    """
-    bcol = lambda t: F.date_trunc(bucket, F.col(t))  # noqa: E731
-
-    keyed_left = left.withColumn("__bucket", bcol(left_ts))
-    keyed_right = right.withColumn("__bucket", bcol(right_ts))
-    within = asof_join_keyed(
-        keyed_left,
-        keyed_right,
-        key="__bucket",
-        left_ts=left_ts,
-        right_ts=right_ts,
-        value_cols=value_cols,
-        tiebreak=tiebreak,
-        match_col="__matched",
-    )
-
-    # Per-bucket last right row -> cumulate across buckets (rows = #buckets,
-    # trivially small) -> "best as of the *end of the previous* bucket".
-    # The bucket spine is the UNION of left and right buckets: a bucket
-    # that has left rows but no right rows still needs a spine row, or
-    # its left rows would miss the carry join and stay null.
-    carry_struct = F.struct(
-        F.col(right_ts).alias("__ts"),
-        F.col(tiebreak).alias("__tb"),
-        *[F.col(c).alias(c) for c in value_cols],
-    )
-    per_bucket = keyed_right.groupBy("__bucket").agg(
-        F.max(carry_struct).alias("__last")
-    )
-    spine = (
-        keyed_left.select("__bucket")
-        .union(keyed_right.select("__bucket"))
-        .distinct()
-        .join(per_bucket, on="__bucket", how="left")
-    )
-    wb = Window.orderBy("__bucket").rowsBetween(Window.unboundedPreceding, -1)
-    prev_carry = spine.select(
-        F.col("__bucket"), F.max("__last").over(wb).alias("__prev")
-    )
-
-    out = (
-        within.join(F.broadcast(prev_carry), on="__bucket", how="left")
-        .withColumn(
-            # Explicit match flag, not value_cols[0] IS NULL: a matched
-            # right row may carry NULL in any value column.
-            "__use_prev",
-            ~F.col("__matched") & F.col("__prev").isNotNull(),
-        )
-        .select(
-            *[c for c in left.columns],
-            *[
-                F.when(F.col("__use_prev"), F.col(f"__prev.{c}"))
-                .otherwise(F.col(c))
-                .alias(c)
-                for c in value_cols
-            ],
-        )
-    )
-    return out

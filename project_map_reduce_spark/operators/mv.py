@@ -179,11 +179,12 @@ def mv_stream_refresh(stream: DataFrame, path: str, checkpoint: str,
     """Run a stream INTO the MV: every micro-batch merges its partials
     exactly once (``mv_apply_batch``), the MV path is the only sink.
     Returns the started StreamingQuery (availableNow trigger — the
-    finite-stream test harness; a production stream drops the trigger)."""
-    spark = stream.sparkSession
+    finite-stream test harness; a production stream drops the trigger).
+    Each merge runs on the batch's own session, which holds the conf the
+    stream was started with, not whatever the caller's session has now."""
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        mv_apply_batch(spark, path, batch, batch_id, keys, sums)
+        mv_apply_batch(batch.sparkSession, path, batch, batch_id, keys, sums)
 
     return (
         stream.writeStream.foreachBatch(apply_batch)

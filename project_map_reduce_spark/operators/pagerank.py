@@ -65,21 +65,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-@contextmanager
-def _session_confs(spark, confs):
-    """Pin session confs for the jobs launched inside the block,
-    restoring prior values on exit. Same concurrency caveat as
-    ``_no_aqe`` (which this generalizes): the confs are SESSION-global
-    for the duration."""
-    old = {k: spark.conf.get(k) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in old.items():
-            spark.conf.set(k, v)
+from project_map_reduce_spark.session import scoped_conf
 
 
 @contextmanager
@@ -104,7 +90,7 @@ def _no_aqe(spark):
     run ``fit`` on ``spark.newSession()`` (isolated conf, shared
     SparkContext) instead.
     """
-    with _session_confs(spark, {"spark.sql.adaptive.enabled": "false"}):
+    with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
         yield
 
 
@@ -238,7 +224,7 @@ def pagerank(
     # shuffled-hash join streams both sides in place (rank side: each
     # round's output inherits hashpartitioning(node) from its own
     # final aggregate).
-    with _session_confs(
+    with scoped_conf(
         spark,
         {
             "spark.sql.adaptive.enabled": "false",

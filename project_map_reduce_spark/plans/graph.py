@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from project_map_reduce_spark.functions.det import r6d
 from project_map_reduce_spark.operators.pagerank import pagerank
 from project_map_reduce_spark.registry import fmt_doc, register
+from project_map_reduce_spark.session import scoped_conf
 from project_map_reduce_spark.tables import load, local_rows
 
 _ITERS = 5
@@ -176,13 +177,10 @@ def q_hierarchy_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("user_id"), F.max("user_id")
     ).first()
     depth = max(1, int(max_id).bit_length())
-    limit_key = "spark.sql.cteRecursionRowLimit"
-    prev_limit = spark.conf.get(limit_key)
-    spark.conf.set(limit_key, str(2 * n_users * (depth + 1)))
+    row_limit = {"spark.sql.cteRecursionRowLimit": str(2 * n_users * (depth + 1))}
     view = "q137_events"
     ev.createOrReplaceTempView(view)
     try:
-        out = spark.sql(_HIER_SQL.format(events=view, div="DIV"))
         # The returned plan is lazy but the row-limit conf is read at
         # EXECUTION — materialize executor-side while it holds (the Q90
         # snapshot pattern: distributed write + lazy read; O(users)
@@ -194,10 +192,12 @@ def q_hierarchy_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         snap = _tempfile.mkdtemp(prefix="pmrs_q137_")
         atexit.register(_shutil.rmtree, snap, ignore_errors=True)
-        out.write.mode("overwrite").parquet(snap)
+        with scoped_conf(spark, row_limit):
+            spark.sql(_HIER_SQL.format(events=view, div="DIV")).write.mode(
+                "overwrite"
+            ).parquet(snap)
         return spark.read.parquet(snap)
     finally:
-        spark.conf.set(limit_key, prev_limit)
         # Session-global name: leave nothing registered behind (a later
         # caller colliding with a stale q137_events would read old data).
         spark.catalog.dropTempView(view)

@@ -130,12 +130,9 @@ def q_length_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     by character length (unique doc_id tiebreak → deterministic ntile),
     with per-decile count/min/max/mean. The distribution that chooses
     Q81's packing capacity and Q56's length cutoffs. ntile over a
-    global ORDER BY serializes one sort partition at 100 TB — the scale
-    form is IMPLEMENTED as ``operators/bucketize.py`` (approx_percentile
-    boundary sketch + shuffle-free map-side assignment, Q75's sketch
-    discipline; ≥95% ntile agreement and a no-Exchange plan contracted
-    in tests/test_bucketize.py). This query keeps the exact ntile so the
-    oracle hash stays rank-exact."""
+    global ORDER BY serializes one sort partition at 100 TB; a sketched
+    boundary split would scale but would not be rank-exact, so this
+    query keeps the exact ntile and the oracle hash stays rank-exact."""
     d = load(spark, sf_dir, "documents")
     w = Window.orderBy("n_chars", "doc_id")
     t = d.select("doc_id", "n_chars", F.ntile(10).over(w).alias("decile"))

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from project_map_reduce_spark.functions.det import SUM6
 from project_map_reduce_spark.registry import fmt_doc, register
+from project_map_reduce_spark.session import scoped_conf
 from project_map_reduce_spark.tables import load, local_rows
 
 # Both sides of every hash-checked sum here accumulate in DECIMAL(27,6)
@@ -193,10 +194,7 @@ def q_dpp_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", "value", F.to_date("ts").alias("event_date")
     )
     star_dir = tempfile.mkdtemp(prefix="q_dpp_prune_")
-    dpp_key = "spark.sql.optimizer.dynamicPartitionPruning.enabled"
-    prev_dpp = spark.conf.get(dpp_key)
     try:
-        spark.conf.set(dpp_key, "true")
         ev.repartition("event_date").write.partitionBy("event_date").parquet(
             f"{star_dir}/fact"
         )
@@ -220,10 +218,11 @@ def q_dpp_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
                 sum6("value").alias("sum_value"),
             )
         )
-        _assert_dynamic_pruning(agg)
-        rows = agg.collect()
+        dpp = {"spark.sql.optimizer.dynamicPartitionPruning.enabled": "true"}
+        with scoped_conf(spark, dpp):
+            _assert_dynamic_pruning(agg)
+            rows = agg.collect()
     finally:
-        spark.conf.set(dpp_key, prev_dpp)
         shutil.rmtree(star_dir, ignore_errors=True)
     return local_rows(
         spark,
@@ -382,14 +381,8 @@ def _assert_cols_pushed(df: DataFrame, cols: list[str]) -> None:
     limit is raised for the duration of the read."""
     import re
 
-    spark = df.sparkSession
-    key = "spark.sql.maxMetadataStringLength"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "4096")
-    try:
+    with scoped_conf(df.sparkSession, {"spark.sql.maxMetadataStringLength": "4096"}):
         plan = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set(key, old)
     pf = re.search(r"PushedFilters: \[([^\]]*)\]", plan)
     missing = [
         c
@@ -1083,11 +1076,13 @@ def q_pyds_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     read stays lazy and distributed.
     """
     import math
-    import shutil
-    import tempfile
 
     import pyarrow.parquet as pq
 
+    from project_map_reduce_spark.plans.streaming_shaped import (
+        _finite_stream,
+        _session_output_dir,
+    )
     from project_map_reduce_spark.sources.pyds import DocPayloadDataSource
     from project_map_reduce_spark.sources.sinks import write_stream_idempotent
     from project_map_reduce_spark.tables import table_path
@@ -1096,46 +1091,38 @@ def q_pyds_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = table_path(sf_dir, "documents")
     n = pq.ParquetFile(path).metadata.num_rows
     chunk = max(1, math.ceil(n / 4))
-
-    from project_map_reduce_spark.plans.streaming_shaped import (
-        _session_output_dir,
-    )
-
     sink = _session_output_dir("pmrs_q141_sink_")
-    tmp = tempfile.mkdtemp(prefix="pmrs_q141_")
-    try:
-        stream = (
-            spark.readStream.format("pmrs_docpayload")
-            .option("path", path)
-            .option("chunk_rows", chunk)
-            .load()
-        )
-        q = write_stream_idempotent(
+    stream = (
+        spark.readStream.format("pmrs_docpayload")
+        .option("path", path)
+        .option("chunk_rows", chunk)
+        .load()
+    )
+    with _finite_stream(spark, "q_pyds_stream") as fs:
+        q = fs.start(lambda: write_stream_idempotent(
             stream,
             sink,
-            f"{tmp}/ckpt",
+            f"{fs.tmp}/ckpt",
             output_mode="append",
             trigger_available_now=False,
-        )
+        ))
         try:
             q.processAllAvailable()
         finally:
             q.stop()
         q.awaitTermination(60)
-        out = spark.read.option("basePath", sink).parquet(sink).select(
-            "doc_id", "byte_len", "payload_md5", "chunk_id"
+    out = spark.read.option("basePath", sink).parquet(sink).select(
+        "doc_id", "byte_len", "payload_md5", "chunk_id"
+    )
+    # Premise guard for the oracle's chunk arithmetic: doc_id must be
+    # the file row position (dense 0..n-1) — footer+agg only.
+    lo_hi = out.agg(F.min("doc_id"), F.max("doc_id")).first()
+    if lo_hi[0] != 0 or lo_hi[1] != n - 1:
+        raise RuntimeError(
+            f"q_pyds_stream: doc_id not dense 0..{n - 1} "
+            f"(got {lo_hi}) — chunk_id oracle premise broke"
         )
-        # Premise guard for the oracle's chunk arithmetic: doc_id must
-        # be the file row position (dense 0..n-1) — footer+agg only.
-        lo_hi = out.agg(F.min("doc_id"), F.max("doc_id")).first()
-        if lo_hi[0] != 0 or lo_hi[1] != n - 1:
-            raise RuntimeError(
-                f"q_pyds_stream: doc_id not dense 0..{n - 1} "
-                f"(got {lo_hi}) — chunk_id oracle premise broke"
-            )
-        return out
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -1808,7 +1795,7 @@ def q_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     listing-time pruning, applied to the aggregate itself.
 
     Engine notes: the two confs (aggregatePushdown + the v2 parquet
-    read path) are set for the scratch read and RESTORED in finally —
+    read path) are held only around the scratch read (``scoped_conf``) —
     v1 is the session default and other queries depend on its plan
     shapes. Both engines see identical values: parquet min/max stats
     are exact for int64/double (no truncation at these widths), and the
@@ -1823,33 +1810,32 @@ def q_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("bucket", F.col("event_id") % 4)
     )
     tmp = tempfile.mkdtemp(prefix="q_agg_pushdown_")
-    prev_push = spark.conf.get("spark.sql.parquet.aggregatePushdown")
-    prev_v1 = spark.conf.get("spark.sql.sources.useV1SourceList")
+    v2_pushdown = {
+        "spark.sql.parquet.aggregatePushdown": "true",
+        "spark.sql.sources.useV1SourceList": "",
+    }
     try:
         ev.write.partitionBy("bucket").parquet(f"{tmp}/part")
-        spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-        spark.conf.set("spark.sql.sources.useV1SourceList", "")
-        out = (
-            spark.read.parquet(f"{tmp}/part")
-            .groupBy("bucket")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.min("event_id").alias("min_id"),
-                F.max("event_id").alias("max_id"),
-                F.round(F.min("value"), 6).alias("min_value"),
-                F.round(F.max("value"), 6).alias("max_value"),
+        with scoped_conf(spark, v2_pushdown):
+            out = (
+                spark.read.parquet(f"{tmp}/part")
+                .groupBy("bucket")
+                .agg(
+                    F.count(F.lit(1)).alias("n_rows"),
+                    F.min("event_id").alias("min_id"),
+                    F.max("event_id").alias("max_id"),
+                    F.round(F.min("value"), 6).alias("min_value"),
+                    F.round(F.max("value"), 6).alias("max_value"),
+                )
             )
-        )
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        if "PushedAggregation: [" not in plan or "COUNT(*)" not in plan:
-            raise AssertionError(
-                "q_agg_pushdown: aggregate was not pushed to the parquet "
-                "footer — plan regressed to a data scan"
-            )
-        rows = out.collect()
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            if "PushedAggregation: [" not in plan or "COUNT(*)" not in plan:
+                raise AssertionError(
+                    "q_agg_pushdown: aggregate was not pushed to the parquet "
+                    "footer — plan regressed to a data scan"
+                )
+            rows = out.collect()
     finally:
-        spark.conf.set("spark.sql.parquet.aggregatePushdown", prev_push)
-        spark.conf.set("spark.sql.sources.useV1SourceList", prev_v1)
         shutil.rmtree(tmp, ignore_errors=True)
     return local_rows(
         spark,

@@ -32,6 +32,8 @@ from pyspark.sql import functions as F
 
 from project_map_reduce_spark.functions.det import r6d
 from project_map_reduce_spark.registry import fmt_doc, register
+from project_map_reduce_spark.session import scoped_conf
+from project_map_reduce_spark.sources.sinks import write_stream_idempotent
 from project_map_reduce_spark.streaming import transforms as X
 from project_map_reduce_spark.tables import load, local_rows
 
@@ -47,32 +49,33 @@ def _session_output_dir(prefix: str) -> str:
     return d
 
 
-def _await_finite_stream(q, what: str) -> None:
-    """Await an availableNow stream; fail LOUDLY on timeout — reading
-    the sink of a half-finished stream would return partial totals (a
-    driver hash mismatch that looks like a logic bug), and the caller's
-    finally block would rmtree the source under a live query."""
-    finished = q.awaitTermination(300)
-    if q.exception():
-        raise q.exception()
-    if not finished:
+def _persist(df: DataFrame, prefix: str) -> DataFrame:
+    """Write ``df`` to a fresh session output dir and return ONE lazy
+    parquet read of it: the executors do the write, nothing unbounded
+    touches the driver, and the returned plan is a FileScan."""
+    out = _session_output_dir(prefix)
+    df.write.mode("overwrite").parquet(out)
+    return df.sparkSession.read.parquet(out)
+
+
+def _await_finite_stream(q, what: str, timeout: float = 300) -> None:
+    """Await an availableNow stream and fail LOUDLY: re-raise the
+    query's own exception, or raise if it did not finish within
+    ``timeout`` seconds — reading the sink of a half-finished stream
+    would return partial totals (a hash mismatch that looks like a
+    logic bug). The query is stopped either way, so it never outlives
+    its caller or keeps reading a source its caller removes."""
+    try:
+        finished = q.awaitTermination(timeout)
+        if q.exception():
+            raise q.exception()
+        if not finished:
+            raise RuntimeError(
+                f"{what}: stream did not finish within {timeout}s "
+                "(host stall?) — refusing to read a partial sink"
+            )
+    finally:
         q.stop()
-        raise RuntimeError(
-            f"{what}: stream did not finish within 300s "
-            "(host stall?) — refusing to read a partial sink"
-        )
-
-
-def _literal_rows(spark: SparkSession, rows, schema: str) -> DataFrame:
-    """One-partition literal frame for sentinel/flush micro-batches.
-
-    ``createDataFrame(list)`` parallelizes over defaultParallelism (32
-    local slices for a 1-row frame), and the staging ``coalesce(1)``
-    then evaluates all 32 Python partitions SEQUENTIALLY inside one
-    task — ~0.14 s of Python-runner dispatch per empty slice, ~4.5 s
-    per staged sentinel (measured). Same pickle path, same schema and
-    values, one slice: the write costs one Python partition."""
-    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
 
 
 def _stage_batches(tmp: str, stages) -> str:
@@ -119,28 +122,113 @@ def _stage_batches(tmp: str, stages) -> str:
     return src
 
 
-def _last_update_snapshot(
-    spark: SparkSession,
-    sink: str,
-    key_cols: list[str],
-    final_cols: list,
-    out_dir: str,
-) -> DataFrame:
-    """Resolve an update-mode idempotent sink (one batch_id=N directory
-    per micro-batch) to each key's LAST update projected to
-    ``final_cols``, written DISTRIBUTED to ``out_dir`` and returned as
-    a lazy parquet read. The executors do the window + write; nothing
-    unbounded touches the driver."""
-    snap = spark.read.option("basePath", sink).parquet(sink)
+class _finite_stream:
+    """One finite Structured Streaming run, as a context manager: a temp
+    workspace (removed on exit), ordered staged micro-batches, and a
+    start that holds ``conf`` on the caller's session ONLY around the
+    ``start()`` call. Spark copies the session conf into the stream's
+    own session when it starts, so every micro-batch runs with ``conf``
+    (state partitions, state-store provider) while staging, the await
+    and the snapshot run on the caller's conf, and no query leaves a
+    session-global override behind. The stream is started on the
+    caller's session, so the caller's ``StreamingQueryListener``s see
+    its progress."""
+
+    def __init__(self, spark: SparkSession, name: str, conf: dict | None = None):
+        self.spark, self.name, self.conf = spark, name, conf or {}
+        self.tmp = tempfile.mkdtemp(prefix=f"pmrs_{name}_")
+
+    def __enter__(self) -> "_finite_stream":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        shutil.rmtree(self.tmp, ignore_errors=True)
+
+    def stage(self, *stages: tuple[str, DataFrame]) -> DataFrame:
+        """Stage (name, frame) pairs as ordered micro-batches
+        (``_stage_batches``) and return a file-source stream over them,
+        one file per trigger, typed by the first frame's schema."""
+        src = _stage_batches(self.tmp, stages)
+        return (
+            self.spark.readStream.schema(stages[0][1].schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+
+    def start(self, fn):
+        """Call ``fn()`` — anything that starts a stream — with ``conf``
+        held, and return the started query."""
+        with scoped_conf(self.spark, self.conf):
+            return fn()
+
+    def run(self, df: DataFrame, output_mode: str, *, sink: str | None = None,
+            ckpt: str | None = None) -> DataFrame:
+        """Run ``df`` to completion into the idempotent per-batch sink
+        (``write_stream_idempotent``) and return the sink read back, one
+        ``batch_id`` partition per micro-batch."""
+        sink = sink or f"{self.tmp}/sink"
+        ckpt = ckpt or f"{self.tmp}/ckpt"
+        _await_finite_stream(self.start(lambda: write_stream_idempotent(
+            df, sink, ckpt, output_mode=output_mode
+        )), self.name)
+        return self.spark.read.option("basePath", sink).parquet(sink)
+
+
+def _last_update_snapshot(snap: DataFrame, key_cols: list[str],
+                          final_cols: list, prefix: str) -> DataFrame:
+    """Resolve an update-mode sink (``_finite_stream.run``'s read-back)
+    to each key's LAST update projected to ``final_cols``, persisted
+    executor-side (``_persist``)."""
     last = Window.partitionBy(*key_cols).orderBy(F.desc("batch_id"))
-    (
+    return _persist(
         snap.withColumn("__rn", F.row_number().over(last))
         .where(F.col("__rn") == 1)
-        .select(*final_cols)
-        .write.mode("overwrite")
-        .parquet(out_dir)
+        .select(*final_cols),
+        prefix,
     )
-    return spark.read.parquet(out_dir)
+
+
+def _events(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
+    """The events columns ``cols``, with ``ts`` as a session-zone
+    TIMESTAMP: watermarks track only LTZ timestamps, and Spark 4.1 reads
+    the fixture's ``ts`` as TIMESTAMP_NTZ."""
+    ev = load(spark, sf_dir, "events").select(*cols)
+    if "ts" in cols and ev.schema["ts"].dataType.simpleString() == "timestamp_ntz":
+        ev = ev.withColumn("ts", F.to_timestamp_ltz("ts"))
+    return ev
+
+
+def _ntz(*cols: str) -> list:
+    """``cols`` cast back to TIMESTAMP_NTZ for the snapshot: the session
+    zone is UTC, so the cast is value-exact and the snapshot hashes like
+    every batch-path timestamp."""
+    return [F.col(c).cast("timestamp_ntz").alias(c) for c in cols]
+
+
+def _shuffle_parts(n) -> dict:
+    """Stream conf: ``n`` shuffle partitions, which a stateful operator
+    also takes as its state-store partition count at stream start."""
+    return {"spark.sql.shuffle.partitions": str(n)}
+
+
+def _id_chunks(ev: DataFrame, n: int = 3) -> list:
+    """``n`` stages of ``ev`` split on ``event_id`` mod n, for streams
+    whose result does not depend on arrival order."""
+    return [(f"c{i}", ev.where(F.col("event_id") % n == i)) for i in range(n)]
+
+
+def _time_chunks(ev: DataFrame, n: int = 3) -> tuple[list, datetime.datetime]:
+    """``n`` stages of ``ev`` over CONTIGUOUS event-time ranges, oldest
+    first, plus the max ``ts``. The bounds come from one min/max job — a
+    distributed range split, no global sort. In-order arrival means no
+    input row is ever below the watermark."""
+    lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
+    if lo is None or hi is None:
+        raise ValueError("events table is empty — nothing to stream")
+    span_us = max(1, int((hi - lo).total_seconds() * 1_000_000))
+    frac = F.timestamp_diff("MICROSECOND", F.lit(lo), F.col("ts")) / F.lit(span_us)
+    chunk = F.least(F.floor(frac * n).cast("int"), F.lit(n - 1))
+    return [(f"c{i}", ev.where(chunk == i)) for i in range(n)], hi
 
 
 @register(
@@ -235,10 +323,6 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reference's at-least-once redelivery, SURVEY.md §1.4) — the
     result must equal the clean table."""
     ev = load(spark, sf_dir, "events")
-    from pyspark.sql import functions as F
-
-    from project_map_reduce_spark.functions.det import r6d
-
     doubled = ev.unionByName(ev)
     deduped = X.dedup_events(doubled)
     return deduped.agg(
@@ -280,48 +364,24 @@ def q_stream_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream jobs read the same snapshot path; only the test-harness
     staging dirs are temporary.
     """
-    from project_map_reduce_spark.sources.sinks import write_stream_idempotent
     from project_map_reduce_spark.streaming.stateful import running_user_totals
 
-    ev = load(spark, sf_dir, "events").select("user_id", "value")
-    tmp = tempfile.mkdtemp(prefix="pmrs_q90_")
-    out_dir = _session_output_dir("pmrs_q90_final_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        src, sink, ckpt = (f"{tmp}/{d}" for d in ("src", "sink", "ckpt"))
-        ev.repartition(3).write.parquet(src)
-        # State-store partitioning follows shuffle.partitions at query
-        # start; 200 (vanilla default) means 200 state dirs per batch
-        # for 150 keys at sf0.01 — but pinning it LOW caps the stateful
-        # operator's parallelism at every scale (a flat 4 made the sf10
-        # probe run the Python state op 4-wide on a 32-core host). Pin
-        # to cores: bounded dir overhead, full parallelism.
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(spark.sparkContext.defaultParallelism),
-        )
-        stream = (
-            spark.readStream.schema("user_id bigint, value double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = write_stream_idempotent(
-            running_user_totals(stream, evict_idle=False),
-            sink,
-            ckpt,
-            output_mode="update",
-        )
-        _await_finite_stream(q, "q_stream_totals")
+    ev = _events(spark, sf_dir, "event_id", "user_id", "value")
+    # State-store partitioning follows shuffle.partitions at stream
+    # start; 200 (vanilla default) means 200 state dirs per batch for
+    # 150 keys at sf0.01 — but pinning it LOW caps the stateful
+    # operator's parallelism at every scale (a flat 4 made the sf10
+    # probe run the Python state op 4-wide on a 32-core host). Pin to
+    # cores: bounded dir overhead, full parallelism.
+    cores = _shuffle_parts(spark.sparkContext.defaultParallelism)
+    with _finite_stream(spark, "q_stream_totals", cores) as fs:
+        totals = running_user_totals(fs.stage(*_id_chunks(ev)), evict_idle=False)
         return _last_update_snapshot(
-            spark,
-            sink,
+            fs.run(totals, "update"),
             ["user_id"],
             ["user_id", "n_events", r6d(F.col("sum_value"), "sum_value")],
-            out_dir,
+            "pmrs_q90_final_",
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # State-partition count for the evict-on-finalize / stream-stream-join
@@ -407,37 +467,21 @@ def q_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     write all executor-side; the returned DataFrame is a lazy parquet
     read (no driver gather, SURVEY §4.2).
     """
-    from project_map_reduce_spark.sources.sinks import write_stream_idempotent
-
-    ev = load(spark, sf_dir, "events").select("event_id", "ts", "value")
-    if ev.schema["ts"].dataType.simpleString() == "timestamp_ntz":
-        ev = ev.withColumn("ts", F.to_timestamp_ltz("ts"))
+    ev = _events(spark, sf_dir, "event_id", "ts", "value")
     is_late = F.col("event_id") % _LATE_MOD == _LATE_RES
-
-    tmp = tempfile.mkdtemp(prefix="pmrs_q98_")
-    out_dir = _session_output_dir("pmrs_q98_final_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
+    # Unlike q_stream_totals (state O(users) — pinned to cores), this
+    # aggregation's state is O(open windows): a few hundred keys at ANY
+    # corpus size, and the map-side partial agg parallelism follows the
+    # FILE partitions, not this. A small constant is the right setting —
+    # cores-many state partitions only add checkpoint overhead (measured
+    # +2 s at sf0.1 and sf1, flat at sf10, with zero scale benefit).
+    with _finite_stream(spark, "q_watermark_late", _shuffle_parts(4)) as fs:
         # All on-time rows MUST land in one micro-batch (watermark is 0
         # while it runs) — the oracle models exactly one advancement.
-        src = _stage_batches(tmp, (
+        stream = fs.stage(
             ("ontime", ev.where(~is_late).select("ts", "value")),
             ("spacer", ev.where(F.lit(False)).select("ts", "value")),
             ("late", ev.where(is_late).select("ts", "value")),
-        ))
-
-        # Unlike q_stream_totals (state O(users) — pinned to cores),
-        # this aggregation's state is O(open windows): a few hundred
-        # keys at ANY corpus size, and the map-side partial agg
-        # parallelism follows the FILE partitions, not this. A small
-        # constant is the right setting — cores-many state partitions
-        # only add checkpoint overhead (measured +2 s at sf0.1 and sf1,
-        # flat at sf10, with zero scale benefit).
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        stream = (
-            spark.readStream.schema("ts timestamp, value double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
         )
         agg = (
             stream.withWatermark("ts", f"{_WM_DELAY_MIN} minutes")
@@ -453,27 +497,12 @@ def q_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "sum_value",
             )
         )
-        q = write_stream_idempotent(
-            agg, f"{tmp}/sink", f"{tmp}/ckpt", output_mode="update"
-        )
-        _await_finite_stream(q, "q_watermark_late")
         return _last_update_snapshot(
-            spark,
-            f"{tmp}/sink",
+            fs.run(agg, "update"),
             ["window_start"],
-            [
-                # session zone is UTC, so the LTZ→NTZ cast is value-exact
-                # and the snapshot hashes like every batch-path timestamp
-                F.col("window_start").cast("timestamp_ntz").alias("window_start"),
-                F.col("window_end").cast("timestamp_ntz").alias("window_end"),
-                "n_events",
-                "sum_value",
-            ],
-            out_dir,
+            [*_ntz("window_start", "window_end"), "n_events", "sum_value"],
+            "pmrs_q98_final_",
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 fmt_doc(
@@ -544,59 +573,29 @@ def q_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     unbounded stream; append-mode idempotent sink; final snapshot is an
     executor-side parquet write returned as a lazy read (SURVEY §4.2).
     """
-    from project_map_reduce_spark.sources.sinks import write_stream_idempotent
-
-    ev = load(spark, sf_dir, "events").select("event_id", "ts", "value")
-    if ev.schema["ts"].dataType.simpleString() == "timestamp_ntz":
-        ev = ev.withColumn("ts", F.to_timestamp_ltz("ts"))
+    ev = _events(spark, sf_dir, "event_id", "ts", "value")
     redeliver = ev.where(F.col("event_id") % _DD_MOD == _DD_RES).withColumn(
         "ts", F.col("ts") + F.expr(f"INTERVAL {_DD_REDELIVER_H} HOURS")
     )
-
-    tmp = tempfile.mkdtemp(prefix="pmrs_q100_")
-    out_dir = _session_output_dir("pmrs_q100_final_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        src = _stage_batches(tmp, (
+    # dedup state is O(keys in horizon) — grows with data: pin the state
+    # partitioning to cores (same reasoning as q_stream_totals)
+    cores = _shuffle_parts(spark.sparkContext.defaultParallelism)
+    with _finite_stream(spark, "q_stream_dedup_watermark", cores) as fs:
+        stream = fs.stage(
             ("originals", ev),
             ("spacer", ev.where(F.lit(False))),
             ("redeliver", redeliver),
-        ))
-
-        # dedup state is O(keys in horizon) — grows with data: pin the
-        # state partitioning to cores (same reasoning as q_stream_totals)
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(spark.sparkContext.defaultParallelism),
-        )
-        stream = (
-            spark.readStream.schema("event_id bigint, ts timestamp, value double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
         )
         deduped = stream.withWatermark(
             "ts", f"{_DD_DELAY_MIN} minutes"
         ).dropDuplicatesWithinWatermark(["event_id"])
-        q = write_stream_idempotent(
-            deduped, f"{tmp}/sink", f"{tmp}/ckpt", output_mode="append"
-        )
-        _await_finite_stream(q, "q_stream_dedup_watermark")
         # append-mode sink: the emitted rows ARE the result — no
         # last-update resolution needed, just drop the batch_id dir key
-        snap = spark.read.option("basePath", f"{tmp}/sink").parquet(f"{tmp}/sink")
-        (
-            snap.select(
-                "event_id",
-                F.col("ts").cast("timestamp_ntz").alias("ts"),
-                F.round("value", 6).alias("value"),
-            )
-            .write.mode("overwrite")
-            .parquet(out_dir)
+        snap = fs.run(deduped, "append")
+        return _persist(
+            snap.select("event_id", *_ntz("ts"), F.round("value", 6).alias("value")),
+            "pmrs_q100_final_",
         )
-        return spark.read.parquet(out_dir)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 fmt_doc(
@@ -606,6 +605,34 @@ fmt_doc(
     d=_DD_DELAY_MIN,
     h=_DD_REDELIVER_H,
 )
+
+
+def _err_pur_join(stream: DataFrame, how: str) -> DataFrame:
+    """(err_id, pur_id): purchases within 1 hour after an error by the
+    same user, as a stream-STREAM interval join of ``stream`` with
+    itself. Both sides carry a 2-hour watermark, which bounds the join
+    state: an error older than watermark + 1 h can match nothing more
+    and is evicted (or, under an outer join, emitted null-padded)."""
+
+    def side(kind: str, tag: str) -> DataFrame:
+        return (
+            stream.where(F.col("event_type") == kind)
+            .select(
+                F.col("user_id").alias(f"{tag}_user"),
+                F.col("event_id").alias(f"{tag}_id"),
+                F.col("ts").alias(f"{tag}_ts"),
+            )
+            .withWatermark(f"{tag}_ts", "2 hours")
+        )
+
+    return side("error", "err").join(
+        side("purchase", "pur"),
+        F.expr(
+            "err_user = pur_user AND pur_ts > err_ts "
+            "AND pur_ts <= err_ts + INTERVAL 1 HOUR"
+        ),
+        how,
+    ).select("err_id", "pur_id")
 
 
 @register(
@@ -643,93 +670,19 @@ def q_join_interval_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream-stream join carries TWO state stores per partition, so
     checkpoint-commit overhead, not compute, dominates here).
     """
-    from project_map_reduce_spark.sources.sinks import write_stream_idempotent
-
-    ev = load(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type"
-    )
-    if ev.schema["ts"].dataType.simpleString() == "timestamp_ntz":
-        ev = ev.withColumn("ts", F.to_timestamp_ltz("ts"))
-    lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
-    if lo is None or hi is None:
-        raise ValueError("events table is empty — nothing to stream-join")
-    span_us = max(1, int((hi - lo).total_seconds() * 1_000_000))
-
-    tmp = tempfile.mkdtemp(prefix="pmrs_q101_")
-    out_dir = _session_output_dir("pmrs_q101_final_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        frac = (
-            F.timestamp_diff("MICROSECOND", F.lit(lo), F.col("ts"))
-            / F.lit(span_us)
-        )
-        chunk = F.least(F.floor(frac * 3).cast("int"), F.lit(2))
-        src = _stage_batches(tmp, tuple(
-            (
-                f"c{i}",
-                ev.withColumn("__c", chunk)
-                .where(F.col("__c") == i)
-                .drop("__c"),
-            )
-            for i in range(3)
-        ))
-
-        # A stream-stream join keeps TWO state stores per partition, so
-        # per-batch checkpoint commits scale with partitions x stores x
-        # batches and dominate at harness scale: A/B measured 8
-        # partitions FASTER than cores even at sf10 (25.6 s vs 34.4 s,
-        # 10 M events) while staying sublinear (sf0.1 5.6 s, sf1 7.0 s).
-        # On a real cluster this is a deploy-time conf sized to
-        # executors; the code pins the measured-best harness value.
-        spark.conf.set("spark.sql.shuffle.partitions", _stream_state_parts())
-
-        def src_stream():
-            return (
-                spark.readStream.schema(
-                    "event_id bigint, ts timestamp, user_id bigint, "
-                    "event_type string"
-                )
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-
-        err = (
-            src_stream()
-            .where(F.col("event_type") == "error")
-            .select(
-                F.col("user_id").alias("e_user"),
-                F.col("event_id").alias("err_id"),
-                F.col("ts").alias("err_ts"),
-            )
-            .withWatermark("err_ts", "2 hours")
-        )
-        pur = (
-            src_stream()
-            .where(F.col("event_type") == "purchase")
-            .select(
-                F.col("user_id").alias("p_user"),
-                F.col("event_id").alias("pur_id"),
-                F.col("ts").alias("pur_ts"),
-            )
-            .withWatermark("pur_ts", "2 hours")
-        )
-        joined = err.join(
-            pur,
-            F.expr(
-                "e_user = p_user AND pur_ts > err_ts "
-                "AND pur_ts <= err_ts + INTERVAL 1 HOUR"
-            ),
-        ).select("err_id", "pur_id")
-        q = write_stream_idempotent(
-            joined, f"{tmp}/sink", f"{tmp}/ckpt", output_mode="append"
-        )
-        _await_finite_stream(q, "q_join_interval_stream")
-        snap = spark.read.option("basePath", f"{tmp}/sink").parquet(f"{tmp}/sink")
-        snap.select("err_id", "pur_id").write.mode("overwrite").parquet(out_dir)
-        return spark.read.parquet(out_dir)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(tmp, ignore_errors=True)
+    ev = _events(spark, sf_dir, "event_id", "ts", "user_id", "event_type")
+    stages, _ = _time_chunks(ev)
+    # A stream-stream join keeps TWO state stores per partition, so
+    # per-batch checkpoint commits scale with partitions x stores x
+    # batches and dominate at harness scale: A/B measured 8 partitions
+    # FASTER than cores even at sf10 (25.6 s vs 34.4 s, 10 M events)
+    # while staying sublinear (sf0.1 5.6 s, sf1 7.0 s). On a real
+    # cluster this is a deploy-time conf sized to executors; the code
+    # pins the measured-best harness value.
+    parts = _shuffle_parts(_stream_state_parts())
+    with _finite_stream(spark, "q_join_interval_stream", parts) as fs:
+        snap = fs.run(_err_pur_join(fs.stage(*stages), "inner"), "append")
+        return _persist(snap.select("err_id", "pur_id"), "pmrs_q101_final_")
 
 
 @register(
@@ -766,9 +719,7 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the session-persistent sink — downstream jobs read the same
     path; no driver gather (SURVEY §4.2).
     """
-    from project_map_reduce_spark.sources.sinks import write_stream_idempotent
-
-    ev = load(spark, sf_dir, "events").select("event_id", "user_id", "value")
+    ev = _events(spark, sf_dir, "event_id", "user_id", "value")
     dim = (
         load(spark, sf_dir, "customer")
         .join(
@@ -777,76 +728,86 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("c_custkey", "n_name")
     )
-    tmp = tempfile.mkdtemp(prefix="pmrs_q107_")
-    sink = _session_output_dir("pmrs_q107_sink_")
-    try:
-        src = _stage_batches(tmp, tuple(
-            (
-                f"c{i}",
-                ev.where(F.col("event_id") % 3 == i).select(
-                    "user_id", "value"
-                ),
-            )
-            for i in range(3)
-        ))
-        stream = (
-            spark.readStream.schema("user_id bigint, value double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        enriched = stream.join(
+    with _finite_stream(spark, "q_stream_enrich") as fs:
+        enriched = fs.stage(*_id_chunks(ev)).join(
             F.broadcast(dim), F.col("user_id") == F.col("c_custkey")
         ).select("n_name", "value")
-        q = write_stream_idempotent(
-            enriched, sink, f"{tmp}/ckpt", output_mode="append"
+        snap = fs.run(
+            enriched, "append", sink=_session_output_dir("pmrs_q107_sink_")
         )
-        _await_finite_stream(q, "q_stream_enrich")
-        snap = spark.read.option("basePath", sink).parquet(sink)
-        return snap.groupBy("n_name").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            r6d(F.sum("value"), "sum_value"),
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    return snap.groupBy("n_name").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        r6d(F.sum("value"), "sum_value"),
+    )
 
 
 _SS_GAP_MIN = 30  # session gap AND watermark delay
 _SS_FLUSH_DAYS = 30  # sentinel flush-row lead: far past every session end
 
 
-def _session_hi_cut(ev0: DataFrame) -> tuple:
-    """(hi, cut) for the session-stream staging split in ONE plan-build
-    job: ``hi`` = the stream's max event time, ``cut`` = the earliest
-    strictly-increasing same-user event pair closer than the session
-    gap (the in-session split point, so at least one session straddles
-    the micro-batch boundary). Previously two driver actions — a plain
-    ``max(ts)`` scan plus this windowed scan; the max rides the
-    windowed aggregation's scan for free (the window's lead column
-    cannot change ``max(ts)``), halving the plan-build jobs. ``cut`` is
-    None when no in-session pair exists (degenerate corpus)."""
+def _session_stages(ev0: DataFrame, flush: bool) -> list:
+    """Stages that split the session stream INSIDE a session: [early] →
+    [empty spacer] → [late], cut at the earliest strictly-increasing
+    same-user event pair closer than the gap, so at least one session
+    straddles the micro-batch boundary (a naive event-time midpoint can
+    land between sessions — tests/test_streaming.py's premise test
+    checks the fixture). With ``flush``, a sentinel row (user −1)
+    ``_SS_FLUSH_DAYS`` past the last event and a trailing spacer follow,
+    pushing the watermark past every real session end.
+
+    The cut and the stream's max ``ts`` come from ONE plan-build job:
+    the max rides the windowed aggregation's scan (the window's lead
+    column cannot change ``max(ts)``). With no in-session pair anywhere
+    (degenerate corpus) the cut falls back to the max."""
     wse = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    gap = F.expr(f"INTERVAL {_SS_GAP_MIN} MINUTE")
+    nts = F.col("nts")
     row = (
         ev0.withColumn("nts", F.lead("ts").over(wse))
         .agg(
             F.max("ts").alias("hi"),
             F.min(
-                F.when(
-                    (F.col("nts") > F.col("ts"))
-                    & (
-                        F.col("nts")
-                        <= F.col("ts")
-                        + F.expr(f"INTERVAL {_SS_GAP_MIN} MINUTE")
-                    ),
-                    F.col("ts"),
-                )
+                F.when((nts > F.col("ts")) & (nts <= F.col("ts") + gap), F.col("ts"))
             ).alias("cut"),
         )
         .first()
     )
-    # Explicit-name extraction (ADVICE r13): callers unpack ``hi, cut``,
-    # so the contract must not ride on the positional order of the two
-    # aggregate expressions.
-    return (row["hi"], row["cut"])
+    hi = row["hi"]
+    if hi is None:
+        raise ValueError("events table is empty — nothing to sessionize")
+    cut = hi if row["cut"] is None else row["cut"]
+    ev = ev0.select("user_id", "ts", "value")
+    empty = ev.where(F.lit(False))
+    stages = [
+        ("early", ev.where(F.col("ts") <= F.lit(cut))),
+        ("spacer", empty),
+        ("late", ev.where(F.col("ts") > F.lit(cut))),
+    ]
+    if flush:
+        sentinel_ts = hi + datetime.timedelta(days=_SS_FLUSH_DAYS)
+        sentinel = local_rows(ev.sparkSession, [(-1, sentinel_ts, 0.0)], ev.schema)
+        stages += [("flush", sentinel), ("spacer2", empty)]
+    return stages
+
+
+def _session_agg(stream: DataFrame) -> DataFrame:
+    """Per-user ``session_window`` aggregation (gap = watermark delay =
+    ``_SS_GAP_MIN``), the session-merging state store path."""
+    return (
+        stream.withWatermark("ts", f"{_SS_GAP_MIN} minutes")
+        .groupBy(F.session_window("ts", f"{_SS_GAP_MIN} minutes"), "user_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            r6d(F.sum("value"), "sum_value"),
+        )
+        .select(
+            "user_id",
+            F.col("session_window.start").alias("session_start"),
+            F.col("session_window.end").alias("session_end"),
+            "n_events",
+            "sum_value",
+        )
+    )
 
 
 @register(
@@ -914,79 +875,14 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     case. The returned DataFrame is a lazy read over the
     session-persistent append sink (SURVEY §4.2 — no driver gather).
     """
-    from project_map_reduce_spark.sources.sinks import write_stream_idempotent
-
-    ev0 = load(spark, sf_dir, "events").select("user_id", "ts", "value", "event_id")
-    if ev0.schema["ts"].dataType.simpleString() == "timestamp_ntz":
-        ev0 = ev0.withColumn("ts", F.to_timestamp_ltz("ts"))
-    # The split point must fall INSIDE some session or the run would
-    # never exercise cross-batch merging (at sf0.001 the naive
-    # event-time midpoint lands between sessions — checked by
-    # tests/test_streaming.py's premise test): cut at the earliest
-    # strictly-increasing same-user event pair closer than the gap, so
-    # at least that session straddles the two micro-batches. hi and cut
-    # come from ONE fused plan-build job (_session_hi_cut).
-    hi, cut = _session_hi_cut(ev0)
-    if hi is None:
-        raise ValueError("q_stream_sessions: events table is empty")
-    if cut is None:  # degenerate corpus: no in-session pair anywhere
-        cut = hi
-    ev = ev0.select("user_id", "ts", "value")
-    sentinel_ts = hi + datetime.timedelta(days=_SS_FLUSH_DAYS)
-
-    tmp = tempfile.mkdtemp(prefix="pmrs_q112_")
-    sink = _session_output_dir("pmrs_q112_sink_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        flush = _literal_rows(
-            spark, [(-1, sentinel_ts, 0.0)],
-            "user_id bigint, ts timestamp, value double",
-        )
-        src = _stage_batches(tmp, (
-            ("early", ev.where(F.col("ts") <= F.lit(cut))),
-            ("spacer", ev.where(F.lit(False))),
-            ("late", ev.where(F.col("ts") > F.lit(cut))),
-            ("flush", flush),
-            ("spacer2", ev.where(F.lit(False))),
-        ))
-        spark.conf.set("spark.sql.shuffle.partitions", _stream_state_parts())
-        stream = (
-            spark.readStream.schema("user_id bigint, ts timestamp, value double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        agg = (
-            stream.withWatermark("ts", f"{_SS_GAP_MIN} minutes")
-            .groupBy(
-                F.session_window("ts", f"{_SS_GAP_MIN} minutes"), "user_id"
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                r6d(F.sum("value"), "sum_value"),
-            )
-            .select(
-                "user_id",
-                F.col("session_window.start").alias("session_start"),
-                F.col("session_window.end").alias("session_end"),
-                "n_events",
-                "sum_value",
-            )
-        )
-        q = write_stream_idempotent(
-            agg, sink, f"{tmp}/ckpt", output_mode="append"
-        )
-        _await_finite_stream(q, "q_stream_sessions")
-        snap = spark.read.option("basePath", sink).parquet(sink)
-        return snap.where(F.col("user_id") != -1).select(
-            "user_id",
-            F.col("session_start").cast("timestamp_ntz").alias("session_start"),
-            F.col("session_end").cast("timestamp_ntz").alias("session_end"),
-            "n_events",
-            "sum_value",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(tmp, ignore_errors=True)
+    ev0 = _events(spark, sf_dir, "user_id", "ts", "value", "event_id")
+    parts = _shuffle_parts(_stream_state_parts())
+    with _finite_stream(spark, "q_stream_sessions", parts) as fs:
+        agg = _session_agg(fs.stage(*_session_stages(ev0, flush=True)))
+        snap = fs.run(agg, "append", sink=_session_output_dir("pmrs_q112_sink_"))
+    return snap.where(F.col("user_id") != -1).select(
+        "user_id", *_ntz("session_start", "session_end"), "n_events", "sum_value"
+    )
 
 
 fmt_doc(q_stream_sessions, gap=_SS_GAP_MIN, flush_days=_SS_FLUSH_DAYS)
@@ -1041,7 +937,7 @@ def q_stream_state_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     flush row + spacers advance the watermark past every real session
     end; the sentinel's own session never finalizes and is filtered).
     Engine notes: transformWithState requires the RocksDB state-store
-    provider (set for this query, restored after); on hosts without a
+    provider (held only while the stream starts); on hosts without a
     pip protobuf the state-protocol import is repaired via
     ``ensure_protobuf_env`` (sc.environment PYTHONPATH → pbshim
     sitecustomize — see module docstrings for the jar-namespace-
@@ -1067,97 +963,50 @@ def q_stream_state_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     transformWithState when the logic genuinely needs timers or
     multiple state variables, and stage it as FEW LARGE batches.
     """
-    from project_map_reduce_spark.sources.sinks import write_stream_idempotent
     from project_map_reduce_spark.streaming.transform_state import (
         ensure_protobuf_env,
         restore_env,
         timer_sessions,
     )
 
-    ev0 = load(spark, sf_dir, "events").select("user_id", "ts", "value", "event_id")
-    if ev0.schema["ts"].dataType.simpleString() == "timestamp_ntz":
-        ev0 = ev0.withColumn("ts", F.to_timestamp_ltz("ts"))
-    # hi and cut from ONE fused plan-build job (_session_hi_cut).
-    hi, cut = _session_hi_cut(ev0)
-    if hi is None:
-        raise ValueError("q_stream_state_sessions: events table is empty")
-    if cut is None:
-        cut = hi
-    ev = ev0.select("user_id", "ts", "value")
-    sentinel_ts = hi + datetime.timedelta(days=_SS_FLUSH_DAYS)
-
-    tmp = tempfile.mkdtemp(prefix="pmrs_q134_")
-    sink = _session_output_dir("pmrs_q134_sink_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_prov = spark.conf.get(prov_key, None)
-    # Changelog checkpointing (round-14, guide §1.2 per-batch cost):
-    # without it every RocksDB commit uploads a full SST snapshot of
-    # every store instance per micro-batch; with it, commits write the
-    # batch's key changelog and snapshots move to the background
-    # maintenance thread — the recovery contract is unchanged (replay =
-    # last snapshot + changelogs; crash-replay stays pinned by
-    # tests/test_transform_state.py).
-    clog_key = (
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    )
-    prev_clog = spark.conf.get(clog_key, None)
-    prev_env = ensure_protobuf_env(spark)
-    try:
-        flush = _literal_rows(
-            spark, [(-1, sentinel_ts, 0.0)],
-            "user_id bigint, ts timestamp, value double",
-        )
-        src = _stage_batches(tmp, (
-            ("early", ev.where(F.col("ts") <= F.lit(cut))),
-            ("spacer", ev.where(F.lit(False))),
-            ("late", ev.where(F.col("ts") > F.lit(cut))),
-            ("flush", flush),
-            ("spacer2", ev.where(F.lit(False))),
-        ))
-        spark.conf.set("spark.sql.shuffle.partitions", _stream_state_parts())
-        spark.conf.set(
-            prov_key,
+    ev0 = _events(spark, sf_dir, "user_id", "ts", "value", "event_id")
+    conf = {
+        **_shuffle_parts(_stream_state_parts()),
+        "spark.sql.streaming.stateStore.providerClass":
             "org.apache.spark.sql.execution.streaming.state."
             "RocksDBStateStoreProvider",
-        )
-        spark.conf.set(
-            clog_key, _os.environ.get("SPARK_GRAFT_ROCKSDB_CHANGELOG", "true")
-        )
-        stream = (
-            spark.readStream.schema("user_id bigint, ts timestamp, value double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = write_stream_idempotent(
-            timer_sessions(stream), sink, f"{tmp}/ckpt", output_mode="append"
-        )
-        _await_finite_stream(q, "q_stream_state_sessions")
-        snap = spark.read.option("basePath", sink).parquet(sink)
-        return snap.where(F.col("user_id") != -1).select(
-            "user_id",
-            F.col("session_start").cast("timestamp_ntz").alias("session_start"),
-            F.col("session_end").cast("timestamp_ntz").alias("session_end"),
-            "session_seq",
-            "n_events",
-            # Round ONCE on the read-back (Spark round = HALF_UP, away
-            # from zero — same as the oracle's DuckDB round); the
-            # processor emits full precision so no banker's-rounding
-            # Python round() sits inside the state layer (ADVICE r9).
-            F.round(F.col("sum_value"), 6).alias("sum_value"),
-        )
+        # Changelog checkpointing (round-14, guide §1.2 per-batch cost):
+        # without it every RocksDB commit uploads a full SST snapshot of
+        # every store instance per micro-batch; with it, commits write
+        # the batch's key changelog and snapshots move to the background
+        # maintenance thread — the recovery contract is unchanged
+        # (replay = last snapshot + changelogs; crash-replay stays
+        # pinned by tests/test_transform_state.py).
+        "spark.sql.streaming.stateStore.rocksdb."
+        "changelogCheckpointing.enabled": "true",
+    }
+    prev_env = ensure_protobuf_env(spark)
+    try:
+        with _finite_stream(spark, "q_stream_state_sessions", conf) as fs:
+            stream = fs.stage(*_session_stages(ev0, flush=True))
+            snap = fs.run(
+                timer_sessions(stream),
+                "append",
+                sink=_session_output_dir("pmrs_q134_sink_"),
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if prev_prov is None:
-            spark.conf.unset(prov_key)
-        else:
-            spark.conf.set(prov_key, prev_prov)
-        if prev_clog is None:
-            spark.conf.unset(clog_key)
-        else:
-            spark.conf.set(clog_key, prev_clog)
         restore_env(spark, prev_env)
-        shutil.rmtree(tmp, ignore_errors=True)
+    return snap.where(F.col("user_id") != -1).select(
+        "user_id",
+        *_ntz("session_start", "session_end"),
+        "session_seq",
+        "n_events",
+        # Round ONCE on the read-back (Spark round = HALF_UP, away from
+        # zero — same as the oracle's DuckDB round); the processor emits
+        # full precision so no banker's-rounding Python round() sits
+        # inside the state layer (ADVICE r9).
+        F.round(F.col("sum_value"), 6).alias("sum_value"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1215,91 +1064,39 @@ def q_state_reader_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     file per state partition — at 100 TB it is the standard offline
     audit of a live pipeline's checkpoint, never touching the stream.
     """
-    from project_map_reduce_spark.sources.sinks import write_stream_idempotent
-
-    ev0 = load(spark, sf_dir, "events").select("user_id", "ts", "value", "event_id")
-    if ev0.schema["ts"].dataType.simpleString() == "timestamp_ntz":
-        ev0 = ev0.withColumn("ts", F.to_timestamp_ltz("ts"))
-    # One fused plan-build job (_session_hi_cut); the degenerate
-    # no-in-session-pair corpus falls back to hi without a second job.
-    hi, cut = _session_hi_cut(ev0)
-    if cut is None:
-        cut = hi
-        if cut is None:
-            raise ValueError("q_state_reader_audit: events table is empty")
-    ev = ev0.select("user_id", "ts", "value")
-
-    tmp = tempfile.mkdtemp(prefix="pmrs_q140_")
-    sink = _session_output_dir("pmrs_q140_sink_")
+    ev0 = _events(spark, sf_dir, "user_id", "ts", "value", "event_id")
     # The checkpoint must OUTLIVE this call: the returned plan reads it
     # lazily (statestore source), so it gets the session-persistent
-    # lifecycle, not the tmp/finally one.
+    # lifecycle, not the workspace one.
     ckpt = _session_output_dir("pmrs_q140_ckpt_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        src = _stage_batches(tmp, (
-            ("early", ev.where(F.col("ts") <= F.lit(cut))),
-            ("spacer", ev.where(F.lit(False))),
-            ("late", ev.where(F.col("ts") > F.lit(cut))),
-        ))
-        spark.conf.set("spark.sql.shuffle.partitions", _stream_state_parts())
-        stream = (
-            spark.readStream.schema("user_id bigint, ts timestamp, value double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+    parts = _shuffle_parts(_stream_state_parts())
+    with _finite_stream(spark, "q_state_reader_audit", parts) as fs:
+        agg = _session_agg(fs.stage(*_session_stages(ev0, flush=False)))
+        finalized = fs.run(
+            agg, "append", sink=_session_output_dir("pmrs_q140_sink_"), ckpt=ckpt
+        ).select("user_id", "session_start", "session_end", "n_events", "sum_value")
+    open_state = spark.read.format("statestore").load(ckpt).select(
+        F.col("value.user_id").alias("user_id"),
+        F.col("value.session_window.start").alias("session_start"),
+        F.col("value.session_window.end").alias("session_end"),
+        F.col("value.count").alias("n_events"),
+        F.round(F.col("value.sum"), 6).alias("sum_value"),
+    )
+    # Premise guards, loud: an empty side means the audit exercised
+    # nothing (no flush ⇒ the max-ts session MUST still be open).
+    if open_state.limit(1).count() == 0:
+        raise RuntimeError(
+            "q_state_reader_audit: state store is empty — no open "
+            "sessions survived; the no-flush premise broke"
         )
-        agg = (
-            stream.withWatermark("ts", f"{_SS_GAP_MIN} minutes")
-            .groupBy(
-                F.session_window("ts", f"{_SS_GAP_MIN} minutes"), "user_id"
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                r6d(F.sum("value"), "sum_value"),
-            )
-            .select(
-                "user_id",
-                F.col("session_window.start").alias("session_start"),
-                F.col("session_window.end").alias("session_end"),
-                "n_events",
-                "sum_value",
-            )
+    if finalized.limit(1).count() == 0:
+        raise RuntimeError(
+            "q_state_reader_audit: append sink is empty — nothing "
+            "finalized; the staging premise broke"
         )
-        q = write_stream_idempotent(agg, sink, ckpt, output_mode="append")
-        _await_finite_stream(q, "q_state_reader_audit")
-
-        finalized = spark.read.option("basePath", sink).parquet(sink).select(
-            "user_id", "session_start", "session_end", "n_events", "sum_value"
-        )
-        open_state = spark.read.format("statestore").load(ckpt).select(
-            F.col("value.user_id").alias("user_id"),
-            F.col("value.session_window.start").alias("session_start"),
-            F.col("value.session_window.end").alias("session_end"),
-            F.col("value.count").alias("n_events"),
-            F.round(F.col("value.sum"), 6).alias("sum_value"),
-        )
-        # Premise guards, loud: an empty side means the audit exercised
-        # nothing (no flush ⇒ the max-ts session MUST still be open).
-        if open_state.limit(1).count() == 0:
-            raise RuntimeError(
-                "q_state_reader_audit: state store is empty — no open "
-                "sessions survived; the no-flush premise broke"
-            )
-        if finalized.limit(1).count() == 0:
-            raise RuntimeError(
-                "q_state_reader_audit: append sink is empty — nothing "
-                "finalized; the staging premise broke"
-            )
-        return finalized.unionByName(open_state).select(
-            "user_id",
-            F.col("session_start").cast("timestamp_ntz").alias("session_start"),
-            F.col("session_end").cast("timestamp_ntz").alias("session_end"),
-            "n_events",
-            "sum_value",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(tmp, ignore_errors=True)
+    return finalized.unionByName(open_state).select(
+        "user_id", *_ntz("session_start", "session_end"), "n_events", "sum_value"
+    )
 
 
 @register(
@@ -1361,48 +1158,17 @@ def q_stream_chained_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed (SURVEY §4.2).
     """
     from project_map_reduce_spark.functions.det import sum6
-    from project_map_reduce_spark.sources.sinks import write_stream_idempotent
 
-    ev = load(spark, sf_dir, "events").select("ts", "event_type", "value")
-    if ev.schema["ts"].dataType.simpleString() == "timestamp_ntz":
-        ev = ev.withColumn("ts", F.to_timestamp_ltz("ts"))
-    lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
-    if lo is None or hi is None:
-        raise ValueError("events table is empty — nothing to stream")
-    span_us = max(1, int((hi - lo).total_seconds() * 1_000_000))
+    ev = _events(spark, sf_dir, "ts", "event_type", "value")
+    chunks, hi = _time_chunks(ev)
     day_bound = hi.replace(hour=0, minute=0, second=0, microsecond=0)
     sentinel_ts = day_bound + datetime.timedelta(days=1, hours=3)
-
-    tmp = tempfile.mkdtemp(prefix="pmrs_q148_")
-    out_dir = _session_output_dir("pmrs_q148_final_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        frac = (
-            F.timestamp_diff("MICROSECOND", F.lit(lo), F.col("ts"))
-            / F.lit(span_us)
-        )
-        chunk = F.least(F.floor(frac * 3), F.lit(2))
-        sentinel = _literal_rows(
-            spark, [(sentinel_ts, "__sentinel__", 0.0)],
-            "ts timestamp, event_type string, value double",
-        )
-        src = _stage_batches(tmp, (
-            ("c0", ev.where(chunk == 0)),
-            ("c1", ev.where(chunk == 1)),
-            ("c2", ev.where(chunk == 2)),
-            ("sentinel", sentinel),
-            ("spacer", ev.where(F.lit(False))),
-        ))
-
-        # State is O(open windows) x 2 operators — a small constant
-        # beats cores-many state partitions (Q98's measured rationale).
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        stream = (
-            spark.readStream.schema(
-                "ts timestamp, event_type string, value double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+    sentinel = local_rows(spark, [(sentinel_ts, "__sentinel__", 0.0)], ev.schema)
+    # State is O(open windows) x 2 operators — a small constant beats
+    # cores-many state partitions (Q98's measured rationale).
+    with _finite_stream(spark, "q_stream_chained_agg", _shuffle_parts(4)) as fs:
+        stream = fs.stage(
+            *chunks, ("sentinel", sentinel), ("spacer", ev.where(F.lit(False)))
         )
         slots = (
             stream.withWatermark("ts", "2 hours")
@@ -1428,28 +1194,13 @@ def q_stream_chained_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "sum_value",
             )
         )
-        q = write_stream_idempotent(
-            days, f"{tmp}/sink", f"{tmp}/ckpt", output_mode="append"
+        snap = fs.run(days, "append")
+        return _persist(
+            snap.where(F.col("day_start") < F.lit(sentinel_ts)).select(
+                *_ntz("day_start"), "n_slots", "n_events", "sum_value"
+            ),
+            "pmrs_q148_final_",
         )
-        _await_finite_stream(q, "q_stream_chained_agg")
-        snap = spark.read.option("basePath", f"{tmp}/sink").parquet(
-            f"{tmp}/sink"
-        )
-        (
-            snap.where(F.col("day_start") < F.lit(sentinel_ts))
-            .select(
-                F.col("day_start").cast("timestamp_ntz").alias("day_start"),
-                "n_slots",
-                "n_events",
-                "sum_value",
-            )
-            .write.mode("overwrite")
-            .parquet(out_dir)
-        )
-        return spark.read.parquet(out_dir)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @register(
@@ -1492,106 +1243,26 @@ def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     join's guarantee that state expiry EMITS rather than silently
     drops, which is what makes the unmatched side auditable at 100 TB.
     """
-    from project_map_reduce_spark.sources.sinks import write_stream_idempotent
-
-    ev = load(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type"
-    )
-    if ev.schema["ts"].dataType.simpleString() == "timestamp_ntz":
-        ev = ev.withColumn("ts", F.to_timestamp_ltz("ts"))
-    lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
-    if lo is None or hi is None:
-        raise ValueError("events table is empty — nothing to stream-join")
-    span_us = max(1, int((hi - lo).total_seconds() * 1_000_000))
+    ev = _events(spark, sf_dir, "event_id", "ts", "user_id", "event_type")
+    chunks, hi = _time_chunks(ev)
     sentinel_ts = hi + datetime.timedelta(hours=4)
-
-    tmp = tempfile.mkdtemp(prefix="pmrs_q152_")
-    out_dir = _session_output_dir("pmrs_q152_final_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        frac = (
-            F.timestamp_diff("MICROSECOND", F.lit(lo), F.col("ts"))
-            / F.lit(span_us)
+    sentinel = local_rows(
+        spark,
+        [(-1, sentinel_ts, -1, "error"), (-2, sentinel_ts, -1, "purchase")],
+        ev.schema,
+    )
+    # Two join state stores per partition (Q101's measured rationale):
+    # 8 state partitions beat cores at every probed SF.
+    parts = _shuffle_parts(_stream_state_parts())
+    with _finite_stream(spark, "q_stream_outer_join", parts) as fs:
+        stream = fs.stage(
+            *chunks, ("sentinel", sentinel), ("spacer", ev.where(F.lit(False)))
         )
-        chunk = F.least(F.floor(frac * 3).cast("int"), F.lit(2))
-        sentinel = _literal_rows(
-            spark,
-            [
-                (-1, sentinel_ts, -1, "error"),
-                (-2, sentinel_ts, -1, "purchase"),
-            ],
-            "event_id bigint, ts timestamp, user_id bigint, event_type string",
+        snap = fs.run(_err_pur_join(stream, "leftOuter"), "append")
+        return _persist(
+            snap.where(F.col("err_id") >= 0).select("err_id", "pur_id"),
+            "pmrs_q152_final_",
         )
-        src = _stage_batches(tmp, tuple(
-            (
-                f"c{i}",
-                ev.withColumn("__c", chunk)
-                .where(F.col("__c") == i)
-                .drop("__c"),
-            )
-            for i in range(3)
-        ) + (
-            ("sentinel", sentinel),
-            ("spacer", ev.where(F.lit(False))),
-        ))
-
-        # Two join state stores per partition (Q101's measured
-        # rationale): 8 state partitions beat cores at every probed SF.
-        spark.conf.set("spark.sql.shuffle.partitions", _stream_state_parts())
-
-        def src_stream():
-            return (
-                spark.readStream.schema(
-                    "event_id bigint, ts timestamp, user_id bigint, "
-                    "event_type string"
-                )
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-
-        err = (
-            src_stream()
-            .where(F.col("event_type") == "error")
-            .select(
-                F.col("user_id").alias("e_user"),
-                F.col("event_id").alias("err_id"),
-                F.col("ts").alias("err_ts"),
-            )
-            .withWatermark("err_ts", "2 hours")
-        )
-        pur = (
-            src_stream()
-            .where(F.col("event_type") == "purchase")
-            .select(
-                F.col("user_id").alias("p_user"),
-                F.col("event_id").alias("pur_id"),
-                F.col("ts").alias("pur_ts"),
-            )
-            .withWatermark("pur_ts", "2 hours")
-        )
-        joined = err.join(
-            pur,
-            F.expr(
-                "e_user = p_user AND pur_ts > err_ts "
-                "AND pur_ts <= err_ts + INTERVAL 1 HOUR"
-            ),
-            "leftOuter",
-        ).select("err_id", "pur_id")
-        q = write_stream_idempotent(
-            joined, f"{tmp}/sink", f"{tmp}/ckpt", output_mode="append"
-        )
-        _await_finite_stream(q, "q_stream_outer_join")
-        snap = spark.read.option("basePath", f"{tmp}/sink").parquet(f"{tmp}/sink")
-        (
-            snap.where(F.col("err_id") >= 0)
-            .select("err_id", "pur_id")
-            .write.mode("overwrite")
-            .parquet(out_dir)
-        )
-        return spark.read.parquet(out_dir)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 _RATE_N = 1000          # rows per micro-batch
@@ -1642,28 +1313,23 @@ def q_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import time
 
-    from project_map_reduce_spark.sources.sinks import write_stream_idempotent
-
-    tmp = tempfile.mkdtemp(prefix="pmrs_q160_")
-    out_dir = _session_output_dir("pmrs_q160_final_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        stream = (
-            spark.readStream.format("rate-micro-batch")
-            .option("rowsPerBatch", _RATE_N)
-            .option("numPartitions", 4)
-            .option("startTimestamp", _RATE_START_MS)
-            .option("advanceMillisPerBatch", _RATE_ADV_MS)
-            .load()
-        )
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        q = write_stream_idempotent(
+    stream = (
+        spark.readStream.format("rate-micro-batch")
+        .option("rowsPerBatch", _RATE_N)
+        .option("numPartitions", 4)
+        .option("startTimestamp", _RATE_START_MS)
+        .option("advanceMillisPerBatch", _RATE_ADV_MS)
+        .load()
+    )
+    with _finite_stream(spark, "q_rate_source") as fs:
+        sink = f"{fs.tmp}/sink"
+        q = fs.start(lambda: write_stream_idempotent(
             stream,
-            f"{tmp}/sink",
-            f"{tmp}/ckpt",
+            sink,
+            f"{fs.tmp}/ckpt",
             trigger_available_now=False,
             output_mode="append",
-        )
+        ))
         deadline = time.time() + 120
         while time.time() < deadline:
             # A directory appears when the batch STARTS writing; only
@@ -1671,12 +1337,10 @@ def q_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             # dirs races the in-flight write (observed: 4/5 batches).
             done = [
                 d
-                for d in (
-                    os.listdir(f"{tmp}/sink") if os.path.isdir(f"{tmp}/sink") else []
-                )
+                for d in (os.listdir(sink) if os.path.isdir(sink) else [])
                 if d.startswith("batch_id=")
                 and int(d.split("=")[1]) < _RATE_BATCHES
-                and os.path.exists(f"{tmp}/sink/{d}/_SUCCESS")
+                and os.path.exists(f"{sink}/{d}/_SUCCESS")
             ]
             if len(done) >= _RATE_BATCHES:
                 break
@@ -1688,8 +1352,8 @@ def q_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise RuntimeError("q_rate_source: 5 batches not committed in 120s")
         q.stop()
         q.awaitTermination(60)
-        snap = spark.read.option("basePath", f"{tmp}/sink").parquet(f"{tmp}/sink")
-        (
+        snap = spark.read.option("basePath", sink).parquet(sink)
+        return _persist(
             snap.where(F.col("batch_id") < _RATE_BATCHES)
             .groupBy("batch_id")
             .agg(
@@ -1697,14 +1361,9 @@ def q_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("value").alias("sum_value"),
                 F.countDistinct("timestamp").alias("n_ts"),
                 F.max(F.unix_millis("timestamp")).alias("ts_ms"),
-            )
-            .write.mode("overwrite")
-            .parquet(out_dir)
+            ),
+            "pmrs_q160_final_",
         )
-        return spark.read.parquet(out_dir)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @register(
@@ -1746,43 +1405,25 @@ def q_pyds_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     are byte-equivalent by construction (test-pinned, including
     null-bearing input).
     """
+    import os
+
     from project_map_reduce_spark.sources.pyds_sink import (
         LINE_HASH_SQL,
         register_report_sink,
     )
 
     register_report_sink(spark)
-    ev = load(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    tmp = tempfile.mkdtemp(prefix="pmrs_q163_")
-    out = f"{tmp}/report"
-    try:
-        lo_hi = ev.agg(F.min("event_id"), F.max("event_id")).first()
-        span = max(1, int(lo_hi[1]) - int(lo_hi[0]) + 1)
-        chunk = F.least(
-            F.floor((F.col("event_id") - F.lit(int(lo_hi[0]))) * 3 / span),
-            F.lit(2),
-        )
-        src = _stage_batches(tmp, tuple(
-            (f"c{i}", ev.where(chunk == i)) for i in range(3)
-        ))
-        stream = (
-            spark.readStream.schema(
-                "event_id bigint, event_type string, value double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
+    ev = _events(spark, sf_dir, "event_id", "event_type", "value")
+    with _finite_stream(spark, "q_pyds_stream_sink") as fs:
+        out = f"{fs.tmp}/report"
+        stream = fs.stage(*_id_chunks(ev))
+        _await_finite_stream(fs.start(lambda: (
             stream.writeStream.format("pmrs_report")
             .option("path", out)
-            .option("checkpointLocation", f"{tmp}/ckpt")
+            .option("checkpointLocation", f"{fs.tmp}/ckpt")
             .trigger(availableNow=True)
             .start()
-        )
-        _await_finite_stream(q, "q_pyds_stream_sink")
-
-        import os
-
+        )), fs.name)
         manifests = sorted(
             f for f in os.listdir(out) if f.startswith("_MANIFEST-")
         )
@@ -1859,8 +1500,6 @@ def q_pyds_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             c, s = agg.get(r["event_type"], (0, 0))
             agg[r["event_type"]] = (c + r["n"], s + r["s"])
         rows = [(t, c, float(s)) for t, (c, s) in sorted(agg.items())]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return local_rows(
         spark,
         rows, schema="event_type string, n_events bigint, sum_value double"

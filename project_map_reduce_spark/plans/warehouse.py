@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from project_map_reduce_spark.functions.det import SUM6, r6d, sum6
 from project_map_reduce_spark.registry import fmt_doc, register
+from project_map_reduce_spark.session import scoped_conf
 from project_map_reduce_spark.tables import load, local_rows
 
 _SNAPSHOT_TS = "1992-01-01 00:00:00"
@@ -438,9 +439,6 @@ def q_stream_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Driver-collect note: the refreshed MV is O(types × days) = 150
     rows at any corpus size (the Q96/Q117 pattern).
     """
-    import shutil
-    import tempfile
-
     from project_map_reduce_spark.operators.mv import (
         mv_finalize,
         mv_read,
@@ -448,7 +446,8 @@ def q_stream_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from project_map_reduce_spark.plans.streaming_shaped import (
         _await_finite_stream,
-        _stage_batches,
+        _finite_stream,
+        _id_chunks,
     )
 
     ev = load(spark, sf_dir, "events").select(
@@ -459,35 +458,23 @@ def q_stream_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     keys = ["event_type", "day"]
     sums = {"sum_value": "value"}
-    tmp = tempfile.mkdtemp(prefix="q_stream_mv_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        src = _stage_batches(tmp, tuple(
-            (f"c{i}", ev.where(F.col("event_id") % 3 == i).drop("event_id"))
-            for i in range(3)
-        ))
-        # The per-batch merge shuffles O(types×days)=150 partial rows
-        # and each version write produces one file per post-shuffle
-        # partition: 32 shuffle partitions meant 32 tasks + 32-file
-        # versions PER BATCH for 150 rows (measured 9.5 s). Pin small —
-        # the q_stream_sessions small-state lesson applied to the merge
-        # job; a big-MV deployment sizes this to |MV|/128MB instead.
-        spark.conf.set("spark.sql.shuffle.partitions", "2")
-        stream = (
-            spark.readStream.schema(
-                "event_type string, day timestamp, value double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = mv_stream_refresh(stream, f"{tmp}/mv", f"{tmp}/ckpt", keys, sums)
-        _await_finite_stream(q, "q_stream_mv_refresh")
-        rows = mv_finalize(mv_read(spark, f"{tmp}/mv"), sums).select(
+    # The per-batch merge shuffles O(types×days)=150 partial rows and
+    # each version write produces one file per post-shuffle partition:
+    # 32 shuffle partitions meant 32 tasks + 32-file versions PER BATCH
+    # for 150 rows (measured 9.5 s). Pin small — the q_stream_sessions
+    # small-state lesson applied to the merge job (which runs on the
+    # stream's own session, so it keeps this conf); a big-MV deployment
+    # sizes this to |MV|/128MB instead.
+    merge_parts = {"spark.sql.shuffle.partitions": "2"}
+    with _finite_stream(spark, "q_stream_mv_refresh", merge_parts) as fs:
+        stream = fs.stage(*_id_chunks(ev))
+        mv = f"{fs.tmp}/mv"
+        _await_finite_stream(fs.start(
+            lambda: mv_stream_refresh(stream, mv, f"{fs.tmp}/ckpt", keys, sums)
+        ), fs.name)
+        rows = mv_finalize(mv_read(spark, mv), sums).select(
             "event_type", "day", "n_events", "sum_value"
         ).collect()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(tmp, ignore_errors=True)
     return local_rows(
         spark,
         rows,
@@ -643,7 +630,6 @@ def q_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load(spark, sf_dir, "events").select("event_id", "event_type", "value")
     tmp = tempfile.mkdtemp(prefix="q_dynamic_overwrite_")
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
     tbl = "q154_events_part"
     try:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
@@ -662,14 +648,15 @@ def q_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT event_id, value, event_type FROM q154_src
             """
         )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        spark.sql(
-            f"""
-            INSERT OVERWRITE TABLE {tbl} PARTITION (event_type)
-            SELECT event_id, value * 2 AS value, event_type
-            FROM q154_src WHERE event_type = 'click'
-            """
-        )
+        dynamic = {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+        with scoped_conf(spark, dynamic):
+            spark.sql(
+                f"""
+                INSERT OVERWRITE TABLE {tbl} PARTITION (event_type)
+                SELECT event_id, value * 2 AS value, event_type
+                FROM q154_src WHERE event_type = 'click'
+                """
+            )
         out = (
             spark.table(tbl)
             .groupBy("event_type")
@@ -680,7 +667,6 @@ def q_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows = out.collect()
     finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
         spark.catalog.dropTempView("q154_src")
         shutil.rmtree(tmp, ignore_errors=True)
@@ -722,37 +708,26 @@ def q_stream_to_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-run must start from CREATE, which is itself part of what the
     toTable contract covers).
     """
-    import shutil
-    import tempfile
     import uuid
 
     from project_map_reduce_spark.plans.streaming_shaped import (
         _await_finite_stream,
-        _stage_batches,
+        _finite_stream,
+        _id_chunks,
     )
 
     ev = load(spark, sf_dir, "events").select(
         "event_id", "event_type", "user_id", "value"
     )
-    tmp = tempfile.mkdtemp(prefix="q_stream_to_table_")
     table = f"pmrs_stream_tbl_{uuid.uuid4().hex[:8]}"
     try:
-        src = _stage_batches(tmp, tuple(
-            (f"c{i}", ev.where(F.col("event_id") % 3 == i))
-            for i in range(3)
-        ))
-        q = (
-            spark.readStream.schema(
-                "event_id bigint, event_type string, "
-                "user_id bigint, value double"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .toTable(table)
-        )
-        _await_finite_stream(q, "q_stream_to_table")
+        with _finite_stream(spark, "q_stream_to_table") as fs:
+            stream = fs.stage(*_id_chunks(ev))
+            _await_finite_stream(fs.start(lambda: (
+                stream.writeStream.option("checkpointLocation", f"{fs.tmp}/ckpt")
+                .trigger(availableNow=True)
+                .toTable(table)
+            )), fs.name)
         rows = (
             spark.read.table(table)
             .groupBy("event_type")
@@ -765,7 +740,6 @@ def q_stream_to_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
-        shutil.rmtree(tmp, ignore_errors=True)
     return local_rows(
         spark,
         rows,

@@ -19,6 +19,7 @@ chosen for cluster-scale behavior too:
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -108,3 +109,23 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]):
+    """Set ``conf`` on ``spark`` for the block, then put each key back as
+    it was: its old value if it had one, unset if it had none. The conf
+    is session-global while the block runs, so keep the block to the
+    calls that read it. A stream copies its session conf at ``start()``,
+    so a stream's override needs to be held only around that call."""
+    old = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -1,81 +1,18 @@
-"""Unit tests for the as-of join operators (operators/asof.py).
+"""Unit tests for the as-of join operator (operators/asof.py).
 
-The keyed variant is driven daily by q_join_asof's DuckDB-oracle parity;
-the global (unkeyed, time-bucketed) variant has no fixture query, so its
-semantics — inclusive <=, (ts, tiebreak) max, cross-bucket carry — are
-pinned here against a brute-force reference computed in Python.
+The keyed join is driven by q_join_asof's DuckDB-oracle parity; this
+file pins the no-predecessor case, which the fixture may not exercise.
 """
 
 from __future__ import annotations
 
 from datetime import datetime
 
-import pytest
-
-from project_map_reduce_spark.operators.asof import (
-    asof_join_global,
-    asof_join_keyed,
-)
+from project_map_reduce_spark.operators.asof import asof_join_keyed
 
 
 def _ts(m, d, h=0):
     return datetime(2024, m, d, h)
-
-
-# Right rows: (rid, sig_ts, sig_value). Months 1 and 3 have data, month 2
-# is deliberately empty so February left rows must inherit January's last
-# row via the cross-bucket carry. Duplicate timestamp in month 1 pins the
-# tiebreak (greatest rid wins).
-_RIGHT = [
-    (1, _ts(1, 5), 10.0),
-    (2, _ts(1, 20), 20.0),
-    (3, _ts(1, 20), 21.0),  # same ts as rid=2: tiebreak -> rid 3
-    (4, _ts(3, 10), 40.0),
-]
-
-# Left rows: (lid, ts) covering before-any-right (null match), exact-ts
-# equality (inclusive), empty-month carry, and after-later-right.
-_LEFT = [
-    (100, _ts(1, 1)),  # before any right row -> null
-    (101, _ts(1, 20)),  # equal ts -> inclusive, tiebreak rid 3
-    (102, _ts(2, 15)),  # month with NO right rows -> carry rid 3
-    (103, _ts(3, 9)),  # month 3 before its right row -> still rid 3
-    (104, _ts(3, 11)),  # after rid 4
-]
-
-
-def _brute(left_ts):
-    best = None
-    for rid, rts, rv in _RIGHT:
-        if rts <= left_ts and (best is None or (rts, rid) > (best[1], best[0])):
-            best = (rid, rts, rv)
-    return (None, None) if best is None else (best[1], best[2])
-
-
-@pytest.fixture(scope="module")
-def frames(spark):
-    left = spark.createDataFrame(_LEFT, "lid long, ts timestamp")
-    right = spark.createDataFrame(
-        _RIGHT, "rid long, sig_ts timestamp, sig_value double"
-    )
-    return left, right
-
-
-def test_global_asof_matches_bruteforce(spark, frames):
-    left, right = frames
-    out = asof_join_global(
-        left,
-        right,
-        left_ts="ts",
-        right_ts="sig_ts",
-        value_cols=["sig_ts", "sig_value"],
-        tiebreak="rid",
-        bucket="month",
-    )
-    got = {r["lid"]: (r["sig_ts"], r["sig_value"]) for r in out.collect()}
-    assert set(got) == {lid for lid, _ in _LEFT}
-    for lid, lts in _LEFT:
-        assert got[lid] == _brute(lts), f"lid={lid} ts={lts}"
 
 
 def test_keyed_asof_null_when_no_predecessor(spark):

@@ -19,11 +19,14 @@ def _all_entries():
 )
 def test_query_matches_oracle(name, spark, duck, sf_dir):
     e = entries()[name]
+    conf = spark.conf.getAll
     sdf = e.fn(spark, sf_dir)
     if e.oracle is None:
         rows = sdf.count()
         assert rows >= 0
         assert sdf.columns  # stable, non-empty schema
-        return
-    problems = compare(name, sdf, duck.sql(e.oracle))
-    assert not problems, f"{name}: " + "; ".join(problems)
+    else:
+        problems = compare(name, sdf, duck.sql(e.oracle))
+        assert not problems, f"{name}: " + "; ".join(problems)
+    # A query must leave the caller's session conf as it found it.
+    assert spark.conf.getAll == conf, f"{name} changed the session conf"

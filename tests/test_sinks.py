@@ -8,9 +8,9 @@ import os
 import shutil
 
 import pytest
-from conftest import drain
 from pyspark.sql import functions as F
 
+from project_map_reduce_spark.plans.streaming_shaped import _await_finite_stream
 from project_map_reduce_spark.sources import sinks
 
 ART = os.path.join(os.path.dirname(__file__), ".artifacts", "sinks")
@@ -129,7 +129,7 @@ def test_streaming_sink_is_idempotent_exactly_once(spark, sf_dir, tmp_path):
         .parquet(src)
     )
     q = write_stream_idempotent(stream, out, ckpt)
-    drain(q)
+    _await_finite_stream(q, "idempotent_sink", timeout=120)
 
     got = spark.read.parquet(out)
     assert got.count() == ev.count()

@@ -7,9 +7,9 @@ import os
 import shutil
 
 import pytest
-from conftest import drain
 from pyspark.sql import functions as F
 
+from project_map_reduce_spark.plans.streaming_shaped import _await_finite_stream
 from project_map_reduce_spark.streaming.stateful import (
     batch_user_totals,
     running_user_totals,
@@ -51,7 +51,7 @@ def test_running_totals_converge_to_batch(spark, sf_dir, chunks):
         .trigger(availableNow=True)
         .start()
     )
-    drain(q)
+    _await_finite_stream(q, "running_totals", timeout=120)
     # Last emit per user = converged running total.
     final = (
         spark.sql("SELECT * FROM running_totals")

@@ -12,10 +12,10 @@ import os
 import shutil
 
 import pytest
-from conftest import drain
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from project_map_reduce_spark.plans.streaming_shaped import _await_finite_stream
 from project_map_reduce_spark.streaming import transforms
 from project_map_reduce_spark.tables import load
 
@@ -60,7 +60,7 @@ def _run_stream(spark, chunked, transform, *, mode="update"):
         .trigger(availableNow=True)
         .start()
     )
-    drain(q)
+    _await_finite_stream(q, name, timeout=120)
     return spark.sql(f"SELECT * FROM {name}")
 
 
@@ -108,7 +108,7 @@ def test_stream_dedup_drops_duplicates(spark, sf_dir, chunked_events):
         .trigger(availableNow=True)
         .start()
     )
-    drain(q)
+    _await_finite_stream(q, "smoke_dedup", timeout=120)
     got = spark.sql("SELECT count(*), count(DISTINCT event_id) FROM smoke_dedup")
     n, n_distinct = got.collect()[0]
     expected = load(spark, sf_dir, "events").count()
@@ -149,7 +149,7 @@ def test_stream_dedup_within_watermark_bounded_state(spark):
         .trigger(availableNow=True)
         .start()
     )
-    drain(q)
+    _await_finite_stream(q, "smoke_dedup_wm", timeout=120)
     n, n_distinct = spark.sql(
         "SELECT count(*), count(DISTINCT event_id) FROM smoke_dedup_wm"
     ).collect()[0]
@@ -190,7 +190,7 @@ def test_watermark_drops_late_rows(spark):
         .trigger(availableNow=True)
         .start()
     )
-    drain(q)
+    _await_finite_stream(q, "smoke_late", timeout=120)
     rows = spark.sql(
         "SELECT window.start, n FROM smoke_late ORDER BY window.start"
     ).collect()
@@ -251,7 +251,7 @@ def test_stream_stream_interval_join_equals_batch(spark, sf_dir, chunked_events)
         .trigger(availableNow=True)
         .start()
     )
-    drain(q)
+    _await_finite_stream(q, "smoke_interval_join", timeout=120)
     got = _canon(spark.sql("SELECT * FROM smoke_interval_join"))
 
     from project_map_reduce_spark.operators.rangejoin import interval_join
@@ -773,3 +773,68 @@ def test_stream_state_parts_read_and_validated_at_use(monkeypatch):
         monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTS", bad)
         with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_STATE_PARTS"):
             _stream_state_parts()
+
+
+def test_finite_stream_holds_conf_only_while_starting(spark):
+    """The finite-stream harness sets a stream's conf on the caller's
+    session only around ``start()``. Spark copies the session conf into
+    the stream's own session when it starts, so every micro-batch still
+    runs with the override while the caller's conf is already back
+    before the await. The stream runs on the caller's session, so a
+    listener registered there sees its progress."""
+    import datetime as dt
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from project_map_reduce_spark.plans.streaming_shaped import _finite_stream
+    from project_map_reduce_spark.sources.sinks import write_stream_idempotent
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    assert before != "3"
+    seen = []
+
+    class Progress(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            seen.append(str(event.progress.id))
+
+        def onQueryTerminated(self, event):
+            pass
+
+    def batch(start):
+        base = dt.datetime(2024, 6, 1, 12)
+        rows = [(base + dt.timedelta(minutes=start + i), 1.0) for i in range(5)]
+        return spark.createDataFrame(rows, "ts timestamp, value double")
+
+    listener = Progress()
+    spark.streams.addListener(listener)
+    try:
+        with _finite_stream(spark, "conf_scope_test", {key: "3"}) as fs:
+            agg = (
+                fs.stage(("a", batch(0)), ("b", batch(30)))
+                .withWatermark("ts", "10 minutes")
+                .groupBy(F.window("ts", "1 hour"))
+                .agg(F.count(F.lit(1)).alias("n"))
+            )
+            q = fs.start(lambda: write_stream_idempotent(
+                agg, f"{fs.tmp}/sink", f"{fs.tmp}/ckpt", output_mode="update"
+            ))
+            assert spark.conf.get(key) == before, "conf held past start()"
+            _await_finite_stream(q, "conf_scope_test", timeout=120)
+        parts = [
+            op["numShufflePartitions"]
+            for p in q.recentProgress
+            for op in p["stateOperators"]
+        ]
+        assert len(parts) >= 2 and set(parts) == {3}, parts
+        deadline = time.time() + 30  # listener events arrive asynchronously
+        while str(q.id) not in seen and time.time() < deadline:
+            time.sleep(0.2)
+        assert str(q.id) in seen, "caller's listener missed the stream"
+    finally:
+        spark.streams.removeListener(listener)
+    assert spark.conf.get(key) == before
