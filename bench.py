@@ -50,6 +50,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench.hostprobe import steal_s  # noqa: E402
 from project_map_reduce_spark.registry import entries  # noqa: E402
 from project_map_reduce_spark.session import get_spark  # noqa: E402
 from project_map_reduce_spark.tables import load  # noqa: E402
@@ -103,10 +104,8 @@ _GATE_TIMEOUT_SEC = 900.0
 def _steal_sec() -> float:
     """Cumulative hypervisor steal time in seconds (0.0 if unreadable)."""
     try:
-        with open("/proc/stat") as f:
-            fields = f.readline().split()
-        return int(fields[8]) / os.sysconf("SC_CLK_TCK")
-    except Exception:  # noqa: BLE001
+        return steal_s()
+    except (OSError, IndexError, ValueError):
         return 0.0
 
 

@@ -18,7 +18,7 @@ from project_map_reduce_spark.functions.det import r6d
 from project_map_reduce_spark.operators.pagerank import pagerank
 from project_map_reduce_spark.registry import fmt_doc, register
 from project_map_reduce_spark.session import scoped_conf
-from project_map_reduce_spark.tables import load, local_rows
+from project_map_reduce_spark.tables import load, local_rows, materialize
 
 _ITERS = 5
 _DAMPING = 0.85
@@ -186,17 +186,10 @@ def q_hierarchy_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # snapshot pattern: distributed write + lazy read; O(users)
         # rows, a hierarchy dim, never through the driver) so the
         # restored conf cannot race a caller's later action.
-        import atexit
-        import shutil as _shutil
-        import tempfile as _tempfile
-
-        snap = _tempfile.mkdtemp(prefix="pmrs_q137_")
-        atexit.register(_shutil.rmtree, snap, ignore_errors=True)
         with scoped_conf(spark, row_limit):
-            spark.sql(_HIER_SQL.format(events=view, div="DIV")).write.mode(
-                "overwrite"
-            ).parquet(snap)
-        return spark.read.parquet(snap)
+            return materialize(
+                spark.sql(_HIER_SQL.format(events=view, div="DIV")), "pmrs_q137_"
+            )
     finally:
         # Session-global name: leave nothing registered behind (a later
         # caller colliding with a stale q137_events would read old data).

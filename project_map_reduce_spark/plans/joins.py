@@ -20,7 +20,7 @@ from project_map_reduce_spark.functions.det import micros_between, r6d, sum6
 from project_map_reduce_spark.operators.asof import asof_join_keyed
 from project_map_reduce_spark.operators.rangejoin import interval_join
 from project_map_reduce_spark.registry import register
-from project_map_reduce_spark.tables import load, local_rows
+from project_map_reduce_spark.tables import load, localize
 
 
 @register(
@@ -420,19 +420,13 @@ def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise RuntimeError(
                 f"bucketed join still shuffles — layout regression:\n{plan}"
             )
-        res = joined.groupBy("c_mktsegment").agg(
+        return localize(joined.groupBy("c_mktsegment").agg(
             F.count(F.lit(1)).alias("n_orders"),
             sum6("o_totalprice").alias("total_revenue"),
-        )
-        rows = res.collect()
+        ))
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {t_o}")
         spark.sql(f"DROP TABLE IF EXISTS {t_c}")
-    return local_rows(
-        spark,
-        rows,
-        schema="c_mktsegment string, n_orders bigint, total_revenue double",
-    )
 
 
 @register(

@@ -14,10 +14,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from project_map_reduce_spark.functions.det import SUM6
+from project_map_reduce_spark.functions.det import SUM6, sum6
 from project_map_reduce_spark.registry import fmt_doc, register
 from project_map_reduce_spark.session import scoped_conf
-from project_map_reduce_spark.tables import load, local_rows
+from project_map_reduce_spark.tables import (
+    footer_rows, load, local_rows, localize, scratch_dir, session_dir, table_path
+)
 
 # Both sides of every hash-checked sum here accumulate in DECIMAL(27,6)
 # (Spark: functions.det.sum6; DuckDB: this template) — the cross-engine
@@ -85,17 +87,11 @@ def q_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is the durable asset, written once and pruned by every query
     after.
     """
-    import shutil
-    import tempfile
-
-    from project_map_reduce_spark.functions.det import sum6
-
     ev = load(spark, sf_dir, "events").select(
         "event_type", "ts", "value", F.to_date("ts").alias("event_date")
     )
     lo, hi = "2024-01-10", "2024-01-12"
-    part_dir = tempfile.mkdtemp(prefix="q_partition_prune_")
-    try:
+    with scratch_dir("q_partition_prune_") as part_dir:
         # One writer task per date directory (hash repartition on the
         # partition column), the layout a daily ingest job would leave.
         ev.repartition("event_date").write.mode("overwrite").partitionBy(
@@ -119,13 +115,7 @@ def q_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "partition pruning regression — scan has no event_date "
                 f"PartitionFilter:\n{plan}"
             )
-        rows = pruned.collect()
-    finally:
-        shutil.rmtree(part_dir, ignore_errors=True)
-    return local_rows(
-        spark,
-        rows, schema="event_type string, n_events bigint, sum_value double"
-    )
+        return localize(pruned)
 
 
 def _assert_dynamic_pruning(df: DataFrame) -> None:
@@ -185,16 +175,10 @@ def q_dpp_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale the partitioned fact + date dim are the durable warehouse
     assets, and every dim-filtered join after ingest prunes this way.
     """
-    import shutil
-    import tempfile
-
-    from project_map_reduce_spark.functions.det import sum6
-
     ev = load(spark, sf_dir, "events").select(
         "event_type", "value", F.to_date("ts").alias("event_date")
     )
-    star_dir = tempfile.mkdtemp(prefix="q_dpp_prune_")
-    try:
+    with scratch_dir("q_dpp_prune_") as star_dir:
         ev.repartition("event_date").write.partitionBy("event_date").parquet(
             f"{star_dir}/fact"
         )
@@ -221,13 +205,7 @@ def q_dpp_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         dpp = {"spark.sql.optimizer.dynamicPartitionPruning.enabled": "true"}
         with scoped_conf(spark, dpp):
             _assert_dynamic_pruning(agg)
-            rows = agg.collect()
-    finally:
-        shutil.rmtree(star_dir, ignore_errors=True)
-    return local_rows(
-        spark,
-        rows, schema="event_type string, n_events bigint, sum_value double"
-    )
+            return localize(agg)
 
 
 _CLUSTER_LO = "2024-01-10 00:00:00"
@@ -295,16 +273,11 @@ def q_cluster_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import datetime
     import glob as _glob
-    import shutil
-    import tempfile
-
-    from project_map_reduce_spark.functions.det import sum6
 
     ev = load(spark, sf_dir, "events").select("event_type", "ts", "value")
     lo = datetime.datetime.fromisoformat(_CLUSTER_LO)
     hi = datetime.datetime.fromisoformat(_CLUSTER_HI)
-    lay_dir = tempfile.mkdtemp(prefix="q_cluster_prune_")
-    try:
+    with scratch_dir("q_cluster_prune_") as lay_dir:
         (
             ev.repartitionByRange(_CLUSTER_FILES, "ts")
             .sortWithinPartitions("ts")
@@ -346,13 +319,7 @@ def q_cluster_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         _assert_ts_bounds_pushed(pruned)
-        rows = pruned.collect()
-    finally:
-        shutil.rmtree(lay_dir, ignore_errors=True)
-    return local_rows(
-        spark,
-        rows, schema="event_type string, n_events bigint, sum_value double"
-    )
+        return localize(pruned)
 
 
 fmt_doc(
@@ -442,10 +409,7 @@ def q_zorder_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import datetime
     import glob as _glob
-    import shutil
-    import tempfile
 
-    from project_map_reduce_spark.functions.det import sum6
     from project_map_reduce_spark.operators.zorder import (
         column_bounds,
         zorder_write,
@@ -459,8 +423,7 @@ def q_zorder_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     u_lo = ulo_d + (3 * (uhi_d - ulo_d)) // 10
     u_hi = ulo_d + (uhi_d - ulo_d) // 2
 
-    lay_dir = tempfile.mkdtemp(prefix="q_zorder_prune_")
-    try:
+    with scratch_dir("q_zorder_prune_") as lay_dir:
         zorder_write(ev, lay_dir, "ts", "user_id", bounds, _Z_FILES)
 
         # Footer audit: per-dimension AND conjunctive overlap.
@@ -506,13 +469,7 @@ def q_zorder_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         _assert_cols_pushed(pruned, ["ts", "user_id"])
-        rows = pruned.collect()
-    finally:
-        shutil.rmtree(lay_dir, ignore_errors=True)
-    return local_rows(
-        spark,
-        rows, schema="event_type string, n_events bigint, sum_value double"
-    )
+        return localize(pruned)
 
 
 fmt_doc(
@@ -683,13 +640,6 @@ def q_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     before returning — at scale the bloom-filtered table is the durable
     asset (written once at ingest, probed by every point lookup after).
     """
-    import shutil
-    import tempfile
-
-    from project_map_reduce_spark.functions.det import sum6
-
-    from project_map_reduce_spark.tables import footer_rows, table_path
-
     ev = load(spark, sf_dir, "events").select("event_id", "event_type", "value")
     # Row count from the parquet FOOTERS (round-13, guide §1.2 fewer
     # passes): identical to ev.count(), zero Spark jobs — and summed
@@ -711,8 +661,7 @@ def q_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     ]
 
-    lay_dir = tempfile.mkdtemp(prefix="q_bloom_prune_")
-    try:
+    with scratch_dir("q_bloom_prune_") as lay_dir:
         (
             keyed.repartition(_BLOOM_FILES)
             .write.mode("overwrite")
@@ -730,13 +679,7 @@ def q_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
                 sum6("value").alias("sum_value"),
             )
         )
-        rows = looked_up.collect()
-    finally:
-        shutil.rmtree(lay_dir, ignore_errors=True)
-    return local_rows(
-        spark,
-        rows, schema="event_type string, n_events bigint, sum_value double"
-    )
+        return localize(looked_up)
 
 
 fmt_doc(
@@ -808,19 +751,13 @@ def q_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     are removed before returning — at scale the CSV/JSON/text/ORC
     copies are the interchange assets an ingest boundary exchanges.
     """
-    import shutil
-    import tempfile
-
-    from project_map_reduce_spark.functions.det import sum6
-
     cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
     ev = (
         load(spark, sf_dir, "events")
         .select(*cols)
         .where(F.col("event_id") % 10 == 0)
     )
-    tmp = tempfile.mkdtemp(prefix="q_source_roundtrip_")
-    try:
+    with scratch_dir("q_source_roundtrip_") as tmp:
         # (a) CSV: header + explicit NTZ format; the embedded-JSON props
         # column forces real quoting/escaping through the round trip.
         ev.write.option("header", True).option(
@@ -886,15 +823,7 @@ def q_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .unionByName(agg(text_back, "text"))
             .unionByName(agg(orc_back, "orc"))
         )
-        rows = out.collect()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return local_rows(
-        spark,
-        rows,
-        schema="fmt string, event_type string, n_events bigint, "
-        "n_users bigint, sum_value double, micros_sum bigint, n_props bigint",
-    )
+        return localize(out)
 
 
 @register(
@@ -931,16 +860,10 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Driver-collect note (Q96/Q117 pattern): O(types) rows; scratch
     layout removed before returning.
     """
-    import shutil
-    import tempfile
-
-    from project_map_reduce_spark.functions.det import sum6
-
     ev = load(spark, sf_dir, "events").select(
         "event_id", "event_type", "user_id", "value"
     )
-    tmp = tempfile.mkdtemp(prefix="q_schema_evo_")
-    try:
+    with scratch_dir("q_schema_evo_") as tmp:
         # batch 1: the pre-evolution writer — no user_id column at all
         ev.where(F.col("event_id") % 2 == 0).select(
             "event_type", "value"
@@ -956,23 +879,13 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "schema-evolution regression — merged read lost the "
                 f"evolved column; schema: {merged.schema.simpleString()}"
             )
-        rows = (
-            merged.groupBy("event_type")
-            .agg(
+        return localize(
+            merged.groupBy("event_type").agg(
                 F.count(F.lit(1)).alias("n_events"),
                 F.count("user_id").alias("n_with_user"),
                 sum6("value").alias("sum_value"),
             )
-            .collect()
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return local_rows(
-        spark,
-        rows,
-        schema="event_type string, n_events bigint, n_with_user bigint, "
-        "sum_value double",
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1011,7 +924,6 @@ def q_pyds_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     object listing (module docstring); the API surface is identical.
     """
     from project_map_reduce_spark.sources.pyds import DocPayloadDataSource
-    from project_map_reduce_spark.tables import table_path
 
     spark.dataSource.register(DocPayloadDataSource)
     out = (
@@ -1079,19 +991,15 @@ def q_pyds_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pyarrow.parquet as pq
 
-    from project_map_reduce_spark.plans.streaming_shaped import (
-        _finite_stream,
-        _session_output_dir,
-    )
+    from project_map_reduce_spark.plans.streaming_shaped import _finite_stream
     from project_map_reduce_spark.sources.pyds import DocPayloadDataSource
     from project_map_reduce_spark.sources.sinks import write_stream_idempotent
-    from project_map_reduce_spark.tables import table_path
 
     spark.dataSource.register(DocPayloadDataSource)
     path = table_path(sf_dir, "documents")
     n = pq.ParquetFile(path).metadata.num_rows
     chunk = max(1, math.ceil(n / 4))
-    sink = _session_output_dir("pmrs_q141_sink_")
+    sink = session_dir("pmrs_q141_sink_")
     stream = (
         spark.readStream.format("pmrs_docpayload")
         .option("path", path)
@@ -1169,18 +1077,14 @@ def q_variant_storage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the write is distributed (no driver data path); both
     legs are one projection + one 5-group hash agg; the tiny per-leg
-    aggregates (O(types) rows) are collected and re-lifted so the
-    scratch dir can be removed eagerly (the Q126 pattern).
+    aggregates (O(types) rows) are localized so the scratch dir can be
+    removed eagerly (the Q126 pattern).
     """
-    import shutil
-    import tempfile
-
     ev = load(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="pmrs_q142_")
 
-    def _extract_agg(df: DataFrame) -> list:
+    def _extract_agg(df: DataFrame, leg: str) -> DataFrame:
         k = F.variant_get(F.col("v"), "$.k", "bigint").alias("k")
-        return (
+        return localize(
             df.select("event_type", k)
             .groupBy("event_type")
             .agg(
@@ -1190,21 +1094,23 @@ def q_variant_storage(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.min("k").alias("min_k"),
                 F.max("k").alias("max_k"),
             )
-            .collect()
+            .select(F.lit(leg).alias("leg"), "*")
         )
 
-    varframe = None
-    try:
-        # persist(): the direct-leg aggregate AND the parquet write both
-        # consume the decoded frame — without the cache boundary the
-        # props JSON is parse_json'd twice (round-13, guide §5 caching
-        # rule: reused AND expensive to recompute). Both consumers are
-        # eager inside this function, so the finally block releases it.
-        varframe = ev.select(
-            "event_type", F.parse_json(F.col("props")).alias("v")
-        ).persist()
-        direct_rows = _extract_agg(varframe)
-        varframe.write.mode("overwrite").parquet(f"{tmp}/var")
+    # persist(): the direct-leg aggregate AND the parquet write both
+    # consume the decoded frame — without the cache boundary the props
+    # JSON is parse_json'd twice (round-13, guide §5 caching rule: reused
+    # AND expensive to recompute). Both consumers are eager inside this
+    # function, so the finally block releases it.
+    varframe = ev.select(
+        "event_type", F.parse_json(F.col("props")).alias("v")
+    ).persist()
+    with scratch_dir("pmrs_q142_") as tmp:
+        try:
+            direct = _extract_agg(varframe, "direct")
+            varframe.write.mode("overwrite").parquet(f"{tmp}/var")
+        finally:
+            varframe.unpersist(blocking=False)
         stored = spark.read.parquet(f"{tmp}/var")
         if stored.schema["v"].dataType.simpleString() != "variant":
             raise RuntimeError(
@@ -1212,23 +1118,7 @@ def q_variant_storage(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"parquet round-trip as variant (got "
                 f"{stored.schema['v'].dataType.simpleString()})"
             )
-        parquet_rows = _extract_agg(stored)
-    finally:
-        if varframe is not None:
-            varframe.unpersist(blocking=False)
-        shutil.rmtree(tmp, ignore_errors=True)
-
-    schema = (
-        "event_type string, n_events bigint, sum_k bigint, "
-        "n_distinct_k bigint, min_k bigint, max_k bigint"
-    )
-    return local_rows(spark, direct_rows, schema).select(
-        F.lit("direct").alias("leg"), "*"
-    ).unionByName(
-        local_rows(spark, parquet_rows, schema).select(
-            F.lit("parquet").alias("leg"), "*"
-        )
-    )
+        return direct.unionByName(_extract_agg(stored, "parquet"))
 
 
 # ---------------------------------------------------------------------------
@@ -1280,19 +1170,13 @@ def q_source_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB). Final aggregate is O(legs × types) rows (Q132's
     driver-collect note applies).
     """
-    import shutil
-    import tempfile
-
-    from project_map_reduce_spark.functions.det import sum6
-
     cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
     ev = (
         load(spark, sf_dir, "events")
         .select(*cols)
         .where(F.col("event_id") % 10 == 0)
     )
-    tmp = tempfile.mkdtemp(prefix="q_source_xml_")
-    try:
+    with scratch_dir("q_source_xml_") as tmp:
         legs = []
         for fmt, codec in (("xml", None), ("xml_gzip", "gzip")):
             w = (
@@ -1325,15 +1209,7 @@ def q_source_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 .select(F.lit(fmt).alias("fmt"), "*")
             )
-        rows = legs[0].unionByName(legs[1]).collect()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return local_rows(
-        spark,
-        rows,
-        schema="fmt string, event_type string, n_events bigint, "
-        "n_users bigint, sum_value double, micros_sum bigint, n_props bigint",
-    )
+        return localize(legs[0].unionByName(legs[1]))
 
 
 @register(
@@ -1405,11 +1281,6 @@ def q_corrupt_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     PROJECTED 4-column slice, not the raw bytes. Scratch files removed
     before returning (Q132's pattern); the returned aggregate is 3 rows.
     """
-    import shutil
-    import tempfile
-
-    from project_map_reduce_spark.functions.det import sum6
-
     ev = (
         load(spark, sf_dir, "events")
         .select("event_id", "event_type", "value")
@@ -1426,10 +1297,9 @@ def q_corrupt_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(corrupt, F.concat(F.lit("!corrupt!"), F.col("event_id")))
         .otherwise(F.col("value").cast("string")),
     )
-    tmp = tempfile.mkdtemp(prefix="q_corrupt_quarantine_")
     schema_ok = "event_id long, event_type string, value double"
     schema_q = schema_ok + ", _quarantine string"
-    try:
+    with scratch_dir("q_corrupt_quarantine_") as tmp:
         ev.select(line.alias("value")).write.text(f"{tmp}/csv")
 
         perm = (
@@ -1466,16 +1336,9 @@ def q_corrupt_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.sum("event_id").alias("id_sum"),
                 )
             )
-            rows = ok.unionByName(quar).unionByName(dropped).collect()
+            return localize(ok.unionByName(quar).unionByName(dropped))
         finally:
             perm.unpersist()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return local_rows(
-        spark,
-        rows,
-        schema="status string, n_rows bigint, sum_value double, id_sum bigint",
-    )
 
 
 @register(
@@ -1524,18 +1387,12 @@ def q_file_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     "<operation>: <inputUrl> <outputUrl>"); ``_metadata.file_path`` is
     the scan-native restatement.
     """
-    import shutil
-    import tempfile
-
-    from project_map_reduce_spark.functions.det import sum6
-
     ev = (
         load(spark, sf_dir, "events")
         .select("event_id", "value")
         .withColumn("bucket", F.col("event_id") % 4)
     )
-    tmp = tempfile.mkdtemp(prefix="q_file_provenance_")
-    try:
+    with scratch_dir("q_file_provenance_") as tmp:
         ev.coalesce(1).write.partitionBy("bucket").parquet(f"{tmp}/part")
         back = spark.read.parquet(f"{tmp}/part").select(
             F.col("_metadata.file_path").alias("file_path"),
@@ -1555,15 +1412,7 @@ def q_file_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
                 sum6("value").alias("sum_value"),
             )
         )
-        rows = out.collect()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return local_rows(
-        spark,
-        rows,
-        schema="bucket bigint, n_rows bigint, n_files bigint, "
-        "max_row_index bigint, sum_value double",
-    )
+        return localize(out)
 
 
 @register(
@@ -1604,11 +1453,6 @@ def q_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     before returning (Q132's pattern); timestamps round-trip through
     the session-UTC JDBC bridge (NTZ values written as UTC wall time).
     """
-    import shutil
-    import tempfile
-
-    from project_map_reduce_spark.functions.det import sum6
-
     ev = (
         load(spark, sf_dir, "events")
         .select("event_id", "ts", "user_id", "event_type", "value")
@@ -1619,14 +1463,15 @@ def q_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     lo, hi = ev.agg(F.min("event_id"), F.max("event_id")).first()
     if lo is None:
         raise ValueError("events slice is empty — nothing to round-trip")
-    tmp = tempfile.mkdtemp(prefix="q_jdbc_roundtrip_")
-    # Embedded Derby writes derby.log into user.dir unless told not to;
-    # point it at the scratch dir BEFORE the driver class loads (the
-    # property is read once at engine boot).
-    spark._jvm.System.setProperty("derby.stream.error.file", f"{tmp}/derby.log")
-    url = f"jdbc:derby:{tmp}/db;create=true"
     props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
-    try:
+    with scratch_dir("q_jdbc_roundtrip_") as tmp:
+        # Embedded Derby writes derby.log into user.dir unless told not
+        # to; point it at the scratch dir BEFORE the driver class loads
+        # (the property is read once at engine boot).
+        spark._jvm.System.setProperty(
+            "derby.stream.error.file", f"{tmp}/derby.log"
+        )
+        url = f"jdbc:derby:{tmp}/db;create=true"
         ev.write.jdbc(url, "events_rt", mode="overwrite", properties=props)
         back = spark.read.jdbc(
             url,
@@ -1648,15 +1493,7 @@ def q_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(micros).alias("micros_sum"),
             )
         )
-        rows = out.collect()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return local_rows(
-        spark,
-        rows,
-        schema="event_type string, n_events bigint, n_users bigint, "
-        "sum_value double, micros_sum bigint",
-    )
+        return localize(out)
 
 
 @register(
@@ -1698,10 +1535,8 @@ def q_pyds_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     Float cells are 6dp-rounded BEFORE rendering so the text round-trip
     is exact. Scratch removed before returning (Q132's pattern).
     """
-    import shutil
-    import tempfile
+    import datetime as _dt
 
-    from project_map_reduce_spark.functions.det import sum6
     from project_map_reduce_spark.sources.pyds_sink import (
         _line_hash,
         register_report_sink,
@@ -1716,9 +1551,8 @@ def q_pyds_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             sum6("value").alias("sum_value"),
         )
     )
-    tmp = tempfile.mkdtemp(prefix="q_pyds_sink_")
-    out = f"{tmp}/report"
-    try:
+    with scratch_dir("q_pyds_sink_") as tmp:
+        out = f"{tmp}/report"
         (
             agg.repartition(4)
             .write.format("pmrs_report")
@@ -1746,17 +1580,12 @@ def q_pyds_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"(rows {len(got_lines)} vs {want_total}, "
                 f"xor {got_xor} vs {want_xor})"
             )
-        rows = [
-            (c[0], c[1], int(c[2]), float(c[3]))
-            for c in (ln.split("\t") for ln in got_lines)
-        ]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    import datetime as _dt
-
     return local_rows(
         spark,
-        [(t, _dt.date.fromisoformat(d), n, v) for t, d, n, v in rows],
+        [
+            (c[0], _dt.date.fromisoformat(c[1]), int(c[2]), float(c[3]))
+            for c in (ln.split("\t") for ln in got_lines)
+        ],
         schema="event_type string, day date, n_events bigint, sum_value double",
     )
 
@@ -1801,20 +1630,16 @@ def q_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     are exact for int64/double (no truncation at these widths), and the
     result is re-verified against the footer-free plan in tests.
     """
-    import shutil
-    import tempfile
-
     ev = (
         load(spark, sf_dir, "events")
         .select("event_id", "value")
         .withColumn("bucket", F.col("event_id") % 4)
     )
-    tmp = tempfile.mkdtemp(prefix="q_agg_pushdown_")
     v2_pushdown = {
         "spark.sql.parquet.aggregatePushdown": "true",
         "spark.sql.sources.useV1SourceList": "",
     }
-    try:
+    with scratch_dir("q_agg_pushdown_") as tmp:
         ev.write.partitionBy("bucket").parquet(f"{tmp}/part")
         with scoped_conf(spark, v2_pushdown):
             out = (
@@ -1827,6 +1652,8 @@ def q_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.round(F.min("value"), 6).alias("min_value"),
                     F.round(F.max("value"), 6).alias("max_value"),
                 )
+                # Partition discovery types the bucket directories INT.
+                .withColumn("bucket", F.col("bucket").cast("long"))
             )
             plan = out._jdf.queryExecution().executedPlan().toString()
             if "PushedAggregation: [" not in plan or "COUNT(*)" not in plan:
@@ -1834,12 +1661,4 @@ def q_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "q_agg_pushdown: aggregate was not pushed to the parquet "
                     "footer — plan regressed to a data scan"
                 )
-            rows = out.collect()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return local_rows(
-        spark,
-        rows,
-        schema="bucket bigint, n_rows bigint, min_id bigint, max_id bigint, "
-        "min_value double, max_value double",
-    )
+            return localize(out)

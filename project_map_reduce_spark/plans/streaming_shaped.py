@@ -21,7 +21,6 @@ plan over an executor-written sink — no driver gather anywhere
 
 from __future__ import annotations
 
-import atexit
 import datetime
 import os as _os
 import shutil
@@ -35,27 +34,7 @@ from project_map_reduce_spark.registry import fmt_doc, register
 from project_map_reduce_spark.session import scoped_conf
 from project_map_reduce_spark.sources.sinks import write_stream_idempotent
 from project_map_reduce_spark.streaming import transforms as X
-from project_map_reduce_spark.tables import load, local_rows
-
-
-def _session_output_dir(prefix: str) -> str:
-    """A session-scoped persistent directory for a streaming query's
-    FINAL snapshot. The returned DataFrame lazily reads parquet from
-    here, so the data path stays distributed end-to-end (no driver
-    collect of unbounded-key data — SURVEY §4.2's gather rule); cleanup
-    happens at interpreter exit, after every consumer is done."""
-    d = tempfile.mkdtemp(prefix=prefix)
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
-    return d
-
-
-def _persist(df: DataFrame, prefix: str) -> DataFrame:
-    """Write ``df`` to a fresh session output dir and return ONE lazy
-    parquet read of it: the executors do the write, nothing unbounded
-    touches the driver, and the returned plan is a FileScan."""
-    out = _session_output_dir(prefix)
-    df.write.mode("overwrite").parquet(out)
-    return df.sparkSession.read.parquet(out)
+from project_map_reduce_spark.tables import load, local_rows, materialize, session_dir
 
 
 def _await_finite_stream(q, what: str, timeout: float = 300) -> None:
@@ -178,9 +157,9 @@ def _last_update_snapshot(snap: DataFrame, key_cols: list[str],
                           final_cols: list, prefix: str) -> DataFrame:
     """Resolve an update-mode sink (``_finite_stream.run``'s read-back)
     to each key's LAST update projected to ``final_cols``, persisted
-    executor-side (``_persist``)."""
+    executor-side (``materialize``)."""
     last = Window.partitionBy(*key_cols).orderBy(F.desc("batch_id"))
-    return _persist(
+    return materialize(
         snap.withColumn("__rn", F.row_number().over(last))
         .where(F.col("__rn") == 1)
         .select(*final_cols),
@@ -592,7 +571,7 @@ def q_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         # append-mode sink: the emitted rows ARE the result — no
         # last-update resolution needed, just drop the batch_id dir key
         snap = fs.run(deduped, "append")
-        return _persist(
+        return materialize(
             snap.select("event_id", *_ntz("ts"), F.round("value", 6).alias("value")),
             "pmrs_q100_final_",
         )
@@ -682,7 +661,7 @@ def q_join_interval_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts = _shuffle_parts(_stream_state_parts())
     with _finite_stream(spark, "q_join_interval_stream", parts) as fs:
         snap = fs.run(_err_pur_join(fs.stage(*stages), "inner"), "append")
-        return _persist(snap.select("err_id", "pur_id"), "pmrs_q101_final_")
+        return materialize(snap.select("err_id", "pur_id"), "pmrs_q101_final_")
 
 
 @register(
@@ -733,7 +712,7 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.broadcast(dim), F.col("user_id") == F.col("c_custkey")
         ).select("n_name", "value")
         snap = fs.run(
-            enriched, "append", sink=_session_output_dir("pmrs_q107_sink_")
+            enriched, "append", sink=session_dir("pmrs_q107_sink_")
         )
     return snap.groupBy("n_name").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -879,7 +858,7 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts = _shuffle_parts(_stream_state_parts())
     with _finite_stream(spark, "q_stream_sessions", parts) as fs:
         agg = _session_agg(fs.stage(*_session_stages(ev0, flush=True)))
-        snap = fs.run(agg, "append", sink=_session_output_dir("pmrs_q112_sink_"))
+        snap = fs.run(agg, "append", sink=session_dir("pmrs_q112_sink_"))
     return snap.where(F.col("user_id") != -1).select(
         "user_id", *_ntz("session_start", "session_end"), "n_events", "sum_value"
     )
@@ -992,7 +971,7 @@ def q_stream_state_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             snap = fs.run(
                 timer_sessions(stream),
                 "append",
-                sink=_session_output_dir("pmrs_q134_sink_"),
+                sink=session_dir("pmrs_q134_sink_"),
             )
     finally:
         restore_env(spark, prev_env)
@@ -1068,12 +1047,12 @@ def q_state_reader_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The checkpoint must OUTLIVE this call: the returned plan reads it
     # lazily (statestore source), so it gets the session-persistent
     # lifecycle, not the workspace one.
-    ckpt = _session_output_dir("pmrs_q140_ckpt_")
+    ckpt = session_dir("pmrs_q140_ckpt_")
     parts = _shuffle_parts(_stream_state_parts())
     with _finite_stream(spark, "q_state_reader_audit", parts) as fs:
         agg = _session_agg(fs.stage(*_session_stages(ev0, flush=False)))
         finalized = fs.run(
-            agg, "append", sink=_session_output_dir("pmrs_q140_sink_"), ckpt=ckpt
+            agg, "append", sink=session_dir("pmrs_q140_sink_"), ckpt=ckpt
         ).select("user_id", "session_start", "session_end", "n_events", "sum_value")
     open_state = spark.read.format("statestore").load(ckpt).select(
         F.col("value.user_id").alias("user_id"),
@@ -1195,7 +1174,7 @@ def q_stream_chained_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         snap = fs.run(days, "append")
-        return _persist(
+        return materialize(
             snap.where(F.col("day_start") < F.lit(sentinel_ts)).select(
                 *_ntz("day_start"), "n_slots", "n_events", "sum_value"
             ),
@@ -1259,14 +1238,14 @@ def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             *chunks, ("sentinel", sentinel), ("spacer", ev.where(F.lit(False)))
         )
         snap = fs.run(_err_pur_join(stream, "leftOuter"), "append")
-        return _persist(
+        return materialize(
             snap.where(F.col("err_id") >= 0).select("err_id", "pur_id"),
             "pmrs_q152_final_",
         )
 
 
 _RATE_N = 1000          # rows per micro-batch
-_RATE_BATCHES = 5       # batches the query keeps (0..4)
+_RATE_BATCHES = 5       # availableNow runs, one batch each (0..4)
 _RATE_START_MS = 1704067200000  # 2024-01-01T00:00:00Z
 _RATE_ADV_MS = 3600000  # 1 h of event time per batch
 
@@ -1297,22 +1276,20 @@ def q_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests (the reference's closest analog is its synthetic worker-load
     generator, ref LocalApp.java:100-115).
 
-    Unbounded-source protocol: ``rate-micro-batch`` never ends (its
-    availableNow form emits ONE batch — probed), so the query runs a
-    0-interval processing-time trigger, POLLS the idempotent sink until
-    {_RATE_BATCHES} batch directories committed, stops the stream, and
-    reads back only batches 0..{_RATE_BATCHES - 1} — any extra batch
-    that raced the stop is ignored by the bound, which is exactly how a
-    finite check over an infinite source must be written.
+    Unbounded-source protocol: ``rate-micro-batch`` never ends, but
+    each availableNow run commits exactly ONE batch and stops on its own
+    (probed). The query therefore runs {_RATE_BATCHES} availableNow runs
+    back to back on one checkpoint: each restart resumes from the last
+    committed offset, so the sink holds exactly batches
+    0..{_RATE_BATCHES - 1} and no run is ever stopped mid-batch — a
+    finite check over an infinite source, bounded by the runs rather
+    than by a filter on what raced a stop.
 
     Scale shape: the source plans ``numPartitions`` independent range
     slices per batch (no driver materialization); the per-batch sink
     write is the same idempotent per-batchId commit every streaming
     query here uses.
     """
-    import os
-    import time
-
     stream = (
         spark.readStream.format("rate-micro-batch")
         .option("rowsPerBatch", _RATE_N)
@@ -1322,40 +1299,10 @@ def q_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load()
     )
     with _finite_stream(spark, "q_rate_source") as fs:
-        sink = f"{fs.tmp}/sink"
-        q = fs.start(lambda: write_stream_idempotent(
-            stream,
-            sink,
-            f"{fs.tmp}/ckpt",
-            trigger_available_now=False,
-            output_mode="append",
-        ))
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            # A directory appears when the batch STARTS writing; only
-            # its _SUCCESS marker means committed — stopping on bare
-            # dirs races the in-flight write (observed: 4/5 batches).
-            done = [
-                d
-                for d in (os.listdir(sink) if os.path.isdir(sink) else [])
-                if d.startswith("batch_id=")
-                and int(d.split("=")[1]) < _RATE_BATCHES
-                and os.path.exists(f"{sink}/{d}/_SUCCESS")
-            ]
-            if len(done) >= _RATE_BATCHES:
-                break
-            if q.exception():
-                raise q.exception()
-            time.sleep(0.1)
-        else:
-            q.stop()
-            raise RuntimeError("q_rate_source: 5 batches not committed in 120s")
-        q.stop()
-        q.awaitTermination(60)
-        snap = spark.read.option("basePath", sink).parquet(sink)
-        return _persist(
-            snap.where(F.col("batch_id") < _RATE_BATCHES)
-            .groupBy("batch_id")
+        for _ in range(_RATE_BATCHES):
+            snap = fs.run(stream, "append")
+        return materialize(
+            snap.groupBy("batch_id")
             .agg(
                 F.count(F.lit(1)).alias("n_rows"),
                 F.sum("value").alias("sum_value"),

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from project_map_reduce_spark.functions.det import SUM6, r6d, sum6
 from project_map_reduce_spark.registry import fmt_doc, register
 from project_map_reduce_spark.session import scoped_conf
-from project_map_reduce_spark.tables import load, local_rows
+from project_map_reduce_spark.tables import load, localize, scratch_dir
 
 _SNAPSHOT_TS = "1992-01-01 00:00:00"
 
@@ -368,9 +368,6 @@ def q_mv_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scratch MV directory can be removed before returning. At scale
     the MV path is permanent storage and readers run mv_read directly.
     """
-    import shutil
-    import tempfile
-
     from project_map_reduce_spark.operators.mv import (
         mv_finalize,
         mv_init,
@@ -388,24 +385,18 @@ def q_mv_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type", F.date_trunc("day", "ts").alias("day"), "value"
         )
 
-    mv_dir = tempfile.mkdtemp(prefix="q_mv_incremental_")
-    try:
+    with scratch_dir("q_mv_incremental_") as mv_dir:
         mv_init(with_day(ev.filter(F.col("ts") < cutoff)), keys, sums, mv_dir)
         mv_refresh(
             spark, mv_dir, with_day(ev.filter(F.col("ts") >= cutoff)),
             keys, sums,
         )
-        rows = mv_finalize(mv_read(spark, mv_dir), sums).select(
-            "event_type", "day", "n_events", "sum_value"
-        ).collect()
-    finally:
-        shutil.rmtree(mv_dir, ignore_errors=True)
-    return local_rows(
-        spark,
-        rows,
-        schema="event_type string, day timestamp_ntz, "
-        "n_events bigint, sum_value double",
-    )
+        # date_trunc returns a session-zone TIMESTAMP; ``day`` is returned
+        # as the oracle's naive timestamp.
+        day = F.col("day").cast("timestamp_ntz").alias("day")
+        return localize(mv_finalize(mv_read(spark, mv_dir), sums).select(
+            "event_type", day, "n_events", "sum_value"
+        ))
 
 
 @register(
@@ -472,15 +463,10 @@ def q_stream_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         _await_finite_stream(fs.start(
             lambda: mv_stream_refresh(stream, mv, f"{fs.tmp}/ckpt", keys, sums)
         ), fs.name)
-        rows = mv_finalize(mv_read(spark, mv), sums).select(
-            "event_type", "day", "n_events", "sum_value"
-        ).collect()
-    return local_rows(
-        spark,
-        rows,
-        schema="event_type string, day timestamp_ntz, "
-        "n_events bigint, sum_value double",
-    )
+        day = F.col("day").cast("timestamp_ntz").alias("day")
+        return localize(mv_finalize(mv_read(spark, mv), sums).select(
+            "event_type", day, "n_events", "sum_value"
+        ))
 
 
 _COMPACT_INGEST_FILES = 64  # simulated streaming-ingest fragmentation
@@ -534,8 +520,6 @@ def q_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob as _glob
     import math
     import os as _os
-    import shutil
-    import tempfile
 
     import pyarrow.parquet as pq
 
@@ -547,9 +531,8 @@ def q_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         return sum(pq.ParquetFile(p).metadata.num_rows for p in paths)
 
     ev = load(spark, sf_dir, "events").select("event_type", "value")
-    tmp = tempfile.mkdtemp(prefix="q_compact_")
-    frag, tidy = f"{tmp}/frag", f"{tmp}/tidy"
-    try:
+    with scratch_dir("q_compact_") as tmp:
+        frag, tidy = f"{tmp}/frag", f"{tmp}/tidy"
         # The fragmented state a micro-batch ingester leaves behind.
         ev.repartition(_COMPACT_INGEST_FILES).write.parquet(frag)
         files = _glob.glob(f"{frag}/part-*.parquet")
@@ -571,20 +554,12 @@ def q_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise RuntimeError(
                 f"compaction lost rows — {n_rows} in, {got_rows} out"
             )
-        rows = (
-            compacted.groupBy("event_type")
-            .agg(
+        return localize(
+            compacted.groupBy("event_type").agg(
                 F.count(F.lit(1)).alias("n_events"),
                 sum6("value").alias("sum_value"),
             )
-            .collect()
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return local_rows(
-        spark,
-        rows, schema="event_type string, n_events bigint, sum_value double"
-    )
 
 
 fmt_doc(q_compact_small_files, mb=_COMPACT_TARGET_BYTES // (1024 * 1024))
@@ -625,56 +600,47 @@ def q_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped in ``finally`` (ref A12's report-sink lineage: publish =
     replace the job's output location atomically per partition).
     """
-    import shutil
-    import tempfile
-
     ev = load(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    tmp = tempfile.mkdtemp(prefix="q_dynamic_overwrite_")
     tbl = "q154_events_part"
-    try:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        ev.createOrReplaceTempView("q154_src")
-        spark.sql(
-            f"""
-            CREATE TABLE {tbl} (event_id BIGINT, value DOUBLE,
-                                event_type STRING)
-            USING parquet PARTITIONED BY (event_type)
-            LOCATION '{tmp}/tbl'
-            """
-        )
-        spark.sql(
-            f"""
-            INSERT INTO {tbl} PARTITION (event_type)
-            SELECT event_id, value, event_type FROM q154_src
-            """
-        )
-        dynamic = {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
-        with scoped_conf(spark, dynamic):
+    with scratch_dir("q_dynamic_overwrite_") as tmp:
+        try:
+            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+            ev.createOrReplaceTempView("q154_src")
             spark.sql(
                 f"""
-                INSERT OVERWRITE TABLE {tbl} PARTITION (event_type)
-                SELECT event_id, value * 2 AS value, event_type
-                FROM q154_src WHERE event_type = 'click'
+                CREATE TABLE {tbl} (event_id BIGINT, value DOUBLE,
+                                    event_type STRING)
+                USING parquet PARTITIONED BY (event_type)
+                LOCATION '{tmp}/tbl'
                 """
             )
-        out = (
-            spark.table(tbl)
-            .groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                sum6("value").alias("sum_value"),
+            spark.sql(
+                f"""
+                INSERT INTO {tbl} PARTITION (event_type)
+                SELECT event_id, value, event_type FROM q154_src
+                """
             )
-        )
-        rows = out.collect()
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        spark.catalog.dropTempView("q154_src")
-        shutil.rmtree(tmp, ignore_errors=True)
-    return local_rows(
-        spark,
-        rows,
-        schema="event_type string, n_events bigint, sum_value double",
-    )
+            dynamic = {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+            with scoped_conf(spark, dynamic):
+                spark.sql(
+                    f"""
+                    INSERT OVERWRITE TABLE {tbl} PARTITION (event_type)
+                    SELECT event_id, value * 2 AS value, event_type
+                    FROM q154_src WHERE event_type = 'click'
+                    """
+                )
+            out = (
+                spark.table(tbl)
+                .groupBy("event_type")
+                .agg(
+                    F.count(F.lit(1)).alias("n_events"),
+                    sum6("value").alias("sum_value"),
+                )
+            )
+            return localize(out)
+        finally:
+            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+            spark.catalog.dropTempView("q154_src")
 
 
 @register(
@@ -728,21 +694,12 @@ def q_stream_to_table(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .trigger(availableNow=True)
                 .toTable(table)
             )), fs.name)
-        rows = (
-            spark.read.table(table)
-            .groupBy("event_type")
-            .agg(
+        return localize(
+            spark.read.table(table).groupBy("event_type").agg(
                 F.count(F.lit(1)).alias("n_events"),
                 sum6("value").alias("sum_value"),
                 F.countDistinct("user_id").alias("n_users"),
             )
-            .collect()
         )
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
-    return local_rows(
-        spark,
-        rows,
-        schema="event_type string, n_events bigint, sum_value double, "
-        "n_users bigint",
-    )

@@ -81,9 +81,11 @@ def get_spark(
         # matching DuckDB's µs view of the same files.
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
         .config("spark.sql.parquet.datetimeRebaseModeInRead", "CORRECTED")
-        # Spark has no ns timestamp type; read INT64(NANOS) parquet columns
-        # as raw longs — tables.load converts to µs TimestampType (matching
-        # DuckDB's µs truncation of the same files).
+        # Older Sparks have no ns timestamp type and, with this conf, read
+        # INT64(NANOS) parquet columns as raw longs, which tables.load
+        # truncates to µs TIMESTAMP_NTZ (DuckDB's µs view of the same
+        # files). Spark 4.1 reads events.ts as TIMESTAMP_NTZ whatever this
+        # conf says, so there the bigint path in tables.load never runs.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     # Streaming state store: the HDFS-backed (in-heap) provider stays the

@@ -5,11 +5,22 @@ The driver pre-generates ten parquet tables per scale factor
 scan layer is one place: a parquet relation with Catalyst predicate
 pushdown and column pruning. At cluster scale the same loader would
 point at a partitioned table root; nothing else in the engine changes.
+
+Scratch files live here too, so one module decides where they go and
+when they are removed: ``scratch_dir`` for a layout a query builds and
+removes before it returns, ``localize`` to gather a small result off
+such a layout first, and ``session_dir``/``materialize`` for a result
+the returned DataFrame still reads.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -110,6 +121,43 @@ def local_rows(spark: SparkSession, rows, schema) -> DataFrame:
     partition evaluations (~0.15 s of pure runner overhead, measured).
     Same pickle path, schema, and values with one slice."""
     return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+
+
+def localize(df: DataFrame) -> DataFrame:
+    """Collect a SMALL result and re-serve it as a one-partition
+    ``local_rows`` frame with ``df``'s own schema — the gather a query
+    runs before it removes the scratch files ``df`` reads."""
+    return local_rows(df.sparkSession, df.collect(), df.schema)
+
+
+@contextmanager
+def scratch_dir(prefix: str) -> Iterator[str]:
+    """A fresh temp directory for the ``with`` block, removed when the
+    block exits, normally or by an exception."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield d
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def session_dir(prefix: str) -> str:
+    """A temp directory that lives until interpreter exit: the home of a
+    result the returned DataFrame still reads lazily, so the data path
+    stays distributed end to end (no driver collect of unbounded-key
+    data — SURVEY §4.2's gather rule)."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
+
+
+def materialize(df: DataFrame, prefix: str) -> DataFrame:
+    """Write ``df`` to a fresh ``session_dir`` and return ONE lazy
+    parquet read of it: the executors do the write, nothing unbounded
+    touches the driver, and the returned plan is a FileScan."""
+    out = session_dir(prefix)
+    df.write.mode("overwrite").parquet(out)
+    return df.sparkSession.read.parquet(out)
 
 
 def register_views(

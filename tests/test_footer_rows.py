@@ -3,7 +3,7 @@ the data for BOTH table shapes — a single parquet file (the fixture
 layout) and a directory of part files (what any real writer produces;
 VERDICT r13 item 7: the single-file form broke the moment a table was
 a multi-file directory). Also: tables.load reads session conf and
-never sets it."""
+never sets it, and the scratch helpers remove what they create."""
 
 from __future__ import annotations
 
@@ -13,7 +13,13 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from project_map_reduce_spark.tables import footer_rows, load, table_path
+from project_map_reduce_spark.tables import (
+    footer_rows,
+    load,
+    localize,
+    scratch_dir,
+    table_path,
+)
 
 
 def test_single_file_table(tmp_path):
@@ -79,3 +85,34 @@ def test_load_events_leaves_session_conf_alone(spark, sf_dir):
         want.select("event_id", "ts").collect()
     )
     assert native.conf.get(key) == "false"
+
+
+def test_scratch_dir_removed_on_exit():
+    with scratch_dir("pmrs_test_") as d:
+        assert os.path.isdir(d)
+        open(os.path.join(d, "f"), "w").close()
+    assert not os.path.exists(d)
+
+
+def test_scratch_dir_removed_when_block_raises():
+    with pytest.raises(ValueError, match="boom"):
+        with scratch_dir("pmrs_test_") as d:
+            os.makedirs(os.path.join(d, "sub"))
+            raise ValueError("boom")
+    assert not os.path.exists(d)
+
+
+def test_localize_outlives_its_scratch_source(spark):
+    """The localized frame is one partition with the source's schema,
+    and its rows survive removal of the files the source read."""
+    with scratch_dir("pmrs_test_") as d:
+        spark.range(10).selectExpr(
+            "id % 3 AS k", "CAST(id AS DOUBLE) AS v"
+        ).repartition(4).write.parquet(f"{d}/t")
+        src = spark.read.parquet(f"{d}/t").groupBy("k").agg({"v": "sum"})
+        want, schema = sorted(src.collect()), src.schema
+        local = localize(src)
+    assert not os.path.exists(d)
+    assert local.rdd.getNumPartitions() == 1
+    assert local.schema == schema
+    assert sorted(local.collect()) == want == [(0, 18.0), (1, 12.0), (2, 15.0)]

@@ -29,13 +29,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from perfbench.hostprobe import steal_s as _steal  # noqa: E402
 from project_map_reduce_spark.session import get_spark  # noqa: E402
 from project_map_reduce_spark.tables import load  # noqa: E402
-
-
-def _steal() -> float:
-    with open("/proc/stat") as f:
-        return int(f.readline().split()[8]) / 100.0
 
 
 def run_once(spark, sf_dir: str, n_batches: int) -> dict:

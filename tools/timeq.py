@@ -8,10 +8,11 @@ and for the sf1 scale probe.
 ``--gate`` applies the round-12 storm discipline per RUN (the pattern
 that finally produced grid-parity records after six storm-poisoned
 sweeps): before each timed run, block until the host's steal rate over
-a 6s window is <= 1%; after the run, keep it only if its own steal was
-under ``--max-run-steal`` seconds; retry until ``--clean-runs`` clean
-runs are collected or the per-query time budget is exhausted. min_sec
-is the min over CLEAN runs when any exist (all runs are recorded).
+a 6s window is <= 1% (``bench._host_gate``); after the run, keep it
+only if its own steal was under ``--max-run-steal`` seconds; retry
+until ``--clean-runs`` clean runs are collected or the per-query time
+budget is exhausted. min_sec is the min over CLEAN runs when any exist
+(all runs are recorded).
 
 Usage:
     python tools/timeq.py [--sf-dir DIR] [--runs 3] [--gate] query [query ...]
@@ -27,32 +28,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import _host_gate, _steal_sec  # noqa: E402
 from project_map_reduce_spark.registry import entries  # noqa: E402
 from project_map_reduce_spark.session import get_spark  # noqa: E402
 from project_map_reduce_spark.tables import load  # noqa: E402
-
-
-def _steal_sec() -> float:
-    try:
-        with open("/proc/stat") as f:
-            fields = f.readline().split()
-        return int(fields[8]) / os.sysconf("SC_CLK_TCK")
-    except Exception:  # noqa: BLE001
-        return 0.0
-
-
-def _wait_calm(rate_max: float, sample_sec: float, timeout_sec: float) -> float:
-    """Block until the steal rate over one sample window is <= rate_max
-    (or timeout). Returns seconds waited."""
-    waited = 0.0
-    while True:
-        s0, t0 = _steal_sec(), time.perf_counter()
-        time.sleep(sample_sec)
-        dt = time.perf_counter() - t0
-        rate = (_steal_sec() - s0) / dt if dt > 0 else 0.0
-        waited += dt
-        if rate <= rate_max or waited >= timeout_sec:
-            return waited
 
 
 def main() -> int:
@@ -84,7 +63,11 @@ def main() -> int:
         budget_t0 = time.perf_counter()
         while True:
             if a.gate:
-                waited_total += _wait_calm(a.gate_rate, 6.0, a.gate_timeout)
+                waited_total += _host_gate(
+                    sample_sec=6.0,
+                    steal_rate=a.gate_rate,
+                    timeout_sec=a.gate_timeout,
+                )["waited_sec"]
             s0 = _steal_sec()
             t0 = time.perf_counter()
             e.fn(spark, a.sf_dir).write.format("noop").mode("overwrite").save()
