@@ -12,12 +12,9 @@ edge/label relations, nothing quadratic.
 Scale notes for 100 TB graphs: near-dup graphs are overwhelmingly tiny
 components (pairs/triangles), so diameter — and the round count — stays
 small; lineage is cut per round (``localCheckpoint``; on a cluster,
-``checkpoint`` to HDFS) or the plan doubles every iteration; for
-adversarial long-chain graphs use ``connected_components_jump`` below
-— hook + pointer-jumping compression, O(log diameter) rounds from the
-same join/groupBy primitives (the doubling idea of Kiveris et al.,
-"Connected Components in MapReduce and Beyond"); equivalence and the
-round-count advantage are property-tested in tests/test_properties.py.
+``checkpoint`` to HDFS) or the plan doubles every iteration. An
+adversarial long-chain graph needs O(diameter) rounds and raises once
+``max_iter`` is spent rather than return split clusters.
 
 Reference analog: none — the reference never aggregates its per-record
 results beyond file concatenation (Manager.java:287-312); grouping
@@ -101,94 +98,3 @@ def connected_components(
 
     return labels.select("node", "comp")
 
-
-def connected_components_jump(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    *,
-    max_iter: int = 20,
-) -> DataFrame:
-    """Connected components in O(log) rounds: min-label hooking plus
-    pointer-jumping compression (the Shiloach-Vishkin hook/compress
-    idea on DataFrames — same family as Large-Star/Small-Star's
-    doubling, built from the identical join+groupBy primitives).
-
-    Per round:
-      1. **hook** — ``L(u) ← min(L(u), min_{v∈Γ(u)} L(v))`` (one keyed
-         join + groupBy, exactly the plain algorithm's round);
-      2. **compress** — ``L(u) ← L(L(u))`` (one self-join on the label
-         relation): labels chase their own chain one extra hop, so a
-         length-d chain collapses in O(log d) rounds instead of d.
-
-    Invariant: L(u) always names a node of u's component and only
-    decreases, so the fixpoint is the component minimum — identical
-    output to ``connected_components`` (property-tested), just fewer
-    rounds: each round costs 3 keyed shuffles instead of 2, but a
-    10^6-diameter path graph needs ~20 rounds instead of 10^6. Use
-    this for high-diameter graphs; near-dup graphs (tiny components)
-    converge in 2-3 rounds under either.
-    """
-    # Same single-materialization discipline as connected_components:
-    # checkpoint the directed edges once, symmetrize over the
-    # checkpointed partitions.
-    directed = edges.select(
-        F.col(src).alias("s"), F.col(dst).alias("d")
-    ).localCheckpoint()
-    sym = directed.union(
-        directed.select(F.col("d").alias("s"), F.col("s").alias("d"))
-    )
-
-    labels = (
-        sym.select(F.col("s").alias("node"))
-        .distinct()
-        .withColumn("comp", F.col("node"))
-    )
-
-    changed = -1
-    for _ in range(max_iter):
-        # 1. hook: take the min over neighbors' current labels.
-        nbr_min = (
-            sym.join(labels, sym.d == labels.node)
-            .groupBy("s")
-            .agg(F.min("comp").alias("nbr_comp"))
-        )
-        hooked = labels.join(nbr_min, labels.node == nbr_min.s).select(
-            "node",
-            F.least(F.col("comp"), F.col("nbr_comp")).alias("comp"),
-            F.col("comp").alias("__old"),
-        )
-        # Materialize the hook result before self-joining: `parent` is
-        # derived from `hooked`, so without a checkpoint the hook
-        # join+groupBy lineage executes twice per round — doubling the
-        # claimed 3-shuffle round budget.
-        hooked = hooked.localCheckpoint()
-        # 2. compress: one pointer jump L(u) <- L(L(u)). The parent's
-        # label row always exists (labels cover every node and
-        # comp is itself a node id), but keep the coalesce so a missing
-        # row degrades to no-jump rather than a dropped node.
-        parent = hooked.select(
-            F.col("node").alias("p_node"), F.col("comp").alias("p_comp")
-        )
-        jumped = hooked.join(
-            parent, hooked.comp == parent.p_node, "left"
-        ).select(
-            "node",
-            F.coalesce(F.col("p_comp"), F.col("comp")).alias("comp"),
-            ((F.coalesce(F.col("p_comp"), F.col("comp")) < F.col("__old")))
-            .cast("long")
-            .alias("__changed"),
-        )
-        # Lazy checkpoint: the changed-count agg is the round's only
-        # action and materializes the checkpoint in the same job.
-        jumped = jumped.localCheckpoint(eager=False)
-        changed = jumped.agg(F.sum("__changed")).first()[0] or 0
-        labels = jumped.drop("__changed")
-        if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"connected_components_jump did not converge in {max_iter} "
-            f"rounds ({changed} labels still changing)"
-        )
-    return labels.select("node", "comp")

@@ -25,10 +25,10 @@ BASELINE.md):
 * **Large rank relation**: shipping ranks to every executor per round
   stops scaling, so ``e_deg`` is hash-partitioned on its source key
   ONCE and checkpointed — ``localCheckpoint`` preserves
-  ``outputPartitioning`` (only when built with AQE off, see
-  ``_no_aqe``) — and the round joins with a pinned shuffled-hash join:
-  edge partitions stream in place, and after round 1 the rank side
-  streams too because each round's output inherits
+  ``outputPartitioning`` (only when built with AQE off, see the
+  ``scoped_conf`` call in ``pagerank``) — and the round joins with a
+  pinned shuffled-hash join: edge partitions stream in place, and after
+  round 1 the rank side streams too because each round's output inherits
   hashpartitioning(node) from its own final aggregate. Never
   sort-merge: that would re-sort O(edges) per round.
 
@@ -60,38 +60,10 @@ results, Manager.java:287-312).
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from project_map_reduce_spark.session import scoped_conf
-
-
-@contextmanager
-def _no_aqe(spark):
-    """Disable AQE for the jobs launched inside the block.
-
-    ``localCheckpoint`` records the physical plan's outputPartitioning
-    into the resulting LogicalRDD — but an AdaptiveSparkPlanExec never
-    exposes its final partitioning (measured on Spark 4.1: a
-    repartition('s').localCheckpoint() built under AQE re-exchanges on
-    every later join; built without AQE it joins exchange-free). The
-    large-graph iteration shapes are fixed and small-keyed, so AQE's
-    runtime re-planning buys nothing there and costs the one property
-    that regime is built around. The small-graph broadcast regime keeps
-    AQE on — it coalesces the per-round aggregate's tiny shuffle.
-
-    Concurrency note (ADVICE r7): this toggles the SESSION-global conf,
-    so any query running concurrently on the same SparkSession loses AQE
-    for the duration and a concurrent conf change is clobbered by the
-    finally-restore. ``pagerank`` assumes a single-threaded session (the
-    harness's model); callers that share a session across threads should
-    run ``fit`` on ``spark.newSession()`` (isolated conf, shared
-    SparkContext) instead.
-    """
-    with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
-        yield
 
 
 def _step(e_deg: DataFrame, ranks: DataFrame, teleport: float,
@@ -223,7 +195,12 @@ def pagerank(
     # property of the stored blocks. Every subsequent round's
     # shuffled-hash join streams both sides in place (rank side: each
     # round's output inherits hashpartitioning(node) from its own
-    # final aggregate).
+    # final aggregate). AQE is off for this block: ``localCheckpoint``
+    # records the physical plan's outputPartitioning into its LogicalRDD,
+    # but an AdaptiveSparkPlanExec never exposes its final partitioning
+    # (Spark 4.1: a repartition('s').localCheckpoint() built under AQE
+    # re-exchanges on every later join; built without AQE it joins
+    # exchange-free).
     with scoped_conf(
         spark,
         {

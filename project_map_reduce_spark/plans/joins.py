@@ -296,8 +296,8 @@ def q_join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     this query is a per-user cartesian (inequality-only conjunct);
     the bucketed form is an ordinary hash-partitioned equi-join with
     shuffle O(2·|errors| + |purchases|) and per-key fanout bounded by
-    events-per-hour — the plan audit asserts no BNLJ/cartesian
-    appears."""
+    events-per-hour — the plan rules (tools/plan_rules.py) reject any
+    BNLJ/cartesian."""
     ev = load(spark, sf_dir, "events")
     err = ev.filter(F.col("event_type") == "error").select(
         "user_id", F.col("event_id").alias("err_id"), F.col("ts").alias("err_ts")

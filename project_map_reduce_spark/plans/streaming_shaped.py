@@ -339,7 +339,7 @@ def q_stream_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     last-update resolution is an executor-side window + parquet write
     into a session-scoped persistent dir, and the RETURNED DataFrame is
     a lazy distributed read of that snapshot (FileScan, not a
-    LocalTableScan — asserted in tests/test_plan_audit.py). At 100 TB
+    LocalTableScan — asserted in tests/test_streaming.py). At 100 TB
     downstream jobs read the same snapshot path; only the test-harness
     staging dirs are temporary.
     """

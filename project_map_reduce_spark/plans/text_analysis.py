@@ -608,8 +608,8 @@ def q_quality_classifier_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     weight array (the kmeans / SQ8-stats model pattern: O(model)
     crosses the cluster boundary, never O(data)). The returned scoring plan is IDENTICAL in shape to
     Q102: element_at(weights, bucket+1) inside one codegen'd HOF fold,
-    zero shuffles, zero joins, no Python eval (plan-audit-asserted in
-    tests/test_plan_audit.py). The oracle re-derives fit AND scoring
+    zero shuffles, zero joins, no Python eval (asserted by its contract
+    in tools/plan_rules.py). The oracle re-derives fit AND scoring
     in SQL, so training and inference are hash-checked together.
     """
     import math

@@ -98,15 +98,11 @@ def _bloom_block(key: str) -> Column:
     return F.pmod(F.xxhash64(F.col(key)), F.lit(_BLOOM_BLOCKS))
 
 
-def _bloom_bits_hash(key: str) -> Column:
-    """Second hash: its 6-bit slices pick the K bit positions in-block."""
-    return F.xxhash64(F.lit(1).cast("long"), F.col(key))
-
-
 def _bloom_mask_sql(key: str) -> str:
     """SQL for the key's in-block bit mask (shiftleft by a COLUMN
     amount exists only in SQL form — the pyspark wrapper takes a
-    literal int). Used identically by fit and probe."""
+    literal int). A second hash's 6-bit slices pick the K bit positions
+    in-block. Used identically by fit and probe."""
     h2 = f"xxhash64(1L, {key})"
     return " | ".join(
         f"shiftleft(1L, cast((shiftright({h2}, {6 * i}) & 63) as int))"
@@ -278,7 +274,7 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     changelog — the big side at 100 TB, since changelogs outgrow dims —
     collapses map-side to one row per key before the exchange; the
     struct buffer keeps it on SortAggregate rather than the hash path,
-    a documented planscan flag shared with q_minmax_by — the
+    allow-listed in tools/plan_rules.py as for q_minmax_by — the
     single-shuffle mergeable-argmax trade, same as the dedup survivor
     picks), and the join is one hash partition on the key; this is
     exactly how Delta/Iceberg MERGE compacts a CDC feed, minus the
@@ -611,7 +607,7 @@ def q_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
                 CREATE TABLE {tbl} (event_id BIGINT, value DOUBLE,
                                     event_type STRING)
                 USING parquet PARTITIONED BY (event_type)
-                LOCATION '{tmp}/tbl'
+                LOCATION '{tmp}'
                 """
             )
             spark.sql(

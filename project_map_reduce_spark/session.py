@@ -88,24 +88,8 @@ def get_spark(
         # conf says, so there the bigint path in tables.load never runs.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
-    # Streaming state store: the HDFS-backed (in-heap) provider stays the
-    # default — the round-7 A/B (BASELINE.md) measured it at sf0.1/sf1/sf10
-    # for both state-heavy streams and it wins or ties wherever state fits
-    # executor memory (RocksDB's native write path + changelog upload cost
-    # ~1.8x on q_stream_totals at sf10). RocksDB is the right provider only
-    # once per-partition state outgrows the heap — flip it with
-    # SPARK_GRAFT_STATE_STORE=rocksdb (changelog checkpointing included, so
-    # checkpoint commits upload deltas instead of full SST snapshots).
-    if os.environ.get("SPARK_GRAFT_STATE_STORE", "").lower() == "rocksdb":
-        builder = builder.config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        ).config(
-            "spark.sql.streaming.stateStore.rocksdb."
-            "changelogCheckpointing.enabled",
-            "true",
-        )
+    # The state store stays Spark's default HDFS-backed provider: the round-7
+    # A/B (BASELINE.md) has it winning or tying RocksDB while state fits the heap.
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

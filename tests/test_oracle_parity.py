@@ -1,6 +1,8 @@
 """Every registered query with an oracle must hash-match DuckDB at
 sf0.001 (the driver runs the same comparison at sf0.01). Oracle-less
-queries must at least run and return a stable schema."""
+queries must at least run and return a stable schema. The same build
+must leave the session conf unchanged and pass the plan rules
+(``tools/plan_rules.py``)."""
 
 from __future__ import annotations
 
@@ -8,6 +10,7 @@ import pytest
 
 from project_map_reduce_spark.registry import entries
 from tools.parity import compare
+from tools.plan_rules import formatted_plan, plan_problems
 
 
 def _all_entries():
@@ -21,6 +24,8 @@ def test_query_matches_oracle(name, spark, duck, sf_dir):
     e = entries()[name]
     conf = spark.conf.getAll
     sdf = e.fn(spark, sf_dir)
+    # The plan as built, before the comparison executes the frame.
+    plan = formatted_plan(sdf)
     if e.oracle is None:
         rows = sdf.count()
         assert rows >= 0
@@ -30,3 +35,5 @@ def test_query_matches_oracle(name, spark, duck, sf_dir):
         assert not problems, f"{name}: " + "; ".join(problems)
     # A query must leave the caller's session conf as it found it.
     assert spark.conf.getAll == conf, f"{name} changed the session conf"
+    problems = plan_problems(name, plan)
+    assert not problems, "\n".join(problems)

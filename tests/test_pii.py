@@ -13,6 +13,7 @@ import hashlib
 from pyspark.sql import functions as F
 
 from project_map_reduce_spark.operators import pii
+from tools.plan_rules import formatted_plan
 
 
 def _one(spark, text, col):
@@ -77,7 +78,5 @@ def test_redactors_compose_in_one_projection(spark):
         pii.redact_phones(pii.redact_ipv4(pii.redact_emails("s"))).alias("s")
     )
     assert out.head()[0] == "<EMAIL> at <IP> ph <PHONE>"
-    plan = out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "formatted"
-    )
+    plan = formatted_plan(out)
     assert "Exchange" not in plan and "BatchEvalPython" not in plan

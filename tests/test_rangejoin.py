@@ -13,6 +13,7 @@ import datetime as dt
 import pytest
 
 from project_map_reduce_spark.operators.rangejoin import interval_join
+from tools.plan_rules import formatted_plan
 
 _T0 = dt.datetime(2024, 1, 1, 0, 0, 0)
 
@@ -93,9 +94,7 @@ def test_plan_is_equijoin_not_nested_loop(spark):
         lower_sec=0.0,
         upper_sec=60.0,
     )
-    plan = spark._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "formatted"
-    )
+    plan = formatted_plan(out)
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert "Join" in plan, plan

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from project_map_reduce_spark.plans.streaming_shaped import _await_finite_stream
 from project_map_reduce_spark.sources import sinks
+from tools.plan_rules import formatted_plan
 
 ART = os.path.join(os.path.dirname(__file__), ".artifacts", "sinks")
 
@@ -99,9 +100,7 @@ def test_orc_round_trip_pushdown_and_pruning(spark, tmp_path):
     assert a == b
 
     q = back.filter(F.col("o_totalprice") > 100000.0).select("o_orderkey")
-    plan = spark._jvm.PythonSQLUtils.explainString(
-        q._jdf.queryExecution(), "formatted"
-    )
+    plan = formatted_plan(q)
     assert "PushedFilters" in plan and "o_totalprice" in plan.split("PushedFilters")[1][:200], plan
     assert "ReadSchema: struct<o_orderkey:bigint,o_totalprice:double>" in plan, plan
 

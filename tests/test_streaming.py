@@ -708,11 +708,11 @@ def test_session_merge_state_recovers_after_crash(spark, tmp_path):
 
 
 def test_rocksdb_state_store_provider_runs_green(spark, sf_dir, tmp_path):
-    """The documented flip (SPARK_GRAFT_STATE_STORE=rocksdb, session.py)
-    must be a working path, not a comment: run a stateful aggregate
-    under the RocksDB provider and assert both the answer (equals the
-    batch aggregate) and that the RocksDB store actually served it
-    (its custom metrics appear in the state operator's progress)."""
+    """The RocksDB state store, the provider for state that outgrows the
+    heap, must be a working path: set it as the session's provider, run
+    a stateful aggregate, and assert both the answer (equals the batch
+    aggregate) and that the RocksDB store actually served it (its custom
+    metrics appear in the state operator's progress)."""
     key = "spark.sql.streaming.stateStore.providerClass"
     prev = spark.conf.get(key)
     spark.conf.set(

@@ -197,7 +197,7 @@ def test_pagerank_round_is_single_exchange(spark):
     and the rank relation's aggregate-output partitioning both stream
     in place. Reconstructs one steady-state round from the operator's
     own building blocks and counts Exchanges in the physical plan."""
-    from project_map_reduce_spark.operators.pagerank import _no_aqe
+    from project_map_reduce_spark.session import scoped_conf
 
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     base = spark.range(300).select(
@@ -205,7 +205,7 @@ def test_pagerank_round_is_single_exchange(spark):
     )
     e = base.unionAll(base.select(F.col("d").alias("s"), F.col("s").alias("d")))
     e = e.filter("s != d").distinct().localCheckpoint()
-    with _no_aqe(spark):
+    with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
         deg = e.groupBy("s").agg(F.count(F.lit(1)).alias("outdeg"))
         e_deg = (
             e.join(deg, "s")

@@ -20,6 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from project_map_reduce_spark.registry import entries  # noqa: E402
 from project_map_reduce_spark.session import get_spark  # noqa: E402
+from tools.plan_rules import formatted_plan  # noqa: E402
 
 
 def main() -> int:
@@ -41,9 +42,7 @@ def main() -> int:
             continue
         try:
             df = reg[name].fn(spark, a.sf_dir)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
+            plan = formatted_plan(df)
         except Exception as ex:  # noqa: BLE001
             print(f"capture_plan: {name} failed: {ex}", file=sys.stderr)
             rc = 1

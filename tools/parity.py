@@ -3,7 +3,8 @@
 Runs each registered query on Spark and its oracle SQL on DuckDB over
 the same parquet fixtures, then compares row count, column-name set and
 an order-insensitive canonical value table (columns sorted by name, rows
-sorted lexicographically, cells canonicalized). This is the tight inner
+sorted lexicographically, cells canonicalized). The same build is held
+to the plan rules (``tools/plan_rules.py``). This is the tight inner
 feedback loop; the driver does the authoritative run at sf0.01.
 
 Usage:
@@ -165,6 +166,7 @@ def main() -> int:
     from project_map_reduce_spark.registry import entries
     from project_map_reduce_spark.session import get_spark
     from project_map_reduce_spark.tables import TABLES, table_path
+    from tools.plan_rules import formatted_plan, plan_problems
 
     reg = entries()
     names = args.names or [n for n, e in reg.items() if e.oracle or args.rows_only]
@@ -195,11 +197,13 @@ def main() -> int:
         t0 = time.time()
         try:
             sdf = e.fn(spark, args.sf_dir)
+            problems = plan_problems(name, formatted_plan(sdf))
             if e.oracle is None:
-                n = sdf.count()
-                print(f"ROWS-ONLY {name}: {n} rows ({time.time() - t0:.1f}s)")
-                continue
-            problems = compare(name, sdf, con.sql(e.oracle), pandas_path=args.pandas)
+                print(f"ROWS-ONLY {name}: {sdf.count()} rows")
+            else:
+                problems += compare(
+                    name, sdf, con.sql(e.oracle), pandas_path=args.pandas
+                )
         except Exception as ex:  # noqa: BLE001
             problems = [f"exception: {type(ex).__name__}: {ex}"]
         dt = time.time() - t0
