@@ -39,3 +39,28 @@ def duck():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+class _QueryPlans(dict):
+    """Formatted plan of each registered query, as built before it runs.
+
+    The oracle parity test stores the plan of the frame it compares; a
+    plan test that runs later reads that string instead of building the
+    query a second time, and builds it only when parity has not."""
+
+    def __init__(self, spark, sf_dir):
+        super().__init__()
+        self._spark, self._sf_dir = spark, sf_dir
+
+    def __missing__(self, name):
+        from project_map_reduce_spark.registry import entries
+        from tools.plan_rules import formatted_plan
+
+        plan = formatted_plan(entries()[name].fn(self._spark, self._sf_dir))
+        self[name] = plan
+        return plan
+
+
+@pytest.fixture(scope="session")
+def query_plans(spark, sf_dir):
+    return _QueryPlans(spark, sf_dir)

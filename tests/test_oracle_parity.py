@@ -20,12 +20,12 @@ def _all_entries():
 @pytest.mark.parametrize(
     "name", [n for n, e in _all_entries()], ids=[n for n, _ in _all_entries()]
 )
-def test_query_matches_oracle(name, spark, duck, sf_dir):
+def test_query_matches_oracle(name, spark, duck, sf_dir, query_plans):
     e = entries()[name]
     conf = spark.conf.getAll
     sdf = e.fn(spark, sf_dir)
     # The plan as built, before the comparison executes the frame.
-    plan = formatted_plan(sdf)
+    plan = query_plans[name] = formatted_plan(sdf)
     if e.oracle is None:
         rows = sdf.count()
         assert rows >= 0

@@ -1,10 +1,13 @@
-"""Physical-plan audit for what the plan rules cannot see.
+"""Physical-plan audit.
 
-The plan rules (``tools/plan_rules.py``) check every registered query's
-formatted plan as the oracle parity test builds it. The tests here need
-something else: a frame they build themselves (AQE skew split, runtime
-bloom filter), the final adaptive plan after execution, the simple plan
-string, the physical plan's objects, or a module's source.
+The plan rules (``tools/plan_rules.py``) hold for every registered
+query's formatted plan as the oracle parity test builds it. The global
+rule and each ``@contract`` run here too, by name, on the plan parity
+stored in ``query_plans`` (the query is built here only when parity has
+not run). The other tests need something else: a frame they build
+themselves (AQE skew split, runtime bloom filter), the final adaptive
+plan after execution, the simple plan string, the physical plan's
+objects, or a module's source.
 """
 
 from __future__ import annotations
@@ -14,7 +17,36 @@ import re
 import pytest
 
 from project_map_reduce_spark.registry import entries
-from tools.plan_rules import formatted_plan
+from tools.plan_rules import (
+    BNLJ_ALLOWED,
+    CONTRACTS,
+    formatted_plan,
+    global_problems,
+)
+
+
+@pytest.mark.parametrize(
+    "name", sorted(n for n in entries() if n not in BNLJ_ALLOWED)
+)
+def test_no_accidental_cartesian(query_plans, name):
+    """No query plan may contain a CartesianProduct — the all-pairs
+    degeneration every 100-TB design rule in SURVEY.md §4.2 forbids —
+    nor a BroadcastNestedLoopJoin or SortAggregate off its allow-list."""
+    problems = global_problems(name, query_plans[name])
+    assert not problems, problems
+
+
+def _contract_test(query, check):
+    def test(query_plans):
+        check(query_plans[query])
+
+    test.__doc__ = check.__doc__
+    return test
+
+
+# One test per plan contract, named after it: test_<contract function>.
+for _query, _check in CONTRACTS.items():
+    globals()["test_" + _check.__name__] = _contract_test(_query, _check)
 
 
 def test_whole_stage_codegen_active(spark, sf_dir):
