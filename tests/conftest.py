@@ -41,26 +41,17 @@ def sf_dir():
     return SF_DIR
 
 
-class _QueryPlans(dict):
+@pytest.fixture(scope="session")
+def query_plans():
     """Formatted plan of each registered query, as built before it runs.
 
-    The oracle parity test stores the plan of the frame it compares; a
-    plan test that runs later reads that string instead of building the
-    query a second time, and builds it only when parity has not."""
-
-    def __init__(self, spark, sf_dir):
-        super().__init__()
-        self._spark, self._sf_dir = spark, sf_dir
-
-    def __missing__(self, name):
-        from project_map_reduce_spark.registry import entries
-        from tools.plan_rules import formatted_plan
-
-        plan = formatted_plan(entries()[name].fn(self._spark, self._sf_dir))
-        self[name] = plan
-        return plan
+    ``test_query_matches_oracle`` stores the plan of the frame it
+    compares; the plan-rule tests in ``test_plan_audit.py`` assert on
+    that string instead of building the query again."""
+    return {}
 
 
-@pytest.fixture(scope="session")
-def query_plans(spark, sf_dir):
-    return _QueryPlans(spark, sf_dir)
+def pytest_collection_modifyitems(items):
+    # The plan audit reads the plans parity stores, so it runs last in
+    # whatever order the files were named; the sort is stable.
+    items.sort(key=lambda item: "test_plan_audit.py::" in item.nodeid)

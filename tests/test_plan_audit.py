@@ -1,10 +1,12 @@
 """Physical-plan audit.
 
-The plan rules (``tools/plan_rules.py``) hold for every registered
-query's formatted plan as the oracle parity test builds it. The global
-rule and each ``@contract`` run here too, by name, on the plan parity
-stored in ``query_plans`` (the query is built here only when parity has
-not run). The other tests need something else: a frame they build
+The plan rules (``tools/plan_rules.py``) are asserted here, by name, on
+each registered query's formatted plan as the oracle parity test built
+it: ``test_no_accidental_cartesian[<query>]`` for the global rules and
+one ``test_<contract>`` per contract. Parity stores that plan in the
+``query_plans`` fixture, and ``conftest.py`` runs this module after it,
+so a run of both builds each query once; run alone, this module builds
+the queries it checks. The other tests need something else: a frame they build
 themselves (AQE skew split, runtime bloom filter), the final adaptive
 plan after execution, the simple plan string, the physical plan's
 objects, or a module's source.
@@ -17,28 +19,33 @@ import re
 import pytest
 
 from project_map_reduce_spark.registry import entries
-from tools.plan_rules import (
-    BNLJ_ALLOWED,
-    CONTRACTS,
-    formatted_plan,
-    global_problems,
-)
+from tools.plan_rules import CONTRACTS, formatted_plan, global_problems
 
 
-@pytest.mark.parametrize(
-    "name", sorted(n for n in entries() if n not in BNLJ_ALLOWED)
-)
-def test_no_accidental_cartesian(query_plans, name):
+@pytest.fixture
+def built_plan(query_plans, spark, sf_dir):
+    """A query's formatted plan as parity stored it, built if it has not."""
+
+    def get(name):
+        if name not in query_plans:
+            query_plans[name] = formatted_plan(entries()[name].fn(spark, sf_dir))
+        return query_plans[name]
+
+    return get
+
+
+@pytest.mark.parametrize("name", sorted(entries()))
+def test_no_accidental_cartesian(built_plan, name):
     """No query plan may contain a CartesianProduct — the all-pairs
     degeneration every 100-TB design rule in SURVEY.md §4.2 forbids —
     nor a BroadcastNestedLoopJoin or SortAggregate off its allow-list."""
-    problems = global_problems(name, query_plans[name])
+    problems = global_problems(name, built_plan(name))
     assert not problems, problems
 
 
 def _contract_test(query, check):
-    def test(query_plans):
-        check(query_plans[query])
+    def test(built_plan):
+        check(built_plan(query))
 
     test.__doc__ = check.__doc__
     return test

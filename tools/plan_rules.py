@@ -7,11 +7,13 @@ partial phase, and nothing degenerates into an all-pairs join. These
 properties regress silently when a query is refactored, and the
 formatted explain is the only place they are visible.
 
-The oracle parity test and ``tools/parity.py`` call ``plan_problems`` on
-the formatted plan of the frame they are about to compare, taken before
-it runs. Every query is held to the global rules (no CartesianProduct;
+Every query is held to the global rules (no CartesianProduct;
 BroadcastNestedLoopJoin and SortAggregate only where the allow-lists
-say why), then to its ``@contract`` function, if it has one.
+say why), then to its ``@contract`` function, if it has one. Both run on
+the formatted plan of the frame the parity check is about to compare,
+taken before it runs: ``tools/parity.py`` calls ``plan_problems``, and
+``tests/test_plan_audit.py`` asserts each rule by name on the plan the
+oracle parity test stored.
 """
 
 from __future__ import annotations
