@@ -13,7 +13,7 @@ Layout:
     registry.py   query registry: name -> (spark fn, DuckDB oracle SQL)
     functions/    deterministic scalar helpers + text analysis functions
     operators/    engine operators (as-of join, dedup, similarity, dispatch)
-    sources/      readers (parquet/csv/json/text/binaryFile) and sinks
+    sources/      task-line reader, URL fetch, report/bucketed/stream sinks
     plans/        the declared query inventory (SURVEY.md §2 Part B)
     streaming/    Structured Streaming wiring (watermarks, sessions)
 """

@@ -1,42 +1,18 @@
-"""Stdlib-only media codecs — the REAL part of the multimodal decode.
+"""Stdlib-only PNG and WAV decode for the multimodal queries.
 
-No image/audio library ships in this container, but every format the
-multimodal surface handles is decodable from its public spec with
-``struct`` + ``zlib`` + ``wave`` (plus numpy for the JPEG IDCT in the
-sibling ``operators/jpeg.py``):
+No image or audio library ships with the engine, and none is needed
+for the two formats its queries read back:
 
-- **PNG** (W3C spec / RFC 2083): full header parse AND full pixel
-  decode for EVERY legal layout — grayscale, RGB, palette, gray+alpha,
-  RGBA at 8/16-bit depth plus packed sub-8-bit rows (1/2/4-bit gray
-  and palette — favicons, old screenshots), sequential or
-  Adam7-interlaced (each pass an independently filtered sub-image),
-  with all five scanline filters (None/Sub/Up/Average/Paeth) over
-  multi-byte-pixel neighborhoods, to an 8-bit luminance plane. The
-  gray subset is what our encoder (operators/rasterize.py) emits, so
-  the PDF→PNG→resize→PNG chain is real end to end.
-- **JPEG** (ITU T.81): marker walk to the SOF segment for true
-  dimensions + component count. Full pixel decode for BOTH real-world
-  flavors — baseline and progressive/SOF2 — lives in the sibling
-  module ``operators/jpeg.py`` (Huffman + dequant + numpy IDCT;
-  multi-scan coefficient accumulation for progressive); only
-  arithmetic-coded processes fall back to the upstream stub.
-- **AVI** (RIFF): main-header dimensions/frame-count, stream-format
-  parse (strh/strf: codec handler + bit depth), and movi-list video
-  frame demux — MJPEG payloads are standalone JPEGs the ``jpeg``
-  module decodes, and uncompressed BI_RGB '##db' frames decode via
-  ``decode_dib_gray`` (bottom-up 4-byte-aligned BGR rows → luminance),
-  so video frame extraction is real end to end for both common cases.
-- **GIF** (GIF87a/89a): logical-screen descriptor for dimensions AND
-  full first-frame pixel decode — variable-width LSB-first LZW with
-  clear/end codes and the 12-bit dictionary cap, 4-pass deinterlace,
-  global/local palettes mapped to grayscale by integer luminance,
-  partial frames composited onto the background canvas. LZW is pure
-  table arithmetic; no native lib involved.
-- **WAV** (RIFF/WAVE): stdlib ``wave`` for channels / sample rate /
-  frame count.
+- **PNG** (W3C spec / RFC 2083): ``decode_png_gray8`` walks the
+  CRC-checked chunks and reverses all five scanline filters
+  (None/Sub/Up/Average/Paeth) of an 8-bit grayscale, non-interlaced
+  image, the format ``operators/rasterize.py`` encodes. ``q_multimodal_dims``
+  decodes its rendered pages with it.
+- **WAV** (RIFF/WAVE): ``wav_info`` reads channels, sample rate and
+  frame count with the stdlib ``wave`` reader, for ``q_audio_features``.
 
-All parsers raise ``ValueError`` on malformed payloads; callers turn
-that into in-band status='error' rows (ref Workers.java:186-221).
+Both raise ``ValueError`` on malformed payloads; callers turn that into
+in-band status='error' rows (ref Workers.java:186-221).
 """
 
 from __future__ import annotations
@@ -88,21 +64,6 @@ def _png_chunks(raw: bytes):
     raise ValueError("no IEND chunk")
 
 
-@_valueerror_contract
-def png_info(raw: bytes) -> tuple[int, int, int, int]:
-    """(width, height, bit_depth, color_type) from IHDR — any PNG."""
-    for tag, data in _png_chunks(raw):
-        if tag != b"IHDR":
-            raise ValueError("first chunk is not IHDR")
-        if len(data) != 13:  # spec-fixed IHDR length
-            raise ValueError(f"IHDR length {len(data)} != 13")
-        w, h, depth, color = struct.unpack(">IIBB", data[:10])
-        if w < 1 or h < 1:
-            raise ValueError(f"bad dimensions {w}x{h}")
-        return w, h, depth, color
-    raise ValueError("empty PNG")
-
-
 def _paeth(a: int, b: int, c: int) -> int:
     p = a + b - c
     pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
@@ -111,15 +72,10 @@ def _paeth(a: int, b: int, c: int) -> int:
     return b if pb <= pc else c
 
 
-# PNG color types (8-bit depth): type -> bytes per pixel
-_PNG_BPP = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
-
-
-def _unfilter(dec: bytes, rowlen: int, height: int, bpp: int) -> bytearray:
-    """Reverse PNG scanline filtering (all five filters): ``rowlen``
-    filtered bytes per row, left neighbor ``bpp`` bytes back (bpp=1 for
-    packed sub-8-bit rows, per spec). Returns the raw byte stream,
-    row-major."""
+def _unfilter(dec: bytes, rowlen: int, height: int) -> bytearray:
+    """Reverse PNG scanline filtering (all five filters) of one-byte
+    pixels: ``rowlen`` filtered bytes per row, left neighbor one byte
+    back. Returns the raw byte stream, row-major."""
     stride = rowlen + 1
     if len(dec) != stride * height:
         raise ValueError("scanline data size mismatch")
@@ -130,20 +86,20 @@ def _unfilter(dec: bytes, rowlen: int, height: int, bpp: int) -> bytearray:
         row = bytearray(dec[y * stride + 1 : (y + 1) * stride])
         if f == 0:
             pass
-        elif f == 1:  # Sub: left neighbor is bpp bytes back
-            for x in range(bpp, rowlen):
-                row[x] = (row[x] + row[x - bpp]) & 0xFF
+        elif f == 1:  # Sub
+            for x in range(1, rowlen):
+                row[x] = (row[x] + row[x - 1]) & 0xFF
         elif f == 2:  # Up
             for x in range(rowlen):
                 row[x] = (row[x] + prev[x]) & 0xFF
         elif f == 3:  # Average
             for x in range(rowlen):
-                left = row[x - bpp] if x >= bpp else 0
+                left = row[x - 1] if x else 0
                 row[x] = (row[x] + ((left + prev[x]) >> 1)) & 0xFF
         elif f == 4:  # Paeth
             for x in range(rowlen):
-                left = row[x - bpp] if x >= bpp else 0
-                c = prev[x - bpp] if x >= bpp else 0
+                left = row[x - 1] if x else 0
+                c = prev[x - 1] if x else 0
                 row[x] = (row[x] + _paeth(left, prev[x], c)) & 0xFF
         else:
             raise ValueError(f"bad filter {f} on row {y}")
@@ -153,9 +109,8 @@ def _unfilter(dec: bytes, rowlen: int, height: int, bpp: int) -> bytearray:
 
 
 def _png_parse(raw: bytes):
-    """Shared chunk walk: (w, h, depth, color, interlace, palette, idat)."""
+    """Chunk walk: (w, h, depth, color, interlace, idat)."""
     width = height = depth = color = interlace = None
-    palette = None
     idat = b""
     for tag, data in _png_chunks(raw):
         if tag == b"IHDR":
@@ -165,244 +120,28 @@ def _png_parse(raw: bytes):
             interlace = data[12]
             if interlace not in (0, 1):
                 raise ValueError(f"bad interlace method {interlace}")
-        elif tag == b"PLTE":
-            if len(data) % 3:
-                raise ValueError("PLTE length not a multiple of 3")
-            palette = data
         elif tag == b"IDAT":
             idat += data
     if width is None:
         raise ValueError("missing IHDR")
-    return width, height, depth, color, interlace, palette, idat
-
-
-# Adam7 pass grid: (x0, y0, dx, dy) per pass.
-_ADAM7 = (
-    (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-    (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
-)
-
-
-def _png_samples(
-    width: int, height: int, bpp: int, interlace: int, dec: bytes
-) -> bytes:
-    """Unfilter the decompressed scanline stream into the full-size
-    sample plane, handling both sequential and Adam7 layouts (each
-    Adam7 pass is an independently-filtered sub-image; empty passes
-    contribute no bytes at all, per spec)."""
-    if interlace == 0:
-        return bytes(_unfilter(dec, width * bpp, height, bpp))
-    out = bytearray(width * height * bpp)
-    pos = 0
-    for x0, y0, dx, dy in _ADAM7:
-        pw = (width - x0 + dx - 1) // dx if width > x0 else 0
-        ph = (height - y0 + dy - 1) // dy if height > y0 else 0
-        if pw == 0 or ph == 0:
-            continue
-        need = ph * (pw * bpp + 1)
-        sub = _unfilter(dec[pos : pos + need], pw * bpp, ph, bpp)
-        pos += need
-        for j in range(ph):
-            src = j * pw * bpp
-            for i in range(pw):
-                dst = ((y0 + j * dy) * width + (x0 + i * dx)) * bpp
-                out[dst : dst + bpp] = sub[src : src + bpp]
-                src += bpp
-    if pos != len(dec):
-        raise ValueError("interlaced scanline data size mismatch")
-    return bytes(out)
-
-
-def _unpack_bits(row: bytes, width: int, depth: int) -> bytearray:
-    """Unpack one scanline of MSB-first ``depth``-bit samples (depth
-    1/2/4) to one byte per sample; trailing pad bits ignored, per spec."""
-    out = bytearray(width)
-    mask = (1 << depth) - 1
-    per_byte = 8 // depth
-    i = 0
-    for b in row:
-        for s in range(per_byte - 1, -1, -1):
-            if i >= width:
-                break
-            out[i] = (b >> (s * depth)) & mask
-            i += 1
-    return out
-
-
-def _png_samples_packed(
-    width: int, height: int, depth: int, interlace: int, dec: bytes
-) -> bytes:
-    """Sub-8-bit layout counterpart of ``_png_samples``: unfilter the
-    byte-packed scanlines (filter unit = 1 byte when depth < 8, per
-    spec) and unpack to ONE BYTE PER SAMPLE, sequential or Adam7."""
-
-    def one(dec_slice: bytes, w: int, h: int) -> bytearray:
-        stride = (w * depth + 7) // 8
-        raw = _unfilter(dec_slice, stride, h, 1)
-        out = bytearray(w * h)
-        for y in range(h):
-            out[y * w : (y + 1) * w] = _unpack_bits(
-                raw[y * stride : (y + 1) * stride], w, depth
-            )
-        return out
-
-    if interlace == 0:
-        return bytes(one(dec, width, height))
-    out = bytearray(width * height)
-    pos = 0
-    for x0, y0, dx, dy in _ADAM7:
-        pw = (width - x0 + dx - 1) // dx if width > x0 else 0
-        ph = (height - y0 + dy - 1) // dy if height > y0 else 0
-        if pw == 0 or ph == 0:
-            continue
-        need = ph * ((pw * depth + 7) // 8 + 1)
-        sub = one(dec[pos : pos + need], pw, ph)
-        pos += need
-        for j in range(ph):
-            for i in range(pw):
-                out[(y0 + j * dy) * width + (x0 + i * dx)] = sub[j * pw + i]
-    if pos != len(dec):
-        raise ValueError("interlaced scanline data size mismatch")
-    return bytes(out)
+    return width, height, depth, color, interlace, idat
 
 
 @_valueerror_contract
 def decode_png_gray8(raw: bytes) -> tuple[int, int, bytes]:
     """Full pixel decode of an 8-bit grayscale non-interlaced PNG,
     honoring all five scanline filters. Returns (width, height, pixels)
-    with ``pixels`` row-major, one byte per pixel. (Strict gray8
-    subset — our encoder's output format; ``decode_png_luma`` accepts
-    every 8-bit color type.)"""
-    width, height, depth, color, interlace, _, idat = _png_parse(raw)
+    with ``pixels`` row-major, one byte per pixel. Any other layout is
+    rejected, not mis-decoded."""
+    width, height, depth, color, interlace, idat = _png_parse(raw)
     if (depth, color) != (8, 0):
         raise ValueError(
             f"unsupported PNG subset (depth={depth}, color={color})"
         )
     if interlace != 0:
         raise ValueError("interlaced PNG unsupported by the gray8 path")
-    out = _unfilter(zlib.decompress(idat), width, height, 1)
+    out = _unfilter(zlib.decompress(idat), width, height)
     return width, height, bytes(out)
-
-
-@_valueerror_contract
-def decode_png_luma(raw: bytes) -> tuple[int, int, bytes]:
-    """Pixel decode of ANY legal PNG, sequential or Adam7 interlaced —
-    grayscale (0), RGB (2), palette (3), gray+alpha (4), RGBA (6) at
-    8/16-bit depth, plus the packed sub-8-bit layouts (1/2/4-bit gray
-    and palette rows, the only color types the spec allows below 8) —
-    to an 8-bit luminance plane: RGB channels combine via the same
-    integer luminance as the GIF path ((299R + 587G + 114B) // 1000);
-    alpha is ignored (the surface extracts features, it doesn't
-    composite); 16-bit samples reduce to their high byte and sub-8-bit
-    gray levels scale by 255/(2^depth−1) (the spec's significant-bits
-    mapping). Only spec-illegal combinations are rejected."""
-    width, height, depth, color, interlace, palette, idat = _png_parse(raw)
-    if depth in (1, 2, 4):
-        if color not in (0, 3):
-            raise ValueError(
-                f"sub-8-bit depth {depth} is only legal for gray/palette"
-            )
-        samples = _png_samples_packed(
-            width, height, depth, interlace, zlib.decompress(idat)
-        )
-        if color == 0:
-            scale = 255 // ((1 << depth) - 1)
-            levels = bytes(
-                min(255, v * scale) for v in range(256)
-            )
-            return width, height, bytes(samples).translate(levels)
-        nch = 1  # palette indices: fall through to the PLTE lookup
-    elif color not in _PNG_BPP or depth not in (8, 16):
-        raise ValueError(
-            f"unsupported PNG subset (depth={depth}, color={color})"
-        )
-    elif color == 3 and depth == 16:
-        raise ValueError("16-bit palette PNG is not a legal combination")
-    else:
-        nch = _PNG_BPP[color]
-        bpp = nch * (depth // 8)
-        samples = _png_samples(
-            width, height, bpp, interlace, zlib.decompress(idat)
-        )
-        if depth == 16:
-            samples = samples[0::2]  # high byte of each big-endian sample
-    if color == 0:
-        return width, height, bytes(samples)
-    if color == 4:  # gray + alpha: keep gray bytes
-        return width, height, bytes(samples[0::2])
-    if color == 3:  # palette indices
-        if palette is None:
-            raise ValueError("palette PNG without PLTE chunk")
-        n = len(palette) // 3
-        if max(samples) >= n:
-            raise ValueError("pixel index beyond palette")
-        shades = bytes(
-            (299 * palette[3 * i] + 587 * palette[3 * i + 1]
-             + 114 * palette[3 * i + 2]) // 1000
-            for i in range(n)
-        )
-        return width, height, bytes(samples).translate(
-            shades + bytes(256 - n)
-        )
-    # RGB / RGBA: integer luminance over the color channels
-    out = bytes(
-        (299 * samples[i] + 587 * samples[i + 1] + 114 * samples[i + 2])
-        // 1000
-        for i in range(0, len(samples), nch)
-    )
-    return width, height, out
-
-
-# JPEG segment markers that carry frame dimensions (ITU T.81 B.2.2):
-# SOF0-SOF15 minus DHT(C4)/JPG(C8)/DAC(CC), which share the range.
-_SOF_MARKERS = {
-    m for m in range(0xC0, 0xD0) if m not in (0xC4, 0xC8, 0xCC)
-}
-
-
-@_valueerror_contract
-def jpeg_info(raw: bytes) -> tuple[int, int, int]:
-    """(width, height, n_components) from the first SOF segment."""
-    if raw[:2] != b"\xff\xd8":
-        raise ValueError("bad JPEG signature")
-    pos = 2
-    while pos + 4 <= len(raw):
-        if raw[pos] != 0xFF:
-            raise ValueError(f"marker desync at {pos}")
-        marker = raw[pos + 1]
-        if marker == 0xFF:  # fill byte
-            pos += 1
-            continue
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            pos += 2  # standalone markers carry no length
-            continue
-        (seglen,) = struct.unpack(">H", raw[pos + 2 : pos + 4])
-        if marker in _SOF_MARKERS:
-            if seglen < 8:
-                raise ValueError("SOF segment too short")
-            _prec, h, w, ncomp = struct.unpack(
-                ">BHHB", raw[pos + 4 : pos + 10]
-            )
-            if w < 1 or h < 1:
-                raise ValueError(f"bad dimensions {w}x{h}")
-            return w, h, ncomp
-        if marker == 0xD9:  # EOI before any SOF
-            break
-        pos += 2 + seglen
-    raise ValueError("no SOF segment found")
-
-
-@_valueerror_contract
-def gif_info(raw: bytes) -> tuple[int, int]:
-    """(width, height) from the GIF logical screen descriptor."""
-    if raw[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("bad GIF signature")
-    if len(raw) < 10:
-        raise ValueError("truncated GIF header")
-    w, h = struct.unpack("<HH", raw[6:10])
-    if w < 1 or h < 1:
-        raise ValueError(f"bad dimensions {w}x{h}")
-    return w, h
 
 
 @_valueerror_contract
@@ -415,355 +154,3 @@ def wav_info(raw: bytes) -> tuple[int, int, int]:
     except wave.Error as ex:
         raise ValueError(str(ex)) from ex
 
-
-# --- GIF pixel decode (LZW is pure table arithmetic — no native lib) --
-
-
-def _lzw_decode(min_code_size: int, data: bytes, expected: int) -> bytes:
-    """GIF-variant LZW decode (GIF89a spec appendix F): LSB-first
-    variable-width codes, clear/end codes, 12-bit dictionary cap."""
-    clear = 1 << min_code_size
-    end = clear + 1
-    base = [bytes([i]) for i in range(clear)] + [b"", b""]
-    table = list(base)
-    code_size = min_code_size + 1
-    out = bytearray()
-    prev: bytes | None = None
-    bitpos = 0
-    total_bits = len(data) * 8
-    while True:
-        if bitpos + code_size > total_bits:
-            raise ValueError("truncated LZW stream (no end code)")
-        byte_i = bitpos >> 3
-        window = int.from_bytes(data[byte_i : byte_i + 3], "little")
-        code = (window >> (bitpos & 7)) & ((1 << code_size) - 1)
-        bitpos += code_size
-        if code == clear:
-            table = list(base)
-            code_size = min_code_size + 1
-            prev = None
-            continue
-        if code == end:
-            break
-        if prev is None:
-            if code >= len(table):
-                raise ValueError(f"bad first LZW code {code}")
-            entry = table[code]
-        else:
-            if code < len(table):
-                entry = table[code]
-            elif code == len(table):
-                entry = prev + prev[:1]  # the KwKwK case
-            else:
-                raise ValueError(f"LZW code {code} beyond table")
-            if len(table) < 4096:  # spec cap: dictionary freezes at 12 bits
-                table.append(prev + entry[:1])
-                # widen when the NEXT code could index the new entry
-                if len(table) == (1 << code_size) and code_size < 12:
-                    code_size += 1
-        out += entry
-        prev = entry
-        if len(out) > expected:
-            raise ValueError("LZW output exceeds pixel count")
-    if len(out) != expected:
-        raise ValueError(f"LZW output {len(out)} != {expected} pixels")
-    return bytes(out)
-
-
-def _deinterlace(indices: bytes, w: int, h: int) -> bytes:
-    """GIF 4-pass interlace → sequential row order."""
-    out = bytearray(len(indices))
-    src = 0
-    for start, step in ((0, 8), (4, 8), (2, 4), (1, 2)):
-        for y in range(start, h, step):
-            out[y * w : (y + 1) * w] = indices[src : src + w]
-            src += w
-    return bytes(out)
-
-
-@_valueerror_contract
-def decode_gif_gray(raw: bytes) -> tuple[int, int, bytes]:
-    """Full pixel decode of a GIF's FIRST image frame (page-0
-    semantics, like the PDF ops): LZW-expand the index stream,
-    deinterlace if flagged, and map palette entries to 8-bit grayscale
-    by integer luminance ((299 R + 587 G + 114 B) // 1000). Frames
-    smaller than the logical screen are composited onto a background-
-    color canvas. Returns (screen_width, screen_height, pixels)."""
-    w, h = gif_info(raw)
-    packed = raw[10]
-    bg_index = raw[11]
-    pos = 13
-    gct = None
-    if packed & 0x80:
-        size = 2 << (packed & 0x07)
-        gct = raw[pos : pos + 3 * size]
-        if len(gct) != 3 * size:
-            raise ValueError("truncated global color table")
-        pos += 3 * size
-
-    def lum(palette: bytes, idx: int) -> int:
-        r, g, b = palette[3 * idx : 3 * idx + 3]
-        return (299 * r + 587 * g + 114 * b) // 1000
-
-    while pos < len(raw):
-        block = raw[pos]
-        if block == 0x21:  # extension: introducer + label + sub-blocks
-            pos += 2
-            while pos < len(raw) and raw[pos] != 0:
-                pos += raw[pos] + 1
-            pos += 1
-        elif block == 0x2C:  # image descriptor
-            left, top, iw, ih = struct.unpack("<HHHH", raw[pos + 1 : pos + 9])
-            ipacked = raw[pos + 9]
-            pos += 10
-            palette = gct
-            if ipacked & 0x80:
-                size = 2 << (ipacked & 0x07)
-                palette = raw[pos : pos + 3 * size]
-                if len(palette) != 3 * size:
-                    raise ValueError("truncated local color table")
-                pos += 3 * size
-            if palette is None:
-                raise ValueError("no color table for image data")
-            if left + iw > w or top + ih > h:
-                raise ValueError("frame exceeds logical screen")
-            min_code_size = raw[pos]
-            pos += 1
-            if not 2 <= min_code_size <= 11:
-                raise ValueError(f"bad LZW min code size {min_code_size}")
-            data = bytearray()
-            while pos < len(raw) and raw[pos] != 0:
-                n = raw[pos]
-                chunk = raw[pos + 1 : pos + 1 + n]
-                if len(chunk) != n:
-                    raise ValueError("truncated image sub-block")
-                data += chunk
-                pos += n + 1
-            pos += 1
-            indices = _lzw_decode(min_code_size, bytes(data), iw * ih)
-            if (ipacked >> 6) & 1:
-                indices = _deinterlace(indices, iw, ih)
-            n_colors = len(palette) // 3
-            if max(indices) >= n_colors:
-                raise ValueError("pixel index beyond palette")
-            shades = bytes(lum(palette, i) for i in range(n_colors))
-            # index→shade at C speed (out-of-range already rejected)
-            frame = indices.translate(
-                shades + bytes(256 - len(shades))
-            )
-            if (left, top, iw, ih) == (0, 0, w, h):
-                return w, h, frame
-            # composite partial frame onto background canvas; the
-            # background index refers to the GLOBAL color table (the
-            # frame may use a local one)
-            bg = (
-                lum(gct, bg_index)
-                if gct is not None and bg_index < len(gct) // 3
-                else 0
-            )
-            canvas = bytearray([bg]) * (w * h)
-            for y in range(ih):
-                row0 = (top + y) * w + left
-                canvas[row0 : row0 + iw] = frame[y * iw : (y + 1) * iw]
-            return w, h, bytes(canvas)
-        elif block == 0x3B:  # trailer
-            break
-        else:
-            raise ValueError(f"unknown GIF block 0x{block:02x}")
-    raise ValueError("no image frame in GIF")
-
-
-# --- AVI (RIFF) demux: video frame extraction without a codec lib ----
-
-
-def _riff_chunks(raw: bytes, pos: int, end: int):
-    """Walk RIFF chunks in raw[pos:end]: yields (fourcc, data_off,
-    size). Chunks are word-aligned (odd sizes padded)."""
-    while pos + 8 <= end:
-        fourcc = raw[pos : pos + 4]
-        (size,) = struct.unpack_from("<I", raw, pos + 4)
-        data_off = pos + 8
-        if data_off + size > end:
-            raise ValueError(f"truncated RIFF chunk {fourcc!r}")
-        yield fourcc, data_off, size
-        pos = data_off + size + (size & 1)
-
-
-def _require_avi(raw: bytes) -> None:
-    if raw[:4] != b"RIFF" or raw[8:12] != b"AVI ":
-        raise ValueError("not an AVI (RIFF/'AVI ') stream")
-
-
-@_valueerror_contract
-def avi_info(raw: bytes) -> tuple[int, int, int]:
-    """(width, height, total_frames) from the avih main header."""
-    _require_avi(raw)
-    for fourcc, off, size in _riff_chunks(raw, 12, len(raw)):
-        if fourcc == b"LIST" and raw[off : off + 4] == b"hdrl":
-            for fc2, o2, s2 in _riff_chunks(raw, off + 4, off + size):
-                if fc2 == b"avih":
-                    if s2 < 40:
-                        raise ValueError("avih header too short")
-                    vals = struct.unpack_from("<10I", raw, o2)
-                    total_frames, w, h = vals[4], vals[8], vals[9]
-                    if w < 1 or h < 1:
-                        raise ValueError(f"bad dimensions {w}x{h}")
-                    return w, h, total_frames
-    raise ValueError("no avih header")
-
-
-@_valueerror_contract
-def avi_video_frames(raw: bytes) -> list[tuple[int, int]]:
-    """(byte_offset, length) of every video frame payload in the movi
-    list — chunks '##dc' (compressed) / '##db' (uncompressed). For an
-    MJPEG AVI each payload is a standalone baseline JPEG that
-    operators/jpeg.py decodes; the demux itself is pure RIFF walking,
-    so 'video frame extraction' needs no codec library at all."""
-    _require_avi(raw)
-    frames: list[tuple[int, int]] = []
-
-    def walk(pos: int, end: int) -> None:
-        for fc, o, s in _riff_chunks(raw, pos, end):
-            if fc == b"LIST" and raw[o : o + 4] == b"rec ":
-                # standard interleave grouping: frames live one level
-                # down inside 'LIST rec ' chunks
-                walk(o + 4, o + s)
-            elif fc[2:4] in (b"dc", b"db"):
-                frames.append((o, s))
-
-    for fourcc, off, size in _riff_chunks(raw, 12, len(raw)):
-        if fourcc == b"LIST" and raw[off : off + 4] == b"movi":
-            walk(off + 4, off + size)
-    if not frames:
-        raise ValueError("no video frames in movi list")
-    return frames
-
-
-@_valueerror_contract
-def avi_stream_format(raw: bytes) -> tuple[str, int, int, int]:
-    """(handler, bit_count, width, height) of the FIRST video stream,
-    from the hdrl→strl→strh/strf chain: ``handler`` is the strh
-    fccHandler (e.g. 'MJPG', 'DIB '), the rest come from the strf
-    BITMAPINFOHEADER. This is what tells a demuxed '##db' payload's
-    pixels apart from a compressed '##dc' one — the frame chunks
-    themselves carry no format."""
-    _require_avi(raw)
-    for fourcc, off, size in _riff_chunks(raw, 12, len(raw)):
-        if fourcc != b"LIST" or raw[off : off + 4] != b"hdrl":
-            continue
-        for fc2, o2, s2 in _riff_chunks(raw, off + 4, off + size):
-            if fc2 != b"LIST" or raw[o2 : o2 + 4] != b"strl":
-                continue
-            handler = None
-            for fc3, o3, s3 in _riff_chunks(raw, o2 + 4, o2 + s2):
-                if fc3 == b"strh":
-                    # Stream-type check FIRST: a truncated strh in an
-                    # audio/other strl must not abort format parsing for
-                    # the whole file (mirror avi_stream_palette, which
-                    # breaks out of non-vids strls instead of raising).
-                    if raw[o3 : o3 + 4] != b"vids":
-                        break  # not the video stream; next strl
-                    if s3 < 8:
-                        raise ValueError("strh header too short")
-                    handler = raw[o3 + 4 : o3 + 8].decode(
-                        "ascii", "replace"
-                    )
-                elif fc3 == b"strf" and handler is not None:
-                    if s3 < 16:
-                        raise ValueError("strf BITMAPINFOHEADER too short")
-                    _size, w, h, _planes, bits = struct.unpack_from(
-                        "<IiihH", raw, o3
-                    )
-                    if w < 1 or abs(h) < 1:
-                        raise ValueError(f"bad dimensions {w}x{h}")
-                    return handler, bits, w, h
-    raise ValueError("no video stream format (strl/strh/strf) found")
-
-
-@_valueerror_contract
-def avi_stream_palette(raw: bytes) -> bytes | None:
-    """The first video stream's bmiColors table (BGRX quads after the
-    40-byte BITMAPINFOHEADER in strf), or None if the stream declares
-    no palette. 8-bit BI_RGB frames are PALETTE INDICES — pass this to
-    ``decode_dib_gray`` so they map to luminance like the GIF/PNG
-    palette paths, instead of being read as literal gray values."""
-    _require_avi(raw)
-    for fourcc, off, size in _riff_chunks(raw, 12, len(raw)):
-        if fourcc != b"LIST" or raw[off : off + 4] != b"hdrl":
-            continue
-        for fc2, o2, s2 in _riff_chunks(raw, off + 4, off + size):
-            if fc2 != b"LIST" or raw[o2 : o2 + 4] != b"strl":
-                continue
-            is_vids = False
-            for fc3, o3, s3 in _riff_chunks(raw, o2 + 4, o2 + s2):
-                if fc3 == b"strh":
-                    if raw[o3 : o3 + 4] != b"vids":
-                        break
-                    is_vids = True
-                elif fc3 == b"strf" and is_vids:
-                    if s3 < 40:
-                        return None
-                    (hdr_size,) = struct.unpack_from("<I", raw, o3)
-                    hdr_size = max(40, hdr_size)
-                    colors = raw[o3 + hdr_size : o3 + s3]
-                    if len(colors) < 4 or len(colors) % 4:
-                        return None
-                    return colors
-    return None
-
-
-@_valueerror_contract
-def decode_dib_gray(
-    payload: bytes,
-    width: int,
-    height: int,
-    bit_count: int,
-    palette: bytes | None = None,
-) -> tuple[int, int, bytes]:
-    """Decode an uncompressed BI_RGB DIB frame (an AVI '##db' payload,
-    dimensions/bit depth from ``avi_stream_format``) to an 8-bit
-    luminance plane: rows are 4-byte aligned and BOTTOM-UP when height
-    is positive (top-down when negative, per the DIB convention);
-    24/32-bit pixels are little-endian BGR(X) → integer luminance.
-    8-bit samples are palette indices — pass the stream's bmiColors
-    (``avi_stream_palette``) to map them through luminance like the
-    GIF/PNG palette paths; with no palette they pass through as gray
-    (the grayscale-ramp convention). The one video codec decodable
-    with no codec library at all — with MJPEG this makes AVI frame
-    extraction real end to end for both common cases."""
-    if bit_count not in (8, 24, 32):
-        raise ValueError(f"unsupported DIB bit depth {bit_count}")
-    h = abs(height)
-    stride = ((width * bit_count + 31) // 32) * 4
-    if len(payload) != stride * h:
-        raise ValueError(
-            f"DIB payload size {len(payload)} != {stride}*{h}"
-        )
-    shades = None
-    n_colors = 256
-    if bit_count == 8 and palette is not None:
-        n_colors = min(len(palette) // 4, 256)  # BGRX quads
-        if n_colors < 1:
-            raise ValueError("empty DIB palette")
-        shades = bytes(
-            (299 * palette[4 * i + 2] + 587 * palette[4 * i + 1]
-             + 114 * palette[4 * i]) // 1000
-            for i in range(n_colors)
-        )
-        shades += bytes(256 - len(shades))
-    nb = bit_count // 8
-    out = bytearray(width * h)
-    for y in range(h):
-        src_y = (h - 1 - y) if height > 0 else y  # bottom-up rows
-        row = payload[src_y * stride : src_y * stride + width * nb]
-        if nb == 1:
-            if shades is not None:
-                if max(row) >= n_colors:
-                    raise ValueError("pixel index beyond DIB palette")
-                row = row.translate(shades)
-            out[y * width : (y + 1) * width] = row
-        else:
-            for x in range(width):
-                b, g, r = row[x * nb : x * nb + 3]
-                out[y * width + x] = (299 * r + 587 * g + 114 * b) // 1000
-    return width, h, bytes(out)

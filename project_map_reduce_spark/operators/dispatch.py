@@ -15,8 +15,9 @@ Result-struct convention used by every pipeline op (FIXTURES.md):
 Everything here is a ``when/otherwise`` chain — pure Catalyst
 expressions inside whole-stage codegen, no Python in the hot path. A
 transform that genuinely needs Python (e.g. real PDF decode, ref
-Workers.java:131-184) plugs in as an Arrow-batched pandas UDF producing
-the same struct; see sources/binary.py for the multimodal path.
+Workers.java:131-184) runs as an Arrow-batched ``mapInPandas`` with
+the same status/error columns; see ``pdf_to_text``, ``pdf_to_html`` and
+``pdf_to_image`` in operators/multimodal.py.
 """
 
 from __future__ import annotations

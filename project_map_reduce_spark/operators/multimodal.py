@@ -1,36 +1,20 @@
-"""Multimodal column operators (SURVEY.md §2 B.10 capability row).
+"""The reference's three PDF worker operations as column operators.
 
-Image/audio/video payloads are opaque ``binary`` columns with typed
-metadata, processed by Arrow-batched pandas iterators (``mapInPandas``).
-The Spark-side plumbing (schemas, batch iteration, partitioning, column
-pruning) is real and tested — and since round 4 the codec layer is too
-(``operators/codecs.py`` + ``operators/jpeg.py``, stdlib+numpy only):
-PNG metadata AND pixel decode (full five-filter unfilter, every legal
-layout — 8/16-bit color types plus packed 1/2/4-bit gray/palette rows,
-Adam7 included — to a luminance plane), GIF dimensions AND full
-first-frame pixel decode (LZW + deinterlace + palette luminance),
-JPEG pixel decode for BOTH real-world flavors — baseline (Huffman +
-dequant + IDCT) and progressive/SOF2 (multi-scan spectral selection +
-successive approximation) — MJPEG-AVI video frame demux, WAV decode
-via the stdlib ``wave`` reader. What remains stubbed: ARITHMETIC-CODED
-JPEG (vanishingly rare — patent history kept it out of real encoders),
-where ``_pixel_stub`` fakes the raster deterministically for the
-resize fallback path, and non-MJPEG video codecs (stride
-``frame_sample`` fallback).
+The reference's workers fetch a PDF from a URL and run one of
+``ToText``, ``ToImage`` or ``ToHTML`` on it (Workers.java:131-184).
+Each is a shuffle-free Arrow-batched ``mapInPandas`` over a
+``(path, content)`` frame, stdlib only:
 
-Swap-in path for production: replace ``_pixel_stub`` with PIL/ffmpeg
-calls inside the same ``mapInPandas`` generator — batch shape, schema
-and partitioning are already correct. Reference analog: the per-record
-PDF transforms (Workers.java:131-184) — fetch bytes, transform, emit
-typed result with in-band errors (A7).
+- ``pdf_to_text``: the extractor in ``operators/pdftext.py`` (stream
+  scan + zlib inflate + text-operator walk);
+- ``pdf_to_html``: the same extraction, escaped into a page skeleton;
+- ``pdf_to_image``: the extracted text rendered to a PNG page by
+  ``operators/rasterize.py``.
 
-The PDF worker ops are NOT stubbed — all three of the reference's
-worker operations (Workers.java:131-184) run for real on stdlib only:
-``pdf_to_text`` (extractor in operators/pdftext.py — stream scan +
-zlib inflate + text-operator walk), ``pdf_to_html`` (same extraction,
-escaped into a page skeleton), and ``pdf_to_image`` (text raster +
-PNG encoder in operators/rasterize.py), each over the same
-Arrow-batched plumbing.
+Per-record failures are status='error' rows, never task failures (the
+in-band error channel, ref A7). ``sources/readers.py`` supplies the
+rest of the reference's dataflow: task lines, the URL fetch and the
+report sink.
 """
 
 from __future__ import annotations
@@ -39,120 +23,8 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from project_map_reduce_spark.operators.pdftext import extract_pdf_text
-from project_map_reduce_spark.registry import fmt_doc
-
-# Typed result schema for decode/feature extraction. Errors are data
-# (status/error), never exceptions — ref Workers.java:186-221. The
-# audio fields are NULL for non-audio rows (typed per-modality
-# metadata, not a stringly map).
-DECODED_SCHEMA = (
-    "path string, modality string, byte_len bigint, "
-    "width int, height int, format string, "
-    "n_channels int, sample_rate int, n_frames bigint, "
-    "status string, error string"
-)
-
-FEATURES_SCHEMA = "path string, byte_len bigint, features array<double>"
-
-_MAGIC = {
-    b"\x89PNG": ("image", "png"),
-    b"\xff\xd8\xff": ("image", "jpeg"),
-    b"GIF8": ("image", "gif"),
-    b"%PDF": ("document", "pdf"),
-}
-
-
-def _sniff(content: bytes) -> tuple[str, str] | None:
-    if content[:4] == b"RIFF":
-        # RIFF is a container family: the format fourcc disambiguates
-        sub = content[8:12]
-        if sub == b"WAVE":
-            return ("audio", "wav")
-        if sub == b"AVI ":
-            return ("video", "avi")
-        return None
-    for magic, mf in _MAGIC.items():
-        if content[: len(magic)] == magic:
-            return mf
-    return None
-
-
-def _pixel_stub(content: bytes, width: int, height: int) -> bytes:
-    """STUB raster for the pixel planes we don't decode: ARITHMETIC-
-    coded JPEG (baseline AND progressive decode for real via
-    operators/jpeg.py; every legal PNG layout decodes via codecs).
-    Deterministic fake raster — a stride-sample of the payload
-    bytes to exactly width*height bytes — so batch shape, output
-    sizing, and the error channel stay real and testable. A deployment
-    swaps this body for PIL with identical signature and callers."""
-    if not content:
-        raise ValueError("empty payload")
-    n_out = width * height
-    idx = [(i * len(content)) // n_out for i in range(n_out)]
-    return bytes(content[i] for i in idx)
-
-
-def decode_binary(df: DataFrame) -> DataFrame:
-    """Decode a binaryFile frame (path, content, ...) into typed
-    per-modality metadata — REAL header/metadata parsing for every
-    sniffed format (operators/codecs.py: PNG IHDR, JPEG SOF walk, GIF
-    screen descriptor, stdlib ``wave``). One Arrow batch in, one out;
-    per-record failures (corrupt payloads included — the parsers
-    CRC/structure-check) become status='error' rows (in-band, ref A7)."""
-    from project_map_reduce_spark.operators import codecs
-
-    cols = (
-        "path", "modality", "byte_len", "width", "height", "format",
-        "n_channels", "sample_rate", "n_frames", "status", "error",
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in cols}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                raw = bytes(content) if content is not None else b""
-                row = dict.fromkeys(cols)
-                row["path"], row["byte_len"] = path, len(raw)
-                sniffed = _sniff(raw)
-                try:
-                    if sniffed is None:
-                        raise ValueError("unknown format")
-                    row["modality"], row["format"] = sniffed
-                    if row["format"] == "png":
-                        row["width"], row["height"], _, _ = codecs.png_info(raw)
-                    elif row["format"] == "jpeg":
-                        row["width"], row["height"], _ = codecs.jpeg_info(raw)
-                    elif row["format"] == "gif":
-                        row["width"], row["height"] = codecs.gif_info(raw)
-                    elif row["format"] == "wav":
-                        (
-                            row["n_channels"],
-                            row["sample_rate"],
-                            row["n_frames"],
-                        ) = codecs.wav_info(raw)
-                    elif row["format"] == "avi":
-                        (
-                            row["width"],
-                            row["height"],
-                            row["n_frames"],
-                        ) = codecs.avi_info(raw)
-                    # pdf: document modality, no intrinsic raster dims
-                    row["status"] = "ok"
-                except Exception as ex:  # noqa: BLE001 — error channel is data
-                    row.update(dict.fromkeys(
-                        ("modality", "format", "width", "height",
-                         "n_channels", "sample_rate", "n_frames")
-                    ))
-                    row["status"], row["error"] = "error", f"Error: {ex}"
-                for k in cols:
-                    out[k].append(row[k])
-            yield pd.DataFrame(out)
-
-    return df.select("path", "content").mapInPandas(batches, schema=DECODED_SCHEMA)
-
 
 PDF_TEXT_SCHEMA = (
     "path string, n_chars bigint, text string, status string, error string"
@@ -164,9 +36,9 @@ def pdf_to_text(df: DataFrame) -> DataFrame:
     from each PDF payload with the stdlib-only extractor. Per-record
     failures (non-PDF magic, malformed streams) become status='error'
     rows — the in-band error channel (ref A7), never a task failure.
-    Same 100 TB shape as decode_binary: shuffle-free Arrow-batched map,
-    output rows carry text instead of bytes so downstream text operators
-    (dedup, lang-id, quality) chain directly."""
+    Shuffle-free Arrow-batched map; output rows carry text instead of
+    bytes so downstream text operators (dedup, lang-id, quality) chain
+    directly."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -278,286 +150,3 @@ def pdf_to_image(df: DataFrame) -> DataFrame:
             yield pd.DataFrame(out)
 
     return df.select("path", "content").mapInPandas(batches, schema=PDF_IMAGE_SCHEMA)
-
-
-RESIZED_SCHEMA = (
-    "path string, src_width int, src_height int, width int, height int, "
-    "content binary, decoder string, status string, error string"
-)
-
-
-def resize_image(df: DataFrame, *, width: int, height: int) -> DataFrame:
-    """Resize (brief: decode / feature-extract / RESIZE / frame-sample):
-    per-record target-dimension image resample as an Arrow-batched
-    shuffle-free map with typed metadata and in-band errors.
-
-    For ANY legal PNG, ANY GIF, and ANY Huffman-coded JPEG (baseline
-    AND progressive) the whole chain is REAL on stdlib+numpy: pixel
-    decode (codecs.decode_png_luma five-filter unfilter, every color
-    type at every legal depth — packed sub-8-bit rows included — to a
-    luminance plane / codecs.decode_gif_gray LZW + deinterlace +
-    palette luminance / operators/jpeg.py Huffman + dequant + IDCT
-    luma, multi-scan coefficient accumulation for SOF2) → numpy
-    nearest-neighbor resample → spec-valid PNG re-encode
-    (rasterize.encode_png_gray); ``decoder='stdlib-{png,gif,jpeg}'``
-    and the output content is itself a decodable PNG. Only
-    arithmetic-coded JPEGs fall back to true header dimensions +
-    ``_pixel_stub`` raster (``decoder='stub'``). Deterministic either
-    way."""
-    import numpy as np
-
-    from project_map_reduce_spark.operators import codecs
-    from project_map_reduce_spark.operators.jpeg import decode_jpeg_gray
-    from project_map_reduce_spark.operators.rasterize import encode_png_gray
-
-    if width < 1 or height < 1:
-        raise ValueError(f"bad target size {width}x{height}")
-
-    cols = (
-        "path", "src_width", "src_height", "width", "height",
-        "content", "decoder", "status", "error",
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in cols}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                raw = bytes(content) if content is not None else b""
-                row = dict.fromkeys(cols)
-                row["path"] = path
-                try:
-                    sniffed = _sniff(raw)
-                    if sniffed is None or sniffed[0] != "image":
-                        raise ValueError("not an image payload")
-                    fmt = sniffed[1]
-                    pixels = None
-                    real = "stdlib-png"
-                    if fmt == "png":
-                        sw, sh, _depth, _color = codecs.png_info(raw)
-                        try:  # every legal layout → luminance plane
-                            _, _, pixels = codecs.decode_png_luma(raw)
-                        except ValueError:
-                            pixels = None  # spec-illegal combo → stub
-                    elif fmt == "jpeg":
-                        sw, sh, _ = codecs.jpeg_info(raw)
-                        try:  # REAL baseline decode (operators/jpeg.py)
-                            _, _, pixels = decode_jpeg_gray(raw)
-                            real = "stdlib-jpeg"
-                        except ValueError:
-                            pixels = None  # non-baseline → stub raster
-                    else:  # gif: REAL pixel decode (LZW is pure Python)
-                        sw, sh, pixels = codecs.decode_gif_gray(raw)
-                        real = "stdlib-gif"
-                    if pixels is not None:
-                        # real path: nearest-neighbor index grid
-                        src = np.frombuffer(pixels, np.uint8).reshape(sh, sw)
-                        ys = (np.arange(height) * sh) // height
-                        xs = (np.arange(width) * sw) // width
-                        resampled = src[np.ix_(ys, xs)].tobytes()
-                        row["content"] = encode_png_gray(
-                            width, height, resampled
-                        )
-                        row["decoder"] = real
-                    else:
-                        row["content"] = _pixel_stub(raw, width, height)
-                        row["decoder"] = "stub"
-                    row["src_width"], row["src_height"] = sw, sh
-                    row["width"], row["height"] = width, height
-                    row["status"] = "ok"
-                except Exception as ex:  # noqa: BLE001 — error channel is data
-                    row.update(dict.fromkeys(
-                        ("src_width", "src_height", "width", "height",
-                         "content", "decoder")
-                    ))
-                    row["status"], row["error"] = "error", f"Error: {ex}"
-                for k in cols:
-                    out[k].append(row[k])
-            yield pd.DataFrame(out)
-
-    return df.select("path", "content").mapInPandas(batches, schema=RESIZED_SCHEMA)
-
-
-_N_BINS = 16
-
-
-def byte_histogram_features(df: DataFrame) -> DataFrame:
-    """REAL (un-stubbed) feature extraction: normalized {n}-bin byte
-    histogram per payload — a stand-in embedding usable by the
-    similarity operators. numpy over Arrow batches; no codec needed."""
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            feats, lens = [], []
-            for content in pdf["content"]:
-                raw = bytes(content) if content is not None else b""
-                lens.append(len(raw))
-                if raw:
-                    arr = np.frombuffer(raw, dtype=np.uint8)
-                    hist = np.bincount(arr >> 4, minlength=_N_BINS).astype(np.float64)
-                    feats.append(list(hist / hist.sum()))
-                else:
-                    feats.append([0.0] * _N_BINS)
-            yield pd.DataFrame(
-                {"path": pdf["path"], "byte_len": lens, "features": feats}
-            )
-
-    return df.select("path", "content").mapInPandas(batches, schema=FEATURES_SCHEMA)
-
-
-fmt_doc(byte_histogram_features, n=_N_BINS)
-
-
-WAV_FEATURES_SCHEMA = (
-    "path string, n_channels int, sample_rate int, n_frames bigint, "
-    "rms double, zero_cross_rate double, dominant_hz double, "
-    "status string, error string"
-)
-
-
-def wav_features(df: DataFrame) -> DataFrame:
-    """REAL audio feature extraction — no stub anywhere in this path:
-    stdlib ``wave`` decodes the PCM frames, numpy computes RMS level,
-    zero-crossing rate, and the dominant frequency via rFFT. 16-bit PCM
-    (the overwhelmingly common WAV encoding); other sample widths are
-    in-band error rows. Same 100 TB shape as its siblings: shuffle-free
-    Arrow-batched map emitting a narrow typed feature row per payload —
-    the audio analog of ``byte_histogram_features``."""
-    import io
-    import wave
-
-    import numpy as np
-
-    cols = (
-        "path", "n_channels", "sample_rate", "n_frames",
-        "rms", "zero_cross_rate", "dominant_hz", "status", "error",
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in cols}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                raw = bytes(content) if content is not None else b""
-                row = dict.fromkeys(cols)
-                row["path"] = path
-                try:
-                    with wave.open(io.BytesIO(raw)) as w:
-                        nch, width, rate, nframes = (
-                            w.getnchannels(), w.getsampwidth(),
-                            w.getframerate(), w.getnframes(),
-                        )
-                        if width != 2:
-                            raise ValueError(f"unsupported sample width {width}")
-                        pcm = np.frombuffer(
-                            w.readframes(nframes), dtype="<i2"
-                        ).astype(np.float64)
-                    if nch > 1:
-                        pcm = pcm.reshape(-1, nch).mean(axis=1)
-                    if not len(pcm):
-                        raise ValueError("no audio frames")
-                    pcm /= 32768.0
-                    row["n_channels"], row["sample_rate"] = nch, rate
-                    row["n_frames"] = nframes
-                    row["rms"] = float(np.sqrt(np.mean(pcm * pcm)))
-                    row["zero_cross_rate"] = float(
-                        np.mean(np.signbit(pcm[1:]) != np.signbit(pcm[:-1]))
-                    )
-                    spec = np.abs(np.fft.rfft(pcm))
-                    row["dominant_hz"] = float(
-                        np.argmax(spec) * rate / len(pcm)
-                    )
-                    row["status"] = "ok"
-                except Exception as ex:  # noqa: BLE001 — error channel is data
-                    row["status"], row["error"] = "error", f"Error: {ex}"
-                for k in cols:
-                    out[k].append(row[k])
-            yield pd.DataFrame(out)
-
-    return df.select("path", "content").mapInPandas(
-        batches, schema=WAV_FEATURES_SCHEMA
-    )
-
-
-VIDEO_FRAMES_SCHEMA = (
-    "path string, frame_idx int, byte_offset bigint, frame_len bigint, "
-    "frame_width int, frame_height int, status string, error string"
-)
-
-
-def video_frames(df: DataFrame, *, every_n: int = 1) -> DataFrame:
-    """REAL video frame extraction for MJPEG and uncompressed-DIB AVI —
-    no codec library: the RIFF demux (codecs.avi_video_frames) yields
-    each movi video chunk's true byte offset/length, every
-    ``every_n``-th frame is kept (the sampling knob), and per-frame
-    dimensions come from the JPEG header (MJPEG) or the stream's strf
-    format (DIB). Downstream, slicing ``content`` at (byte_offset,
-    frame_len) gives a payload ``operators/jpeg.py::decode_jpeg_gray``
-    (MJPEG) or ``codecs.decode_dib_gray`` (DIB) decodes to pixels —
-    the full fetch→demux→sample→decode video pipeline with zero native
-    dependencies. Non-AVI payloads are in-band error rows; use
-    ``frame_sample`` for the container-agnostic stride fallback.
-    Shuffle-free Arrow-batched map like its siblings."""
-    from project_map_reduce_spark.operators import codecs
-
-    if every_n < 1:
-        raise ValueError(f"bad sampling interval {every_n}")
-    cols = (
-        "path", "frame_idx", "byte_offset", "frame_len",
-        "frame_width", "frame_height", "status", "error",
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in cols}
-            for path, content in zip(pdf["path"], pdf["content"]):
-                raw = bytes(content) if content is not None else b""
-                try:
-                    frames = codecs.avi_video_frames(raw)
-                    try:  # uncompressed frames: dims live in strf
-                        _, dib_bits, dib_w, dib_h = codecs.avi_stream_format(raw)
-                    except ValueError:
-                        dib_bits = dib_w = dib_h = None
-                    for i, (off, ln) in enumerate(frames):
-                        if i % every_n:
-                            continue
-                        fw = fh = None
-                        try:
-                            fw, fh, _ = codecs.jpeg_info(raw[off : off + ln])
-                        except ValueError:
-                            if dib_bits in (8, 24, 32) and ln == (
-                                (dib_w * dib_bits + 31) // 32
-                            ) * 4 * abs(dib_h):
-                                fw, fh = dib_w, abs(dib_h)
-                            # else: unknown codec — offsets still real
-                        for k, v in (
-                            ("path", path), ("frame_idx", i),
-                            ("byte_offset", off), ("frame_len", ln),
-                            ("frame_width", fw), ("frame_height", fh),
-                            ("status", "ok"), ("error", None),
-                        ):
-                            out[k].append(v)
-                except Exception as ex:  # noqa: BLE001 — in-band, ref A7
-                    for k, v in (
-                        ("path", path), ("frame_idx", None),
-                        ("byte_offset", None), ("frame_len", None),
-                        ("frame_width", None), ("frame_height", None),
-                        ("status", "error"), ("error", f"Error: {ex}"),
-                    ):
-                        out[k].append(v)
-            yield pd.DataFrame(out)
-
-    return df.select("path", "content").mapInPandas(
-        batches, schema=VIDEO_FRAMES_SCHEMA
-    )
-
-
-def frame_sample(df: DataFrame, *, every_n_bytes: int = 1024) -> DataFrame:
-    """Container-agnostic stride frame-sampler (explode — a
-    row-generating transform, the UDTF shape): one row per fixed byte
-    offset, for payloads whose container we can't demux. For MJPEG AVI
-    use ``video_frames`` — the REAL demuxer with true frame offsets."""
-    n_frames = (F.length("content") / every_n_bytes).cast("int") + 1
-    return df.select(
-        "path",
-        F.explode(F.sequence(F.lit(0), n_frames - 1)).alias("frame_idx"),
-    ).withColumn("byte_offset", F.col("frame_idx") * every_n_bytes)

@@ -1,19 +1,11 @@
 """PII scrubbing expressions for training-data pipelines.
 
-Pre-training corpora are scrubbed of emails / IPs / phone-shaped
-strings and identifier columns are pseudonymized before the data ever
-reaches a trainer (the C4 / CCNet / Dolma pipelines all carry such a
-stage). Everything here is a pure Column expression — JVM-side
-``regexp_replace`` / ``sha2``/``md5`` inside whole-stage codegen, no
-Python UDF, no shuffle — so a scrub pass over 100 TB is a narrow map
-stacked onto the scan with zero exchange.
-
-Regex dialect note: the patterns are written in the common subset of
-Java regex (Spark) and RE2 (DuckDB oracle side) — no lookaround, no
-backreferences — so the same pattern string is usable verbatim in an
-oracle. RE2-compatible also means linear-time matching: no
-catastrophic backtracking on adversarial documents, which is a real
-concern when the input is a web crawl.
+Identifier columns are pseudonymized and display fields masked before
+the data ever reaches a trainer (the C4 / CCNet / Dolma pipelines all
+carry such a stage). Both are pure Column expressions — JVM-side
+``regexp_replace`` / ``md5`` inside whole-stage codegen, no Python
+UDF, no shuffle — so a scrub pass over 100 TB is a narrow map stacked
+onto the scan with zero exchange (Q69 ``q_pii_mask``).
 
 The reference engine has no scrub stage at all — its payloads go to
 workers verbatim (SURVEY.md §3.3) — so this module is part of the
@@ -24,45 +16,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-# Shared Java/RE2 subset patterns (no lookaround, no \b ambiguity
-# issues: \b is supported by both dialects).
-EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
-IPV4_RE = r"\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\b"
-# Phone-shaped: optional +country, a 2-3 digit lead group, then 2-3
-# more digit groups joined by - or space (TPC-H's own c_phone format
-# "25-989-741-2988" matches, as does "54-123-4567").
-PHONE_RE = r"\+?[0-9]{2,3}(?:[- ][0-9]{3,4}){2,3}"
-
-
-def redact(col: Column | str, pattern: str, token: str) -> Column:
-    """Replace every match of ``pattern`` with ``token`` (global)."""
-    return F.regexp_replace(col, pattern, token)
-
-
-def redact_emails(col: Column | str, token: str = "<EMAIL>") -> Column:
-    return redact(col, EMAIL_RE, token)
-
-
-def redact_ipv4(col: Column | str, token: str = "<IP>") -> Column:
-    return redact(col, IPV4_RE, token)
-
-
-def redact_phones(col: Column | str, token: str = "<PHONE>") -> Column:
-    return redact(col, PHONE_RE, token)
-
-
-def count_matches(col: Column | str, pattern: str) -> Column:
-    """Number of non-overlapping matches of ``pattern`` in ``col``.
-
-    ``size(regexp_extract_all(...))`` rather than ``regexp_count`` so
-    the expression stays portable to engines without the newer
-    function; both are codegen'd JVM regex walks.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.when(c.isNull(), F.lit(None)).otherwise(
-        F.size(F.regexp_extract_all(c, F.lit(pattern), F.lit(0)))
-    )
 
 
 def mask_digits(col: Column | str, mask: str = "*") -> Column:

@@ -12,9 +12,8 @@ raster needs only a bitmap font. So this module supplies:
   as a filled box — the classic glyph-box fallback);
 - ``render_text_bitmap``: text → 8-bit grayscale page raster (white
   page, black ink, fixed-pitch 6×8 cells, margins, clipping);
-- ``encode_png_gray`` / ``decode_png_gray``: minimal PNG writer and
-  the matching reader (reader exists so tests can round-trip without
-  any image library).
+- ``encode_png_gray``: minimal PNG writer (``codecs.decode_png_gray8``
+  reads it back).
 
 Everything is deterministic: same text → byte-identical PNG (zlib
 level pinned), so the idempotent-sink replay guarantee extends through
@@ -171,14 +170,3 @@ def encode_png_gray(width: int, height: int, pixels: bytes) -> bytes:
         + _chunk(b"IDAT", zlib.compress(raw, 6))
         + _chunk(b"IEND", b"")
     )
-
-
-def decode_png_gray(png: bytes) -> tuple[int, int, bytes]:
-    """Inverse of ``encode_png_gray``, so tests round-trip without an
-    image library. Delegates to the full five-filter reader in
-    ``operators/codecs.py`` (one chunk-walker to maintain; strictly
-    more robust than the filter-0-only reader this used to be — proper
-    ValueErrors on truncated chunks, missing IHDR, bad CRCs)."""
-    from project_map_reduce_spark.operators.codecs import decode_png_gray8
-
-    return decode_png_gray8(png)

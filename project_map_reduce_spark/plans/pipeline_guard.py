@@ -10,7 +10,7 @@ The three gate stages every serious pre-training pipeline runs between
   shingle the benchmark, shingle the corpus, intersect.
 - **PII scrub** (Q69): pseudonymize identifiers and mask digits before
   the corpus leaves the ingest boundary (operators/pii.py holds the
-  reusable redaction expressions — emails/IPv4/phones covered there).
+  two expressions).
 - **Repetition filter** (Q70): Gopher-style intra-document repetition
   metrics — duplicate-token fraction and top-bigram fraction — the
   cheap signal that a document is boilerplate/spam.
@@ -129,10 +129,7 @@ def q_pii_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q69: PII scrub over the customer register — stable md5
     pseudonym for the identifier (joins downstream still work),
     digit-masked display name, and a masked-character count for the
-    audit log. operators/pii.py supplies the expressions; the
-    email/IPv4/phone redactors from the same module are exercised on
-    constructed strings in tests/test_pii.py (the synthetic corpus
-    contains none).
+    audit log. operators/pii.py supplies the expressions.
 
     100 TB shape: pure narrow map — regex + hash inside whole-stage
     codegen, ZERO exchanges in the plan (asserted by the plan audit).

@@ -726,8 +726,7 @@ def q_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ways: an events slice is written out as (a) quoted/escaped CSV with
     header, (b) JSON lines, and (c) raw tab-delimited TEXT lines parsed
     back field-by-field — plus (d) ORC, the columnar interchange
-    sibling (upgrading the read_orc/write_orc capability row to the
-    same tier) — then each copy is re-read WITH AN EXPLICIT SCHEMA
+    sibling — then each copy is re-read WITH AN EXPLICIT SCHEMA
     (the only scalable contract: schema inference is a full extra pass
     over 100 TB) and aggregated identically.
 
@@ -801,9 +800,8 @@ def q_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             parts.getItem(5).alias("props"),
         )
 
-        # (d) ORC: the columnar interchange sibling (sources/readers.py's
-        # read_orc/write_orc capability row, now hash-checked) — native
-        # vectorized reader, schema embedded, TIMESTAMP_NTZ preserved.
+        # (d) ORC: the columnar interchange sibling — native vectorized
+        # reader, schema embedded, TIMESTAMP_NTZ preserved.
         ev.write.orc(f"{tmp}/orc")
         orc_back = spark.read.schema(_RT_SCHEMA).orc(f"{tmp}/orc")
 

@@ -77,16 +77,11 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # ns-precision parquet timestamps must land as TimestampType (µs),
-        # matching DuckDB's µs view of the same files.
+        # Old-calendar parquet dates and timestamps read as written, as
+        # DuckDB reads them. INT64(NANOS) columns need no conf: Spark 4.1
+        # reads them as µs TIMESTAMP_NTZ (tables.load).
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
         .config("spark.sql.parquet.datetimeRebaseModeInRead", "CORRECTED")
-        # Older Sparks have no ns timestamp type and, with this conf, read
-        # INT64(NANOS) parquet columns as raw longs, which tables.load
-        # truncates to µs TIMESTAMP_NTZ (DuckDB's µs view of the same
-        # files). Spark 4.1 reads events.ts as TIMESTAMP_NTZ whatever this
-        # conf says, so there the bigint path in tables.load never runs.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     # The state store stays Spark's default HDFS-backed provider: the round-7
     # A/B (BASELINE.md) has it winning or tying RocksDB while state fits the heap.

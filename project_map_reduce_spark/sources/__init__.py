@@ -1,2 +1,3 @@
-"""Source/sink layer: typed readers for text/csv/json/parquet/binary
-inputs and the report sink (SURVEY.md §2 B.1, ref A1/A12)."""
+"""Source/sink layer: the reference's task-line source, per-row URL
+fetch and report sink, bucketed and idempotent-stream sinks, and a
+Python DataSource source and sink (SURVEY.md §2 B.1, ref A1/A12)."""

@@ -2,13 +2,11 @@
 
 The reference's only source is a line-oriented task file on S3 —
 ``"<operation>\\t<pdfURL>"`` per line (Manager.java:269-284,
-Workers.java:230-239). Here every ingest path lands in a DataFrame with
-an explicit schema; the line format becomes a two-column parse that
-Catalyst fuses into the scan.
-
-All readers accept a path glob and scale by splitting files across
-partitions (``spark.sql.files.maxPartitionBytes``); none of them
-collect anything to the driver.
+Workers.java:230-239). ``read_task_lines`` parses it into two columns
+that Catalyst fuses into the scan, ``fetch_url_bytes`` pulls each
+row's payload on the executors, and ``write_report`` is the
+reference's HTML summary sink. Every other format is read and written
+with Spark's own ``spark.read`` / ``df.write``.
 """
 
 from __future__ import annotations
@@ -36,64 +34,6 @@ def read_task_lines(spark: SparkSession, path: str) -> DataFrame:
         parts.getItem(0).alias("operation"),
         F.when(F.size(parts) > 1, parts.getItem(1)).alias("url"),
     )
-
-
-def read_csv(
-    spark: SparkSession, path: str, schema: T.StructType | str | None = None
-) -> DataFrame:
-    """CSV with explicit schema (schema inference is a full extra pass —
-    never at 100 TB). PERMISSIVE mode keeps malformed rows as data."""
-    reader = spark.read.option("header", "true").option("mode", "PERMISSIVE")
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", "true")  # test-scale only
-    return reader.csv(path)
-
-
-def read_json(
-    spark: SparkSession, path: str, schema: T.StructType | str | None = None
-) -> DataFrame:
-    """JSON-lines with explicit schema; corrupt records land in
-    ``_corrupt_record`` (in-band error channel, ref A7)."""
-    reader = spark.read.option("mode", "PERMISSIVE").option(
-        "columnNameOfCorruptRecord", "_corrupt_record"
-    )
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def read_binary(spark: SparkSession, path: str, glob: str | None = None) -> DataFrame:
-    """Binary-file source → (path, modificationTime, length, content)
-    with ``content: binary`` — the multimodal payload column (ref A6's
-    PDF bytes, SURVEY.md §1.2). Column pruning matters here: plans that
-    don't touch ``content`` never read the bytes."""
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    return reader.load(path)
-
-
-def read_orc(
-    spark: SparkSession, path: str, schema: T.StructType | str | None = None
-) -> DataFrame:
-    """ORC source — the other mainstream columnar format (Hive-lineage
-    warehouses hand data over as ORC as often as parquet). Spark's
-    native vectorized ORC reader gives the same scan contract as
-    parquet: predicate pushdown into stripe/row-group indexes, column
-    pruning, split-by-stripe parallelism. An explicit schema skips the
-    footer-sampling pass."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.orc(path)
-
-
-def write_orc(df: DataFrame, path: str, *, compression: str = "zstd") -> None:
-    """ORC sink, zstd by default (matches the parquet sink's codec
-    choice: best scan-speed/size trade for cold data)."""
-    df.write.mode("overwrite").option("compression", compression).orc(path)
 
 
 FETCHED_SCHEMA = (
@@ -154,13 +94,21 @@ def fetch_url_bytes(
 def write_report(df: DataFrame, path: str, *, title: str = "results") -> None:
     """Report sink (ref A12, LocalApp.java:302-343): the *data* write
     stays distributed (parquet); only the already-tiny summary is
-    rendered to one HTML file. Never call on an unaggregated frame."""
+    rendered to one HTML file. Never call on an unaggregated frame.
+    Title, column names and cell values are HTML-escaped: a fetch
+    error's text (``<urlopen error …>``) is data, not markup."""
+    from html import escape
+
     df.write.mode("overwrite").parquet(path + ".parquet")
     rows = df.limit(10_000).collect()  # guarded: summaries only
     cells = "\n".join(
-        "<tr>" + "".join(f"<td>{v}</td>" for v in row) + "</tr>" for row in rows
+        "<tr>" + "".join(f"<td>{escape(str(v))}</td>" for v in row) + "</tr>"
+        for row in rows
     )
-    header = "<tr>" + "".join(f"<th>{c}</th>" for c in df.columns) + "</tr>"
+    header = (
+        "<tr>" + "".join(f"<th>{escape(c)}</th>" for c in df.columns) + "</tr>"
+    )
+    title = escape(title)
     html = (
         f"<html><head><title>{title}</title></head><body>"
         f"<h1>{title}</h1><table>{header}{cells}</table></body></html>"

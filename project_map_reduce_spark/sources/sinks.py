@@ -1,14 +1,11 @@
-"""Typed sinks: partitioned parquet, bucketed tables, streaming-ready
-layout (SURVEY.md §2 B.1 counterpart to readers.py).
+"""Typed sinks: bucketed tables and an idempotent streaming sink
+(SURVEY.md §2 B.1 counterpart to readers.py).
 
-Two 100 TB layout techniques live here, each of which changes DOWNSTREAM
-plans rather than just writing bytes:
+Directory-partitioned parquet needs no wrapper: ``df.write.partitionBy``
+already buys ``PartitionFilters`` pruning at the scan (asserted in
+tests/test_sinks.py). The layout technique that lives here changes
+DOWNSTREAM plans rather than just writing bytes:
 
-- **Partitioned writes** (`write_partitioned`): directory-partitioned
-  parquet so later reads with a filter on the partition column prune
-  whole directories at planning time (``PartitionFilters`` in the scan —
-  asserted in tests/test_sinks.py). This is the difference between
-  scanning 100 TB and scanning one day of it.
 - **Bucketed tables** (`write_bucketed`): pre-hash-partitioned +
   sorted-by-key table layout. Two tables bucketed on the same key with
   the same bucket count join with NO shuffle exchange on either side —
@@ -27,21 +24,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    *,
-    mode: str = "overwrite",
-) -> None:
-    """Directory-partitioned parquet. Choose low-cardinality columns
-    (date, region, event_type): each distinct tuple becomes a directory,
-    and a filter on those columns prunes at the file index, before any
-    I/O. High-cardinality partition columns create a small-file storm —
-    that's what bucketing is for instead."""
-    df.write.partitionBy(*partition_cols).mode(mode).parquet(path)
 
 
 def write_bucketed(

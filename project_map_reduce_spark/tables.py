@@ -23,7 +23,6 @@ from collections.abc import Iterator
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 TABLES = (
     "region",
@@ -37,9 +36,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
@@ -90,27 +86,11 @@ def _has_parquet_magic(path: str) -> bool:
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown fixture table {name!r}; expected one of {TABLES}")
-    df = spark.read.parquet(table_path(sf_dir, name))
-    if name == "events":
-        # events.ts is TIMESTAMP(NANOS) parquet (FIXTURES.md). Spark ≥4.1
-        # reads it natively as TIMESTAMP_NTZ (µs-truncated) whatever the
-        # legacy long-nanos conf says; older Sparks need that conf (set by
-        # get_spark, never here) and return a bigint.
-        ts_field = df.schema["ts"]
-        if ts_field.dataType.simpleString() == "bigint":
-            # Legacy long-nanos path: truncate to µs and build TIMESTAMP_NTZ
-            # via timestamp_add from the epoch — timezone-independent, so
-            # the value is byte-identical to DuckDB's naive µs view and to
-            # the native NTZ read on newer Sparks.
-            df = df.withColumn(
-                "ts",
-                F.timestamp_add(
-                    "MICROSECOND",
-                    F.expr("ts div 1000"),
-                    F.lit("1970-01-01 00:00:00").cast("timestamp_ntz"),
-                ),
-            )
-    return df
+    # events.ts is TIMESTAMP(NANOS) parquet (FIXTURES.md); Spark 4.1 reads
+    # it natively as µs-truncated TIMESTAMP_NTZ, DuckDB's naive µs view
+    # of the same file.
+    return spark.read.parquet(table_path(sf_dir, name))
+
 
 def local_rows(spark: SparkSession, rows, schema) -> DataFrame:
     """Driver-local report frame over ONE partition.

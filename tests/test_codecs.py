@@ -1,6 +1,6 @@
 """Unit tests for the stdlib-only codec layer (operators/codecs.py):
-PNG five-filter pixel decode, JPEG/GIF header parsing, WAV via the
-stdlib wave reader — pure functions, no Spark session needed."""
+PNG five-filter pixel decode and WAV via the stdlib wave reader — pure
+functions, no Spark session needed."""
 
 from __future__ import annotations
 
@@ -78,9 +78,9 @@ def test_png_decode_all_filters():
 
 def test_png_info_and_errors():
     png = encode_png_gray(6, 4, bytes(24))
-    assert codecs.png_info(png) == (6, 4, 8, 0)
+    assert codecs.decode_png_gray8(png) == (6, 4, bytes(24))
     with pytest.raises(ValueError):
-        codecs.png_info(b"not a png")
+        codecs.decode_png_gray8(b"not a png")
     # flipped payload byte → CRC failure, loudly
     bad = bytearray(png)
     bad[40] ^= 0xFF
@@ -88,47 +88,12 @@ def test_png_info_and_errors():
         codecs.decode_png_gray8(bytes(bad))
     # truncated stream → no IEND
     with pytest.raises(ValueError):
-        codecs.png_info(png[:20])
+        codecs.decode_png_gray8(png[:20])
     # unsupported subset rejected, not mis-decoded
     ihdr_rgb = struct.pack(">IIBBBBB", 2, 2, 8, 2, 0, 0, 0)
     rgb = _SIG + _chunk(b"IHDR", ihdr_rgb) + _chunk(b"IEND", b"")
     with pytest.raises(ValueError):
         codecs.decode_png_gray8(rgb)
-
-
-def _jpeg(w, h, *, extra_segments=b"", ncomp=3):
-    # component specs omitted — the walk reads only the fixed SOF prefix
-    sof = b"\xff\xc0" + struct.pack(">HBHHB", 8, 8, h, w, ncomp)
-    return b"\xff\xd8" + extra_segments + sof + b"\xff\xd9"
-
-
-def test_jpeg_info_walks_markers():
-    app1 = b"\xff\xe1" + struct.pack(">H", 10) + bytes(8)  # Exif-ish
-    com = b"\xff\xfe" + struct.pack(">H", 5) + b"abc"
-    fill = b"\xff"  # fill byte before a marker is legal padding
-    raw = _jpeg(640, 480, extra_segments=app1 + com + fill[:0])
-    assert codecs.jpeg_info(raw) == (640, 480, 3)
-    # progressive (SOF2) found too
-    raw2 = raw.replace(b"\xff\xc0", b"\xff\xc2")
-    assert codecs.jpeg_info(raw2) == (640, 480, 3)
-    with pytest.raises(ValueError):
-        codecs.jpeg_info(b"\xff\xd8\xff\xd9")  # EOI before any SOF
-    with pytest.raises(ValueError):
-        codecs.jpeg_info(b"\x00\x00")
-    # DHT (C4) must NOT be mistaken for a SOF
-    dht = b"\xff\xc4" + struct.pack(">H", 4) + bytes(2)
-    assert codecs.jpeg_info(
-        b"\xff\xd8" + dht + _jpeg(8, 9)[2:]
-    ) == (8, 9, 3)
-
-
-def test_gif_info():
-    assert codecs.gif_info(b"GIF89a" + struct.pack("<HH", 320, 200)) == (320, 200)
-    assert codecs.gif_info(b"GIF87a" + struct.pack("<HH", 1, 1)) == (1, 1)
-    with pytest.raises(ValueError):
-        codecs.gif_info(b"GIF90a" + bytes(4))
-    with pytest.raises(ValueError):
-        codecs.gif_info(b"GIF89a\x00")  # truncated descriptor
 
 
 def test_wav_info():
@@ -160,674 +125,5 @@ def test_png_roundtrip_property():
         pixels = bytes((seed * 2654435761 + i * 40503) % 256 for i in range(w * h))
         png = encode_png_gray(w, h, pixels)
         assert codecs.decode_png_gray8(png) == (w, h, pixels)
-        assert codecs.png_info(png) == (w, h, 8, 0)
 
     check()
-
-
-# --- GIF: test-side encoder (real LZW) + decoder roundtrips -----------
-
-
-def _lzw_encode(min_code_size: int, indices: bytes) -> bytes:
-    """Spec-mirroring GIF LZW encoder: variable width LSB-first, clear
-    code first, dictionary frozen at 4096 (matching the decoder cap)."""
-    clear = 1 << min_code_size
-    end = clear + 1
-    out = bytearray()
-    buf = nbits = 0
-    code_size = min_code_size + 1
-
-    def emit(code):
-        nonlocal buf, nbits
-        buf |= code << nbits
-        nbits += code_size
-        while nbits >= 8:
-            out.append(buf & 0xFF)
-            buf >>= 8
-            nbits -= 8
-
-    table = {bytes([i]): i for i in range(clear)}
-    next_code = end + 1
-    emit(clear)
-    w = b""
-    for k in indices:
-        wk = w + bytes([k])
-        if wk in table:
-            w = wk
-            continue
-        emit(table[w])
-        if next_code < 4096:
-            table[wk] = next_code
-            next_code += 1
-            # the decoder's first read appends nothing, so its table
-            # lags ours by one entry: widen one code LATER than the
-            # decoder-side len(table) == 1<<size rule
-            if next_code == (1 << code_size) + 1 and code_size < 12:
-                code_size += 1
-        w = bytes([k])
-    if w:
-        emit(table[w])
-    emit(end)
-    if nbits:
-        out.append(buf & 0xFF)
-    return bytes(out)
-
-
-def _gray_palette(bits: int) -> bytes:
-    n = 1 << bits
-    return b"".join(
-        bytes([v, v, v]) for v in ((i * 255) // (n - 1) for i in range(n))
-    )
-
-
-def _make_gif(
-    w, h, indices, *, palette_bits=8, interlace=False, frame=None
-):
-    """Assemble a spec-valid single-frame GIF (grayscale palette, so
-    luminance mapping is the identity on palette value)."""
-    left, top, iw, ih = frame or (0, 0, w, h)
-    pal = _gray_palette(palette_bits)
-    lsd_packed = 0x80 | (palette_bits - 1)  # GCT present, size bits
-    head = (
-        b"GIF89a"
-        + struct.pack("<HH", w, h)
-        + bytes([lsd_packed, 0, 0])
-        + pal
-    )
-    idesc = b"\x2c" + struct.pack("<HHHH", left, top, iw, ih) + bytes(
-        [0x40 if interlace else 0]
-    )
-    mcs = max(2, palette_bits)
-    lzw = _lzw_encode(mcs, indices)
-    blocks = b"".join(
-        bytes([len(lzw[i : i + 255])]) + lzw[i : i + 255]
-        for i in range(0, len(lzw), 255)
-    )
-    return head + idesc + bytes([mcs]) + blocks + b"\x00" + b"\x3b"
-
-
-def _interlace_rows(h):
-    rows = []
-    for start, step in ((0, 8), (4, 8), (2, 4), (1, 2)):
-        rows.extend(range(start, h, step))
-    return rows
-
-
-def test_gif_decode_roundtrip():
-    """Sequential-order frame: LZW encode → full decode recovers every
-    pixel; grayscale palette makes luminance the identity. Size chosen
-    to force dictionary growth across several code widths."""
-    w, h = 61, 23
-    idx = bytes((x * x + 3 * y) % 256 for y in range(h) for x in range(w))
-    gif = _make_gif(w, h, idx)
-    shades = _gray_palette(8)[::3]
-    expected = bytes(shades[i] for i in idx)
-    assert codecs.decode_gif_gray(gif) == (w, h, expected)
-    # 2-bit palette too (different min code size path)
-    idx4 = bytes((x + y) % 4 for y in range(h) for x in range(w))
-    gif4 = _make_gif(w, h, idx4, palette_bits=2)
-    shades4 = _gray_palette(2)[::3]
-    assert codecs.decode_gif_gray(gif4) == (
-        w, h, bytes(shades4[i] for i in idx4),
-    )
-
-
-def test_gif_decode_interlaced():
-    """Interlace flag: rows stored in 8/8/4/2 pass order must come back
-    in sequential order."""
-    w, h = 7, 13
-    seq = bytes((3 * x + 7 * y) % 256 for y in range(h) for x in range(w))
-    stored = b"".join(
-        seq[y * w : (y + 1) * w] for y in _interlace_rows(h)
-    )
-    gif = _make_gif(w, h, stored, interlace=True)
-    shades = _gray_palette(8)[::3]
-    assert codecs.decode_gif_gray(gif) == (
-        w, h, bytes(shades[i] for i in seq),
-    )
-
-
-def test_gif_decode_partial_frame_composites():
-    """A frame smaller than the logical screen lands at (left, top) on a
-    background-color canvas."""
-    w, h, iw, ih, left, top = 6, 5, 2, 2, 3, 1
-    idx = bytes([255, 254, 253, 252])[:0] + bytes([3, 2, 1, 0])
-    gif = _make_gif(w, h, idx, palette_bits=2, frame=(left, top, iw, ih))
-    dw, dh, pix = codecs.decode_gif_gray(gif)
-    assert (dw, dh) == (w, h)
-    shades = _gray_palette(2)[::3]
-    bg = shades[0]  # background index byte 11 defaults to 0
-    assert pix[top * w + left] == shades[3]
-    assert pix[(top + 1) * w + left + 1] == shades[0]
-    assert pix[0] == bg and pix[-1] == bg
-
-
-def test_gif_decode_malformed():
-    w, h = 4, 3
-    idx = bytes(range(12))
-    gif = _make_gif(w, h, idx)
-    # truncate inside the image sub-blocks → ValueError, not IndexError
-    with pytest.raises(ValueError):
-        codecs.decode_gif_gray(gif[:-6])
-    # no frame at all
-    no_frame = gif[: 13 + 3 * 256] + b"\x3b"
-    with pytest.raises(ValueError):
-        codecs.decode_gif_gray(no_frame)
-
-
-def test_gif_partial_frame_bg_uses_global_palette():
-    """Regression: the background index refers to the GLOBAL color
-    table even when the frame carries a LOCAL one — and a bg index
-    beyond the LCT's size must not crash."""
-    # GCT: 4 entries with index 3 -> white (gray ramp); bg_index = 3.
-    gct = _gray_palette(2)
-    head = (
-        b"GIF89a"
-        + struct.pack("<HH", 4, 3)
-        + bytes([0x80 | 1, 3, 0])  # GCT present size-bits=1, bg=3
-        + gct
-    )
-    # 2x1 frame at (1,1) with a DIFFERENT local palette (dark ramp)
-    lct = bytes([10, 10, 10, 40, 40, 40])  # 2 entries
-    idesc = (
-        b"\x2c" + struct.pack("<HHHH", 1, 1, 2, 1)
-        + bytes([0x80 | 0])  # LCT present, size-bits 0 -> 2 entries
-        + lct
-    )
-    lzw = _lzw_encode(2, bytes([0, 1]))
-    gif = (
-        head + idesc + bytes([2]) + bytes([len(lzw)]) + lzw
-        + b"\x00\x3b"
-    )
-    w, h, pix = codecs.decode_gif_gray(gif)
-    assert (w, h) == (4, 3)
-    assert pix[1 * 4 + 1] == 10 and pix[1 * 4 + 2] == 40  # LCT shades
-    assert pix[0] == 255  # background = GCT index 3 (white), not LCT
-
-
-def test_avi_frames_inside_rec_lists():
-    """Regression: spec-standard 'LIST rec ' interleave groupings one
-    level inside movi must be walked into, not skipped."""
-    from tests.test_jpeg_codec import _encode_gray_jpeg
-
-    def chunk(fourcc, data):
-        pad = b"\x00" if len(data) % 2 else b""
-        return fourcc + struct.pack("<I", len(data)) + data + pad
-
-    w, h = 8, 8
-    jpegs = [_encode_gray_jpeg(w, h, bytes([i * 50]) * 64) for i in range(2)]
-    avih = struct.pack("<10I", 0, 0, 0, 0, 2, 0, 1, 0, w, h) + bytes(16)
-    hdrl = chunk(b"LIST", b"hdrl" + chunk(b"avih", avih))
-    movi = chunk(
-        b"LIST",
-        b"movi"
-        + chunk(b"LIST", b"rec " + chunk(b"00dc", jpegs[0]))
-        + chunk(b"LIST", b"rec " + chunk(b"00dc", jpegs[1])),
-    )
-    body = b"AVI " + hdrl + movi
-    avi = b"RIFF" + struct.pack("<I", len(body)) + body
-    frames = codecs.avi_video_frames(avi)
-    assert len(frames) == 2
-    for (off, ln), jpg in zip(frames, jpegs):
-        assert avi[off : off + ln] == jpg
-
-
-def test_jpeg_rejects_subsampled_luma():
-    """Regression: a stream whose first component is NOT the
-    max-resolution one must raise, not return a short pixel buffer."""
-    from tests.test_jpeg_codec import _encode_gray_jpeg
-
-    raw = _encode_gray_jpeg(8, 8, bytes(64))
-    # rewrite SOF: 2 components, comp0 h=v=1, comp1 h=v=2
-    sof_at = raw.index(b"\xff\xc0")
-    new_sof = (
-        b"\xff\xc0" + struct.pack(">HBHHB", 8 + 6, 8, 8, 8, 2)
-        + bytes([1, 0x11, 0]) + bytes([2, 0x22, 0])
-    )
-    old_sof_len = 2 + struct.unpack(">H", raw[sof_at + 2 : sof_at + 4])[0]
-    doctored = raw[:sof_at] + new_sof + raw[sof_at + old_sof_len :]
-    from project_map_reduce_spark.operators import jpeg as _J
-
-    with pytest.raises(ValueError, match="max-resolution"):
-        _J.decode_jpeg_gray(doctored)
-
-
-def _png_raw(width, height, color, samples, *, palette=None):
-    """Hand-assemble an 8-bit PNG of the given color type with
-    alternating filters across rows (exercises multi-byte-pixel
-    unfiltering: Sub/Paeth left neighbor is bpp bytes back)."""
-    bpp = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}[color]
-    rowlen = width * bpp
-    rows = [samples[y * rowlen : (y + 1) * rowlen] for y in range(height)]
-    prev = bytes(rowlen)
-    scan = b""
-    filters = [(y % 5) for y in range(height)]
-    for y, f in enumerate(filters):
-        cur = rows[y]
-        enc = bytearray(cur)
-        if f == 1:
-            for x in range(rowlen - 1, bpp - 1, -1):
-                enc[x] = (cur[x] - cur[x - bpp]) & 0xFF
-        elif f == 2:
-            for x in range(rowlen):
-                enc[x] = (cur[x] - prev[x]) & 0xFF
-        elif f == 3:
-            for x in range(rowlen):
-                left = cur[x - bpp] if x >= bpp else 0
-                enc[x] = (cur[x] - ((left + prev[x]) >> 1)) & 0xFF
-        elif f == 4:
-            for x in range(rowlen):
-                left = cur[x - bpp] if x >= bpp else 0
-                c = prev[x - bpp] if x >= bpp else 0
-                enc[x] = (cur[x] - codecs._paeth(left, prev[x], c)) & 0xFF
-        scan += bytes([f]) + bytes(enc)
-        prev = cur
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, color, 0, 0, 0)
-    parts = _SIG + _chunk(b"IHDR", ihdr)
-    if palette is not None:
-        parts += _chunk(b"PLTE", palette)
-    return parts + _chunk(b"IDAT", zlib.compress(scan)) + _chunk(b"IEND", b"")
-
-
-def _lum(r, g, b):
-    return (299 * r + 587 * g + 114 * b) // 1000
-
-
-def test_png_luma_rgb_rgba_palette_grayalpha():
-    """decode_png_luma handles every 8-bit color type: RGB and RGBA
-    collapse via integer luminance (alpha ignored), palette maps
-    through PLTE, gray+alpha keeps the gray channel — all across
-    alternating scanline filters with multi-byte pixels."""
-    w, h = 9, 6
-    # RGB
-    rgb = bytes(
-        v for y in range(h) for x in range(w)
-        for v in ((3 * x) % 256, (5 * y) % 256, (7 * x + y) % 256)
-    )
-    png = _png_raw(w, h, 2, rgb)
-    expect = bytes(
-        _lum(rgb[i], rgb[i + 1], rgb[i + 2]) for i in range(0, len(rgb), 3)
-    )
-    assert codecs.decode_png_luma(png) == (w, h, expect)
-    # RGBA: same colors, varying alpha must not matter
-    rgba = b"".join(
-        rgb[i : i + 3] + bytes([(i * 31) % 256])
-        for i in range(0, len(rgb), 3)
-    )
-    assert codecs.decode_png_luma(_png_raw(w, h, 6, rgba)) == (w, h, expect)
-    # palette
-    pal = bytes(v for i in range(8) for v in (i * 30, 255 - i * 30, i * 9))
-    idx = bytes((x + y) % 8 for y in range(h) for x in range(w))
-    png_p = _png_raw(w, h, 3, idx, palette=pal)
-    expect_p = bytes(
-        _lum(pal[3 * i], pal[3 * i + 1], pal[3 * i + 2]) for i in idx
-    )
-    assert codecs.decode_png_luma(png_p) == (w, h, expect_p)
-    # gray + alpha
-    ga = bytes(
-        v for y in range(h) for x in range(w)
-        for v in ((11 * x + 13 * y) % 256, (x * y) % 256)
-    )
-    assert codecs.decode_png_luma(_png_raw(w, h, 4, ga)) == (
-        w, h, ga[0::2],
-    )
-    # gray8 agrees with the strict decoder
-    gray = bytes((x * y) % 256 for y in range(h) for x in range(w))
-    png_g = _png_raw(w, h, 0, gray)
-    assert codecs.decode_png_luma(png_g) == codecs.decode_png_gray8(png_g)
-    # palette without PLTE rejected
-    with pytest.raises(ValueError):
-        codecs.decode_png_luma(_png_raw(w, h, 3, idx))
-
-
-def _filter_rows(rows, rowlen, bpp):
-    """Filter a list of raw rows with rotating filter types (the same
-    per-row scheme _png_raw uses), returning the scanline stream."""
-    prev = bytes(rowlen)
-    scan = b""
-    for y, cur in enumerate(rows):
-        f = y % 5
-        enc = bytearray(cur)
-        if f == 1:
-            for x in range(rowlen - 1, bpp - 1, -1):
-                enc[x] = (cur[x] - cur[x - bpp]) & 0xFF
-        elif f == 2:
-            for x in range(rowlen):
-                enc[x] = (cur[x] - prev[x]) & 0xFF
-        elif f == 3:
-            for x in range(rowlen):
-                left = cur[x - bpp] if x >= bpp else 0
-                enc[x] = (cur[x] - ((left + prev[x]) >> 1)) & 0xFF
-        elif f == 4:
-            for x in range(rowlen):
-                left = cur[x - bpp] if x >= bpp else 0
-                c = prev[x - bpp] if x >= bpp else 0
-                enc[x] = (cur[x] - codecs._paeth(left, prev[x], c)) & 0xFF
-        scan += bytes([f]) + bytes(enc)
-        prev = cur
-    return scan
-
-
-def _png_adam7(width, height, samples, *, channels=1, depth=8):
-    """Hand-assemble an Adam7-interlaced PNG from a full sample plane
-    (each pass an independently filtered sub-image, empty passes
-    absent — exactly the layout the decoder must reassemble)."""
-    bpp = channels * (depth // 8)
-    color = {1: 0, 3: 2}[channels]
-    scan = b""
-    for x0, y0, dx, dy in codecs._ADAM7:
-        pw = (width - x0 + dx - 1) // dx if width > x0 else 0
-        ph = (height - y0 + dy - 1) // dy if height > y0 else 0
-        if pw == 0 or ph == 0:
-            continue
-        rows = []
-        for j in range(ph):
-            row = bytearray()
-            for i in range(pw):
-                src = ((y0 + j * dy) * width + (x0 + i * dx)) * bpp
-                row += samples[src : src + bpp]
-            rows.append(bytes(row))
-        scan += _filter_rows(rows, pw * bpp, bpp)
-    ihdr = struct.pack(">IIBBBBB", width, height, depth, color, 0, 0, 1)
-    return (
-        _SIG
-        + _chunk(b"IHDR", ihdr)
-        + _chunk(b"IDAT", zlib.compress(scan))
-        + _chunk(b"IEND", b"")
-    )
-
-
-def test_png_adam7_interlaced_roundtrip():
-    """Adam7 gray and RGB images — including a tiny 3x3 whose pass 2
-    is entirely absent — must reassemble to the sequential plane."""
-    for w, h in ((13, 10), (3, 3), (8, 1), (1, 9)):
-        gray = bytes((17 * i + 3) % 256 for i in range(w * h))
-        assert codecs.decode_png_luma(_png_adam7(w, h, gray)) == (w, h, gray)
-    w, h = 9, 6
-    rgb = bytes(
-        v for y in range(h) for x in range(w)
-        for v in ((3 * x) % 256, (5 * y) % 256, (7 * x + y) % 256)
-    )
-    expect = bytes(
-        _lum(rgb[i], rgb[i + 1], rgb[i + 2]) for i in range(0, len(rgb), 3)
-    )
-    assert codecs.decode_png_luma(
-        _png_adam7(w, h, rgb, channels=3)
-    ) == (w, h, expect)
-
-
-def test_png_16bit_reduces_to_high_byte():
-    w, h = 7, 4
-    hi = bytes((31 * i) % 256 for i in range(w * h))
-    samples16 = b"".join(bytes([b, (b * 3) % 256]) for b in hi)
-    rows = [samples16[y * w * 2 : (y + 1) * w * 2] for y in range(h)]
-    scan = _filter_rows(rows, w * 2, 2)
-    ihdr = struct.pack(">IIBBBBB", w, h, 16, 0, 0, 0, 0)
-    png = (
-        _SIG + _chunk(b"IHDR", ihdr)
-        + _chunk(b"IDAT", zlib.compress(scan)) + _chunk(b"IEND", b"")
-    )
-    assert codecs.decode_png_luma(png) == (w, h, hi)
-    # sub-8-bit depth with a TRUECOLOR type is spec-illegal — rejected
-    ihdr4 = struct.pack(">IIBBBBB", w, h, 4, 2, 0, 0, 0)
-    bad = _SIG + _chunk(b"IHDR", ihdr4) + _chunk(b"IEND", b"")
-    with pytest.raises(ValueError):
-        codecs.decode_png_luma(bad)
-
-
-def _pack_bits(samples, width, depth):
-    """Pack one byte-per-sample row stream into MSB-first depth-bit
-    scanline rows (the encoder mirror of codecs._unpack_bits)."""
-    stride = (width * depth + 7) // 8
-    height = len(samples) // width
-    rows = []
-    for y in range(height):
-        row = bytearray(stride)
-        for x in range(width):
-            v = samples[y * width + x]
-            bitpos = x * depth
-            row[bitpos >> 3] |= v << (8 - depth - (bitpos & 7))
-        rows.append(bytes(row))
-    return rows, stride
-
-
-def _png_sub8(width, height, depth, color, samples, *, palette=None):
-    """Hand-assemble a packed sub-8-bit PNG (gray or palette) with
-    rotating per-row filters (filter unit = 1 byte below depth 8)."""
-    rows, stride = _pack_bits(samples, width, depth)
-    scan = _filter_rows(rows, stride, 1)
-    ihdr = struct.pack(">IIBBBBB", width, height, depth, color, 0, 0, 0)
-    parts = _SIG + _chunk(b"IHDR", ihdr)
-    if palette is not None:
-        parts += _chunk(b"PLTE", palette)
-    return parts + _chunk(b"IDAT", zlib.compress(scan)) + _chunk(b"IEND", b"")
-
-
-def test_png_sub8_gray_all_depths():
-    """1/2/4-bit packed grayscale rows decode to real rasters: levels
-    scale by 255/(2^depth−1), partial trailing bytes honored (widths
-    chosen to leave pad bits), all five filters exercised."""
-    for depth, w, h in ((1, 13, 7), (2, 9, 6), (4, 7, 6)):
-        maxv = (1 << depth) - 1
-        samples = bytes((x * y + x) % (maxv + 1) for y in range(h) for x in range(w))
-        png = _png_sub8(w, h, depth, 0, samples)
-        scale = 255 // maxv
-        expect = bytes(v * scale for v in samples)
-        assert codecs.decode_png_luma(png) == (w, h, expect)
-        assert codecs.png_info(png) == (w, h, depth, 0)
-
-
-def test_png_sub8_palette():
-    """4-bit palette rows (the classic 16-color favicon layout) map
-    through PLTE to luminance; out-of-palette indices rejected."""
-    w, h, depth = 10, 5, 4
-    pal = bytes(v for i in range(12) for v in (20 * i, 255 - 20 * i, 7 * i))
-    idx = bytes((x + 2 * y) % 12 for y in range(h) for x in range(w))
-    png = _png_sub8(w, h, depth, 3, idx, palette=pal)
-    expect = bytes(
-        _lum(pal[3 * i], pal[3 * i + 1], pal[3 * i + 2]) for i in idx
-    )
-    assert codecs.decode_png_luma(png) == (w, h, expect)
-    # 2-bit palette too
-    idx2 = bytes((x * y) % 4 for y in range(h) for x in range(w))
-    png2 = _png_sub8(w, h, 2, 3, idx2, palette=pal)
-    expect2 = bytes(
-        _lum(pal[3 * i], pal[3 * i + 1], pal[3 * i + 2]) for i in idx2
-    )
-    assert codecs.decode_png_luma(png2) == (w, h, expect2)
-    # index beyond palette
-    with pytest.raises(ValueError):
-        codecs.decode_png_luma(
-            _png_sub8(w, h, 4, 3, bytes([13]) * (w * h), palette=pal)
-        )
-
-
-def test_png_sub8_adam7():
-    """Adam7-interlaced 1-bit gray: per-pass packed rows with per-pass
-    strides and pad bits must reassemble to the sequential plane."""
-    for w, h in ((13, 10), (3, 3), (8, 1), (1, 9)):
-        samples = bytes((x ^ y) & 1 for y in range(h) for x in range(w))
-        scan = b""
-        for x0, y0, dx, dy in codecs._ADAM7:
-            pw = (w - x0 + dx - 1) // dx if w > x0 else 0
-            ph = (h - y0 + dy - 1) // dy if h > y0 else 0
-            if pw == 0 or ph == 0:
-                continue
-            sub = bytes(
-                samples[(y0 + j * dy) * w + (x0 + i * dx)]
-                for j in range(ph)
-                for i in range(pw)
-            )
-            rows, stride = _pack_bits(sub, pw, 1)
-            scan += _filter_rows(rows, stride, 1)
-        ihdr = struct.pack(">IIBBBBB", w, h, 1, 0, 0, 0, 1)
-        png = (
-            _SIG + _chunk(b"IHDR", ihdr)
-            + _chunk(b"IDAT", zlib.compress(scan)) + _chunk(b"IEND", b"")
-        )
-        expect = bytes(v * 255 for v in samples)
-        assert codecs.decode_png_luma(png) == (w, h, expect)
-
-
-# --- uncompressed-DIB AVI: the codec-library-free video frame path ---
-
-
-def _make_dib_avi(
-    w, h, planes_gray, bit_count=24, *, flip_height=False, palette=None
-):
-    """AVI whose video stream is uncompressed BI_RGB ('00db' chunks):
-    gray source planes replicated to BGR (luminance is then exactly the
-    gray value — lossless roundtrip), rows bottom-up and 4-byte padded,
-    with the strl/strh/strf chain declaring the format. ``palette``
-    (BGRX quads) appends bmiColors to strf — 8-bit planes are then
-    palette INDICES."""
-
-    def chunk(fourcc, data):
-        pad = b"\x00" if len(data) % 2 else b""
-        return fourcc + struct.pack("<I", len(data)) + data + pad
-
-    stride = ((w * bit_count + 31) // 32) * 4
-    nb = bit_count // 8
-    frames = []
-    for plane in planes_gray:
-        buf = bytearray(stride * h)
-        for y in range(h):
-            dst = (y if flip_height else h - 1 - y) * stride
-            for x in range(w):
-                v = plane[y * w + x]
-                buf[dst + x * nb : dst + (x + 1) * nb] = bytes(
-                    [v] if nb == 1 else [v, v, v, 0][:nb]
-                )
-        frames.append(bytes(buf))
-    avih = struct.pack(
-        "<10I", 40000, 0, 0, 0, len(frames), 0, 1, 0, w, h
-    ) + bytes(16)
-    strh = b"vids" + b"DIB " + bytes(48)
-    strf = struct.pack(
-        "<IiihHI", 40, w, -h if flip_height else h, 1, bit_count, 0
-    ) + bytes(20) + (palette or b"")
-    strl = chunk(
-        b"LIST", b"strl" + chunk(b"strh", strh) + chunk(b"strf", strf)
-    )
-    hdrl = chunk(b"LIST", b"hdrl" + chunk(b"avih", avih) + strl)
-    movi = chunk(
-        b"LIST", b"movi" + b"".join(chunk(b"00db", f) for f in frames)
-    )
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def test_avi_stream_format_and_dib_decode():
-    """strh/strf parse + BI_RGB frame decode: bottom-up 24-bit rows
-    with 4-byte padding return the exact source gray planes; 8- and
-    32-bit variants and top-down (negative height) too."""
-    w, h = 9, 5  # 9*3=27-byte rows → 28-byte stride exercises padding
-    planes = [
-        bytes((i * 50 + 7 * x + 11 * y) % 256 for y in range(h) for x in range(w))
-        for i in range(2)
-    ]
-    for bits in (8, 24, 32):
-        avi = _make_dib_avi(w, h, planes, bits)
-        assert codecs.avi_stream_format(avi) == ("DIB ", bits, w, h)
-        frames = codecs.avi_video_frames(avi)
-        assert len(frames) == 2
-        for (off, ln), plane in zip(frames, planes):
-            dw, dh, out = codecs.decode_dib_gray(
-                avi[off : off + ln], w, h, bits
-            )
-            assert (dw, dh, out) == (w, h, plane)
-    # top-down layout: negative biHeight
-    avi = _make_dib_avi(w, h, planes, 24, flip_height=True)
-    assert codecs.avi_stream_format(avi) == ("DIB ", 24, w, -h)
-    off, ln = codecs.avi_video_frames(avi)[0]
-    assert codecs.decode_dib_gray(avi[off : off + ln], w, -h, 24) == (
-        w, h, planes[0],
-    )
-    # wrong payload size / depth rejected
-    with pytest.raises(ValueError):
-        codecs.decode_dib_gray(b"\x00" * 10, w, h, 24)
-    with pytest.raises(ValueError):
-        codecs.decode_dib_gray(b"\x00" * 100, w, h, 16)
-    # MJPEG AVI (no strl) has no stream format to report
-    from tests.test_jpeg_codec import _encode_gray_jpeg, _make_avi
-
-    mjpeg = _make_avi(8, 8, [_encode_gray_jpeg(8, 8, bytes(64))])
-    with pytest.raises(ValueError):
-        codecs.avi_stream_format(mjpeg)
-
-
-def test_avi_truncated_audio_strh_does_not_abort_format():
-    """A truncated strh inside an AUDIO (or unknown) strl must not
-    abort format parsing — the stream-type check precedes the length
-    requirement, so the intact vids strl after it still reports. A
-    truncated strh in the VIDEO strl itself still raises."""
-
-    def chunk(fourcc, data):
-        pad = b"\x00" if len(data) % 2 else b""
-        return fourcc + struct.pack("<I", len(data)) + data + pad
-
-    w, h = 4, 3
-    # a broken audio strl (strh holds only the 4-byte 'auds' type —
-    # shorter than the 8 bytes a handler needs) and a fully empty strl
-    # sit ahead of the intact video strl inside hdrl
-    vids_strl = chunk(
-        b"LIST",
-        b"strl"
-        + chunk(b"strh", b"vids" + b"DIB " + bytes(48))
-        + chunk(
-            b"strf",
-            struct.pack("<IiihHI", 40, w, h, 1, 24, 0) + bytes(20),
-        ),
-    )
-    bad_auds = chunk(b"LIST", b"strl" + chunk(b"strh", b"auds"))
-    empty_strl = chunk(b"LIST", b"strl" + chunk(b"strh", b""))
-    avih = chunk(b"avih", bytes(56))
-    hdrl = chunk(b"LIST", b"hdrl" + avih + bad_auds + empty_strl + vids_strl)
-    movi = chunk(b"LIST", b"movi")
-    body = b"AVI " + hdrl + movi
-    patched = b"RIFF" + struct.pack("<I", len(body)) + body
-    assert codecs.avi_stream_format(patched) == ("DIB ", 24, w, h)
-    # control: the same truncation in the vids strl itself still raises
-    bad_vids = chunk(b"LIST", b"strl" + chunk(b"strh", b"vids"))
-    hdrl2 = chunk(b"LIST", b"hdrl" + avih + bad_vids)
-    body2 = b"AVI " + hdrl2 + movi
-    with pytest.raises(ValueError, match="strh header too short"):
-        codecs.avi_stream_format(
-            b"RIFF" + struct.pack("<I", len(body2)) + body2
-        )
-
-
-def test_dib_8bit_palette_maps_to_luminance():
-    """8-bit BI_RGB frames are palette INDICES: a colored bmiColors
-    table (BGRX quads) must map through integer luminance like the
-    GIF/PNG palette paths; without a palette the grayscale-ramp
-    convention passes indices through; indices past the table raise."""
-    w, h = 9, 5
-    idx = bytes((x + 3 * y) % 12 for y in range(h) for x in range(w))
-    pal = b"".join(
-        bytes([7 * i, 255 - 20 * i, 13 * i, 0]) for i in range(12)  # B,G,R,X
-    )
-    avi = _make_dib_avi(w, h, [idx], 8, palette=pal)
-    assert codecs.avi_stream_palette(avi) == pal
-    off, ln = codecs.avi_video_frames(avi)[0]
-    expect = bytes(
-        (299 * pal[4 * i + 2] + 587 * pal[4 * i + 1] + 114 * pal[4 * i])
-        // 1000
-        for i in idx
-    )
-    assert codecs.decode_dib_gray(avi[off : off + ln], w, h, 8, pal) == (
-        w, h, expect,
-    )
-    # no palette declared -> grayscale-ramp convention (pass-through)
-    plain = _make_dib_avi(w, h, [idx], 8)
-    assert codecs.avi_stream_palette(plain) is None
-    o2, l2 = codecs.avi_video_frames(plain)[0]
-    assert codecs.decode_dib_gray(plain[o2 : o2 + l2], w, h, 8) == (
-        w, h, idx,
-    )
-    # index beyond the declared palette is loud, like the PNG path
-    bad = bytes([13]) * (w * h)
-    avi_bad = _make_dib_avi(w, h, [bad], 8, palette=pal)
-    ob, lb = codecs.avi_video_frames(avi_bad)[0]
-    with pytest.raises(ValueError):
-        codecs.decode_dib_gray(avi_bad[ob : ob + lb], w, h, 8, pal)

@@ -70,13 +70,14 @@ def test_matches_fixture_events_table():
 
 
 def test_load_events_leaves_session_conf_alone(spark, sf_dir):
-    """On a session with the legacy long-nanos read switched off, loading
-    events leaves the conf off, and events.ts has the same type
-    (TIMESTAMP_NTZ) and values as on get_spark's session, which has the
-    conf on."""
+    """On a session with the legacy long-nanos read switched on, loading
+    events leaves the conf on, and events.ts has the same type
+    (TIMESTAMP_NTZ) and values as on get_spark's session, which leaves
+    the conf unset: Spark 4.1 reads INT64(NANOS) natively either way, so
+    tables.load needs no bigint path."""
     key = "spark.sql.legacy.parquet.nanosAsLong"
     native = spark.newSession()
-    native.conf.set(key, "false")
+    native.conf.set(key, "true")
     got = load(native, sf_dir, "events")
     want = load(spark, sf_dir, "events")
     assert got.schema["ts"].dataType.simpleString() == "timestamp_ntz"
@@ -84,7 +85,7 @@ def test_load_events_leaves_session_conf_alone(spark, sf_dir):
     assert sorted(got.select("event_id", "ts").collect()) == sorted(
         want.select("event_id", "ts").collect()
     )
-    assert native.conf.get(key) == "false"
+    assert native.conf.get(key) == "true"
 
 
 def test_scratch_dir_removed_on_exit():

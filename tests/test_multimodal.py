@@ -1,23 +1,18 @@
-"""Multimodal capability smoke (SURVEY.md §2 B.10 capability row):
-binaryFile source → typed decode (REAL stdlib codec metadata; pixel
-decode real for any legal PNG, any GIF, and any Huffman-coded JPEG,
-baseline or progressive — only arithmetic-coded JPEG falls back to
-the stub raster) → feature extraction.
-The Spark plumbing — schema, Arrow batching, error channel, pruning —
-plus the codec layer are under test. Fixture payloads are spec-valid
-files, built with stdlib only."""
+"""The reference's PDF worker path (Workers.java:131-184): binaryFile
+source → ToText / ToHTML / ToImage, plus the task-line source, the
+per-row URL fetch and the report sink. The Spark plumbing — schema,
+Arrow batching, error channel — and the stdlib rasterizer and PNG codec
+are under test. Fixture payloads are built with stdlib only."""
 
 from __future__ import annotations
 
-import io
+import html
 import os
 import shutil
-import struct
-import wave as _wave
 
 import pytest
 
-from project_map_reduce_spark.operators import multimodal
+from project_map_reduce_spark.operators import codecs, multimodal
 from project_map_reduce_spark.operators.rasterize import encode_png_gray
 from project_map_reduce_spark.sources import readers
 
@@ -29,108 +24,10 @@ _PNG_PIXELS = bytes(
 )
 
 
-def _make_jpeg(w: int, h: int) -> bytes:
-    """Minimal structurally-valid JPEG header stream: SOI, APP0, SOF0
-    (1 component), EOI — enough for any T.81 marker walk to find the
-    frame dimensions."""
-    app0 = b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x02\x00" + bytes(6)
-    sof0 = (
-        b"\xff\xc0"
-        + struct.pack(">HBHHB", 11, 8, h, w, 1)
-        + b"\x01\x11\x00"  # component id / sampling / quant table
-    )
-    return b"\xff\xd8" + app0 + sof0 + b"\xff\xd9"
-
-
-def _make_wav(channels: int, rate: int, frames: int) -> bytes:
-    buf = io.BytesIO()
-    with _wave.open(buf, "wb") as w:
-        w.setnchannels(channels)
-        w.setsampwidth(2)
-        w.setframerate(rate)
-        w.writeframes(bytes(2 * channels * frames))
-    return buf.getvalue()
-
-
-_GIF_W, _GIF_H = 11, 7
-_GIF_INDICES = bytes(
-    (x * 5 + y * 3) % 256 for y in range(_GIF_H) for x in range(_GIF_W)
-)
-
-
-def _make_gif() -> bytes:
-    # real single-frame GIF via the spec-mirroring LZW encoder the
-    # codec unit tests validate against the package decoder
-    from tests.test_codecs import _make_gif as mk
-
-    return mk(_GIF_W, _GIF_H, _GIF_INDICES)
-
-
-_JPG_W, _JPG_H = 19, 9
-_JPG_PIXELS = bytes(
-    (5 * x + 9 * y) % 256 for y in range(_JPG_H) for x in range(_JPG_W)
-)
-
-
-def _make_real_jpeg() -> bytes:
-    # real baseline JPEG via the test encoder validated in
-    # tests/test_jpeg_codec.py against the package decoder
-    from tests.test_jpeg_codec import _encode_gray_jpeg
-
-    return _encode_gray_jpeg(_JPG_W, _JPG_H, _JPG_PIXELS)
-
-
-_AVI_W, _AVI_H, _AVI_NFRAMES = 16, 8, 3
-_AVI_PLANES = [
-    bytes(
-        (i * 40 + 3 * x + 5 * y) % 256
-        for y in range(_AVI_H)
-        for x in range(_AVI_W)
-    )
-    for i in range(_AVI_NFRAMES)
-]
-
-
-def _make_avi_payload() -> bytes:
-    from tests.test_jpeg_codec import _encode_gray_jpeg, _make_avi
-
-    return _make_avi(
-        _AVI_W, _AVI_H,
-        [_encode_gray_jpeg(_AVI_W, _AVI_H, p) for p in _AVI_PLANES],
-    )
-
-
-def _make_progressive_jpeg() -> bytes:
-    # real PROGRESSIVE (SOF2) JPEG — spectral selection + successive
-    # approximation — via the test encoder validated in
-    # tests/test_jpeg_codec.py against the package decoder
-    from tests.test_jpeg_codec import _FULL_SCANS, _encode_gray_progressive
-
-    return _encode_gray_progressive(_JPG_W, _JPG_H, _JPG_PIXELS, _FULL_SCANS)
-
-
-def _make_dib_avi_payload() -> bytes:
-    # uncompressed BI_RGB AVI (builder validated in tests/test_codecs.py)
-    from tests.test_codecs import _make_dib_avi
-
-    return _make_dib_avi(_AVI_W, _AVI_H, _AVI_PLANES, 24)
-
-
 def _payloads() -> dict[str, bytes]:
     return {
         "a.png": encode_png_gray(_PNG_W, _PNG_H, _PNG_PIXELS),
-        # headers-only JPEG (no scan): real SOF dims, but pixel decode
-        # raises -> exercises the stub-fallback path
-        "b.jpg": _make_jpeg(40, 30),
         "c.pdf": b"%PDF-1.4 fake body",
-        "d.wav": _make_wav(1, 8000, 100),
-        "e.bin": b"\x00\x01mystery",  # unknown format → error row
-        "f.gif": _make_gif(),
-        "g.png": b"\x89PNG\r\n\x1a\n" + bytes(range(40)),  # corrupt body
-        "h.jpg": _make_real_jpeg(),  # full baseline scan -> real decode
-        "i.avi": _make_avi_payload(),  # MJPEG video, 3 frames
-        "j.jpg": _make_progressive_jpeg(),  # SOF2 multi-scan -> real decode
-        "k.avi": _make_dib_avi_payload(),  # uncompressed BI_RGB video
     }
 
 
@@ -145,66 +42,10 @@ def binary_dir():
 
 
 def test_binary_source_schema(spark, binary_dir):
-    df = readers.read_binary(spark, binary_dir)
+    df = spark.read.format("binaryFile").load(binary_dir)
     assert {"path", "content", "length"} <= set(df.columns)
-    assert df.count() == 11
-
-
-def test_decode_real_metadata(spark, binary_dir):
-    """decode_binary parses REAL per-format metadata (PNG IHDR, JPEG
-    SOF, GIF screen descriptor, stdlib wave) and turns corrupt or
-    unknown payloads into in-band error rows (ref Workers.java:186-221)."""
-    df = readers.read_binary(spark, binary_dir)
-    out = multimodal.decode_binary(df).collect()
-    by_name = {os.path.basename(r.path): r for r in out}
-    png = by_name["a.png"]
-    assert (png.status, png.modality, png.format) == ("ok", "image", "png")
-    assert (png.width, png.height) == (_PNG_W, _PNG_H)
-    jpg = by_name["b.jpg"]
-    assert (jpg.status, jpg.format) == ("ok", "jpeg")
-    assert (jpg.width, jpg.height) == (40, 30)
-    gif = by_name["f.gif"]
-    assert (gif.status, gif.width, gif.height) == ("ok", 11, 7)
-    wav = by_name["d.wav"]
-    assert (wav.status, wav.modality) == ("ok", "audio")
-    assert (wav.n_channels, wav.sample_rate, wav.n_frames) == (1, 8000, 100)
-    assert by_name["a.png"].n_channels is None  # audio fields null elsewhere
-    pdf = by_name["c.pdf"]
-    assert (pdf.status, pdf.modality) == ("ok", "document")
-    assert pdf.width is None  # no intrinsic raster dims
-    # In-band error channel: unknown format AND corrupt known format
-    # are status rows, not exceptions.
-    assert by_name["e.bin"].status == "error"
-    assert by_name["e.bin"].error.startswith("Error:")
-    assert by_name["e.bin"].byte_len == 9
-    assert by_name["g.png"].status == "error"  # magic ok, body corrupt
-    real_jpg = by_name["h.jpg"]
-    assert (real_jpg.status, real_jpg.width, real_jpg.height) == ("ok", _JPG_W, _JPG_H)
-    avi = by_name["i.avi"]
-    assert (avi.status, avi.modality, avi.format) == ("ok", "video", "avi")
-    assert (avi.width, avi.height, avi.n_frames) == (_AVI_W, _AVI_H, _AVI_NFRAMES)
-
-
-def test_byte_histogram_features(spark, binary_dir):
-    df = readers.read_binary(spark, binary_dir)
-    feats = multimodal.byte_histogram_features(df).collect()
-    assert len(feats) == 11
-    for r in feats:
-        assert len(r.features) == 16
-        assert abs(sum(r.features) - 1.0) < 1e-9  # normalized
-        assert r.byte_len > 0
-
-
-def test_frame_sample_explodes(spark, binary_dir):
-    df = readers.read_binary(spark, binary_dir)
-    frames = multimodal.frame_sample(df, every_n_bytes=64)
-    rows = frames.collect()
-    assert len(rows) >= 5  # at least one frame per file
-    png = [r for r in rows if r.path.endswith("a.png")]
-    assert [r.frame_idx for r in sorted(png, key=lambda r: r.frame_idx)] == list(
-        range(len(png))
-    )
-    assert all(r.byte_offset == r.frame_idx * 64 for r in png)
+    assert dict(df.dtypes)["content"] == "binary"
+    assert df.count() == len(_payloads())
 
 
 def _make_pdf(compress: bool) -> bytes:
@@ -261,7 +102,7 @@ def test_pdf_to_text_operator(spark, binary_dir):
     pdf_path = os.path.join(ART, "real.pdf")
     with open(pdf_path, "wb") as f:
         f.write(_make_pdf(compress=True))
-    df = readers.read_binary(spark, binary_dir)
+    df = spark.read.format("binaryFile").load(binary_dir)
     out = {os.path.basename(r.path): r for r in multimodal.pdf_to_text(df).collect()}
     assert out["real.pdf"].status == "ok"
     assert "Hello" in out["real.pdf"].text
@@ -282,7 +123,7 @@ def test_pdf_to_html_operator(spark, binary_dir):
     pdf_path = os.path.join(ART, "real.pdf")
     with open(pdf_path, "wb") as f:
         f.write(_make_pdf(compress=True))
-    df = readers.read_binary(spark, binary_dir)
+    df = spark.read.format("binaryFile").load(binary_dir)
     out = {os.path.basename(r.path): r for r in multimodal.pdf_to_html(df).collect()}
     row = out["real.pdf"]
     assert row.status == "ok"
@@ -292,71 +133,6 @@ def test_pdf_to_html_operator(spark, binary_dir):
     assert "<script" not in row.html
     assert out["a.png"].status == "error"
     os.remove(pdf_path)
-
-
-def test_resize_image_real_and_stub_paths(spark, binary_dir):
-    """Resize: the gray-PNG payload goes through the REAL chain (pixel
-    decode → nearest-neighbor resample → PNG re-encode — the output is
-    itself a decodable PNG of the target size, with resampled pixel
-    values from the source raster); JPEG/GIF get true header dims but a
-    stub pixel plane; non-image payloads are in-band error rows."""
-    from project_map_reduce_spark.operators.rasterize import decode_png_gray
-
-    df = readers.read_binary(spark, binary_dir)
-    rows = {
-        os.path.basename(r.path): r
-        for r in multimodal.resize_image(df, width=8, height=6).collect()
-    }
-    png = rows["a.png"]
-    assert (png.status, png.decoder) == ("ok", "stdlib-png")
-    assert (png.src_width, png.src_height) == (_PNG_W, _PNG_H)
-    w, h, pix = decode_png_gray(bytes(png.content))
-    assert (w, h) == (8, 6)
-    # nearest-neighbor: output (0,0) is source (0,0); output (x,y) is
-    # source (x*W//8, y*H//6)
-    assert pix[0] == _PNG_PIXELS[0]
-    assert pix[8 * 3 + 2] == _PNG_PIXELS[(3 * _PNG_H // 6) * _PNG_W
-                                         + (2 * _PNG_W // 8)]
-    jpg = rows["b.jpg"]  # headers-only: pixel decode raises -> stub
-    assert (jpg.status, jpg.decoder) == ("ok", "stub")
-    assert (jpg.src_width, jpg.src_height) == (40, 30)  # REAL header dims
-    assert len(jpg.content) == 8 * 6  # stub raster, raw bytes
-    rj = rows["h.jpg"]  # full baseline scan: REAL Huffman+IDCT decode
-    assert (rj.status, rj.decoder) == ("ok", "stdlib-jpeg")
-    assert (rj.src_width, rj.src_height) == (_JPG_W, _JPG_H)
-    jw, jh, jpix = decode_png_gray(bytes(rj.content))
-    assert (jw, jh) == (8, 6)
-    # nearest-neighbor of the true decoded luma (unit quant -> error <=3)
-    assert abs(jpix[0] - _JPG_PIXELS[0]) <= 3
-    pj = rows["j.jpg"]  # PROGRESSIVE (SOF2): REAL multi-scan decode
-    assert (pj.status, pj.decoder) == ("ok", "stdlib-jpeg")
-    assert (pj.src_width, pj.src_height) == (_JPG_W, _JPG_H)
-    # same source pixels as h.jpg → identical resized output bytes
-    # (progressive reassembles the exact baseline coefficients)
-    assert bytes(pj.content) == bytes(rj.content)
-    gif = rows["f.gif"]  # GIF pixel decode is REAL (LZW + palette)
-    assert (gif.status, gif.decoder) == ("ok", "stdlib-gif")
-    assert (gif.src_width, gif.src_height) == (_GIF_W, _GIF_H)
-    gw, gh, gpix = decode_png_gray(bytes(gif.content))
-    assert (gw, gh) == (8, 6)
-    # nearest-neighbor from the true decoded GIF raster (gray palette:
-    # luminance(palette[i]) == i for the 8-bit grayscale ramp)
-    assert gpix[0] == _GIF_INDICES[0]
-    assert rows["c.pdf"].status == "error"  # document, not image
-    assert "not an image" in rows["c.pdf"].error
-    assert rows["g.png"].status == "error"  # corrupt body caught by CRC
-    with pytest.raises(ValueError):
-        multimodal.resize_image(df, width=0, height=6)
-    # determinism: same payloads -> identical output bytes
-    again = {
-        os.path.basename(r.path): r.content
-        for r in multimodal.resize_image(df, width=8, height=6).collect()
-        if r.status == "ok"
-    }
-    assert {
-        os.path.basename(r.path): r.content
-        for r in rows.values() if r.status == "ok"
-    } == again
 
 
 def test_fetch_url_bytes(spark, binary_dir):
@@ -391,8 +167,9 @@ def test_task_line_source(spark, binary_dir):
 def test_reference_pipeline_end_to_end(spark, binary_dir):
     """The reference's whole dataflow (A1→A12), with every stage real:
     task lines → per-row URL fetch → PDF text extraction → per-status
-    summary. This is what Workers.java + Manager.java do with a queue
-    and a gather loop, as three chained distributed maps + one agg."""
+    summary → report sink. This is what Workers.java + Manager.java do
+    with a queue and a gather loop, as three chained distributed maps +
+    one agg, and LocalApp.java's HTML report."""
     from pyspark.sql import functions as F
 
     pdf_a = os.path.join(ART, "e2e_a.pdf")
@@ -417,6 +194,24 @@ def test_reference_pipeline_end_to_end(spark, binary_dir):
     assert summary == {"ok": 1, "error": 2}  # dead link + non-PDF payload
     ok = texts.filter(F.col("status") == "ok").collect()[0]
     assert "Hello" in ok.text
+
+    # A12: the report of the fetch keeps every row in parquet, and the
+    # dead link's error text (it carries "<urlopen error …>") is escaped
+    # in the HTML, like the title
+    report = os.path.join(ART, "e2e_report")
+    fetch_report = fetched.select("url", "status", "error")
+    readers.write_report(fetch_report, report, title="fetch <report>")
+    (dead,) = [r.error for r in fetch_report.collect() if r.status == "error"]
+    assert "<urlopen error" in dead
+    with open(report + ".html", encoding="utf-8") as f:
+        page = f.read()
+    assert f"<td>{html.escape(dead)}</td>" in page
+    assert "<urlopen" not in page
+    assert "<h1>fetch &lt;report&gt;</h1>" in page
+    stored = spark.read.parquet(report + ".parquet")
+    assert sorted(map(tuple, stored.collect())) == sorted(
+        map(tuple, fetch_report.collect())
+    )
     os.remove(pdf_a)
     os.remove(task_file)
 
@@ -425,17 +220,12 @@ def test_png_encoder_roundtrip():
     """encode_png_gray emits a spec-valid PNG (signature, CRC-framed
     chunks, filter-0 zlib scanlines) that the matching reader — and by
     construction any compliant reader — decodes byte-exactly."""
-    from project_map_reduce_spark.operators.rasterize import (
-        decode_png_gray,
-        encode_png_gray,
-    )
-
     w, h = 7, 5
     pixels = bytes((x * 37 + y * 11) % 256 for y in range(h) for x in range(w))
     png = encode_png_gray(w, h, pixels)
     assert png[:8] == b"\x89PNG\r\n\x1a\n"
     assert png.endswith(b"IEND" + png[-4:])
-    assert decode_png_gray(png) == (w, h, pixels)
+    assert codecs.decode_png_gray8(png) == (w, h, pixels)
     # deterministic: same input, byte-identical file (idempotent sinks)
     assert encode_png_gray(w, h, pixels) == png
     with pytest.raises(ValueError):
@@ -465,174 +255,22 @@ def test_pdf_to_image_operator(spark, binary_dir):
     text → rasterized page → valid PNG bytes, per-record errors
     in-band. Round-trips through the stdlib decoder: dimensions match
     the IHDR, ink pixels exist for non-empty text."""
-    from project_map_reduce_spark.operators.rasterize import decode_png_gray
-
     pdf_path = os.path.join(ART, "img.pdf")
     with open(pdf_path, "wb") as f:
         f.write(_make_pdf(compress=True))
-    df = readers.read_binary(spark, binary_dir)
+    df = spark.read.format("binaryFile").load(binary_dir)
     out = {os.path.basename(r.path): r for r in multimodal.pdf_to_image(df).collect()}
 
     ok = out["img.pdf"]
     assert ok.status == "ok" and ok.error is None
-    w, h, pixels = decode_png_gray(bytes(ok.png))
+    w, h, pixels = codecs.decode_png_gray8(bytes(ok.png))
     assert (w, h) == (ok.width, ok.height)
     assert pixels.count(0) > 0  # rendered ink
     # c.pdf: magic but no stream → empty text → blank page, still ok
     blank = out["c.pdf"]
     assert blank.status == "ok"
-    bw, bh, bpix = decode_png_gray(bytes(blank.png))
+    bw, bh, bpix = codecs.decode_png_gray8(bytes(blank.png))
     assert (bw, bh) == (blank.width, blank.height) and bpix.count(0) == 0
     # non-PDF payloads land on the error channel, not as exceptions
     assert out["a.png"].status == "error" and out["a.png"].png is None
     os.remove(pdf_path)
-
-
-def test_wav_features_real_signal(spark, binary_dir):
-    """wav_features is fully real: a synthesized 440 Hz sine must come
-    back with dominant_hz == 440 (exact — the tone is an integer number
-    of cycles over the window), rms == amplitude/sqrt(2), and the
-    zero-crossing rate of 2 crossings per cycle."""
-    import math
-
-    rate, secs, freq, amp = 8000, 1, 440, 0.5
-    n = rate * secs
-    buf = io.BytesIO()
-    with _wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(rate)
-        w.writeframes(
-            b"".join(
-                struct.pack(
-                    "<h", int(amp * 32767 * math.sin(2 * math.pi * freq * i / rate))
-                )
-                for i in range(n)
-            )
-        )
-    tone = os.path.join(ART, "tone.wav")
-    with open(tone, "wb") as f:
-        f.write(buf.getvalue())
-    try:
-        df = readers.read_binary(spark, binary_dir)
-        rows = {
-            os.path.basename(r.path): r
-            for r in multimodal.wav_features(df).collect()
-        }
-        t = rows["tone.wav"]
-        assert t.status == "ok"
-        assert (t.n_channels, t.sample_rate, t.n_frames) == (1, rate, n)
-        assert abs(t.dominant_hz - freq) < 1e-9
-        assert abs(t.rms - amp / math.sqrt(2)) < 1e-3
-        assert abs(t.zero_cross_rate - 2 * freq / rate) < 1e-3
-        # non-WAV payloads are in-band error rows, never failures
-        assert rows["a.png"].status == "error"
-        # the all-zero fixture wav: silence has no dominant tone claim,
-        # but decodes fine with rms 0
-        assert rows["d.wav"].status == "ok" and rows["d.wav"].rms == 0.0
-    finally:
-        os.remove(tone)
-
-
-def test_video_frames_real_demux_and_decode(spark, binary_dir):
-    """REAL video frame extraction, end to end on Spark: the MJPEG AVI
-    payload demuxes to its true frame offsets (audio chunks skipped),
-    per-frame JPEG dims are parsed, and slicing content at the reported
-    (byte_offset, frame_len) yields frames our decoder returns to their
-    source pixels. Non-video payloads are in-band error rows."""
-    import numpy as np
-
-    from project_map_reduce_spark.operators.jpeg import decode_jpeg_gray
-
-    df = readers.read_binary(spark, binary_dir)
-    rows = multimodal.video_frames(df).collect()
-    by_path = {}
-    for r in rows:
-        by_path.setdefault(os.path.basename(r.path), []).append(r)
-    frames = sorted(by_path["i.avi"], key=lambda r: r.frame_idx)
-    assert [r.frame_idx for r in frames] == [0, 1, 2]
-    assert all(r.status == "ok" for r in frames)
-    assert all(
-        (r.frame_width, r.frame_height) == (_AVI_W, _AVI_H) for r in frames
-    )
-    payload = _payloads()["i.avi"]
-    for r, plane in zip(frames, _AVI_PLANES):
-        jpg = payload[r.byte_offset : r.byte_offset + r.frame_len]
-        w, h, out = decode_jpeg_gray(jpg)
-        assert (w, h) == (_AVI_W, _AVI_H)
-        err = np.abs(
-            np.frombuffer(out, np.uint8).astype(int)
-            - np.frombuffer(plane, np.uint8).astype(int)
-        )
-        assert err.max() <= 3
-    # every-other-frame sampling keeps frame_idx 0 and 2
-    sampled = [
-        r for r in multimodal.video_frames(df, every_n=2).collect()
-        if r.path.endswith("i.avi")
-    ]
-    assert sorted(r.frame_idx for r in sampled) == [0, 2]
-    # non-AVI payloads: one error row each, never a task failure
-    assert all(
-        rs[0].status == "error"
-        for name, rs in by_path.items()
-        if name not in ("i.avi", "k.avi")
-    )
-
-
-def test_video_frames_dib_demux_and_decode(spark, binary_dir):
-    """Uncompressed-DIB AVI, end to end on Spark — the MJPEG test's
-    mirror for the other codec-library-free video path: '00db' frames
-    demux to true offsets, per-frame dims come from the strf stream
-    format (no JPEG header exists to parse), and slicing content at
-    (byte_offset, frame_len) decodes LOSSLESSLY back to the source
-    gray planes via codecs.decode_dib_gray."""
-    from project_map_reduce_spark.operators import codecs
-
-    df = readers.read_binary(spark, binary_dir)
-    rows = [
-        r for r in multimodal.video_frames(df).collect()
-        if r.path.endswith("k.avi")
-    ]
-    frames = sorted(rows, key=lambda r: r.frame_idx)
-    assert [r.frame_idx for r in frames] == [0, 1, 2]
-    assert all(r.status == "ok" for r in frames)
-    assert all(
-        (r.frame_width, r.frame_height) == (_AVI_W, _AVI_H) for r in frames
-    )
-    payload = _payloads()["k.avi"]
-    handler, bits, w, h = codecs.avi_stream_format(payload)
-    assert (handler, bits, w, h) == ("DIB ", 24, _AVI_W, _AVI_H)
-    for r, plane in zip(frames, _AVI_PLANES):
-        dib = payload[r.byte_offset : r.byte_offset + r.frame_len]
-        assert codecs.decode_dib_gray(dib, w, h, bits) == (
-            _AVI_W, _AVI_H, plane,
-        )
-
-
-def test_arithmetic_jpeg_contract_stub_row(spark):
-    """Arithmetic-coded JPEG (SOF9/SOF10) is a DECLARED won't-fix
-    (operators/jpeg.py module docstring): the decoder raises its
-    arithmetic-specific error, and the multimodal chain degrades to
-    the contracted in-band row — status 'ok', decoder 'stub', TRUE
-    header dimensions from the SOF walk, deterministic raster."""
-    from tests.test_jpeg_codec import _encode_gray_jpeg
-
-    from project_map_reduce_spark.operators.jpeg import decode_jpeg_gray
-
-    w, h = 24, 16
-    pixels = bytes((5 * x + 3 * y) % 256 for y in range(h) for x in range(w))
-    base = _encode_gray_jpeg(w, h, pixels)
-    for sof in (b"\xc9", b"\xca"):  # sequential + progressive arithmetic
-        raw = base.replace(b"\xff\xc0", b"\xff" + sof)
-        with pytest.raises(ValueError, match="arithmetic-coded JPEG"):
-            decode_jpeg_gray(raw)
-        df = spark.createDataFrame(
-            [("mem://arith.jpg", bytearray(raw))],
-            "path string, content binary",
-        )
-        (row,) = multimodal.resize_image(df, width=8, height=6).collect()
-        assert (row.status, row.decoder) == ("ok", "stub")
-        assert (row.src_width, row.src_height) == (w, h)
-        assert len(row.content) == 8 * 6
-        (again,) = multimodal.resize_image(df, width=8, height=6).collect()
-        assert bytes(again.content) == bytes(row.content)

@@ -868,12 +868,15 @@ def test_cogroup_asof_plan_and_equivalence(spark, sf_dir):
 
 
 def test_pyds_stream_sink_kill_replay_exactly_once(spark, tmp_path):
-    """Crash-replay for the custom stream sink: stop the query after
-    the first epoch commits (epoch 2 possibly mid-write), restart from
-    the same checkpoint, and the final ledger must cover every staged
-    row exactly once — orphan parts from the killed attempt may sit on
-    disk but are never manifest-listed, which is why readers take only
-    listed parts."""
+    """Crash-replay for the custom stream sink: stop the query once
+    batch 1 is in the offset log (epoch 1 possibly mid-write), restart
+    from the same checkpoint, and the final ledger must cover every
+    staged row exactly once — orphan parts from the killed attempt may
+    sit on disk but are never manifest-listed, which is why readers take
+    only listed parts. Waiting for ``offsets/1`` rather than the first
+    manifest pins batch 1 to file b1 alone: a stop between the file
+    source's log write and the offset-log write would let the restart
+    fold b1 and b2 into one epoch."""
     import glob
     import os
     import time
@@ -902,11 +905,7 @@ def test_pyds_stream_sink_kill_replay_exactly_once(spark, tmp_path):
 
     q = start_stream()
     deadline = time.time() + 120
-    while time.time() < deadline:
-        if os.path.isdir(out) and any(
-            f.startswith("_MANIFEST-") for f in os.listdir(out)
-        ):
-            break
+    while time.time() < deadline and not os.path.exists(f"{ckpt}/offsets/1"):
         time.sleep(0.05)
     q.stop()
     q.awaitTermination(60)

@@ -35,7 +35,7 @@ def test_partitioned_write_prunes_at_scan(spark):
         (F.col("id") * 2.0).alias("v"),
     )
     path = os.path.join(ART, "part_tbl")
-    sinks.write_partitioned(df, path, ["bucket_day"])
+    df.write.partitionBy("bucket_day").mode("overwrite").parquet(path)
     back = spark.read.parquet(path).filter(F.col("bucket_day") == "2")
     plan = _physical_plan(back)
     # the partition filter must be applied at the file index, not post-scan
@@ -86,13 +86,12 @@ def test_orc_round_trip_pushdown_and_pruning(spark, tmp_path):
     """ORC sink → ORC source round-trip preserves values and types, and
     the read plan shows the same scan contract as parquet: predicate
     pushdown into the ORC reader and column pruning."""
-    from project_map_reduce_spark.sources import readers
     from project_map_reduce_spark.tables import load
 
     src = load(spark, os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001"), "orders")
     path = str(tmp_path / "orders_orc")
-    readers.write_orc(src, path)
-    back = readers.read_orc(spark, path)
+    src.write.mode("overwrite").option("compression", "zstd").orc(path)
+    back = spark.read.orc(path)
     assert back.schema == src.schema
     assert back.count() == src.count()
     a = sorted(map(tuple, src.select("o_orderkey", "o_totalprice").collect()))
@@ -151,10 +150,9 @@ def test_streaming_sink_is_idempotent_exactly_once(spark, sf_dir, tmp_path):
 
 
 def test_csv_roundtrip_with_schema_and_corrupt_row(spark, sf_dir, tmp_path):
-    """read_csv: schema-first read round-trips values exactly; PERMISSIVE
+    """Schema-first CSV read round-trips values exactly; PERMISSIVE
     mode keeps a malformed row as data (nulls) instead of failing the
     job — the in-band discipline (ref A7) at the source layer."""
-    from project_map_reduce_spark.sources.readers import read_csv
     from project_map_reduce_spark.tables import load
 
     path = str(tmp_path / "cust_csv")
@@ -166,8 +164,10 @@ def test_csv_roundtrip_with_schema_and_corrupt_row(spark, sf_dir, tmp_path):
     # file-status cache; header=true means each file's first line skips)
     with open(os.path.join(path, "zz_bad.csv"), "w") as f:
         f.write("c_custkey,c_name,c_acctbal\nnot_a_number,onlytwo\n")
-    got = read_csv(
-        spark, path, "c_custkey bigint, c_name string, c_acctbal double"
+    got = (
+        spark.read.option("header", "true").option("mode", "PERMISSIVE")
+        .schema("c_custkey bigint, c_name string, c_acctbal double")
+        .csv(path)
     )
     rows = got.collect()
     assert len(rows) == src.count() + 1
@@ -179,9 +179,8 @@ def test_csv_roundtrip_with_schema_and_corrupt_row(spark, sf_dir, tmp_path):
 
 
 def test_json_roundtrip_with_corrupt_record(spark, sf_dir, tmp_path):
-    """read_json: JSON-lines round-trip with explicit schema; a corrupt
+    """JSON-lines round-trip with explicit schema; a corrupt
     line lands in _corrupt_record, never a task failure."""
-    from project_map_reduce_spark.sources.readers import read_json
     from project_map_reduce_spark.tables import load
 
     path = str(tmp_path / "nation_json")
@@ -189,10 +188,11 @@ def test_json_roundtrip_with_corrupt_record(spark, sf_dir, tmp_path):
     src.coalesce(1).write.json(path)
     with open(os.path.join(path, "zz_bad.json"), "w") as f:
         f.write('{"n_nationkey": 99, "n_name": broken\n')
-    got = read_json(
-        spark,
-        path,
-        "n_nationkey bigint, n_name string, _corrupt_record string",
+    got = (
+        spark.read.option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", "_corrupt_record")
+        .schema("n_nationkey bigint, n_name string, _corrupt_record string")
+        .json(path)
     )
     rows = got.collect()
     corrupt = [r for r in rows if r._corrupt_record is not None]
