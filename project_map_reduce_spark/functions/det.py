@@ -9,12 +9,23 @@ canonical form as long as the pre-rounding values agree to well under
 1e-6 (true for all declared aggregates at test scale; columns that ever
 fail the hash get switched to an exact DECIMAL computation instead —
 see ``dec6``).
+
+The vector queries (k-means, IVF, embedding dedup, SemDeDup, IVF-PQ)
+hash-match DuckDB's ``list_dot_product`` only because every dot
+product and squared norm adds its products strictly left to right from
+0.0 and every 6-dp rounding of a kernel value is half away from zero on
+the exact binary expansion. The kernels below are the one place that
+order and that rounding are written: ``seq_dot`` (Catalyst),
+``seq_dots``/``seq_norm2``/``seq_dist2`` (numpy, inside Arrow UDFs),
+``r6_np`` (numpy rounding) and ``argmin6`` (JVM-side rounded argmin).
 """
 
 from __future__ import annotations
 
+from collections.abc import Sequence
 from decimal import Decimal
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -28,6 +39,85 @@ def r6(col: Column | str) -> Column:
 def r6d(col: Column | str, alias: str) -> Column:
     """round-to-6 + alias in one step (every computed column is aliased)."""
     return r6(col).alias(alias)
+
+
+def seq_dot(a: Column | str, b: Column | str) -> Column:
+    """Dot product of two double arrays as a Catalyst fold: products
+    added strictly left to right from 0.0 — the IEEE operation sequence
+    of DuckDB's ``list_dot_product``, so the two agree bit for bit."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x
+    )
+
+
+# The numpy kernels accumulate one dimension at a time into an n×k
+# buffer: each (row, centroid) cell sees the same adds in the same order
+# as ``seq_dot`` — 0.0 + x0·c0, then + x1·c1, … — with products that are
+# the same IEEE doubles (numpy fuses no multiply-add). An n×k×d cumsum
+# would give the same bits at d× the peak memory; np.dot / BLAS would
+# not (pairwise and blocked sums reorder the adds).
+def seq_dots(V: np.ndarray, M: np.ndarray) -> np.ndarray:
+    """n×k dot products of V's rows (n×d) with M's rows (k×d), each
+    bit-identical to ``seq_dot``."""
+    dots = np.zeros((V.shape[0], M.shape[0]), dtype=np.float64)
+    for j in range(V.shape[1]):
+        dots += V[:, j, None] * M[None, :, j]
+    return dots
+
+
+def seq_norm2(V: np.ndarray) -> np.ndarray:
+    """Squared norm of each row of V, bit-identical to ``seq_dot(v, v)``."""
+    nv = np.zeros(V.shape[0], dtype=np.float64)
+    for j in range(V.shape[1]):
+        nv += V[:, j] * V[:, j]
+    return nv
+
+
+def seq_dist2(V: np.ndarray, M: np.ndarray) -> np.ndarray:
+    """n×k squared distances ``‖v‖² − 2·v·c + ‖c‖²`` in the oracle's
+    operation order, ``nv - 2 * list_dot_product(v, c) + cc``."""
+    return seq_norm2(V)[:, None] - 2.0 * seq_dots(V, M) + seq_norm2(M)[None, :]
+
+
+def r6_np(x: np.ndarray) -> np.ndarray:
+    """Round a float64 array to 6 dp, half away from zero on each
+    double's exact binary expansion — DuckDB's ``round(x, 6)`` (the
+    oracle side), not numpy's half-even ``round`` and not Spark's
+    ``F.round``, which rounds the shortest decimal repr instead.
+
+    n = floor(|x|·10⁶ + ½) in 80-bit x86 long double is decision-exact:
+    x·10⁶'s fractional part is a multiple of 5⁶·2^(e−46) (x = M·2^(e−52)),
+    so a non-half fraction sits ≥ 2^(e−33) from ½, while the long-double
+    product's rounding error is ≤ 2^(e−43) — three decades of margin,
+    any x. An exact binary half (0.0078125·10⁶ = 7812.5) is exact in
+    long double and floor(x+½) rounds it away from zero, as
+    ROUND_HALF_UP does. n stays < 2⁵³ for |x| ≪ 9·10⁹, so float64(n)/1e6
+    is the one correctly-rounded division Decimal→float also performs.
+    """
+    micro = np.floor(
+        np.abs(x).astype(np.longdouble) * np.longdouble(1_000_000)
+        + np.longdouble(0.5)
+    ).astype(np.float64)
+    return np.copysign(micro, x) / 1e6
+
+
+def argmin6(d2: Column, ids: Sequence[int], offset: int = 0) -> Column:
+    """The id in ``ids`` whose distance ``d2[offset + i]`` is smallest
+    after ``round(·, 6)``, ties to the smaller id — the oracle's
+    ``ORDER BY round(dist2, 6), id`` rank-1 row. Rounding and argmin
+    stay JVM-side (codegen'd), so the 6-dp contract never crosses an
+    Arrow UDF boundary."""
+    return F.array_min(
+        F.array(
+            *[
+                F.struct(
+                    F.round(d2.getItem(offset + i), 6).alias("d"),
+                    F.lit(int(c)).cast("int").alias("id"),
+                )
+                for i, c in enumerate(ids)
+            ]
+        )
+    ).getField("id")
 
 
 # sum6 works in integer 1e-6 units. A double x with |x| < 2**23 whose

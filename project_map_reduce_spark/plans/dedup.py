@@ -17,17 +17,27 @@ Scale doctrine (the whole point of these shapes at 100 TB):
 - Exact dedup groups on the full text only at test scale; the
   fingerprint-first variant (group on md5 — q_doc_fingerprint) is the
   100 TB path: 32-byte shuffle keys instead of document bodies.
+
+The embedding-cosine kernels are functions/det.py's, which carry the
+argument for bit-identity with DuckDB's ``list_dot_product``.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from project_map_reduce_spark.functions.det import r6d
+from project_map_reduce_spark.functions.det import (
+    r6_np,
+    r6d,
+    seq_dot,
+    seq_dots,
+    seq_norm2,
+)
 from project_map_reduce_spark.registry import fmt_doc, register
-from project_map_reduce_spark.tables import load
+from project_map_reduce_spark.tables import load, pin
 
 # ---------------------------------------------------------------------------
 # Q43 — exact dedup
@@ -541,10 +551,6 @@ fmt_doc(minhash_lsh_ml_pairs, t=_FUZZY_MAX_DIST)
 
 _COS_THRESHOLD = 0.3
 
-# Sequential-fold dot product — bit-identical to DuckDB list_dot_product
-# (verified: max |Δ| = 0.0 over the fixture pairs).
-_DOT_SPARK = "aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (s, v) -> s + v)"
-
 # Row-block size for the within-block all-pairs cosine kernel: bounds
 # kernel memory at block·n doubles per buffer while the n² pair work
 # stays fully vectorized (guide §4.2 — hand whole batches to numpy).
@@ -553,40 +559,76 @@ _PAIR_ROW_BLOCK = 4096
 
 def _block_cos6(A, nrm, lo, hi, c0=0):
     """6-dp-rounded cosine of rows ``[lo, hi)`` against rows ``[c0, n)``
-    — bit-identical, cell for cell, to the Catalyst form it replaces,
-    ``round(aggregate(zip_with(a, b, *)) / (nrm_a * nrm_b), 6)``:
+    — bit-identical, cell for cell, to the oracle's
+    ``round(list_dot_product(a, b) / (a.nrm * b.nrm), 6)``: the dot is
+    ``seq_dots``, the norm product and the divide are the same two IEEE
+    ops, and ``r6_np`` rounds as DuckDB does (functions/det.py).
 
-    - the dot accumulates strictly left-to-right, one dimension at a
-      time (the kmeans._assign discipline) — the same IEEE add order
-      as the SQL fold and DuckDB's list_dot_product;
-    - the norm product and the divide are the same two IEEE ops;
-    - rounding quantizes the exact binary expansion with half-away-
-      from-zero via the long-double floor(|v|·10⁶ + ½) construction
-      whose decision-exactness argument lives in
-      plans/udfs.py::q_cogroup_asof — matching DuckDB's binary-based
-      round (the oracle), which the fixture-green Spark F.round output
-      already coincides with on every produced value.
-
-    ``c0`` (round-14) lets an a<b pair consumer skip the half-matrix it
-    would discard: a block starting at ``lo`` can never keep a column
-    ≤ lo, so passing ``c0 = lo + 1`` halves the kernel work with
-    IDENTICAL values for every surviving cell — each pair's cosine is
-    an element-wise computation, independent of which other columns are
+    ``c0`` lets an a<b pair consumer skip the half-matrix it would
+    discard: a block starting at ``lo`` can never keep a column ≤ lo,
+    so passing ``c0 = lo + 1`` halves the kernel work with IDENTICAL
+    values for every surviving cell — each pair's cosine is an
+    element-wise computation, independent of which other columns are
     present (bit-equality pinned in tests/test_llm_ops.py).
     """
-    import numpy as np
+    cos = seq_dots(A[lo:hi], A[c0:]) / (nrm[lo:hi, None] * nrm[None, c0:])
+    return r6_np(cos)
 
-    sub = A[lo:hi]
-    cols = A[c0:]
-    dots = np.zeros((hi - lo, cols.shape[0]), dtype=np.float64)
-    for j in range(A.shape[1]):
-        dots += sub[:, j, None] * cols[None, :, j]
-    cos = dots / (nrm[lo:hi, None] * nrm[None, c0:])
-    micro = np.floor(
-        np.abs(cos).astype(np.longdouble) * np.longdouble(1_000_000)
-        + np.longdouble(0.5)
-    ).astype(np.float64)
-    return np.copysign(micro, cos) / 1e6
+
+def _block_pairs(block: str):
+    """The ``applyInPandas`` body for within-block near-dup pairs: every
+    pair ``vec_a < vec_b`` of one ``block`` group whose 6-dp cosine is
+    ≥ the threshold, as ``(vec_a, vec_b, <block>, cos_sim)``. Norms are
+    ``sqrt(seq_norm2)`` of the block's rows — the oracle's
+    ``sqrt(list_dot_product(v, v))``.
+
+    One grouped numpy kernel per block (guide §4.2) in place of a pair
+    self-join that evaluated the interpreted Catalyst fold once per
+    candidate: the block key is still the only shuffle key, never a
+    crossJoin."""
+
+    def pairs(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("vec_id")
+        ids = pdf["vec_id"].to_numpy()
+        n_rows = len(ids)
+        out: list = []
+        if n_rows >= 2:
+            A = np.vstack(pdf["v"].to_numpy())
+            nrm = np.sqrt(seq_norm2(A))
+            key = pdf[block].iloc[0]
+            for lo in range(0, n_rows, _PAIR_ROW_BLOCK):
+                hi = min(lo + _PAIR_ROW_BLOCK, n_rows)
+                # Columns ≤ lo can never satisfy the a<b mask — skip
+                # them in the kernel (c0 = lo+1): half the pair work,
+                # identical values for every kept cell.
+                cos6 = _block_cos6(A, nrm, lo, hi, c0=lo + 1)
+                cols = np.arange(lo + 1, n_rows)
+                mask = (cos6 >= _COS_THRESHOLD) & (
+                    cols[None, :] > (lo + np.arange(hi - lo))[:, None]
+                )
+                r, c = np.nonzero(mask)
+                out.append(
+                    pd.DataFrame(
+                        {
+                            "vec_a": ids[r + lo],
+                            "vec_b": ids[c + lo + 1],
+                            block: key,
+                            "cos_sim": cos6[r, c],
+                        }
+                    )
+                )
+        if not out:
+            return pd.DataFrame(
+                {
+                    "vec_a": np.array([], dtype=np.int64),
+                    "vec_b": np.array([], dtype=np.int64),
+                    block: np.array([], dtype=np.int32),
+                    "cos_sim": np.array([], dtype=np.float64),
+                }
+            )
+        return pd.concat(out, ignore_index=True)
+
+    return pairs
 
 
 @register(
@@ -611,9 +653,7 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB shape: candidate pairs only within a cluster — ONE shuffle
     keyed on the cluster id brings each block to one task (grouped
-    numpy kernel, round-13; formerly an equi-join evaluating the
-    interpreted fold per pair), never a global crossJoin. Norms are
-    computed once per vector inside the kernel (same sequential fold).
+    numpy kernel, ``_block_pairs``), never a global crossJoin.
 
     Cost model (the sf1 probe's 9.8× at 10× rows is this, not a plan
     defect): within-block pair count is O(n²/k) for k blocks, so with
@@ -623,72 +663,16 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     does — Q84 produces exactly such labels), keeping per-block size
     roughly constant; per-block work is then flat and total work
     linear. Q99 (q_dedup_embedding_ivf) composes exactly that: the
-    same pair join blocked on COMPUTED k-means cells instead of the
+    same pair kernel blocked on COMPUTED k-means cells instead of the
     fixture label.
     """
-    import numpy as np
-    import pandas as pd
-
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id",
         "label",
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
     )
-
-    # Within-block all-pairs scoring as ONE grouped numpy kernel
-    # (round-13, guide §4.2): the former self-join evaluated the
-    # interpreted Catalyst fold once per candidate pair (k·d lambda
-    # dispatches each); the kernel computes the identical IEEE
-    # operation sequence (_block_cos6) over the whole block at once.
-    # The block equi-key (label) is still the only shuffle key — the
-    # FlatMapGroupsInPandas exchange replaces the pair-join exchange,
-    # blocking semantics unchanged, never a crossJoin.
-    def _label_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("vec_id")
-        ids = pdf["vec_id"].to_numpy()
-        n_rows = len(ids)
-        out_a: list = []
-        if n_rows >= 2:
-            A = np.vstack(pdf["v"].to_numpy())
-            nv = np.zeros(n_rows, dtype=np.float64)
-            for j in range(A.shape[1]):  # sequential — bit-matches the fold
-                nv += A[:, j] * A[:, j]
-            nrm = np.sqrt(nv)
-            lab = pdf["label"].iloc[0]
-            for lo in range(0, n_rows, _PAIR_ROW_BLOCK):
-                hi = min(lo + _PAIR_ROW_BLOCK, n_rows)
-                # Columns ≤ lo can never satisfy the a<b mask — skip
-                # them in the kernel (c0 = lo+1, round-14): half the
-                # pair work, identical values for every kept cell.
-                cos6 = _block_cos6(A, nrm, lo, hi, c0=lo + 1)
-                cols = np.arange(lo + 1, n_rows)
-                mask = (cos6 >= _COS_THRESHOLD) & (
-                    cols[None, :] > (lo + np.arange(hi - lo))[:, None]
-                )
-                r, c = np.nonzero(mask)
-                out_a.append(
-                    pd.DataFrame(
-                        {
-                            "vec_a": ids[r + lo],
-                            "vec_b": ids[c + lo + 1],
-                            "label": lab,
-                            "cos_sim": cos6[r, c],
-                        }
-                    )
-                )
-        if not out_a:
-            return pd.DataFrame(
-                {
-                    "vec_a": np.array([], dtype=np.int64),
-                    "vec_b": np.array([], dtype=np.int64),
-                    "label": np.array([], dtype=np.int32),
-                    "cos_sim": np.array([], dtype=np.float64),
-                }
-            )
-        return pd.concat(out_a, ignore_index=True)
-
     return e.groupBy("label").applyInPandas(
-        _label_pairs,
+        _block_pairs("label"),
         schema="vec_a bigint, vec_b bigint, label int, cos_sim double",
     )
 
@@ -734,19 +718,13 @@ def q_dedup_embedding_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     roughly constant, and total candidate-pair work stays LINEAR.
 
     Plan shape: {i} broadcast-model assignment passes (no shuffle of
-    vectors), then ONE shuffle keyed on the computed cell id feeding a
-    grouped all-pairs numpy kernel with the same pair
-    predicate/threshold as Q53 (round-13; formerly an equi-join
-    evaluating the interpreted fold per pair) — never a crossJoin. The
-    oracle
-    chains the shared k-means CTEs (plans/similarity.py::kmeans_ctes)
-    into the pair join, so assignment AND pairing are hash-checked as
-    one pipeline.
+    vectors), then ONE shuffle keyed on the computed cell id feeding
+    Q53's grouped all-pairs kernel (``_block_pairs``) — never a
+    crossJoin. The oracle chains the shared k-means CTEs
+    (plans/similarity.py::kmeans_ctes) into the pair join, so
+    assignment AND pairing are hash-checked as one pipeline.
     """
     from project_map_reduce_spark.operators.kmeans import lloyd_assignments
-
-    import numpy as np
-    import pandas as pd
 
     e = (
         load(spark, sf_dir, "embeddings")
@@ -756,65 +734,16 @@ def q_dedup_embedding_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
         )
     )
-    # Single consumer now (the grouped kernel below), so the assignment
-    # frame no longer needs the r7-era persist + swap-release machinery
-    # the two-sided self-join required: the CPU-bound pandas-UDF k-means
-    # scoring pass (operators/kmeans.py::_assign) executes exactly once.
+    # Single consumer (the grouped kernel below): the CPU-bound
+    # pandas-UDF k-means scoring pass executes exactly once unpinned.
     n = lloyd_assignments(e, k=_IVF_K, iters=_IVF_ITERS)
-
-    # Within-cell all-pairs scoring as ONE grouped numpy kernel
-    # (round-13, guide §4.2): the former self-join evaluated the
-    # interpreted Catalyst fold once per candidate pair; the kernel
-    # computes the identical IEEE operation sequence (_block_cos6) over
-    # the whole cell at once. The trained cell id is still the only
-    # shuffle key — FlatMapGroupsInPandas exchange in place of the
-    # pair-join exchange, blocking semantics unchanged, never a
-    # crossJoin. nrm = sqrt(nv) rides the kernel (nv is the exact
-    # fold-computed squared norm from lloyd_assignments).
-    def _cell_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("vec_id")
-        ids = pdf["vec_id"].to_numpy()
-        n_rows = len(ids)
-        out_a: list = []
-        if n_rows >= 2:
-            A = np.vstack(pdf["v"].to_numpy())
-            nrm = np.sqrt(pdf["nv"].to_numpy())
-            cell = pdf["cell"].iloc[0]
-            for lo in range(0, n_rows, _PAIR_ROW_BLOCK):
-                hi = min(lo + _PAIR_ROW_BLOCK, n_rows)
-                # Columns ≤ lo can never satisfy the a<b mask — skip
-                # them in the kernel (c0 = lo+1, round-14): half the
-                # pair work, identical values for every kept cell.
-                cos6 = _block_cos6(A, nrm, lo, hi, c0=lo + 1)
-                cols = np.arange(lo + 1, n_rows)
-                mask = (cos6 >= _COS_THRESHOLD) & (
-                    cols[None, :] > (lo + np.arange(hi - lo))[:, None]
-                )
-                r, c = np.nonzero(mask)
-                out_a.append(
-                    pd.DataFrame(
-                        {
-                            "vec_a": ids[r + lo],
-                            "vec_b": ids[c + lo + 1],
-                            "cell_id": cell,
-                            "cos_sim": cos6[r, c],
-                        }
-                    )
-                )
-        if not out_a:
-            return pd.DataFrame(
-                {
-                    "vec_a": np.array([], dtype=np.int64),
-                    "vec_b": np.array([], dtype=np.int64),
-                    "cell_id": np.array([], dtype=np.int32),
-                    "cos_sim": np.array([], dtype=np.float64),
-                }
-            )
-        return pd.concat(out_a, ignore_index=True)
-
-    return n.select("vec_id", "v", "nv", "cell").groupBy("cell").applyInPandas(
-        _cell_pairs,
-        schema="vec_a bigint, vec_b bigint, cell_id int, cos_sim double",
+    return (
+        n.select("vec_id", "v", F.col("cell").alias("cell_id"))
+        .groupBy("cell_id")
+        .applyInPandas(
+            _block_pairs("cell_id"),
+            schema="vec_a bigint, vec_b bigint, cell_id int, cos_sim double",
+        )
     )
 
 
@@ -887,9 +816,8 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe is ONE shuffle keyed on the computed cell id feeding a
     grouped all-pairs numpy kernel (Q99's blocked shape — never a
     crossJoin; k grows with the corpus so per-cell pair work stays
-    flat). The assignment frame is persisted across
-    its two consumers with Q99's swap-release discipline (one pinned
-    frame per session, spill-capable storage level).
+    flat). The assignment frame and the ledger base are pinned
+    (tables.py::pin) across their consumers.
     """
     from project_map_reduce_spark.operators.kmeans import lloyd_assignments
 
@@ -905,19 +833,12 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The final-round assignment has TWO consumers here — the centroid
     # aggregate (broadcast build) and the ledger base — and each would
     # re-execute the CPU-bound pandas-UDF scoring pass
-    # (operators/kmeans.py::_assign) over every vector. Persist it once
-    # with the same swap-release discipline as `base` below (round-13,
-    # guide §5 caching: reused AND expensive to recompute).
-    assigned = lloyd_assignments(
-        e.select("vec_id", "v"), k=_IVF_K, iters=_IVF_ITERS
-    ).persist()
-    prev_assigned = getattr(q_semdedup, "_cached_assigned", None)
-    if prev_assigned is not None:
-        try:
-            prev_assigned.unpersist(blocking=False)
-        except Exception:
-            pass
-    q_semdedup._cached_assigned = assigned
+    # (operators/kmeans.py::_assign) over every vector. Pin it once
+    # (guide §5 caching: reused AND expensive to recompute).
+    assigned = pin(
+        "q_semdedup.assigned",
+        lloyd_assignments(e.select("vec_id", "v"), k=_IVF_K, iters=_IVF_ITERS),
+    )
     cen = (
         assigned.select("cell", F.posexplode("v").alias("dim", "x"))
         .groupBy("cell", "dim")
@@ -929,28 +850,18 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda s: s.getField("x"),
             ).alias("cv")
         )
-        .withColumn(
-            "cnrm", F.expr("sqrt(" + _DOT_SPARK.format(a="cv", b="cv") + ")")
-        )
+        .withColumn("cnrm", F.sqrt(seq_dot("cv", "cv")))
     )
-    cen_dot = _DOT_SPARK.format(a="v", b="cv")
-    base = (
+    base = pin(
+        "q_semdedup.base",
         assigned.withColumn("nrm", F.sqrt("nv"))
         .join(F.broadcast(cen), "cell")
         .withColumn(
             "cen_cos",
-            F.round(F.expr(cen_dot) / (F.col("nrm") * F.col("cnrm")), 6),
+            F.round(seq_dot("v", "cv") / (F.col("nrm") * F.col("cnrm")), 6),
         )
-        .select("vec_id", "v", "cell", "nrm", "cen_cos")
-        .persist()
+        .select("vec_id", "v", "cell", "nrm", "cen_cos"),
     )
-    prev = getattr(q_semdedup, "_cached_base", None)
-    if prev is not None:
-        try:
-            prev.unpersist(blocking=False)
-        except Exception:
-            pass
-    q_semdedup._cached_base = base
 
     # Removal probe as ONE grouped numpy kernel per cell (round-13,
     # guide §4.2; formerly a directed self-join evaluating the
@@ -960,9 +871,6 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fold/round form) and better-rank predicate over the whole cell at
     # once and emits each removed vec_id exactly once (a vector lives
     # in exactly one cell, so no distinct step is needed).
-    import numpy as np
-    import pandas as pd
-
     def _cell_removed(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("vec_id")
         ids = pdf["vec_id"].to_numpy()

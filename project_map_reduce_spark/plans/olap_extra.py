@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from project_map_reduce_spark.functions.det import r6d
 from project_map_reduce_spark.registry import fmt_doc, register
-from project_map_reduce_spark.tables import load, local_rows
+from project_map_reduce_spark.tables import load, local_rows, pin
 
 _STATUSES = ("F", "O", "P")
 
@@ -1235,23 +1235,15 @@ def q_freq_itemsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumer (the ca/cb broadcasts each replanned the whole distinct
     # subtree) and the orderkey exchange happens once. Pair multiset
     # identical by construction: each order's distinct a < b part
-    # pairs exactly once. Swap-release persist (the Q99 discipline):
-    # the lazy result frame owns the cache; each call releases the
-    # previous call's frame.
-    baskets = (
+    # pairs exactly once. The lazy result frame reads the pinned
+    # baskets (tables.py::pin).
+    baskets = pin(
+        "q_freq_itemsets.baskets",
         load(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
-        .persist()
+        .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts")),
     )
-    prev = getattr(q_freq_itemsets, "_cached_baskets", None)
-    if prev is not None:
-        try:
-            prev.unpersist(blocking=False)
-        except Exception:  # stale frame from a stopped session
-            pass
-    q_freq_itemsets._cached_baskets = baskets
     n_orders = baskets.count()
     part_cnt = baskets.select(
         F.explode("parts").alias("l_partkey")

@@ -7,6 +7,8 @@ variant shows the scale shape: assign every vector to its nearest
 coarse centroid once (IVF cells), then restrict each query's search to
 its own cell — candidate volume drops by ~n_cells× and the expensive
 join becomes an equi-join on cell id that Catalyst hash-partitions.
+Every dot product, norm and rounded argmin is a functions/det.py
+kernel, which carries the argument for bit-identity with DuckDB.
 """
 
 from __future__ import annotations
@@ -15,15 +17,19 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from project_map_reduce_spark.functions.det import r6d
-from project_map_reduce_spark.operators.kmeans import lloyd
+from project_map_reduce_spark.functions.det import (
+    argmin6,
+    r6d,
+    seq_dist2,
+    seq_dot,
+    seq_dots,
+)
+from project_map_reduce_spark.operators.kmeans import lloyd, lloyd_models
 from project_map_reduce_spark.registry import fmt_doc, register
-from project_map_reduce_spark.tables import load
+from project_map_reduce_spark.tables import load, pin
 
 _QUERY_MOD = 50  # query set = vec_id % 50 == 0 (2% of vectors)
 _TOP_K = 5
-
-_DOT = "aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (s, v) -> s + v)"
 
 
 def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -39,27 +45,18 @@ def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
         )
     )
-    return e.withColumn("nrm", F.expr("sqrt(" + _DOT.format(a="v", b="v") + ")"))
+    return e.withColumn("nrm", F.sqrt(seq_dot("v", "v")))
 
 
 def _cell_assigner(cent_rows):
     """Max-cosine coarse assignment against a driver-held centroid
-    table, as one narrow Arrow projection (guide §4.1/§4.2).
-
-    Replaces the r12 ``crossJoin(broadcast(cents))`` + per-vector
-    ``row_number`` window (desc cent_sim, asc cell_id): that form paid
-    a {cells}× row blowup, an interpreted ``aggregate(zip_with(...))``
-    fold per (vector, centroid) pair, and a full shuffle+sort of the
-    blown-up table — and every consumer that derived its query set from
-    ``assigned`` planned the whole subtree TWICE. The centroid model is
-    O(cells·dims) driver state (the kmeans-seed discipline), so
-    assignment becomes a pure projection: per-cell cosines via strict
-    left-to-right per-dimension accumulation — the identical IEEE
-    operation sequence as the fold it replaces (the
-    ``operators/kmeans._assign`` discipline) — the same
-    ``dot / (nrm * cnrm)`` operation order, and ``np.argmax`` over the
-    cell_id-sorted centroid matrix, whose first-occurrence tie rule IS
-    the window's (desc sim, asc cell_id) rank-1 row.
+    table, as one narrow Arrow projection (guide §4.1/§4.2): the
+    centroid model is O(cells·dims) driver state, so assignment needs
+    no {cells}× crossJoin blowup, no per-pair interpreted fold and no
+    shuffle+sort for a per-vector window. Cosines are ``seq_dots`` over
+    the same ``dot / (nrm * cnrm)`` operation order as the oracle, and
+    ``np.argmax`` over the cell_id-sorted centroid matrix keeps the
+    first occurrence — the window's (desc sim, asc cell_id) rank-1 row.
     """
     import numpy as np
     from pyspark.sql.functions import pandas_udf
@@ -73,12 +70,7 @@ def _cell_assigner(cent_rows):
     def _cell(v: pd.Series, nrm: pd.Series) -> pd.Series:
         if len(v) == 0:
             return pd.Series([], dtype="int64")
-        vmat = np.asarray(v.tolist(), dtype=np.float64)
-        dots = np.zeros((vmat.shape[0], mat.shape[0]), dtype=np.float64)
-        # One dimension at a time, left to right — the same IEEE add
-        # order as the SQL fold / DuckDB's list_dot_product.
-        for j in range(mat.shape[1]):
-            dots += vmat[:, j, None] * mat[None, :, j]
+        dots = seq_dots(np.vstack(v.to_numpy()), mat)
         sims = dots / (nrm.to_numpy()[:, None] * cnrm[None, :])
         return pd.Series(cell_ids[np.argmax(sims, axis=1)])
 
@@ -140,7 +132,7 @@ def q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
             F.round(
-                F.expr(_DOT.format(a="qv", b="v")) / (F.col("qnrm") * F.col("nrm")), 6
+                seq_dot("qv", "v") / (F.col("qnrm") * F.col("nrm")), 6
             ).alias("cos_sim"),
         )
     )
@@ -261,7 +253,7 @@ def q_similarity_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v").alias("cv"),
         F.col("nrm").alias("cnrm"),
     )
-    sim_to_cent = F.expr(_DOT.format(a="v", b="cv")) / (
+    sim_to_cent = seq_dot("v", "cv") / (
         F.col("nrm") * F.col("cnrm")
     )
     wassign = Window.partitionBy("vec_id").orderBy(
@@ -287,7 +279,7 @@ def q_similarity_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
             F.round(
-                F.expr(_DOT.format(a="qv", b="v")) / (F.col("qnrm") * F.col("nrm")),
+                seq_dot("qv", "v") / (F.col("qnrm") * F.col("nrm")),
                 6,
             ).alias("cos_sim"),
         )
@@ -511,14 +503,7 @@ def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "label",
         "n_clipped",
-        F.round(
-            F.expr(
-                "aggregate(zip_with(diff, diff, (a, b) -> a * b),"
-                " 0D, (s, y) -> s + y)"
-            )
-            / F.expr("size(diff)"),
-            9,
-        ).alias("mse"),
+        F.round(seq_dot("diff", "diff") / F.size("diff"), 9).alias("mse"),
     )
 
 
@@ -763,23 +748,12 @@ def q_jl_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     v = F.col("vd")
-    zero = F.lit(0.0)
     norm = F.lit(dims_out**0.5)
     proj_cols = [
         F.struct(
             F.lit(j).alias("dim"),
             F.round(
-                F.aggregate(
-                    F.zip_with(
-                        v,
-                        F.array(*[F.lit(s) for s in signs[j]]),
-                        lambda x, s: x * s,
-                    ),
-                    zero,
-                    lambda a, x: a + x,
-                )
-                / norm,
-                6,
+                seq_dot(v, F.array(*[F.lit(s) for s in signs[j]])) / norm, 6
             ).alias("proj"),
         )
         for j in range(dims_out)
@@ -980,9 +954,8 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB shape: codebooks are O(model) driver state (4×8×16 doubles
     ≈ 4 KB) trained in {i} passes and baked into the plan; encode is
-    ONE Arrow batch crossing per partition (the kmeans._assign
-    pattern — numpy left-to-right accumulation, bit-identical to the
-    SQL fold, with ROUNDING and argmin kept JVM-side); the stored
+    ONE Arrow batch crossing per partition (``seq_dist2``, with the
+    rounding and argmin kept JVM-side by ``argmin6``); the stored
     index is {m} small ints per vector (vs 256 bytes of floats — the
     32× memory drop is why PQ exists); queries broadcast with their
     O(k·m) integer LUTs and candidates stay cell-restricted, so scan
@@ -1037,149 +1010,48 @@ def _ivf_pq_search(
             "cell_id",
             F.transform("cv", lambda x: F.round(x, 6)).alias("cvq"),
         )
-        # Persist the residual frame: it feeds THREE consumers
-        # (training sub-rows, the Lloyd seed collect, and the encode
-        # pass) — unpersisted, each re-ran the assignment UDF + join
-        # subtree (r13 before-plan evidence). Same swap-release
-        # discipline as q_semdedup's base frame.
-        assigned = (
-            assigned.join(F.broadcast(cvq), "cell_id")
-            .select(
+        # Pin the residual frame: it feeds the training set and the
+        # encode pass — unpinned, each re-ran the assignment UDF + join
+        # subtree (r13 before-plan evidence).
+        assigned = pin(
+            "ivf_pq.residual",
+            assigned.join(F.broadcast(cvq), "cell_id").select(
                 "vec_id",
                 F.zip_with("v", "cvq", lambda a, b: a - b).alias("v"),
                 "cell_id",
-            )
-            .persist()
+            ),
         )
-        prev = getattr(_ivf_pq_search, "_cached_residual", None)
-        if prev is not None:
-            try:
-                prev.unpersist(blocking=False)
-            except Exception:  # noqa: BLE001
-                pass
-        _ivf_pq_search._cached_residual = assigned
 
-    # --- codebook training: ALL subspaces in the SAME Lloyd pass (the
-    #     FAISS PQ trainer shape — one scan of the data per round
-    #     trains every codebook, not one scan per subspace): explode
-    #     each vector into (m, sub-vector) rows once, then each round
-    #     is one assign-projection + one (m, cell, dim) mean aggregate
-    #     with a single O(M·k·d) driver round-trip. Math is identical
-    #     per subspace to operators/kmeans.lloyd (6-dp model
-    #     quantization per round, dist2 ties on cell id), so the
-    #     per-subspace kmeans_ctes chains in the oracle replay it.
+    # --- codebook training: ALL subspaces in the SAME Lloyd pass
+    #     (operators/kmeans.py::lloyd_models keyed on the subspace m):
+    #     each vector explodes into (m, sub-vector) rows once, and each
+    #     round is one assign projection + one (m, cell, dim) mean
+    #     aggregate — per subspace exactly the kmeans_ctes chain the
+    #     oracle replays. Raw vectors come straight off the scan;
+    #     residuals ride the assignment.
+    #     Seeds: the first _PQ_K vec_ids — EXCEPT in residual form,
+    #     where the first _N_CELLS vec_ids ARE the IVF centroids and
+    #     their residuals are ~0 vectors; seeding from them collapses
+    #     every codebook onto the origin (coincident seeds degenerate
+    #     Lloyd). Residual seeds therefore start at vec_id = _N_CELLS,
+    #     mirrored exactly in the oracle's cent0 CTE.
     slices = F.array(
         *[F.slice("v", m * _PQ_SUB + 1, _PQ_SUB) for m in range(_PQ_M)]
     )
-    # No norm column here: _train_d2 recomputes the sub-vector norm
-    # inside its vectorized batch (ADVICE r12 — an interpreted HOF
-    # fold per row on the training input would be a dead column).
-    # Training input: raw vectors come straight off the scan (no need
-    # to ride the assignment window); residuals inherently do.
-    pqv = assigned.select("vec_id", "v") if residual else n.select("vec_id", "v")
-    subrows = pqv.select("vec_id", F.posexplode(slices).alias("m", "sv")).persist()
-    # Lloyd seeds: first {k} vec_ids — EXCEPT in residual form, where
-    # the first {c} vec_ids ARE the IVF centroids and their residuals
-    # are ~0 vectors; seeding from them collapses every codebook onto
-    # the origin (coincident seeds degenerate Lloyd). Residual seeds
-    # therefore start at vec_id = {c} (first non-centroid vectors),
-    # mirrored exactly in the oracle's cent0 CTE.
-    seed_lo = _N_CELLS if residual else 0
-    seed = pqv.filter(
-        (F.col("vec_id") >= seed_lo) & (F.col("vec_id") < seed_lo + _PQ_K)
-    ).select("vec_id", "v").collect()
-    cents: list[dict[int, list[float]]] = [
-        {
-            int(r["vec_id"]): [
-                float(x)
-                for x in r["v"][m * _PQ_SUB : (m + 1) * _PQ_SUB]
-            ]
-            for r in seed
-        }
-        for m in range(_PQ_M)
-    ]
-
-    def _seq_norm(c: list[float]) -> float:
-        nc = 0.0
-        for x in c:  # sequential — bit-matches the SQL fold
-            nc += x * x
-        return nc
-
-    for _ in range(_PQ_ITERS):
-        cellmats = [
-            np.asarray(
-                [cents[m][c] for c in sorted(cents[m])], dtype=np.float64
-            )
-            for m in range(_PQ_M)
-        ]
-        cellnorms = [
-            [_seq_norm(cents[m][c]) for c in sorted(cents[m])]
-            for m in range(_PQ_M)
-        ]
-
-        @pandas_udf("array<double>")
-        def _train_d2(mcol: pd.Series, sv: pd.Series) -> pd.Series:
-            marr = mcol.to_numpy()
-            vmat = np.asarray(sv.tolist(), dtype=np.float64)
-            out = [None] * len(marr)
-            for m in range(_PQ_M):
-                idx = np.nonzero(marr == m)[0]
-                if idx.size == 0:
-                    continue
-                sub = vmat[idx]
-                mat = cellmats[m]
-                nv = np.zeros(sub.shape[0], dtype=np.float64)
-                dots = np.zeros((sub.shape[0], mat.shape[0]), dtype=np.float64)
-                # Strict left-to-right accumulation, one dimension at
-                # a time — the same IEEE add order as the SQL fold.
-                for j in range(_PQ_SUB):
-                    nv += sub[:, j] * sub[:, j]
-                    dots += sub[:, j, None] * mat[None, :, j]
-                d2 = (
-                    nv[:, None]
-                    - 2.0 * dots
-                    + np.asarray(cellnorms[m])[None, :]
-                )
-                for row, i in enumerate(idx):
-                    out[i] = d2[row]
-            return pd.Series(out)
-
-        cell_case = None
-        for m in range(_PQ_M):
-            choices = [
-                F.struct(
-                    F.round(F.col("__td2").getItem(j), 6).alias("d"),
-                    F.lit(int(c)).cast("int").alias("cell"),
-                )
-                for j, c in enumerate(sorted(cents[m]))
-            ]
-            arm = F.array_min(F.array(*choices)).getField("cell")
-            cell_case = (
-                F.when(F.col("m") == m, arm)
-                if cell_case is None
-                else cell_case.when(F.col("m") == m, arm)
-            )
-        upd = (
-            subrows.withColumn("__td2", _train_d2("m", "sv"))
-            .withColumn("cell", cell_case)
-            .select("m", "cell", F.posexplode("sv").alias("dim", "x"))
-            .groupBy("m", "cell", "dim")
-            .agg(F.round(F.avg("x"), 6).alias("x"))
-            .collect()
-        )
-        cents = [dict() for _ in range(_PQ_M)]
-        for r in sorted(upd, key=lambda r: (r["m"], r["cell"], r["dim"])):
-            cents[r["m"]].setdefault(int(r["cell"]), []).append(float(r["x"]))
-    subrows.unpersist()
+    pqv = assigned if residual else n
+    books = lloyd_models(
+        pqv.select("vec_id", F.posexplode(slices).alias("m", "sv")),
+        k=_PQ_K,
+        iters=_PQ_ITERS,
+        key="m",
+        seed_lo=_N_CELLS if residual else 0,
+        vec_col="sv",
+    )
 
     # Codeword POSITION in the cell-sorted codebook (not the cell id)
     # is the code on both engines, so an emptied cell shifts nothing.
     mats = [
-        np.asarray([cents[m][c] for c in sorted(cents[m])], dtype=np.float64)
-        for m in range(_PQ_M)
-    ]
-    norms = [
-        [_seq_norm(cents[m][c]) for c in sorted(cents[m])]
+        np.asarray([books[m][c] for c in sorted(books[m])], dtype=np.float64)
         for m in range(_PQ_M)
     ]
     offs = [0]
@@ -1190,43 +1062,26 @@ def _ivf_pq_search(
     def _pq_d2(v: pd.Series) -> pd.Series:
         if len(v) == 0:
             return pd.Series([], dtype=object)
-        vmat = np.asarray(v.tolist(), dtype=np.float64)
-        blocks = []
-        for m in range(_PQ_M):
-            sub = vmat[:, m * _PQ_SUB : (m + 1) * _PQ_SUB]
-            mat = mats[m]
-            nv = np.zeros(sub.shape[0], dtype=np.float64)
-            dots = np.zeros((sub.shape[0], mat.shape[0]), dtype=np.float64)
-            # Strict left-to-right accumulation, one dimension at a
-            # time — the identical IEEE add order as DuckDB's
-            # list_dot_product fold (the kmeans._assign discipline).
-            for j in range(_PQ_SUB):
-                nv += sub[:, j] * sub[:, j]
-                dots += sub[:, j, None] * mat[None, :, j]
-            blocks.append(
-                nv[:, None] - 2.0 * dots + np.asarray(norms[m])[None, :]
-            )
-        d2 = np.concatenate(blocks, axis=1)
+        vmat = np.vstack(v.to_numpy())
+        d2 = np.concatenate(
+            [
+                seq_dist2(vmat[:, m * _PQ_SUB : (m + 1) * _PQ_SUB], mats[m])
+                for m in range(_PQ_M)
+            ],
+            axis=1,
+        )
         return pd.Series(list(d2))
 
     enc = assigned.withColumn("__d2", _pq_d2("v"))
     for m in range(_PQ_M):
-        k_m = mats[m].shape[0]
-        choices = [
-            F.struct(
-                F.round(F.col("__d2").getItem(offs[m] + j), 6).alias("d"),
-                F.lit(j).cast("int").alias("p"),
-            )
-            for j in range(k_m)
-        ]
         enc = enc.withColumn(
-            f"c{m}", F.array_min(F.array(*choices)).getField("p")
+            f"c{m}", argmin6(F.col("__d2"), range(mats[m].shape[0]), offs[m])
         )
-    # The encoded table IS the index — persist it so the query branch
+    # The encoded table IS the index — pin it so the query branch
     # (2% of rows, same encode) reads the cached codes instead of
-    # re-running the IVF window + Arrow crossing. At 100 TB this is
+    # re-running the IVF assignment + Arrow crossing. At 100 TB this is
     # the durable PQ index artifact a vector store writes once.
-    enc = enc.persist()
+    enc = pin("ivf_pq.enc", enc)
     neighbors = enc.select("vec_id", "cell_id", "c0", "c1", "c2", "c3")
 
     queries = enc.filter(F.col("vec_id") % _QUERY_MOD == 0)
@@ -1483,7 +1338,7 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     nv = base.withColumn(
-        "nrm", F.sqrt(F.expr(_DOT.format(a="vd", b="vd")))
+        "nrm", F.sqrt(seq_dot("vd", "vd"))
     )
     qv = F.broadcast(
         nv.filter(F.col("vec_id") % _QUERY_MOD == 0).select(
@@ -1506,7 +1361,7 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "neighbor_id",
             F.round(
-                F.expr(_DOT.format(a="qv", b="nvd"))
+                seq_dot("qv", "nvd")
                 / (F.col("qnrm") * F.col("nnrm")),
                 6,
             ).alias("cos_sim"),

@@ -22,7 +22,6 @@ plan over an executor-written sink — no driver gather anywhere
 from __future__ import annotations
 
 import datetime
-import os as _os
 import shutil
 import tempfile
 
@@ -368,23 +367,9 @@ def q_stream_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 # r11/r12 A/Bs pinned 8 (beat cores at every probed SF — per-batch
 # checkpoint commits scale with partitions × stores × batches); the
 # round-14 re-A/B after the staging fix confirmed the pin (see
-# OPTIMIZATION_r14.md). Env-overridable so the A/B is reproducible
-# without editing query bodies; on a cluster this is a deploy-time conf
-# sized to executors.
-def _stream_state_parts() -> str:
-    """``SPARK_GRAFT_STREAM_STATE_PARTS`` (default 8), read at each use
-    and validated here, so a bad override fails before the stream
-    starts instead of deep inside Spark."""
-    raw = _os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTS", "8")
-    try:
-        n = int(raw)
-    except ValueError:
-        n = 0
-    if n <= 0:
-        raise ValueError(
-            f"SPARK_GRAFT_STREAM_STATE_PARTS must be a positive integer, got {raw!r}"
-        )
-    return str(n)
+# OPTIMIZATION_r14.md). On a cluster this is a deploy-time conf sized
+# to executors.
+_STREAM_STATE_PARTS = 8
 
 
 _WM_DELAY_MIN = 45
@@ -658,7 +643,7 @@ def q_join_interval_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # while staying sublinear (sf0.1 5.6 s, sf1 7.0 s). On a real
     # cluster this is a deploy-time conf sized to executors; the code
     # pins the measured-best harness value.
-    parts = _shuffle_parts(_stream_state_parts())
+    parts = _shuffle_parts(_STREAM_STATE_PARTS)
     with _finite_stream(spark, "q_join_interval_stream", parts) as fs:
         snap = fs.run(_err_pur_join(fs.stage(*stages), "inner"), "append")
         return materialize(snap.select("err_id", "pur_id"), "pmrs_q101_final_")
@@ -855,7 +840,7 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     session-persistent append sink (SURVEY §4.2 — no driver gather).
     """
     ev0 = _events(spark, sf_dir, "user_id", "ts", "value", "event_id")
-    parts = _shuffle_parts(_stream_state_parts())
+    parts = _shuffle_parts(_STREAM_STATE_PARTS)
     with _finite_stream(spark, "q_stream_sessions", parts) as fs:
         agg = _session_agg(fs.stage(*_session_stages(ev0, flush=True)))
         snap = fs.run(agg, "append", sink=session_dir("pmrs_q112_sink_"))
@@ -950,7 +935,7 @@ def q_stream_state_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev0 = _events(spark, sf_dir, "user_id", "ts", "value", "event_id")
     conf = {
-        **_shuffle_parts(_stream_state_parts()),
+        **_shuffle_parts(_STREAM_STATE_PARTS),
         "spark.sql.streaming.stateStore.providerClass":
             "org.apache.spark.sql.execution.streaming.state."
             "RocksDBStateStoreProvider",
@@ -1048,7 +1033,7 @@ def q_state_reader_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lazily (statestore source), so it gets the session-persistent
     # lifecycle, not the workspace one.
     ckpt = session_dir("pmrs_q140_ckpt_")
-    parts = _shuffle_parts(_stream_state_parts())
+    parts = _shuffle_parts(_STREAM_STATE_PARTS)
     with _finite_stream(spark, "q_state_reader_audit", parts) as fs:
         agg = _session_agg(fs.stage(*_session_stages(ev0, flush=False)))
         finalized = fs.run(
@@ -1232,7 +1217,7 @@ def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Two join state stores per partition (Q101's measured rationale):
     # 8 state partitions beat cores at every probed SF.
-    parts = _shuffle_parts(_stream_state_parts())
+    parts = _shuffle_parts(_STREAM_STATE_PARTS)
     with _finite_stream(spark, "q_stream_outer_join", parts) as fs:
         stream = fs.stage(
             *chunks, ("sentinel", sentinel), ("spacer", ev.where(F.lit(False)))

@@ -14,13 +14,12 @@ arbitrary per-record logic with columnar in/out.
 
 from __future__ import annotations
 
-from decimal import ROUND_HALF_UP, Decimal
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from project_map_reduce_spark.functions.det import r6_np
 from project_map_reduce_spark.registry import register
 from project_map_reduce_spark.tables import load, register_views
 
@@ -426,9 +425,6 @@ def q_cogroup_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     trades group count against frame size; skewed keys get salted
     first (Q91) either way.
     """
-    import numpy as np
-    import pandas as pd
-
     ev = load(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
@@ -446,37 +442,19 @@ def q_cogroup_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
                 columns=["pur_id", "user_id", "pur_value", "last_err_id"]
             )
         p = purchases.sort_values(["ts", "event_id"], kind="mergesort")
-        # Rounding contract (ADVICE r10, reworded ADVICE r11 item 1):
-        # quantize the exact binary expansion of each double with
-        # ROUND_HALF_UP — matching DuckDB's binary-based round(x, 6)
-        # (the oracle this query hashes against), NOT Spark's F.round
-        # (BigDecimal.valueOf routes through the shortest-decimal
-        # repr) and NOT pandas .round (half-even). Round-13
-        # vectorization of the former per-row Decimal.quantize loop:
-        # n = floor(|v|·10⁶ + ½) computed in 80-bit x86 long double.
-        # Decision-exact: v·10⁶'s fractional part is a multiple of
-        # 5⁶·2^(e−46) (v = M·2^(e−52)), so a non-half fraction sits
-        # ≥ 2^(e−33) from ½, while the long-double product's rounding
-        # error is ≤ 2^(e−43) — three decades of margin, any v. An
-        # exact binary half (e.g. 0.0078125·10⁶ = 7812.5) is
-        # representable exactly in long double and floor(x+½) rounds
-        # it away from zero, same as ROUND_HALF_UP. n stays < 2⁵³
-        # (values ≪ 9·10⁹), so float64(n)/1e6 is the one correctly-
-        # rounded division Decimal→float also performs. Rounding must
-        # happen HERE, not in a Spark expression above the cogroup:
-        # Spark 4.1's column pruning mis-prunes the cogroup INPUT
-        # frames when any output column is wrapped in an expression
-        # (pinned in tests/test_round11_queries.py).
-        vals = p["value"].to_numpy()
-        micro = np.floor(
-            np.abs(vals).astype(np.longdouble) * np.longdouble(1_000_000)
-            + np.longdouble(0.5)
-        ).astype(np.float64)
+        # Rounding contract: r6_np quantizes each double's exact binary
+        # expansion half away from zero — DuckDB's round(x, 6), the
+        # oracle this query hashes against, not Spark's F.round and not
+        # pandas .round (half-even). Rounding must happen HERE, not in
+        # a Spark expression above the cogroup: Spark 4.1's column
+        # pruning mis-prunes the cogroup INPUT frames when any output
+        # column is wrapped in an expression (pinned in
+        # tests/test_round11_queries.py).
         out = pd.DataFrame(
             {
                 "pur_id": p["event_id"].to_numpy(),
                 "user_id": p["user_id"].to_numpy(),
-                "pur_value": np.copysign(micro, vals) / 1e6,
+                "pur_value": r6_np(p["value"].to_numpy()),
             }
         )
         if len(errors) == 0:

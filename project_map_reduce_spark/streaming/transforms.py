@@ -9,8 +9,11 @@ by counting gathered messages.
 
 State-size discipline at 100 TB: every streaming aggregation here is
 keyed by (window|session, low-cardinality key) and must be run with a
-watermark (``with_watermark``) so state is evicted; dedup keys expire
-with the watermark too.
+watermark (``withWatermark`` on an LTZ ``ts``, as
+plans/streaming_shaped.py::_events casts it) so state is evicted;
+streaming dedup keys expire with the watermark too
+(``dropDuplicatesWithinWatermark``, hash-checked by
+q_stream_dedup_watermark).
 """
 
 from __future__ import annotations
@@ -19,21 +22,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from project_map_reduce_spark.functions.det import r6d
-
-
-def with_watermark(df: DataFrame, delay: str = "10 minutes") -> DataFrame:
-    """Declare allowed event-time lateness (state-eviction horizon).
-
-    Spark's watermark tracker only accepts TIMESTAMP (LTZ); the events
-    fixture reads as TIMESTAMP_NTZ on Spark ≥4.1, so cast here. The
-    engine session pins the zone to UTC (session.py), making the cast
-    value-exact; streaming is a capability surface (no DuckDB oracle),
-    so the LTZ flavor never reaches a hash comparison.
-    """
-    ts_type = df.schema["ts"].dataType.simpleString()
-    if ts_type == "timestamp_ntz":
-        df = df.withColumn("ts", F.to_timestamp_ltz("ts"))
-    return df.withWatermark("ts", delay)
 
 
 def tumbling_counts(events: DataFrame) -> DataFrame:
@@ -96,20 +84,5 @@ def dedup_events(events: DataFrame) -> DataFrame:
     event_ids (the dedup the reference lacks — its visibility-timeout
     redelivery can double-count results, SURVEY.md §1.4). Batch form;
     under streaming the seen-keys state is unbounded — use
-    ``dedup_events_within_watermark`` there."""
+    ``dropDuplicatesWithinWatermark`` there."""
     return events.dropDuplicates(["event_id"])
-
-
-def dedup_events_within_watermark(events: DataFrame) -> DataFrame:
-    """Streaming dedup with BOUNDED state: redelivery only happens within
-    the delivery horizon (the reference's visibility timeout), so the
-    seen-keys state only needs to span the watermark delay —
-    ``dropDuplicatesWithinWatermark`` evicts everything older. State is
-    O(keys per horizon), not O(all keys ever) — the difference between a
-    streaming job that runs for a year and one that OOMs in a week.
-    Input must already carry a watermark (``with_watermark``).
-
-    Driver-hash-checked end to end by Q100
-    (plans/streaming_shaped.py::q_stream_dedup_watermark), including
-    the exact late-filter/state-expiry boundary semantics."""
-    return events.dropDuplicatesWithinWatermark(["event_id"])

@@ -10,7 +10,8 @@ Scratch files live here too, so one module decides where they go and
 when they are removed: ``scratch_dir`` for a layout a query builds and
 removes before it returns, ``localize`` to gather a small result off
 such a layout first, and ``session_dir``/``materialize`` for a result
-the returned DataFrame still reads.
+the returned DataFrame still reads. ``pin`` does the same for a
+cached frame: one per owner, released when the owner caches another.
 """
 
 from __future__ import annotations
@@ -22,6 +23,7 @@ import tempfile
 from collections.abc import Iterator
 from contextlib import contextmanager
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
@@ -138,6 +140,32 @@ def materialize(df: DataFrame, prefix: str) -> DataFrame:
     out = session_dir(prefix)
     df.write.mode("overwrite").parquet(out)
     return df.sparkSession.read.parquet(out)
+
+
+# owner -> the frame its last call pinned (one cache entry per owner).
+_PINNED: dict[str, DataFrame] = {}
+
+
+def pin(owner: str, df: DataFrame) -> DataFrame:
+    """Persist ``df`` as ``owner``'s cached frame and release the frame
+    the owner pinned before — the returned plan still reads ``df``, so
+    it cannot be unpersisted before the caller's action, and this keeps
+    at most one such frame per owner alive.
+
+    The previous frame is kept when it has the same plan: Spark's
+    CacheManager holds one entry per plan, so a rebuild of the same
+    query shares it, and unpersisting the old frame would drop the cache
+    the new one just asked for."""
+    df = df.persist()
+    prev = _PINNED.get(owner)
+    _PINNED[owner] = df
+    if prev is not None:
+        try:
+            if not prev.sameSemantics(df):
+                prev.unpersist(blocking=False)
+        except Py4JError:  # a frame from a stopped session
+            pass
+    return df
 
 
 def register_views(

@@ -33,9 +33,6 @@ ALLOWED_UNREACHED = {
     "operators/packing.py::pack_bins": "open: should q_pack_sequences use it",
     "operators/packing.py::packed_running_total":
         "open: should q_pack_sequences use it",
-    "streaming/transforms.py::with_watermark": "test-only streaming helper",
-    "streaming/transforms.py::dedup_events_within_watermark":
-        "test-only streaming helper",
 }
 
 

@@ -242,17 +242,24 @@ def test_semdedup_removal_rule(spark, sf_dir):
 
 
 def test_block_cos6_bit_matches_sequential_fold():
-    """The round-13 grouped pair kernel (_block_cos6) must be
-    BIT-identical to the Catalyst form it replaced:
-    round(aggregate(zip_with(a, b, *)) / (nrm_a * nrm_b), 6) with
-    half-away-from-zero binary rounding (= DuckDB round, the oracle
-    side). Reference: per-pair Python-float sequential fold + exact
-    Decimal quantization of the double's binary expansion."""
+    """The grouped pair kernel (_block_cos6) and the shared kernels it
+    is built from (functions/det.py: seq_dots, seq_norm2, seq_dist2,
+    r6_np) must be BIT-identical to a sequential dot-product fold
+    (DuckDB's list_dot_product) with half-away-from-zero binary
+    rounding (= DuckDB round, the oracle side). Reference:
+    per-pair Python-float sequential fold + exact Decimal quantization
+    of the double's binary expansion."""
     import random
     from decimal import ROUND_HALF_UP, Decimal
 
     import numpy as np
 
+    from project_map_reduce_spark.functions.det import (
+        r6_np,
+        seq_dist2,
+        seq_dots,
+        seq_norm2,
+    )
     from project_map_reduce_spark.plans.dedup import (
         _PAIR_ROW_BLOCK,
         _block_cos6,
@@ -301,3 +308,23 @@ def test_block_cos6_bit_matches_sequential_fold():
         hi = min(lo + 40, n)
         part = _block_cos6(A, nrm, lo, hi, c0=lo + 1)
         assert np.array_equal(part, got[lo:hi, lo + 1:])
+
+    def r6_ref(x):
+        return float(Decimal(x).quantize(Decimal("0.000001"), ROUND_HALF_UP))
+
+    # The dot/norm/distance kernels on non-square shapes, d not a
+    # multiple of 4 (no lane-width accident can hide a reordered add).
+    V = np.array([[rng.uniform(-3, 3) for _ in range(37)] for _ in range(13)])
+    M = np.array([[rng.uniform(-3, 3) for _ in range(37)] for _ in range(5)])
+    dots, nv, nm = seq_dots(V, M), seq_norm2(V), seq_norm2(M)
+    d2 = seq_dist2(V, M)
+    assert dots.shape == d2.shape == (13, 5)
+    for i in range(13):
+        assert nv[i] == seq_dot(V[i], V[i])
+        for j in range(5):
+            assert dots[i, j] == seq_dot(V[i], M[j])
+            assert d2[i, j] == nv[i] - 2.0 * dots[i, j] + nm[j]
+    # The rounding on exact binary halves (7812.5 micro-units) and 0.
+    edges = np.array([0.0078125, -0.0078125, 0.0, 2.5e-7, -2.5e-7])
+    assert [float(x) for x in r6_np(edges)] == [r6_ref(x) for x in edges]
+    assert r6_np(np.array([0.0078125]))[0] == 0.007813

@@ -7,10 +7,11 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from project_map_reduce_spark.plans.olap_extra import (
+    q_freq_itemsets,
     q_percentiles,
     q_pivot_status,
 )
-from project_map_reduce_spark.tables import load
+from project_map_reduce_spark.tables import _PINNED, load, table_path
 
 
 def test_pivot_row_sums_match_group_counts(spark, sf_dir):
@@ -52,3 +53,27 @@ def test_approx_percentile_within_tolerance_of_exact(spark, sf_dir):
     # sanity on the registered exact query: quantiles are monotone
     for r in q_percentiles(spark, sf_dir).collect():
         assert r.p25 <= r.p50 <= r.p75 <= r.p95
+
+
+def test_rebuild_keeps_pinned_frame_cached(spark, sf_dir, tmp_path):
+    """A second build of a query in one session asks to cache the same
+    plan as the first, and Spark's CacheManager keeps one entry per
+    plan: releasing the first build's frame must not drop the entry the
+    second build reads. A build over other data must release it."""
+    import shutil
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+
+    def cached(df):
+        return cm.lookupCachedData(df._jdf).isDefined()
+
+    q_freq_itemsets(spark, sf_dir).collect()
+    first = _PINNED["q_freq_itemsets.baskets"]
+    q_freq_itemsets(spark, sf_dir)
+    assert cached(_PINNED["q_freq_itemsets.baskets"])
+    assert cached(first)
+
+    shutil.copy(table_path(sf_dir, "lineitem"), table_path(str(tmp_path), "lineitem"))
+    q_freq_itemsets(spark, str(tmp_path))
+    assert cached(_PINNED["q_freq_itemsets.baskets"])
+    assert not cached(first)

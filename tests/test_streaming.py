@@ -26,6 +26,15 @@ def _canon(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _watermarked(stream):
+    """10-minute watermark on ``ts`` as a session-zone TIMESTAMP: the
+    watermark tracker takes only LTZ timestamps (the engine session's
+    zone is UTC, so the cast is value-exact)."""
+    return stream.withColumn("ts", F.to_timestamp_ltz("ts")).withWatermark(
+        "ts", "10 minutes"
+    )
+
+
 @pytest.fixture(scope="module")
 def chunked_events(spark, sf_dir):
     """events split into 3 event-time-ordered parquet chunks."""
@@ -51,7 +60,7 @@ def _run_stream(spark, chunked, transform, *, mode="update"):
         .option("maxFilesPerTrigger", 1)
         .parquet(path + "/chunk_*.parquet/*.parquet")
     )
-    out = transform(transforms.with_watermark(stream))
+    out = transform(_watermarked(stream))
     name = f"smoke_{transform.__name__}"
     q = (
         out.writeStream.format("memory")
@@ -100,7 +109,7 @@ def test_stream_dedup_drops_duplicates(spark, sf_dir, chunked_events):
         .option("maxFilesPerTrigger", 1)
         .parquet(path + "/chunk_*.parquet/*.parquet")
     )
-    out = transforms.dedup_events(transforms.with_watermark(stream))
+    out = transforms.dedup_events(_watermarked(stream))
     q = (
         out.writeStream.format("memory")
         .queryName("smoke_dedup")
@@ -139,9 +148,7 @@ def test_stream_dedup_within_watermark_bounded_state(spark):
         .option("maxFilesPerTrigger", 1)
         .parquet(path + "/rd*.parquet/*.parquet")
     )
-    out = transforms.dedup_events_within_watermark(
-        transforms.with_watermark(stream)
-    )
+    out = _watermarked(stream).dropDuplicatesWithinWatermark(["event_id"])
     q = (
         out.writeStream.format("memory")
         .queryName("smoke_dedup_wm")
@@ -757,22 +764,6 @@ def test_rocksdb_state_store_provider_runs_green(spark, sf_dir, tmp_path):
         assert got == want
     finally:
         spark.conf.set(key, prev)
-
-
-def test_stream_state_parts_read_and_validated_at_use(monkeypatch):
-    """SPARK_GRAFT_STREAM_STATE_PARTS is read when a query sets its
-    state-partition count (not at import), and a bad value fails fast
-    with a message naming the variable."""
-    from project_map_reduce_spark.plans.streaming_shaped import _stream_state_parts
-
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTS", raising=False)
-    assert _stream_state_parts() == "8"
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTS", "12")
-    assert _stream_state_parts() == "12"
-    for bad in ("0", "-3", "eight", "2.5", ""):
-        monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTS", bad)
-        with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_STATE_PARTS"):
-            _stream_state_parts()
 
 
 def test_finite_stream_holds_conf_only_while_starting(spark):
