@@ -921,9 +921,12 @@ def q_pyds_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the partition unit becomes one per file/row-group over the
     object listing (module docstring); the API surface is identical.
     """
-    from project_map_reduce_spark.sources.pyds import DocPayloadDataSource
+    from project_map_reduce_spark.sources.pyds import (
+        DocPayloadDataSource,
+        register_once,
+    )
 
-    spark.dataSource.register(DocPayloadDataSource)
+    register_once(spark, DocPayloadDataSource)
     out = (
         spark.read.format("pmrs_docpayload")
         .option("path", table_path(sf_dir, "documents"))
@@ -990,10 +993,13 @@ def q_pyds_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow.parquet as pq
 
     from project_map_reduce_spark.plans.streaming_shaped import _finite_stream
-    from project_map_reduce_spark.sources.pyds import DocPayloadDataSource
+    from project_map_reduce_spark.sources.pyds import (
+        DocPayloadDataSource,
+        register_once,
+    )
     from project_map_reduce_spark.sources.sinks import write_stream_idempotent
 
-    spark.dataSource.register(DocPayloadDataSource)
+    register_once(spark, DocPayloadDataSource)
     path = table_path(sf_dir, "documents")
     n = pq.ParquetFile(path).metadata.num_rows
     chunk = max(1, math.ceil(n / 4))

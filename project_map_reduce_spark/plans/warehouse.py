@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from project_map_reduce_spark.functions.det import SUM6, r6d, sum6
 from project_map_reduce_spark.registry import fmt_doc, register
 from project_map_reduce_spark.session import scoped_conf
-from project_map_reduce_spark.tables import load, localize, scratch_dir
+from project_map_reduce_spark.tables import footer_rows, load, localize, scratch_dir
 
 _SNAPSHOT_TS = "1992-01-01 00:00:00"
 
@@ -517,22 +517,15 @@ def q_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
     import os as _os
 
-    import pyarrow.parquet as pq
-
-    def _footer_rows(paths: list[str]) -> int:
-        # Row counts from the parquet FOOTERS the write just committed
-        # (round-13, guide §1.2 fewer passes): the authoritative
-        # per-file row ledger, summed driver-side — the same lossless
-        # check as re-scanning with count(), minus two full read jobs.
-        return sum(pq.ParquetFile(p).metadata.num_rows for p in paths)
-
     ev = load(spark, sf_dir, "events").select("event_type", "value")
     with scratch_dir("q_compact_") as tmp:
         frag, tidy = f"{tmp}/frag", f"{tmp}/tidy"
         # The fragmented state a micro-batch ingester leaves behind.
         ev.repartition(_COMPACT_INGEST_FILES).write.parquet(frag)
         files = _glob.glob(f"{frag}/part-*.parquet")
-        n_rows = _footer_rows(files)
+        # Row counts from the parquet footers the writes just committed:
+        # the same lossless check as a count() re-scan, minus its jobs.
+        n_rows = footer_rows(frag)
         total_bytes = sum(_os.path.getsize(f) for f in files)
         target = max(1, math.ceil(total_bytes / _COMPACT_TARGET_BYTES))
 
@@ -545,7 +538,7 @@ def q_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"{len(out_files)} out, computed target {target}"
             )
         compacted = spark.read.parquet(tidy)
-        got_rows = _footer_rows(out_files)
+        got_rows = footer_rows(tidy)
         if got_rows != n_rows:
             raise RuntimeError(
                 f"compaction lost rows — {n_rows} in, {got_rows} out"

@@ -23,6 +23,10 @@ from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
+# The directory that holds the engine package.
+_PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_WORKER_PATH = "spark.executorEnv.PYTHONPATH"
+
 
 def default_parallelism() -> int:
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -85,7 +89,14 @@ def get_spark(
     )
     # The state store stays Spark's default HDFS-backed provider: the round-7
     # A/B (BASELINE.md) has it winning or tying RocksDB while state fits the heap.
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    # Python workers import the engine from their own PYTHONPATH, not the
+    # driver's sys.path, so name the package's home whatever the cwd.
+    paths = [p for p in conf.get(_WORKER_PATH, "").split(os.pathsep) if p]
+    if _PKG_PARENT not in paths:
+        paths.append(_PKG_PARENT)
+    conf[_WORKER_PATH] = os.pathsep.join(paths)
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -190,6 +190,16 @@ class _DocPayloadStreamReader(DataSourceStreamReader):
         pass
 
 
+def register_once(spark, source: type[DataSource]) -> None:
+    """Register the Python data source ``source`` on ``spark`` unless the
+    session already has it. Registrations are per session, and
+    registering a name again replaces the entry and logs a warning, so a
+    query built twice on one session registers once."""
+    manager = spark._jsparkSession.sessionState().dataSourceManager()
+    if not manager.dataSourceExists(source.name()):
+        spark.dataSource.register(source)
+
+
 class DocPayloadDataSource(DataSource):
     """format("pmrs_docpayload") — see module docstring."""
 

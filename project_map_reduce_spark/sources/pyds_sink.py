@@ -33,6 +33,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from project_map_reduce_spark.sources.pyds import register_once
+
 REPORT_NAME = "pmrs_report"
 
 
@@ -167,7 +169,7 @@ class ReportDataSource(DataSource):
 
 
 def register_report_sink(spark) -> None:
-    spark.dataSource.register(ReportDataSource)
+    register_once(spark, ReportDataSource)
 
 
 class _ReportStreamWriter(DataSourceStreamWriter):

@@ -6,6 +6,12 @@ scan layer is one place: a parquet relation with Catalyst predicate
 pushdown and column pruning. At cluster scale the same loader would
 point at a partitioned table root; nothing else in the engine changes.
 
+``load`` gives Spark the table's schema, read with pyarrow from the
+parquet footer of its first part file, so building a scan runs no Spark
+job; left to itself, Spark infers the schema with a one-task job on
+every read. The footer read is one small read per load whatever the
+table's size, so no schema is cached and none can go stale.
+
 Scratch files live here too, so one module decides where they go and
 when they are removed: ``scratch_dir`` for a layout a query builds and
 removes before it returns, ``localize`` to gather a small result off
@@ -25,6 +31,7 @@ from contextlib import contextmanager
 
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -43,39 +50,44 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def _part_files(path: str) -> list[str]:
+    """The parquet files of a table, sorted: ``[path]`` for a single
+    file, else the part files of the directory (the layout any real
+    writer produces). A part file is a ``*.parquet`` file not named
+    ``_*``, or an extensionless ``part-*`` regular file that opens with
+    the parquet magic; ``_SUCCESS``, ``.crc`` sidecars and ``part-*``
+    subdirectories are skipped. The walk is O(files) driver-side
+    metadata calls."""
+    import glob
+
+    if not os.path.isdir(path):
+        return [path]
+    parts = [
+        f
+        for f in glob.glob(os.path.join(path, "*.parquet"))
+        if os.path.isfile(f) and not os.path.basename(f).startswith("_")
+    ]
+    parts += [
+        f
+        for f in glob.glob(os.path.join(path, "part-*"))
+        if not f.endswith(".parquet") and _has_parquet_magic(f)
+    ]
+    if not parts:
+        raise FileNotFoundError(f"no parquet part files under {path}")
+    return sorted(parts)
+
+
 def footer_rows(path: str) -> int:
     """Exact row count from parquet FOOTERS — zero Spark jobs (the
     guide-§1.2 fewer-passes discipline for queries that only need N).
 
-    Handles both fixture shapes: a single parquet file, or a directory
-    of part files (the layout any real writer produces). The directory
-    walk is O(files) driver-side metadata reads — fine for footers even
-    at 100 TB table sizes (thousands of files, one ~KB footer each),
-    and the same ledger a manifest-based table format serves from
-    memory.
+    Handles both table shapes ``_part_files`` walks. One ~KB footer read
+    per file, so even at 100 TB (thousands of files) this is the same
+    ledger a manifest-based table format serves from memory.
     """
-    import glob
-
     import pyarrow.parquet as pq
 
-    if os.path.isdir(path):
-        parts = [
-            f
-            for f in glob.glob(os.path.join(path, "*.parquet"))
-            if os.path.isfile(f) and not os.path.basename(f).startswith("_")
-        ]
-        # ``part-*`` also matches extensionless part files, so a match
-        # counts only if it is a regular file that opens with the parquet
-        # magic: a subdirectory or a sidecar named part-* is skipped.
-        parts += [
-            f
-            for f in glob.glob(os.path.join(path, "part-*"))
-            if not f.endswith(".parquet") and _has_parquet_magic(f)
-        ]
-        if not parts:
-            raise FileNotFoundError(f"no parquet part files under {path}")
-        return sum(pq.ParquetFile(p).metadata.num_rows for p in parts)
-    return pq.ParquetFile(path).metadata.num_rows
+    return sum(pq.ParquetFile(p).metadata.num_rows for p in _part_files(path))
 
 
 def _has_parquet_magic(path: str) -> bool:
@@ -85,13 +97,35 @@ def _has_parquet_magic(path: str) -> bool:
         return f.read(4) == b"PAR1"
 
 
+def _footer_schema(path: str) -> StructType:
+    """The Spark schema of a parquet table, read from the footer of its
+    first part file (sorted) with pyarrow — the file Spark's own
+    non-merging schema inference reads, without the one-task Spark job
+    it runs to read it. ``prefer_timestamp_ntz`` maps Arrow's naive
+    timestamps to ``TIMESTAMP_NTZ``, as Spark reads them."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    return from_arrow_schema(
+        pq.read_schema(_part_files(path)[0]), prefer_timestamp_ntz=True
+    )
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """A lazy parquet scan of fixture table ``name``, read with the
+    schema from its footer (``_footer_schema``), so building the frame
+    submits no Spark job. The footer is read again on every call: one
+    KB-scale read per load, O(1) in table size, and nothing is kept
+    that a rewritten file could leave stale. The file source still
+    marks every column nullable, as an inferring read does.
+
+    events.ts is TIMESTAMP(NANOS) parquet (FIXTURES.md); Spark 4.1 reads
+    it natively as µs-truncated TIMESTAMP_NTZ, DuckDB's naive µs view of
+    the same file."""
     if name not in TABLES:
         raise KeyError(f"unknown fixture table {name!r}; expected one of {TABLES}")
-    # events.ts is TIMESTAMP(NANOS) parquet (FIXTURES.md); Spark 4.1 reads
-    # it natively as µs-truncated TIMESTAMP_NTZ, DuckDB's naive µs view
-    # of the same file.
-    return spark.read.parquet(table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    return spark.read.schema(_footer_schema(path)).parquet(path)
 
 
 def local_rows(spark: SparkSession, rows, schema) -> DataFrame:
@@ -136,10 +170,11 @@ def session_dir(prefix: str) -> str:
 def materialize(df: DataFrame, prefix: str) -> DataFrame:
     """Write ``df`` to a fresh ``session_dir`` and return ONE lazy
     parquet read of it: the executors do the write, nothing unbounded
-    touches the driver, and the returned plan is a FileScan."""
+    touches the driver, and the returned plan is a FileScan. The read
+    takes ``df``'s own schema, so it submits no schema-inference job."""
     out = session_dir(prefix)
     df.write.mode("overwrite").parquet(out)
-    return df.sparkSession.read.parquet(out)
+    return df.sparkSession.read.schema(df.schema).parquet(out)
 
 
 # owner -> the frame its last call pinned (one cache entry per owner).

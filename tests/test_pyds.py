@@ -168,3 +168,31 @@ def test_read_row_range_spans_row_groups(tmp_path):
         got = _read_row_range(path, lo, hi)
         assert got.column("doc_id").to_pylist() == list(range(lo, hi))
         assert got.column_names == ["doc_id", "text"] or (lo == hi)
+
+
+def test_sources_register_once_per_session(spark, sf_dir, monkeypatch):
+    """q_pyds_sink built twice on one session registers its sink at most
+    once: the second build finds it registered and registers nothing, so
+    no 'replaced a previously registered data source' warning is logged."""
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    from project_map_reduce_spark.registry import entries
+
+    calls = []
+    register = DataSourceRegistration.register
+    monkeypatch.setattr(
+        DataSourceRegistration,
+        "register",
+        lambda self, source: calls.append(source.name()) or register(self, source),
+    )
+
+    def exists(session):
+        manager = session._jsparkSession.sessionState().dataSourceManager()
+        return manager.dataSourceExists("pmrs_report")
+
+    build = entries()["q_pyds_sink"].fn
+    first = build(spark, sf_dir).collect()
+    assert exists(spark) and calls in ([], ["pmrs_report"])
+    before = list(calls)
+    assert sorted(build(spark, sf_dir).collect()) == sorted(first)
+    assert calls == before and exists(spark)
