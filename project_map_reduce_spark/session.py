@@ -18,14 +18,23 @@ chosen for cluster-scale behavior too:
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+import subprocess
+import tempfile
+import zipfile
 from contextlib import contextmanager
+
+import pyspark
 
 from pyspark.sql import SparkSession
 
 # The directory that holds the engine package.
 _PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _WORKER_PATH = "spark.executorEnv.PYTHONPATH"
+_DRIVER_CLASSPATH = "spark.driver.extraClassPath"
+_FS_SRC = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "NioLocalFileSystem.java")
 
 
 def default_parallelism() -> int:
@@ -33,6 +42,51 @@ def default_parallelism() -> int:
     if cpus:
         return int(cpus)
     return os.cpu_count() or 8
+
+
+def _fs_jar(src: str = _FS_SRC) -> str:
+    """The jar of the engine's ``file://`` file system, compiled from
+    ``src`` on first use into ``build/`` next to it. The jar is named by
+    the source's SHA-256, so an edited source builds a new jar and an
+    unchanged one is found with one ``stat``: javac runs once per
+    checkout, never on a warm set-up. The jar is written to a temp file
+    and moved into place, so a reader never sees half a jar."""
+    with open(src, "rb") as f:
+        digest = hashlib.sha256(f.read()).hexdigest()
+    build = os.path.join(os.path.dirname(src), "build")
+    jar = os.path.join(build, f"NioLocalFileSystem-{digest[:16]}.jar")
+    if os.path.exists(jar):
+        return jar
+    if shutil.which("javac") is None:
+        raise RuntimeError(
+            "javac not found on PATH: get_spark compiles the engine's file "
+            f"system ({src}) with it; install a JDK (17 or later)"
+        )
+    os.makedirs(build, exist_ok=True)
+    jars = os.path.join(os.path.dirname(pyspark.__file__), "jars", "*")
+    with tempfile.TemporaryDirectory(dir=build) as tmp:
+        classes = os.path.join(tmp, "classes")
+        done = subprocess.run(
+            ["javac", "--release", "17", "-cp", jars, "-d", classes, src],
+            capture_output=True, text=True,
+        )
+        if done.returncode:
+            raise RuntimeError(f"javac failed on {src}:\n{done.stderr}")
+        with zipfile.ZipFile(os.path.join(tmp, "fs.jar"), "w") as z:
+            for root, _dirs, files in os.walk(classes):
+                for name in sorted(files):
+                    path = os.path.join(root, name)
+                    z.write(path, os.path.relpath(path, classes))
+        os.replace(os.path.join(tmp, "fs.jar"), jar)
+    return jar
+
+
+def _merge_path(conf: dict[str, str], key: str, entry: str) -> None:
+    """Append ``entry`` to the path list ``conf[key]`` unless it is there."""
+    paths = [p for p in conf.get(key, "").split(os.pathsep) if p]
+    if entry not in paths:
+        paths.append(entry)
+    conf[key] = os.pathsep.join(paths)
 
 
 def get_spark(
@@ -45,8 +99,12 @@ def get_spark(
     """Build (or reuse) the engine SparkSession.
 
     On a cluster you would drop ``.master(...)`` and submit with
-    spark-submit, and drop the ``checkpointFileManagerClass`` line with
-    it; everything else carries over unchanged.
+    spark-submit, and drop with it the ``checkpointFileManagerClass``
+    line and the two lines that put the engine's ``file://`` file system
+    on the driver (``spark.driver.extraClassPath`` and
+    ``spark.hadoop.fs.file.impl``); everything else carries over
+    unchanged. The file system's jar is compiled with ``javac`` on the
+    first call in a checkout (``_fs_jar``), so a JDK is required.
     """
     cores = cores or default_parallelism()
     shuffle_partitions = shuffle_partitions or cores
@@ -92,10 +150,15 @@ def get_spark(
     conf = dict(extra_conf or {})
     # Python workers import the engine from their own PYTHONPATH, not the
     # driver's sys.path, so name the package's home whatever the cwd.
-    paths = [p for p in conf.get(_WORKER_PATH, "").split(os.pathsep) if p]
-    if _PKG_PARENT not in paths:
-        paths.append(_PKG_PARENT)
-    conf[_WORKER_PATH] = os.pathsep.join(paths)
+    _merge_path(conf, _WORKER_PATH, _PKG_PARENT)
+    # Local files get their mode from one chmod(2) in the JVM
+    # (jvm/NioLocalFileSystem.java): without Hadoop's native library the
+    # default file:// file system forks a `chmod` child for every file
+    # create and mkdir, which is most of a small micro-batch's commit. A
+    # cluster deploy drops these two lines together with .master(...),
+    # like the checkpointFileManagerClass line.
+    _merge_path(conf, _DRIVER_CLASSPATH, _fs_jar())
+    conf["spark.hadoop.fs.file.impl"] = "pmrs.NioLocalFileSystem"
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import itertools
 import os
 import sys
 
@@ -19,6 +20,26 @@ def spark():
     # Modest parallelism for tiny test data — fewer empty partitions.
     s = get_spark("tests", cores=8, shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture(scope="session")
+def jobs_during(spark):
+    """``jobs_during(fn)``: the ids of the Spark jobs ``fn`` submits
+    from this thread, read through a job group set around the call."""
+    sc = spark.sparkContext
+    probes = itertools.count()
+
+    def probe(fn) -> list[int]:
+        group = f"pmrs_jobs_during_{next(probes)}"
+        sc.setJobGroup(group, "probe")
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return probe
 
 
 @pytest.fixture(scope="session")

@@ -9,7 +9,6 @@ never sets it, and the scratch helpers remove what they create."""
 
 from __future__ import annotations
 
-import itertools
 import os
 
 import pyarrow as pa
@@ -135,30 +134,14 @@ def test_load_schema_matches_inferred(spark, sf_dir, name):
     assert got.json() == want.json()
 
 
-_PROBES = itertools.count()
-
-
-def _jobs_during(spark, fn):
-    """Ids of the Spark jobs ``fn`` submits from this thread."""
-    sc = spark.sparkContext
-    group = f"pmrs_jobs_during_{next(_PROBES)}"
-    sc.setJobGroup(group, "probe")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return list(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_load_submits_no_spark_job(spark, sf_dir):
+def test_load_submits_no_spark_job(spark, sf_dir, jobs_during):
     """Building a scan runs no job; the probe does see the one-task job
     an inferring read of the same file runs."""
     path = table_path(sf_dir, "lineitem")
-    inferred = _jobs_during(spark, lambda: spark.read.parquet(path))
+    inferred = jobs_during(lambda: spark.read.parquet(path))
     assert inferred, "the probe saw no schema-inference job"
-    assert _jobs_during(spark, lambda: load(spark, sf_dir, "lineitem")) == []
-    assert _jobs_during(spark, lambda: load(spark, sf_dir, "events")) == []
+    assert jobs_during(lambda: load(spark, sf_dir, "lineitem")) == []
+    assert jobs_during(lambda: load(spark, sf_dir, "events")) == []
 
 
 def test_load_multi_file_directory_table(spark, sf_dir, tmp_path):

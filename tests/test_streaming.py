@@ -829,3 +829,34 @@ def test_finite_stream_holds_conf_only_while_starting(spark):
     finally:
         spark.streams.removeListener(listener)
     assert spark.conf.get(key) == before
+
+
+def test_finite_stream_reads_sink_back_with_the_written_schema(spark, jobs_during):
+    """``_finite_stream.run`` reads the sink back with the schema the
+    stream wrote: the schema Spark infers from the sink (nested window
+    struct, timestamp, nullability, the int ``batch_id`` partition), and
+    building that read submits no job, where an inferring read runs one."""
+    import datetime as dt
+
+    from project_map_reduce_spark.plans.streaming_shaped import _finite_stream, _read_sink
+
+    def batch(start):
+        base = dt.datetime(2024, 6, 1, 12)
+        rows = [(base + dt.timedelta(minutes=start + i), f"u{i % 2}", 1.0) for i in range(5)]
+        return spark.createDataFrame(rows, "ts timestamp, user string, value double")
+
+    with _finite_stream(spark, "sink_schema_test") as fs:
+        agg = (
+            fs.stage(("a", batch(0)), ("b", batch(30)))
+            .withWatermark("ts", "10 minutes")
+            .groupBy(F.window("ts", "1 hour"), "user")
+            .agg(F.count(F.lit(1)).alias("n"), F.max("ts").alias("last"))
+        )
+        snap = fs.run(agg, "update")
+        sink = f"{fs.tmp}/sink"
+        inferred = spark.read.option("basePath", sink).parquet(sink)
+        assert snap.schema == inferred.schema
+        assert snap.schema.json() == inferred.schema.json()
+        assert jobs_during(lambda: spark.read.option("basePath", sink).parquet(sink))
+        assert jobs_during(lambda: _read_sink(spark, agg, sink)) == []
+        assert sorted(snap.collect()) == sorted(inferred.collect())
