@@ -26,7 +26,7 @@ public class NioLocalFileSystem extends LocalFileSystem {
     @Override
     public void setPermission(Path p, FsPermission permission) throws IOException {
       short mode = permission.toShort();
-      if ((mode & ~0777) != 0) {  // sticky bit: only the chmod command sets it
+      if ((mode & ~0777) != 0) {  // sticky, setuid, setgid: beyond NIO's nine bits
         super.setPermission(p, permission);
         return;
       }

@@ -27,7 +27,6 @@ import zipfile
 from contextlib import contextmanager
 
 import pyspark
-
 from pyspark.sql import SparkSession
 
 # The directory that holds the engine package.

@@ -53,7 +53,7 @@ def test_workers_import_engine_from_any_cwd(tmp_path):
     assert "MODULES ['project_map_reduce_spark.functions.det']" in out.stdout
 
 
-def _raw_local_fs(spark):
+def _local_fs(spark):
     jvm = spark._jvm
     conf = spark._jsparkSession.sessionState().newHadoopConf()
     return jvm.org.apache.hadoop.fs.FileSystem.getLocal(conf)
@@ -64,14 +64,16 @@ def test_local_file_system_is_the_engines(spark):
     the engine's file system, which sets a mode with one chmod(2)
     instead of forking a ``chmod`` child."""
     for s in (spark, spark.newSession()):
-        fs = _raw_local_fs(s)
+        fs = _local_fs(s)
         assert fs.getClass().getName() == "pmrs.NioLocalFileSystem"
         assert fs.getRaw().getClass().getName() == "pmrs.NioLocalFileSystem$Raw"
 
 
-@pytest.mark.parametrize("mode", [0o600, 0o640, 0o700, 0o755])
+@pytest.mark.parametrize("mode", [0o600, 0o640, 0o700, 0o755], ids=oct)
 def test_set_permission_leaves_that_mode(spark, tmp_path, mode):
-    fs = _raw_local_fs(spark)
+    """setPermission leaves exactly the asked-for mode on a file and on
+    a directory."""
+    fs = _local_fs(spark)
     jvm = spark._jvm
     f, d = tmp_path / "f", tmp_path / "d"
     f.write_bytes(b"x")
