@@ -93,6 +93,19 @@ def shingle_expr(k: int) -> str:
     )
 
 
+def shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, shs): each document's distinct ``_SHINGLE_K``-token
+    shingles (``array_distinct``: set semantics map-side, no distinct
+    shuffle), pinned under one owner for every query that builds them —
+    q_dedup_ngram_jaccard, its rebuild in q_dedup_clusters, and
+    q_decontaminate — so the CPU-bound shingling runs once per corpus.
+    One small parquet file scans as ONE partition, so the documents are
+    spread over the cores first."""
+    d = load(spark, sf_dir, "documents").repartition(spark.sparkContext.defaultParallelism)
+    shs = F.array_distinct(F.expr(shingle_expr(_SHINGLE_K))).alias("shs")
+    return pin("dedup.shingle_sets", d.select("doc_id", shs))
+
+
 # Shared CTE chain for the shingle-index candidate pairs — used by the
 # ngram-Jaccard oracle and by the connected-components cluster oracle.
 _NGRAM_CTES = f"""
@@ -144,21 +157,9 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs map-side from each bounded list — shuffle volume is O(pairs),
     per-key fanout capped at {df}²/2, no self-join, no crossJoin.
     """
-    # One small parquet file scans as ONE partition; the CPU-bound
-    # shingle explode would serialize on a single core without this
-    # (same rationale as the simhash repartition below).
-    d = load(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    shingles_expr = shingle_expr(_SHINGLE_K)
-    # array_distinct BEFORE explode: per-doc set semantics without a
-    # 450k-row distinct shuffle; doc set sizes fall out of the array
-    # length map-side (no groupBy). The shingle arrays feed two branches
-    # (sizes, posting lists) — cached so the CPU-bound shingling HOF
-    # runs once (persist MEMORY_AND_DISK at cluster scale).
-    arr = d.select(
-        "doc_id", F.array_distinct(F.expr(shingles_expr)).alias("shs")
-    ).cache()
+    # The shingle sets feed two branches (sizes, posting lists); doc set
+    # sizes fall out of the array length map-side (no groupBy).
+    arr = shingle_sets(spark, sf_dir)
     sizes = arr.select("doc_id", F.size("shs").alias("sz"))
     sh = arr.select("doc_id", F.explode("shs").alias("shingle"))
     # Posting-list formulation instead of an index self-join: one groupBy
@@ -453,11 +454,12 @@ def q_dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     d = d.repartition(spark.sparkContext.defaultParallelism)
     # feats feeds the banding explode AND both sides of the verify join —
-    # cache it so the pandas-UDF stage runs once (persist MEMORY_AND_DISK
-    # on a cluster).
-    feats = d.select("doc_id", _minhash("text").alias("m")).select(
+    # pinned so the pandas-UDF stage runs once, and once for
+    # q_dedup_fuzzy_ledger's rebuild of this query too (persist
+    # MEMORY_AND_DISK on a cluster).
+    feats = pin("q_dedup_fuzzy.feats", d.select("doc_id", _minhash("text").alias("m")).select(
         "doc_id", F.col("m.hs").alias("hs"), F.col("m.sig").alias("sig")
-    ).cache()
+    ))
 
     band_expr = (
         f"transform(sequence(0, {_LSH_BANDS - 1}), j -> "

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from project_map_reduce_spark.functions.det import r6d
 from project_map_reduce_spark.operators.pii import mask_digits, pseudonymize
-from project_map_reduce_spark.plans.dedup import _SHINGLE_K, shingle_expr
+from project_map_reduce_spark.plans.dedup import _SHINGLE_K, shingle_expr, shingle_sets
 from project_map_reduce_spark.registry import fmt_doc, register
 from project_map_reduce_spark.tables import load
 
@@ -84,12 +84,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     same inverted-index doctrine as q_dedup_ngram_jaccard, degenerated
     to the easy case where one side fits in memory.
     """
-    d = load(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    arr = d.select(
-        "doc_id", F.array_distinct(F.expr(shingle_expr(_SHINGLE_K))).alias("shs")
-    ).cache()
+    arr = shingle_sets(spark, sf_dir)
     probe = (
         arr.filter(F.col("doc_id") % _PROBE_MOD == 0)
         .select(F.explode("shs").alias("shingle"))

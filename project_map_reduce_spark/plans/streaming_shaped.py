@@ -36,7 +36,7 @@ from project_map_reduce_spark.registry import fmt_doc, register
 from project_map_reduce_spark.session import scoped_conf
 from project_map_reduce_spark.sources.sinks import write_stream_idempotent
 from project_map_reduce_spark.streaming import transforms as X
-from project_map_reduce_spark.tables import load, local_rows, materialize, session_dir
+from project_map_reduce_spark.tables import load, local_rows, session_dir
 
 
 def _await_finite_stream(q, what: str, timeout: float = 300) -> None:
@@ -106,19 +106,25 @@ def _stage_batches(tmp: str, stages) -> str:
 
 class _finite_stream:
     """One finite Structured Streaming run, as a context manager: a temp
-    workspace (removed on exit), ordered staged micro-batches, and a
-    start that holds ``conf`` on the caller's session ONLY around the
-    ``start()`` call. Spark copies the session conf into the stream's
-    own session when it starts, so every micro-batch runs with ``conf``
-    (state partitions, state-store provider) while staging, the await
-    and the snapshot run on the caller's conf, and no query leaves a
+    workspace (staged batches and the default checkpoint, removed on
+    exit), ordered staged micro-batches, one sink, and a start that
+    holds ``conf`` on the caller's session ONLY around the ``start()``
+    call. Spark copies the session conf into the stream's own session
+    when it starts, so every micro-batch runs with ``conf`` (state
+    partitions, state-store provider) while staging, the await and the
+    sink read run on the caller's conf, and no query leaves a
     session-global override behind. The stream is started on the
     caller's session, so the caller's ``StreamingQueryListener``s see
-    its progress."""
+    its progress.
+
+    The sink is the result: a ``session_dir`` made on the first ``run``
+    and shared by every later ``run`` of the block, so it outlives the
+    workspace and the caller returns a lazy read of it."""
 
     def __init__(self, spark: SparkSession, name: str, conf: dict | None = None):
         self.spark, self.name, self.conf = spark, name, conf or {}
         self.tmp = tempfile.mkdtemp(prefix=f"pmrs_{name}_")
+        self.sink: str | None = None
 
     def __enter__(self) -> "_finite_stream":
         return self
@@ -143,17 +149,17 @@ class _finite_stream:
         with scoped_conf(self.spark, self.conf):
             return fn()
 
-    def run(self, df: DataFrame, output_mode: str, *, sink: str | None = None,
-            ckpt: str | None = None) -> DataFrame:
-        """Run ``df`` to completion into the idempotent per-batch sink
-        (``write_stream_idempotent``) and return the sink read back, one
-        ``batch_id`` partition per micro-batch."""
-        sink = sink or f"{self.tmp}/sink"
+    def run(self, df: DataFrame, output_mode: str, *, ckpt: str | None = None) -> DataFrame:
+        """Run ``df`` to completion into the harness's idempotent
+        per-batch sink (``write_stream_idempotent``) and return a lazy
+        read of the sink, one ``batch_id`` partition per micro-batch."""
+        if self.sink is None:
+            self.sink = session_dir(f"pmrs_{self.name}_sink_")
         ckpt = ckpt or f"{self.tmp}/ckpt"
         _await_finite_stream(self.start(lambda: write_stream_idempotent(
-            df, sink, ckpt, output_mode=output_mode
+            df, self.sink, ckpt, output_mode=output_mode
         )), self.name)
-        return _read_sink(self.spark, df, sink)
+        return _read_sink(self.spark, df, self.sink)
 
 
 def _nullable(t: DataType) -> DataType:
@@ -179,16 +185,16 @@ def _read_sink(spark: SparkSession, df: DataFrame, sink: str) -> DataFrame:
 
 
 def _last_update_snapshot(snap: DataFrame, key_cols: list[str],
-                          final_cols: list, prefix: str) -> DataFrame:
+                          final_cols: list) -> DataFrame:
     """Resolve an update-mode sink (``_finite_stream.run``'s read-back)
-    to each key's LAST update projected to ``final_cols``, persisted
-    executor-side (``materialize``)."""
+    to each key's LAST update projected to ``final_cols``: a lazy
+    ``row_number`` window partitioned by the key over the sink read,
+    run on the executors by whatever action the caller takes."""
     last = Window.partitionBy(*key_cols).orderBy(F.desc("batch_id"))
-    return materialize(
+    return (
         snap.withColumn("__rn", F.row_number().over(last))
         .where(F.col("__rn") == 1)
-        .select(*final_cols),
-        prefix,
+        .select(*final_cols)
     )
 
 
@@ -360,13 +366,13 @@ def q_stream_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     The final accounting — each user's LAST update across batches —
     must equal the plain batch aggregate, which is exactly the oracle.
 
-    No driver gather anywhere in the data path (SURVEY §4.2): the
-    last-update resolution is an executor-side window + parquet write
-    into a session-scoped persistent dir, and the RETURNED DataFrame is
-    a lazy distributed read of that snapshot (FileScan, not a
-    LocalTableScan — asserted in tests/test_streaming.py). At 100 TB
-    downstream jobs read the same snapshot path; only the test-harness
-    staging dirs are temporary.
+    No driver gather anywhere in the data path (SURVEY §4.2): the sink
+    lives in a session-scoped persistent dir, and the RETURNED DataFrame
+    is the last-update resolution as a lazy executor-side window over a
+    distributed read of that sink (FileScan, not a LocalTableScan —
+    asserted in tests/test_streaming.py). At 100 TB downstream jobs read
+    the same sink path; only the test-harness staging dirs are
+    temporary.
     """
     from project_map_reduce_spark.streaming.stateful import running_user_totals
 
@@ -384,7 +390,6 @@ def q_stream_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
             fs.run(totals, "update"),
             ["user_id"],
             ["user_id", "n_events", r6d(F.col("sum_value"), "sum_value")],
-            "pmrs_q90_final_",
         )
 
 
@@ -396,6 +401,17 @@ def q_stream_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 # OPTIMIZATION_r14.md). On a cluster this is a deploy-time conf sized
 # to executors.
 _STREAM_STATE_PARTS = 8
+
+# State-partition count for the window-state class (q_watermark_late,
+# q_stream_chained_agg), whose state is O(open windows): a few hundred
+# keys at any corpus size. The stateful stage reads only the map-side
+# partial aggregates, at most (windows the batch touches) x (input
+# partitions) rows per batch, and keeps only the open windows; the
+# map-side scan and partial aggregation run one task per FILE partition,
+# whatever this constant is. So one partition holds the state, and each
+# further one only adds a state-store task and its checkpoint commit per
+# batch.
+_WINDOW_STATE_PARTS = 1
 
 
 _WM_DELAY_MIN = 45
@@ -453,19 +469,17 @@ def q_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     is robust to that implementation detail changing.
 
     Scale shape: identical to q_stream_totals — O(open windows) state,
-    idempotent per-batch sink, last-update resolution and final snapshot
-    write all executor-side; the returned DataFrame is a lazy parquet
-    read (no driver gather, SURVEY §4.2).
+    idempotent per-batch sink, last-update resolution executor-side; the
+    returned DataFrame is a lazy window over a parquet read of the sink
+    (no driver gather, SURVEY §4.2).
     """
     ev = _events(spark, sf_dir, "event_id", "ts", "value")
     is_late = F.col("event_id") % _LATE_MOD == _LATE_RES
     # Unlike q_stream_totals (state O(users) — pinned to cores), this
-    # aggregation's state is O(open windows): a few hundred keys at ANY
-    # corpus size, and the map-side partial agg parallelism follows the
-    # FILE partitions, not this. A small constant is the right setting —
-    # cores-many state partitions only add checkpoint overhead (measured
-    # +2 s at sf0.1 and sf1, flat at sf10, with zero scale benefit).
-    with _finite_stream(spark, "q_watermark_late", _shuffle_parts(4)) as fs:
+    # aggregation's state is O(open windows): one state partition
+    # (_WINDOW_STATE_PARTS) holds it at any corpus size.
+    parts = _shuffle_parts(_WINDOW_STATE_PARTS)
+    with _finite_stream(spark, "q_watermark_late", parts) as fs:
         # All on-time rows MUST land in one micro-batch (watermark is 0
         # while it runs) — the oracle models exactly one advancement.
         stream = fs.stage(
@@ -491,7 +505,6 @@ def q_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
             fs.run(agg, "update"),
             ["window_start"],
             [*_ntz("window_start", "window_end"), "n_events", "sum_value"],
-            "pmrs_q98_final_",
         )
 
 
@@ -560,8 +573,8 @@ def q_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: state is O(keys per watermark horizon), NOT O(all
     keys ever) — the property that lets the dedup run forever on an
-    unbounded stream; append-mode idempotent sink; final snapshot is an
-    executor-side parquet write returned as a lazy read (SURVEY §4.2).
+    unbounded stream; append-mode idempotent sink, returned as a lazy
+    read (SURVEY §4.2).
     """
     ev = _events(spark, sf_dir, "event_id", "ts", "value")
     redeliver = ev.where(F.col("event_id") % _DD_MOD == _DD_RES).withColumn(
@@ -582,10 +595,7 @@ def q_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         # append-mode sink: the emitted rows ARE the result — no
         # last-update resolution needed, just drop the batch_id dir key
         snap = fs.run(deduped, "append")
-        return materialize(
-            snap.select("event_id", *_ntz("ts"), F.round("value", 6).alias("value")),
-            "pmrs_q100_final_",
-        )
+        return snap.select("event_id", *_ntz("ts"), F.round("value", 6).alias("value"))
 
 
 fmt_doc(
@@ -654,8 +664,8 @@ def q_join_interval_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     buffer holds O(users · 3 h) rows at any instant, which is what
     makes the join runnable forever on an unbounded stream.
 
-    Scale shape: append-mode idempotent sink; executor-written snapshot
-    returned as a lazy read (SURVEY §4.2); state partition count is the
+    Scale shape: append-mode idempotent sink returned as a lazy read
+    (SURVEY §4.2); state partition count is the
     measured-best harness value (see the in-body comment — a
     stream-stream join carries TWO state stores per partition, so
     checkpoint-commit overhead, not compute, dominates here).
@@ -672,7 +682,7 @@ def q_join_interval_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts = _shuffle_parts(_STREAM_STATE_PARTS)
     with _finite_stream(spark, "q_join_interval_stream", parts) as fs:
         snap = fs.run(_err_pur_join(fs.stage(*stages), "inner"), "append")
-        return materialize(snap.select("err_id", "pur_id"), "pmrs_q101_final_")
+        return snap.select("err_id", "pur_id")
 
 
 @register(
@@ -722,9 +732,7 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         enriched = fs.stage(*_id_chunks(ev)).join(
             F.broadcast(dim), F.col("user_id") == F.col("c_custkey")
         ).select("n_name", "value")
-        snap = fs.run(
-            enriched, "append", sink=session_dir("pmrs_q107_sink_")
-        )
+        snap = fs.run(enriched, "append")
     return snap.groupBy("n_name").agg(
         F.count(F.lit(1)).alias("n_events"),
         r6d(F.sum("value"), "sum_value"),
@@ -869,7 +877,7 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts = _shuffle_parts(_STREAM_STATE_PARTS)
     with _finite_stream(spark, "q_stream_sessions", parts) as fs:
         agg = _session_agg(fs.stage(*_session_stages(ev0, flush=True)))
-        snap = fs.run(agg, "append", sink=session_dir("pmrs_q112_sink_"))
+        snap = fs.run(agg, "append")
     return snap.where(F.col("user_id") != -1).select(
         "user_id", *_ntz("session_start", "session_end"), "n_events", "sum_value"
     )
@@ -979,11 +987,7 @@ def q_stream_state_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         with _finite_stream(spark, "q_stream_state_sessions", conf) as fs:
             stream = fs.stage(*_session_stages(ev0, flush=True))
-            snap = fs.run(
-                timer_sessions(stream),
-                "append",
-                sink=session_dir("pmrs_q134_sink_"),
-            )
+            snap = fs.run(timer_sessions(stream), "append")
     finally:
         restore_env(spark, prev_env)
     return snap.where(F.col("user_id") != -1).select(
@@ -1062,9 +1066,9 @@ def q_state_reader_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts = _shuffle_parts(_STREAM_STATE_PARTS)
     with _finite_stream(spark, "q_state_reader_audit", parts) as fs:
         agg = _session_agg(fs.stage(*_session_stages(ev0, flush=False)))
-        finalized = fs.run(
-            agg, "append", sink=session_dir("pmrs_q140_sink_"), ckpt=ckpt
-        ).select("user_id", "session_start", "session_end", "n_events", "sum_value")
+        finalized = fs.run(agg, "append", ckpt=ckpt).select(
+            "user_id", "session_start", "session_end", "n_events", "sum_value"
+        )
     open_state = spark.read.format("statestore").load(ckpt).select(
         F.col("value.user_id").alias("user_id"),
         F.col("value.session_window.start").alias("session_start"),
@@ -1142,10 +1146,11 @@ def q_stream_chained_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     so drift anywhere breaks the hash.
 
     Scale shape: state is O(open windows) at both levels — a few
-    hundred keys at any corpus size (shuffle partitions pinned small,
-    Q98's measured rationale); append-mode sink is write-once per
-    window (no last-update resolution needed); snapshot read stays
-    distributed (SURVEY §4.2).
+    hundred keys at any corpus size, so one state partition
+    (``_WINDOW_STATE_PARTS``, whose comment states the bound);
+    append-mode sink is write-once per window (no last-update
+    resolution needed); the returned sink read stays distributed
+    (SURVEY §4.2).
     """
     from project_map_reduce_spark.functions.det import sum6
 
@@ -1154,9 +1159,9 @@ def q_stream_chained_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     day_bound = hi.replace(hour=0, minute=0, second=0, microsecond=0)
     sentinel_ts = day_bound + datetime.timedelta(days=1, hours=3)
     sentinel = local_rows(spark, [(sentinel_ts, "__sentinel__", 0.0)], ev.schema)
-    # State is O(open windows) x 2 operators — a small constant beats
-    # cores-many state partitions (Q98's measured rationale).
-    with _finite_stream(spark, "q_stream_chained_agg", _shuffle_parts(4)) as fs:
+    # State is O(open windows) x 2 operators: the window-state class.
+    parts = _shuffle_parts(_WINDOW_STATE_PARTS)
+    with _finite_stream(spark, "q_stream_chained_agg", parts) as fs:
         stream = fs.stage(
             *chunks, ("sentinel", sentinel), ("spacer", ev.where(F.lit(False)))
         )
@@ -1185,11 +1190,8 @@ def q_stream_chained_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         snap = fs.run(days, "append")
-        return materialize(
-            snap.where(F.col("day_start") < F.lit(sentinel_ts)).select(
-                *_ntz("day_start"), "n_slots", "n_events", "sum_value"
-            ),
-            "pmrs_q148_final_",
+        return snap.where(F.col("day_start") < F.lit(sentinel_ts)).select(
+            *_ntz("day_start"), "n_slots", "n_events", "sum_value"
         )
 
 
@@ -1229,7 +1231,7 @@ def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical to Q101 (two state stores per partition,
     measured-best 8 state partitions, O(users · 3 h) state bound,
-    idempotent append sink, distributed snapshot) — plus the outer
+    idempotent append sink, distributed sink read) — plus the outer
     join's guarantee that state expiry EMITS rather than silently
     drops, which is what makes the unmatched side auditable at 100 TB.
     """
@@ -1249,10 +1251,7 @@ def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             *chunks, ("sentinel", sentinel), ("spacer", ev.where(F.lit(False)))
         )
         snap = fs.run(_err_pur_join(stream, "leftOuter"), "append")
-        return materialize(
-            snap.where(F.col("err_id") >= 0).select("err_id", "pur_id"),
-            "pmrs_q152_final_",
-        )
+        return snap.where(F.col("err_id") >= 0).select("err_id", "pur_id")
 
 
 _RATE_N = 1000          # rows per micro-batch
@@ -1297,9 +1296,9 @@ def q_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     than by a filter on what raced a stop.
 
     Scale shape: the source plans ``numPartitions`` independent range
-    slices per batch (no driver materialization); the per-batch sink
-    write is the same idempotent per-batchId commit every streaming
-    query here uses.
+    slices per batch (no driver materialization); all five runs write
+    into the harness's one sink with the same idempotent per-batchId
+    commit every streaming query here uses.
     """
     stream = (
         spark.readStream.format("rate-micro-batch")
@@ -1312,15 +1311,11 @@ def q_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     with _finite_stream(spark, "q_rate_source") as fs:
         for _ in range(_RATE_BATCHES):
             snap = fs.run(stream, "append")
-        return materialize(
-            snap.groupBy("batch_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("value").alias("sum_value"),
-                F.countDistinct("timestamp").alias("n_ts"),
-                F.max(F.unix_millis("timestamp")).alias("ts_ms"),
-            ),
-            "pmrs_q160_final_",
+        return snap.groupBy("batch_id").agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum("value").alias("sum_value"),
+            F.countDistinct("timestamp").alias("n_ts"),
+            F.max(F.unix_millis("timestamp")).alias("ts_ms"),
         )
 
 

@@ -187,19 +187,20 @@ def pin(owner: str, df: DataFrame) -> DataFrame:
     it cannot be unpersisted before the caller's action, and this keeps
     at most one such frame per owner alive.
 
-    The previous frame is kept when it has the same plan: Spark's
-    CacheManager holds one entry per plan, so a rebuild of the same
-    query shares it, and unpersisting the old frame would drop the cache
-    the new one just asked for."""
-    df = df.persist()
+    When the owner's frame has the same plan, ``df`` is returned as it
+    is and nothing is persisted or released: Spark's CacheManager holds
+    one entry per plan, so ``df`` already reads that entry, a second
+    ``persist`` would only log "Asked to cache already cached data",
+    and unpersisting the old frame would drop the entry ``df`` reads."""
     prev = _PINNED.get(owner)
-    _PINNED[owner] = df
     if prev is not None:
         try:
-            if not prev.sameSemantics(df):
-                prev.unpersist(blocking=False)
+            if prev.sameSemantics(df):
+                return df
+            prev.unpersist(blocking=False)
         except Py4JError:  # a frame from a stopped session
             pass
+    _PINNED[owner] = df.persist()
     return df
 
 

@@ -499,6 +499,49 @@ def test_stream_queries_return_distributed_reads(spark, sf_dir):
         assert df.count() > 0
 
 
+@pytest.mark.parametrize(
+    "name",
+    ["q_watermark_late", "q_stream_totals", "q_stream_dedup_watermark", "q_rate_source"],
+)
+def test_stream_queries_return_the_sink_without_a_job(spark, sf_dir, jobs_during, name):
+    """A finite-stream query returns a lazy plan over its sink: building
+    it submits no Spark job from the caller's thread, so no snapshot of
+    the sink is shuffled and written again before the caller's action.
+    ``jobs_during`` sees only the caller's thread. Staging runs on its
+    own thread pool and the micro-batches on the stream's thread, both
+    outside it, so 0 is the count for a query that copies nothing."""
+    from project_map_reduce_spark.registry import entries
+
+    assert jobs_during(lambda: entries()[name].fn(spark, sf_dir)) == []
+
+
+def test_finite_stream_sink_outlives_its_workspace(spark):
+    """The harness removes its workspace (staged batches, checkpoint) on
+    exit and keeps its sink, which every ``run`` of the block writes:
+    two rate-source runs on one checkpoint leave batches 0 and 1 in one
+    sink, still readable after the block."""
+    from project_map_reduce_spark.plans.streaming_shaped import _finite_stream
+
+    rate = (
+        spark.readStream.format("rate-micro-batch")
+        .option("rowsPerBatch", 3)
+        .option("numPartitions", 1)
+        .load()
+    )
+    with _finite_stream(spark, "sink_lifetime_test") as fs:
+        fs.stage(("a", spark.range(3)))
+        for _ in range(2):
+            snap = fs.run(rate, "append")
+        workspace = [f"{fs.tmp}/src", f"{fs.tmp}/ckpt"]
+        assert all(os.path.isdir(p) for p in workspace)
+        sink = fs.sink
+    assert not os.path.exists(fs.tmp)
+    assert not any(os.path.exists(p) for p in workspace)
+    assert os.path.isdir(sink) and not sink.startswith(fs.tmp)
+    assert sorted(r.batch_id for r in snap.select("batch_id").distinct().collect()) == [0, 1]
+    assert snap.count() == 6
+
+
 def test_stream_static_join_is_broadcast_and_stateless(spark, sf_dir, tmp_path):
     """Q107's in-stream join must execute as a BroadcastHashJoin with
     NO stateful operator: the dim replicates to every stream partition
@@ -853,7 +896,7 @@ def test_finite_stream_reads_sink_back_with_the_written_schema(spark, jobs_durin
             .agg(F.count(F.lit(1)).alias("n"), F.max("ts").alias("last"))
         )
         snap = fs.run(agg, "update")
-        sink = f"{fs.tmp}/sink"
+        sink = fs.sink
         inferred = spark.read.option("basePath", sink).parquet(sink)
         assert snap.schema == inferred.schema
         assert snap.schema.json() == inferred.schema.json()
